@@ -2,8 +2,10 @@ package graft.icelite
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -148,20 +150,8 @@ final class IceLiteTable private[icelite] (
     */
   private def mergedOf(s: IceSnapshot, buckets: Seq[Int]): DataFrame = {
     import org.apache.spark.sql.functions._
-    val sm = s.summary
-    // null-key rows are truncate markers; rows at/below the truncate
-    // floor were wiped by a TRUNCATE (E3) — both invisible to readers
-    def visible(df: DataFrame): DataFrame =
-      df.where(col(s.keyCol).isNotNull &&
-        (col(IceLite.VC) > sm.truncCommit ||
-          (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange)))
-    def lww(df: DataFrame): DataFrame = {
-      graft.plans.LwwMaxBy.register(spark)
-      val payloadSql = df.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-      df.groupBy(col(s.keyCol).as("__k"))
-        .agg(expr(s"lww_max_by($payloadSql, `${IceLite.VC}`, `${IceLite.VL}`)").as("w"))
-        .select(col("w.*"))
-    }
+    def visible(df: DataFrame): DataFrame = df.where(IceLite.visible(s))
+    def lww(df: DataFrame): DataFrame = IceLite.lwwFold(df, s.keyCol)
     val (dirty, clean) = buckets.partition(b => s.deltas.getOrElse(b, Nil).nonEmpty)
     val cleanDf = visible(scanFiles(s, clean.flatMap(b => s.base.getOrElse(b, Nil))))
     if (dirty.isEmpty) return cleanDf
@@ -207,7 +197,12 @@ final class IceLiteTable private[icelite] (
       return cleanDf.unionByName(lww(raw))
     }
     val deltaW = lww(visible(scanFiles(s, deltaFiles)))
-    val deltaKeys = deltaW.select(col(s.keyCol))
+    // the fold projects the key as its grouping attribute, so a bare
+    // key select would let the optimizer drop the LWW and plan a second
+    // distinct-keys shuffle over the deltas; reading a winner column
+    // (never null for a folded key) keeps the key set on the fold's own
+    // exchange, which the merged branch below reuses
+    val deltaKeys = deltaW.where(col(IceLite.VC).isNotNull).select(col(s.keyCol))
     val baseDf = visible(scanFiles(s, baseFiles))
     val untouched = baseDf.join(broadcast(deltaKeys), Seq(s.keyCol), "left_anti")
     val touched = baseDf.join(broadcast(deltaKeys), Seq(s.keyCol), "left_semi")
@@ -461,13 +456,80 @@ object IceLite {
   var smallMergedReadBytes: Long =
     sys.env.get("GRAFT_SMALL_MERGED_READ_BYTES").map(_.toLong).getOrElse(8L << 20)
 
-  /** Driver-side bucket function — MUST equal Spark's
-    * `pmod(hash(key), n)` (murmur3 of the UTF8 bytes, seed 42).
+  // ---- the physical layout: every commit path and every reader uses
+  // these definitions, never a copy of them ----
+
+  /** The bucket function, column form: `pmod(hash(key), n)`. It is also
+    * Spark's HashPartitioning of the key, so `repartition(n, key)` puts
+    * each bucket in one task. The scalar [[bucketOf]] and the v2
+    * catalog's `bucket` function compute the same value.
     */
-  def bucketOf(key: String, numBuckets: Int): Int = {
-    val h = org.apache.spark.unsafe.types.UTF8String.fromString(key).hashCode()
-    // hashCode of UTF8String is murmur3 seed 42 — same as catalyst hash()
+  def bucketCol(key: Column, numBuckets: Int): Column =
+    pmod(hash(key), lit(numBuckets))
+
+  /** Scalar form of [[bucketCol]] (driver-side pruning, the DSv2 writer
+    * and the catalog `bucket` function): UTF8String's hashCode is
+    * murmur3 seed 42, the same as catalyst `hash()`.
+    */
+  def bucketOf(key: UTF8String, numBuckets: Int): Int = {
+    val h = key.hashCode()
     ((h % numBuckets) + numBuckets) % numBuckets
+  }
+
+  def bucketOf(key: String, numBuckets: Int): Int =
+    bucketOf(UTF8String.fromString(key), numBuckets)
+
+  /** Distinct bucket ids of `df`'s keys: at most numBuckets ints, so
+    * driver-safe at any batch size (unlike collecting the keys). The
+    * pruning set of a bucket-pruned `readMerged`.
+    */
+  def bucketsOf(df: DataFrame, keyCol: String, numBuckets: Int): Seq[Int] =
+    df.select(bucketCol(col(keyCol), numBuckets).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
+
+  /** Visibility of a stored row: null-key rows are truncate markers,
+    * and rows at or below the truncate floor were wiped by a TRUNCATE
+    * (E3). Both are invisible to every reader and every fold.
+    */
+  def visible(keyCol: String, truncCommit: Long, truncChange: Long): Column =
+    col(keyCol).isNotNull &&
+      (col(VC) > truncCommit || (col(VC) === truncCommit && col(VL) > truncChange))
+
+  def visible(s: IceSnapshot): Column =
+    visible(s.keyCol, s.summary.truncCommit, s.summary.truncChange)
+
+  /** The stored-row LWW fold: one max-(__vc, __vl) row per key,
+    * tombstones kept (callers filter them). The key is projected as the
+    * grouping attribute itself (a simple alias), not as a field of the
+    * winning struct: Catalyst tracks partitioning through aliases but
+    * not through field extraction, so over a bucket-reporting scan the
+    * fold — and any downstream groupBy/join on the key — needs no
+    * exchange. Output columns keep the input order.
+    */
+  def lwwFold(rows: DataFrame, keyCol: String): DataFrame = {
+    graft.plans.LwwMaxBy.register(rows.sparkSession)
+    val payloadSql = rows.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
+    rows.groupBy(col(keyCol).as("__k"))
+      .agg(expr(s"lww_max_by($payloadSql, `$VC`, `$VL`)").as("w"))
+      .select(rows.columns.toSeq.map(c =>
+        if (c == keyCol) col("__k").as(c) else col("w").getField(c).as(c)): _*)
+  }
+
+  /** The bucketed file write of every engine commit path. `rows` carry
+    * a `__bucket` column ([[bucketCol]]) and are partitioned so that
+    * each task holds whole buckets. Writes `root/commitRel/__bucket=N/`,
+    * leaves the zone-map sidecar (deferred to its daemon on the apply
+    * latency path, otherwise written before returning) and returns the
+    * files per bucket for the snapshot commit.
+    */
+  def writeBucketed(rows: DataFrame, root: String, commitRel: String,
+      maxRowsPerFile: Long = 0L, asyncSidecar: Boolean = false): Map[Int, Seq[String]] = {
+    val w = rows.write.mode("overwrite").partitionBy("__bucket")
+    (if (maxRowsPerFile > 0) w.option("maxRecordsPerFile", maxRowsPerFile) else w)
+      .parquet(s"$root/$commitRel")
+    if (asyncSidecar) ZoneMaps.writeSidecarAsync(rows.sparkSession, root, commitRel)
+    else ZoneMaps.writeSidecar(rows.sparkSession, root, commitRel)
+    listCommittedFiles(root, commitRel)
   }
 
   def withMeta(schema: StructType): StructType =
@@ -668,7 +730,7 @@ object IceLite {
   /** List data files (relative paths) under a commit directory, grouped
     * by the `__bucket=N` partition dir they were written into.
     */
-  def listCommittedFiles(root: String, commitRel: String): Map[Int, Seq[String]] = {
+  private def listCommittedFiles(root: String, commitRel: String): Map[Int, Seq[String]] = {
     val base = Paths.get(root, commitRel)
     if (!Files.exists(base)) return Map.empty
     val out = scala.collection.mutable.Map[Int, List[String]]().withDefaultValue(Nil)

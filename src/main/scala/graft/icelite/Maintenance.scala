@@ -1,6 +1,8 @@
 package graft.icelite
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
 /** Table maintenance: file compaction and tombstone GC.
   *
@@ -15,26 +17,48 @@ import org.apache.spark.sql.functions._
   */
 object Maintenance {
 
-  /** LWW fold of the given data files at `snap`'s semantics: visible
-    * rows only (non-null key, above the truncate floor), one
-    * max-version row per key — tombstones KEPT. The shared core of
-    * compaction and bucket evolution; a change to the fold or floor
-    * semantics lands in both rewrite paths at once.
+  /** Fold the given data files into fresh bucketed base files under
+    * `commitRel` — the one rewrite shared by the apply's inline fold,
+    * [[compactBucketsOnce]] and [[rebucket]], so a change to the fold,
+    * the floor or the layout lands in every rewrite path at once.
+    * Reads `files` (table-relative) with `schema` plus the meta
+    * columns, keeps the visible rows above the truncate floor
+    * (`truncCommit`, `truncChange`), resolves LWW per key (tombstones
+    * KEPT, except those whose commit LSN is below `retentionFloorLsn`
+    * when it is >= 0), and writes `numBuckets` buckets through
+    * `partitions` tasks. `clusterBy` sorts each bucket's rows by those
+    * columns and `maxRowsPerFile` splits the files, so consecutive files
+    * carry DISJOINT value ranges and zone maps prune range predicates
+    * (on unsorted data every file spans the whole domain); a bucket's
+    * rows all live in one task after the repartition, so the sorted
+    * runs never interleave across tasks. Returns the files per bucket.
     */
-  private def foldVisible(table: IceLiteTable, snap: IceSnapshot,
-      paths: Seq[String]): org.apache.spark.sql.DataFrame = {
-    val spark = table.spark
-    graft.plans.LwwMaxBy.register(spark)
-    val sm = snap.summary
-    val raw = spark.read.schema(IceLite.withMeta(snap.schema)).parquet(paths: _*)
-      .where(col(snap.keyCol).isNotNull &&
-        (col(IceLite.VC) > sm.truncCommit ||
-          (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange)))
-    val payloadSql = raw.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-    raw.groupBy(col(snap.keyCol).as("__k"))
-      .agg(expr(s"lww_max_by($payloadSql, `${IceLite.VC}`, `${IceLite.VL}`)").as("w"))
-      .select(col("w.*"))
+  private[graft] def foldAndWrite(spark: SparkSession, table: IceLiteTable,
+      files: Seq[String], schema: StructType, truncCommit: Long, truncChange: Long,
+      numBuckets: Int, partitions: Int, commitRel: String, asyncSidecar: Boolean,
+      retentionFloorLsn: Long = -1L, clusterBy: Seq[String] = Nil,
+      maxRowsPerFile: Long = 0L): Map[Int, Seq[String]] = {
+    val keyCol = table.current.keyCol
+    val raw = spark.read.schema(IceLite.withMeta(schema)).parquet(files.map(table.dataPath): _*)
+      .where(IceLite.visible(keyCol, truncCommit, truncChange))
+    val folded0 = IceLite.lwwFold(raw, keyCol)
+    val folded =
+      if (retentionFloorLsn < 0) folded0
+      else folded0.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
+    val bucketed = folded
+      .withColumn("__bucket", IceLite.bucketCol(col(keyCol), numBuckets))
+      .repartition(partitions, col("__bucket"))
+    val clustered =
+      if (clusterBy.isEmpty) bucketed
+      else bucketed.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
+    IceLite.writeBucketed(clustered, table.root, commitRel, maxRowsPerFile, asyncSidecar)
   }
+
+  /** Write tasks of a fold over `buckets` buckets: one per bucket,
+    * capped at the cluster's default parallelism.
+    */
+  private[graft] def foldPartitions(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
 
   /** One fold pass over `todo` buckets: read base+deltas, resolve LWW,
     * optionally purge tombstones below the retention floor, write fresh
@@ -52,40 +76,17 @@ object Maintenance {
     if (todo.isEmpty) return Nil
     val spark = table.spark
     val snap = table.refresh()
-    val keyCol = snap.keyCol
     val inputs: Map[Int, Set[String]] = todo.map(b =>
       b -> (snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil)).toSet).toMap
-    val paths = todo.flatMap(b => inputs(b)).map(table.dataPath)
-    if (paths.isEmpty) return Nil
+    val files = todo.flatMap(b => inputs(b))
+    if (files.isEmpty) return Nil
     val sm = snap.summary
-    val folded0 = foldVisible(table, snap, paths)
-    val folded =
-      if (retentionFloorLsn < 0) folded0
-      else folded0.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
     val attempt = java.util.UUID.randomUUID().toString.take(8)
     val commitRel = f"data/compact-${snap.snapshotId}%08d-$attempt"
-    val bucketed = folded
-      .withColumn("__bucket", pmod(hash(col(keyCol)), lit(snap.numBuckets)))
-      .repartition(math.max(1, math.min(todo.size,
-        spark.sparkContext.defaultParallelism)), col("__bucket"))
-    // clusterBy: sort each bucket's rows by the given columns and split
-    // files at maxRowsPerFile, so consecutive files carry DISJOINT value
-    // ranges — zone maps then prune range predicates on those columns to
-    // a few files per bucket (clustering is what makes min/max sharp;
-    // on unsorted data every file spans the whole domain). A bucket's
-    // rows all live in one task after the repartition, so the sorted
-    // runs never interleave across tasks.
-    val clustered =
-      if (clusterBy.isEmpty) bucketed
-      else bucketed.sortWithinPartitions(
-        (col("__bucket") +: clusterBy.map(col)): _*)
-    val writer0 = clustered.write.mode("overwrite").partitionBy("__bucket")
-    val writer =
-      if (maxRowsPerFile > 0) writer0.option("maxRecordsPerFile", maxRowsPerFile)
-      else writer0
-    writer.parquet(table.dataPath(commitRel))
-    ZoneMaps.writeSidecar(spark, table.root, commitRel)
-    val written = IceLite.listCommittedFiles(table.root, commitRel)
+    val written = foldAndWrite(spark, table, files, snap.schema,
+      sm.truncCommit, sm.truncChange, snap.numBuckets,
+      foldPartitions(spark, todo.size), commitRel, asyncSidecar = false,
+      retentionFloorLsn, clusterBy, maxRowsPerFile)
     // optimistic commit: per-bucket validity, retry only on version races
     var attempts = 0
     while (attempts < 20) {
@@ -184,25 +185,15 @@ object Maintenance {
       attempt += 1
       val snap = table.refresh()
       if (newBuckets == snap.numBuckets) return snap.snapshotId
-      val keyCol = snap.keyCol
-      val paths = snap.buckets.flatMap(b =>
+      val files = snap.buckets.flatMap(b =>
         snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil))
-        .map(table.dataPath)
-      val folded =
-        if (paths.isEmpty) null else foldVisible(table, snap, paths)
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val commitRel = f"data/rebucket-${snap.snapshotId}%08d-$tag"
       val written =
-        if (folded == null) Map.empty[Int, Seq[String]]
-        else {
-          folded
-            .withColumn("__bucket", pmod(hash(col(keyCol)), lit(newBuckets)))
-            .repartition(newBuckets, col("__bucket"))
-            .write.mode("overwrite").partitionBy("__bucket")
-            .parquet(table.dataPath(commitRel))
-          ZoneMaps.writeSidecar(spark, table.root, commitRel)
-          IceLite.listCommittedFiles(table.root, commitRel)
-        }
+        if (files.isEmpty) Map.empty[Int, Seq[String]]
+        else foldAndWrite(spark, table, files, snap.schema,
+          snap.summary.truncCommit, snap.summary.truncChange,
+          newBuckets, newBuckets, commitRel, asyncSidecar = false)
       val cur = table.refresh()
       // strict CAS: any concurrent commit (apply, compaction, truncate)
       // invalidates the whole-table fold — refold against the new state

@@ -110,11 +110,8 @@ object BucketBound extends ScalarFunction[Integer]
   override def name(): String = "bucket"
   override def canonicalName(): String = "graft.bucket"
   override def isResultNullable: Boolean = false
-  override def produceResult(input: InternalRow): Integer = {
-    val n = input.getInt(0)
-    val key = input.getUTF8String(1)
-    ((key.hashCode() % n) + n) % n // murmur3 seed 42 == catalyst hash()
-  }
+  override def produceResult(input: InternalRow): Integer =
+    IceLite.bucketOf(input.getUTF8String(1), input.getInt(0))
 
   /** Cross-bucket-count compatibility for storage-partitioned joins:
     * when the other side's bucket count divides this side's,
@@ -631,24 +628,10 @@ object IceLiteV2 {
         r.table.asInstanceOf[IceLiteV2Table].pinnedSnapshot
     }.getOrElse(throw new IllegalStateException(
       s"catalog read of $root did not resolve to an IceLiteV2Table"))
-    val sm = snap.summary
-    graft.plans.LwwMaxBy.register(spark)
-    val raw = raw0
-      .where(col(snap.keyCol).isNotNull &&
-        (col(IceLite.VC) > sm.truncCommit ||
-          (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange)))
-    val payloadSql = raw.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-    // project the GROUPING ATTRIBUTE itself as the key column (a simple
-    // alias), not `w.doc_id`: Catalyst tracks partitioning through
-    // aliases but not through struct-field extraction, so this is what
-    // lets DOWNSTREAM groupBy/joins on the key inherit the bucket layout
+    // the shared fold projects the key as the grouping attribute, so
+    // DOWNSTREAM groupBy/joins on the key inherit the bucket layout
     // exchange-free too
-    val outCols =
-      col("__k").as(snap.keyCol) +:
-        raw.columns.filterNot(_ == snap.keyCol).toSeq.map(c => col("w").getField(c).as(c))
-    raw.groupBy(col(snap.keyCol).as("__k"))
-      .agg(expr(s"lww_max_by($payloadSql, `${IceLite.VC}`, `${IceLite.VL}`)").as("w"))
-      .select(outCols: _*)
+    IceLite.lwwFold(raw0.where(IceLite.visible(snap)), snap.keyCol)
       .where(!col(IceLite.TOMB))
       .drop(IceLite.metaColumns: _*)
   }

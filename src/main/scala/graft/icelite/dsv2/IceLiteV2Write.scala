@@ -219,7 +219,7 @@ class IceLiteDataWriter(root: String, commitRel: String, dataSchema: StructType,
     require(!row.isNullAt(vcIdx) && !row.isNullAt(vlIdx) && !row.isNullAt(tombIdx),
       "v2 append: __vc/__vl/__tomb must be non-null (use IceLiteV2.append)")
     val key = row.getUTF8String(keyIdx)
-    val b = ((key.hashCode() % numBuckets) + numBuckets) % numBuckets
+    val b = IceLite.bucketOf(key, numBuckets)
     if (row.getBoolean(tombIdx)) deletes += 1 else upserts += 1
     val vc = row.getLong(vcIdx)
     if (vc < minVc) minVc = vc

@@ -63,9 +63,7 @@ object DedupIndex {
     val fps = fingerprints(batch, textCol)
     // distinct BUCKET ids of the batch (≤ numBuckets ints — driver-safe
     // at any batch size, unlike collecting keys)
-    val buckets = fps
-      .select(pmod(hash(col(FpCol)), lit(snap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = IceLite.bucketsOf(fps, FpCol, snap.numBuckets)
     val idx = index.readMerged(buckets)
       .where(!col(IceLite.TOMB))
       .select(col(FpCol), col("doc_id").as("dup_of"))

@@ -209,9 +209,7 @@ object NearDupIndex {
     val bsnap = idx.bands.refresh()
     // distinct BUCKET ids (≤ numBuckets ints — driver-safe at any batch
     // size, the DedupIndex.probe discipline)
-    val buckets = br
-      .select(pmod(hash(col("bb")), lit(bsnap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = IceLite.bucketsOf(br, "bb", bsnap.numBuckets)
     val bandIdx = idx.bands.readMerged(buckets)
       .where(!col(IceLite.TOMB)).select(col("bb"), col("members"))
     // persisted: the candidate PAIR list is consumed twice (the bucket-id
@@ -224,9 +222,7 @@ object NearDupIndex {
       .distinct()
       .persist()
     val ssnap = idx.sigs.refresh()
-    val candBuckets = cand
-      .select(pmod(hash(col("dup_of")), lit(ssnap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val candBuckets = IceLite.bucketsOf(cand, "dup_of", ssnap.numBuckets)
     val sigIdx = idx.sigs.readMerged(candBuckets)
       .where(!col(IceLite.TOMB))
       .select(col("doc_id").as("dup_of"), col("sig").as("sig_b"))
@@ -280,9 +276,7 @@ object NearDupIndex {
 
     val br = bandRows(sg)
     val bsnap = idx.bands.refresh()
-    val buckets = br
-      .select(pmod(hash(col("bb")), lit(bsnap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val buckets = IceLite.bucketsOf(br, "bb", bsnap.numBuckets)
     val touched = idx.bands.readMerged(buckets)
       .where(!col(IceLite.TOMB)).select(col("bb"), col("members"))
       .join(broadcast(br.select(col("bb")).distinct()), Seq("bb"), "left_semi")

@@ -300,7 +300,7 @@ object CdcJob {
       .withColumn(IceLite.VC, lit(snapshotLsn))
       .withColumn(IceLite.VL, lit(Long.MaxValue))
       .withColumn(IceLite.TOMB, lit(false))
-      .withColumn("__bucket", pmod(hash(col(cfg.keyCol)), lit(cfg.numBuckets)))
+      .withColumn("__bucket", IceLite.bucketCol(col(cfg.keyCol), cfg.numBuckets))
     val commitRel = "data/base-snapshot"
     // row count observed ON the write — a 100 TB initial snapshot must be
     // exactly ONE pass over the source, never a second count scan.
@@ -311,18 +311,11 @@ object CdcJob {
     // produces (at cluster scale that is millions of tiny base files;
     // every merged read and compaction pays for them forever).
     val obs = org.apache.spark.sql.Observation()
-    if (cfg.snapshotMode != SnapshotMode.NoData) {
-      rows.repartition(cfg.numBuckets, col(cfg.keyCol))
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"${cfg.tableRoot}/$commitRel")
-    }
     val files =
       if (cfg.snapshotMode == SnapshotMode.NoData) Map.empty[Int, Seq[String]]
-      else {
-        graft.icelite.ZoneMaps.writeSidecar(spark, cfg.tableRoot, commitRel)
-        IceLite.listCommittedFiles(cfg.tableRoot, commitRel)
-      }
+      else IceLite.writeBucketed(
+        rows.repartition(cfg.numBuckets, col(cfg.keyCol)).observe(obs, count(lit(1)).as("n")),
+        cfg.tableRoot, commitRel)
     val nRows =
       if (cfg.snapshotMode == SnapshotMode.NoData) 0L
       else obs.get.get("n") match {

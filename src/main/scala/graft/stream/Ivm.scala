@@ -113,14 +113,12 @@ object Ivm {
       vd: ViewDef, feed: DataFrame, batchId: Long): DataFrame = {
     val rSnap = replica.refresh()
     val keyCol = rSnap.keyCol
-    val sm = rSnap.summary
     // LWW-collapse the batch per key; drop rows at/below the replica's
     // truncate floor (they are invisible to the replica apply too)
     val win = Window.partitionBy(col(keyCol))
       .orderBy(col(IceLite.VC).desc, col(IceLite.VL).desc)
     val incoming = feed
-      .where(col(IceLite.VC) > sm.truncCommit ||
-        (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange))
+      .where(IceLite.visible(rSnap))
       .withColumn("__rn", row_number().over(win))
       .where(col("__rn") === 1).drop("__rn")
     val newC = contrib(incoming, keyCol, vd, "n_")
@@ -128,9 +126,7 @@ object Ivm {
     // pre-state of the batch's keys: distinct BUCKET ids (≤ numBuckets
     // ints, driver-safe at any batch size) prune the replica read; the
     // batch side broadcasts — the replica is never shuffled
-    val bkts = incoming
-      .select(pmod(hash(col(keyCol)), lit(rSnap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val bkts = IceLite.bucketsOf(incoming, keyCol, rSnap.numBuckets)
     val oldC = contrib(replica.readMerged(bkts), keyCol, vd, "o_")
       .join(broadcast(incoming.select(col(keyCol).as("o_k")).distinct()),
         Seq("o_k"), "left_semi")

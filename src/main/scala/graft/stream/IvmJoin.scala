@@ -99,13 +99,11 @@ object IvmJoin {
     * sees the same pre-batch state.
     */
   private def collapsed(feed: DataFrame, rep: IceLiteTable): DataFrame = {
-    val sm = rep.current.summary
     val keyCol = rep.current.keyCol
     val win = Window.partitionBy(col(keyCol))
       .orderBy(col(IceLite.VC).desc, col(IceLite.VL).desc)
     feed
-      .where(col(IceLite.VC) > sm.truncCommit ||
-        (col(IceLite.VC) === sm.truncCommit && col(IceLite.VL) > sm.truncChange))
+      .where(IceLite.visible(rep.current))
       .withColumn("__rn", row_number().over(win))
       .where(col("__rn") === 1).drop("__rn")
   }
@@ -120,9 +118,7 @@ object IvmJoin {
   private def freshOnly(ch: DataFrame, rep: IceLiteTable): DataFrame = {
     val snap = rep.current
     val keyCol = snap.keyCol
-    val bkts = ch
-      .select(pmod(hash(col(keyCol)), lit(snap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val bkts = IceLite.bucketsOf(ch, keyCol, snap.numBuckets)
     val old = rep.readMerged(bkts)
       .select(col(keyCol).as("__ok"), col(IceLite.VC).as("__oc"),
         col(IceLite.VL).as("__ol"))

@@ -1,6 +1,6 @@
 package graft.stream
 
-import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary}
+import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary, Maintenance}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -266,9 +266,10 @@ object MergeApply {
       (changeCols ++ Seq(
         col("__cvc").as(VC), col("__cvl").as(VL), (col("__op") === "d").as(TOMB),
         col("__op"), col("__trunc"), col("__cnt"), col("__minc"))): _*)
-      .withColumn("__bucket", expr(
-        s"graft_stats_tap(coalesce(pmod(hash(`$keyCol`), $numBuckets), 0), " +
-          s"`$keyCol` is null, __cnt, __op = 'd', __minc, `$VC`, `$VL`)"))
+      .withColumn("__bucket", call_function("graft_stats_tap",
+        coalesce(IceLite.bucketCol(col(keyCol), numBuckets), lit(0)),
+        col(keyCol).isNull, col("__cnt"), col("__op") === "d", col("__minc"),
+        col(VC), col(VL)))
 
     // batch statistics are observed DURING the write (CollectMetrics on
     // the write plan) — no separate stats pass blocks the commit
@@ -277,7 +278,6 @@ object MergeApply {
       count(when(col(keyCol).isNotNull, lit(1))).as("n_keys"),
       sum(when(col(keyCol).isNotNull && col("__op") === "d", 1L).otherwise(0L)).as("n_del"),
       sum(when(col(keyCol).isNotNull, col("__cnt")).otherwise(0L)).as("n_events"),
-      sum(col("__cnt")).as("n_all"),
       min(when(col(keyCol).isNotNull, col("__minc"))).as("lsn_lo"),
       max(struct(col(VC), col(VL))).as("max_pos"),
       max(col("__trunc")).as("trunc_pos"))
@@ -320,7 +320,6 @@ object MergeApply {
         0L, 0L, 0L, truncated = false, -1L, -1L, snap.snapshotId)
     }
 
-    val keyCol = snap.keyCol
     val (observed, acc, obs, newSchema) = buildDeltaPlan(snap, events, batchId)
     val sm = snap.summary
 
@@ -332,13 +331,10 @@ object MergeApply {
     val channelTag = if (signalChannel) "sig-" else ""
     val attemptTag = java.util.UUID.randomUUID().toString.take(8)
     val commitRel = f"data/delta-$channelTag$batchId%08d-$attemptTag"
-    phase(t0, "job1-dedup-write")(
-      observed.write.mode("overwrite").partitionBy("__bucket")
-        .parquet(table.dataPath(commitRel)))
-    val written = phase(t0, "list-files")(IceLite.listCommittedFiles(table.root, commitRel))
     // zone-map sidecar rides the daemon, not the measured batch; a
     // losing attempt's sidecar is unreferenced garbage like its files
-    graft.icelite.ZoneMaps.writeSidecarAsync(spark, table.root, commitRel)
+    val written = phase(t0, "job1-dedup-write")(
+      IceLite.writeBucketed(observed, table.root, commitRel, asyncSidecar = true))
 
     val m = phase(t0, "obs-get")(obs.get)
     def mLong(k: String, dflt: Long): Long = m.get(k) match {
@@ -354,14 +350,11 @@ object MergeApply {
     val nKeys = mLong("n_keys", 0L)
     val nDel = mLong("n_del", 0L)
     val nEvents = mLong("n_events", 0L)
-    val nAll = mLong("n_all", 0L)
     val maxPos = mPos("max_pos")
     val truncPos = mPos("trunc_pos")
     val nUpserts = nKeys - nDel
     val lsnLoOut = mLong("lsn_lo", -1L)
     val lsnHi = maxPos.map(_._1).getOrElse(-1L)
-    val numBuckets = snap.numBuckets
-    locally { val _ = nAll } // observed for diagnostics only
 
     // monotone advances
     val (wmC, wmL) = maxPos match {
@@ -390,32 +383,16 @@ object MergeApply {
     // underneath us and fall back to a written-only commit for them
     val compactInputs: Map[Int, Set[String]] = toCompact.map(b =>
       b -> (cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil)).toSet).toMap
+    // the fold reads with the post-evolution schema and the batch's
+    // raised truncate floor, and publishes inside this apply's commit
     val compacted: Map[Int, Seq[String]] =
       if (toCompact.isEmpty) Map.empty
-      else phase(t0, "compact") {
-        val paths = toCompact.flatMap(b =>
-          cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil) ++
-            written.getOrElse(b, Nil)).map(table.dataPath)
-        val raw = spark.read.schema(IceLite.withMeta(newSchema)).parquet(paths: _*)
-          .where(col(keyCol).isNotNull && posGt(col(VC), col(VL), trC, trL))
-        val payloadSql = raw.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
-        val folded = raw.groupBy(col(keyCol).as("__k"))
-          .agg(expr(s"lww_max_by($payloadSql, `$VC`, `$VL`)").as("w"))
-          .select(col("w.*"))
-          .withColumn("__bucket", pmod(hash(col(keyCol)), lit(numBuckets)))
-        val compactRel = f"data/base-$channelTag$batchId%08d-$attemptTag"
-        val bucketed = folded.repartition(math.max(1, math.min(toCompact.size,
-          spark.sparkContext.defaultParallelism)), col("__bucket"))
-        val clustered =
-          if (clusterBy.isEmpty) bucketed
-          else bucketed.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
-        val w0 = clustered.write.mode("overwrite").partitionBy("__bucket")
-        (if (clusterMaxRowsPerFile > 0)
-          w0.option("maxRecordsPerFile", clusterMaxRowsPerFile) else w0)
-          .parquet(table.dataPath(compactRel))
-        graft.icelite.ZoneMaps.writeSidecarAsync(spark, table.root, compactRel)
-        IceLite.listCommittedFiles(table.root, compactRel)
-      }
+      else phase(t0, "compact")(Maintenance.foldAndWrite(spark, table,
+        toCompact.flatMap(b => cur0.base.getOrElse(b, Nil) ++
+          cur0.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil)),
+        newSchema, trC, trL, snap.numBuckets, Maintenance.foldPartitions(spark, toCompact.size),
+        f"data/base-$channelTag$batchId%08d-$attemptTag", asyncSidecar = true,
+        clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile))
 
     // ---- snapshot commit (atomic, idempotent, optimistic retry) ----
     var snapId = -1L

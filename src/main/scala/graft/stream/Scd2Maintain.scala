@@ -63,9 +63,7 @@ object Scd2Maintain {
 
     // fresh versions only (strictly above the stored current version);
     // bucket-pruned replica read, batch side broadcasts
-    val bkts = feed
-      .select(pmod(hash(col(keyCol)), lit(snap.numBuckets)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val bkts = IceLite.bucketsOf(feed, keyCol, snap.numBuckets)
     val pre = rep.readMerged(bkts)
       .join(broadcast(feed.select(col(keyCol)).distinct()), Seq(keyCol), "left_semi")
       .select((payloadCols.map(col) ++ Seq(col(IceLite.VC), col(IceLite.VL),

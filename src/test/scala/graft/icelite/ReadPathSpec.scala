@@ -29,8 +29,19 @@ class ReadPathSpec extends SparkSpec {
     val sparkBuckets = keys.toDF("k")
       .select(col("k"), pmod(hash(col("k")), lit(8)).as("b")).collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
+    // the v2 catalog's `bucket` function, loaded and bound as Spark does
+    import org.apache.spark.sql.connector.catalog.Identifier
+    import org.apache.spark.sql.connector.catalog.functions.ScalarFunction
+    import org.apache.spark.sql.types._
+    val catalogBucket = new graft.icelite.dsv2.IceLiteCatalog()
+      .loadFunction(Identifier.of(Array.empty[String], "bucket"))
+      .bind(StructType(Seq(StructField("n", IntegerType), StructField("k", StringType))))
+      .asInstanceOf[ScalarFunction[Integer]]
     keys.foreach { k =>
       assert(IceLite.bucketOf(k, 8) == sparkBuckets(k), s"bucket mismatch for '$k'")
+      val v2 = catalogBucket.produceResult(org.apache.spark.sql.catalyst.InternalRow(
+        8, org.apache.spark.unsafe.types.UTF8String.fromString(k)))
+      assert(v2.intValue == sparkBuckets(k), s"catalog bucket mismatch for '$k'")
     }
   }
 

@@ -3,7 +3,7 @@ package graft.icelite
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.icelite.dsv2.IceLiteV2
-import graft.stream.{CdcConfig, CdcJob}
+import graft.stream.{CdcConfig, CdcJob, MergeApply}
 import graft.util.Fs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -110,32 +110,58 @@ class ZoneMapsSpec extends SparkSpec {
     val base = Fs.tempDir("graft-zm")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
     ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+
+    // every live data file: its commit dir carries a sidecar, its stats
+    // cover its rows, and it is bucket-pure (each row's
+    // pmod(hash(key), n) is the __bucket=N dir the file sits in).
+    // Returns the live commit dirs.
+    def checkLive(table: IceLiteTable): Set[String] = {
+      ZoneMaps.flush() // the apply path defers its sidecar to the daemon
+      val snap = table.refresh()
+      val files = snap.allFiles
+      assert(files.nonEmpty)
+      val commitDirs = files.map(_.split('/').take(2).mkString("/")).toSet
+      commitDirs.foreach { rel =>
+        assert(java.nio.file.Files.exists(
+          java.nio.file.Paths.get(table.root, rel, ZoneMaps.SidecarName)),
+          s"commit $rel is missing its zone-map sidecar")
+      }
+      files.foreach { rel =>
+        val st = ZoneMaps.statsFor(table.root, rel)
+        assert(st.isDefined, s"no stats for $rel")
+        val n = st.get("n_tok")
+        val df = spark.read.schema(IceLite.withMeta(snap.schema)).parquet(s"${table.root}/$rel")
+        val actual = df.agg(min("n_tok"), max("n_tok"), count(lit(1))).collect()(0)
+        assert(n.min.get.toInt == actual.getInt(0), s"min mismatch for $rel")
+        assert(n.max.get.toInt == actual.getInt(1), s"max mismatch for $rel")
+        assert(n.rows == actual.getLong(2), s"rows mismatch for $rel")
+        val dirBucket = rel.split('/')(2).stripPrefix("__bucket=").toInt
+        val foreign = df.where(pmod(hash(col("doc_id")), lit(snap.numBuckets)) =!= dirBucket)
+          .select("doc_id").as[String].collect()
+        assert(foreign.isEmpty, s"$rel holds keys of other buckets: ${foreign.take(5).toSeq}")
+      }
+      commitDirs
+    }
+
     val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
       cdc, ChangeLogGen.snapshotLsn)
-    CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-    ZoneMaps.flush() // apply path defers its sidecar to the daemon
+    val seen = scala.collection.mutable.Set.empty[String]
+    seen ++= checkLive(table)
+    // a short chain threshold makes the second batch fold inline
+    val prevChain = MergeApply.maxDeltaChain
+    MergeApply.maxDeltaChain = 2
+    try CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
+    finally MergeApply.maxDeltaChain = prevChain
+    seen ++= checkLive(table)
+    Maintenance.compact(table)
+    seen ++= checkLive(table)
+    Maintenance.rebucket(table, 4)
+    seen ++= checkLive(table)
 
-    val snap = table.refresh()
-    val commitDirs = (snap.base.values.flatten ++ snap.deltas.values.flatten)
-      .map(_.split('/').take(2).mkString("/")).toSet
-    assert(commitDirs.nonEmpty)
-    commitDirs.foreach { rel =>
-      assert(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(table.root, rel, ZoneMaps.SidecarName)),
-        s"commit $rel is missing its zone-map sidecar")
-    }
-    // stats round-trip: every live file has n_tok bounds covering its rows
-    val files = (snap.base.values.flatten ++ snap.deltas.values.flatten).toSeq
-    assert(files.nonEmpty)
-    files.foreach { rel =>
-      val st = ZoneMaps.statsFor(table.root, rel)
-      assert(st.isDefined, s"no stats for $rel")
-      val n = st.get("n_tok")
-      val actual = spark.read.parquet(s"${table.root}/$rel")
-        .agg(min("n_tok"), max("n_tok"), count(lit(1))).collect()(0)
-      assert(n.min.get.toInt == actual.getInt(0), s"min mismatch for $rel")
-      assert(n.max.get.toInt == actual.getInt(1), s"max mismatch for $rel")
-      assert(n.rows == actual.getLong(2), s"rows mismatch for $rel")
+    // snapshot, apply delta, inline fold, compaction, rebucket
+    Seq("data/base-snapshot", "data/delta-", "data/base-0", "data/compact-",
+      "data/rebucket-").foreach { prefix =>
+      assert(seen.exists(_.startsWith(prefix)), s"no live $prefix commit was checked: $seen")
     }
     Fs.deleteRecursively(base)
   }

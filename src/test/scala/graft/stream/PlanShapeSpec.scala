@@ -35,6 +35,15 @@ class PlanShapeSpec extends SparkSpec {
   private def count(plan: String, token: String): Int =
     plan.sliding(token.length).count(_ == token)
 
+  /** Run `body` with the merged-read small-path floor set to `v`,
+    * restoring the previous value afterwards.
+    */
+  private def withSmallMergedReadBytes[T](v: Long)(body: => T): T = {
+    val prev = graft.icelite.IceLite.smallMergedReadBytes
+    graft.icelite.IceLite.smallMergedReadBytes = v
+    try body finally graft.icelite.IceLite.smallMergedReadBytes = prev
+  }
+
   test("broadcast assembly: the PAYLOAD shuffles exactly once (the bucket exchange)") {
     val plan = planOf(broadcastAssembly = true)
     // exactly one exchange on the merge key — the payload's only shuffle
@@ -81,54 +90,47 @@ class PlanShapeSpec extends SparkSpec {
     assert(table.refresh().deltas.values.exists(_.nonEmpty), "fixture needs delta chains")
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // zero the small-read floor: this spec pins the AT-SCALE plan shape
-    // (a dirty bucket's base at 100 TB always exceeds the floor); the
-    // small path is pinned by the next spec
-    val prevSmall = graft.icelite.IceLite.smallMergedReadBytes
-    graft.icelite.IceLite.smallMergedReadBytes = 0L
     try {
-      val plan = table.read().queryExecution.executedPlan
-      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-      // the delta LWW and the touched-rows LWW — both O(delta), never O(table)
-      assert(shuffles.size == 2, s"expected exactly 2 delta-scale shuffles:\n$plan")
-      // the bulk of the base flows through the broadcast ANTI join straight
-      // to the output — it must not sit beneath any exchange
-      shuffles.foreach { e =>
-        val antiBelow = e.collect {
-          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      // zero the small-read floor: this block pins the AT-SCALE plan
+      // shape (a dirty bucket's base at 100 TB always exceeds the
+      // floor); the small path is pinned below
+      withSmallMergedReadBytes(0L) {
+        val plan = table.read().queryExecution.executedPlan
+        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+        // the delta LWW and the touched-rows LWW — both O(delta), never O(table)
+        assert(shuffles.size == 2, s"expected exactly 2 delta-scale shuffles:\n$plan")
+        // the bulk of the base flows through the broadcast ANTI join straight
+        // to the output — it must not sit beneath any exchange
+        shuffles.foreach { e =>
+          val antiBelow = e.collect {
+            case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+          }
+          assert(antiBelow.isEmpty,
+            s"untouched-base branch found beneath a shuffle:\n$plan")
         }
-        assert(antiBelow.isEmpty,
-          s"untouched-base branch found beneath a shuffle:\n$plan")
+        val joinTypes = plan.collect {
+          case j: BroadcastHashJoinExec => j.joinType
+        }
+        assert(joinTypes.contains(LeftAnti) && joinTypes.contains(LeftSemi),
+          s"expected broadcast anti+semi split of the base:\n$plan")
+        assert(!plan.toString.contains("SortMergeJoin"))
       }
-      val joinTypes = plan.collect {
-        case j: BroadcastHashJoinExec => j.joinType
-      }
-      assert(joinTypes.contains(LeftAnti) && joinTypes.contains(LeftSemi),
-        s"expected broadcast anti+semi split of the base:\n$plan")
-      assert(!plan.toString.contains("SortMergeJoin"))
 
       // small-read fast path (fixture-sized dirty set): ONE global LWW
       // exchange, no broadcast split — and bit-identical rows
-      graft.icelite.IceLite.smallMergedReadBytes = 8L << 20
-      val splitRows = {
-        graft.icelite.IceLite.smallMergedReadBytes = 0L
-        val r = table.read().orderBy("doc_id").collect().toSeq
-        graft.icelite.IceLite.smallMergedReadBytes = 8L << 20
-        r
+      val splitRows = withSmallMergedReadBytes(0L)(table.read().orderBy("doc_id").collect().toSeq)
+      withSmallMergedReadBytes(8L << 20) {
+        val smallPlanDf = table.read()
+        val smallPlan = smallPlanDf.queryExecution.executedPlan
+        val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
+        assert(smallShuffles.size == 1,
+          s"small merged read should be ONE global LWW exchange:\n$smallPlan")
+        assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
+          s"small merged read should have no broadcast split:\n$smallPlan")
+        assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
+          "small-path rows must equal broadcast-path rows")
       }
-      val smallPlanDf = table.read()
-      val smallPlan = smallPlanDf.queryExecution.executedPlan
-      val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
-      assert(smallShuffles.size == 1,
-        s"small merged read should be ONE global LWW exchange:\n$smallPlan")
-      assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
-        s"small merged read should have no broadcast split:\n$smallPlan")
-      assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
-        "small-path rows must equal broadcast-path rows")
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prev)
-      graft.icelite.IceLite.smallMergedReadBytes = prevSmall
-    }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     Fs.deleteRecursively(base)
   }
 
