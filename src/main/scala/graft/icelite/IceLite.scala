@@ -2,7 +2,12 @@ package graft.icelite
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -251,14 +256,7 @@ final class IceLiteTable private[icelite] (
     val latest =
       if (toInclusive > fromExclusive) IceLite.readSnapshotFile(root, toInclusive)
       else snap
-    val schemaWithMeta = IceLite.withMeta(latest.schema)
-    if (newFiles.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(
-          schemaWithMeta.fields :+
-            org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType)))
-    spark.read.schema(schemaWithMeta).parquet(newFiles.map(dataPath): _*)
+    IceLite.readFiles(spark, root, newFiles, IceLite.withMeta(latest.schema))
       .where(col(latest.keyCol).isNotNull) // truncate markers are not row changes
       .withColumn("_change_type",
         when(col(IceLite.TOMB), lit("d")).otherwise(lit("c")))
@@ -290,14 +288,8 @@ final class IceLiteTable private[icelite] (
     scanFiles(s, buckets.flatMap(b =>
       s.base.getOrElse(b, Nil) ++ s.deltas.getOrElse(b, Nil)))
 
-  private def scanFiles(s: IceSnapshot, files: Seq[String]): DataFrame = {
-    val full = IceLite.withMeta(s.schema)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-    // explicit schema => files written before an additive ALTER read the
-    // new column as null (reference: new columns nullable, additive only)
-    else spark.read.schema(full).parquet(files.map(dataPath): _*)
-  }
+  private def scanFiles(s: IceSnapshot, files: Seq[String]): DataFrame =
+    IceLite.readFiles(spark, root, files, IceLite.withMeta(s.schema))
 
   /** Optimistic atomic commit. Returns true on success; false if another
     * writer won the race for this version (caller refreshes + retries).
@@ -515,12 +507,32 @@ object IceLite {
         if (c == keyCol) col("__k").as(c) else col("w").getField(c).as(c)): _*)
   }
 
+  /** Write tasks of a bucketed write over `buckets` buckets: one per
+    * bucket, capped at the cluster's default parallelism. A bucket is
+    * never split across tasks, so below the cap a task holds several
+    * whole buckets and writes one file for each; at cluster scale
+    * (parallelism >= buckets) every task holds exactly one bucket.
+    */
+  def writeTasks(spark: SparkSession, buckets: Int): Int =
+    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
+
+  /** Packs `rows`, hash-partitioned on the key into `numBuckets`
+    * partitions (partition i = bucket i), into [[writeTasks]] tasks
+    * without another exchange: a coalesce only groups whole partitions.
+    * It drops any within-partition order, so it goes before a sort.
+    */
+  def packBuckets(rows: DataFrame, numBuckets: Int): DataFrame = {
+    val tasks = writeTasks(rows.sparkSession, numBuckets)
+    if (tasks < numBuckets) rows.coalesce(tasks) else rows
+  }
+
   /** The bucketed file write of every engine commit path. `rows` carry
     * a `__bucket` column ([[bucketCol]]) and are partitioned so that
-    * each task holds whole buckets. Writes `root/commitRel/__bucket=N/`,
-    * leaves the zone-map sidecar (deferred to its daemon on the apply
-    * latency path, otherwise written before returning) and returns the
-    * files per bucket for the snapshot commit.
+    * each task holds whole buckets, in at most [[writeTasks]] tasks.
+    * Writes `root/commitRel/__bucket=N/`, leaves the zone-map sidecar
+    * (deferred to its daemon on the apply latency path, otherwise
+    * written before returning) and returns the files per bucket for the
+    * snapshot commit.
     */
   def writeBucketed(rows: DataFrame, root: String, commitRel: String,
       maxRowsPerFile: Long = 0L, asyncSidecar: Boolean = false): Map[Int, Seq[String]] = {
@@ -530,6 +542,47 @@ object IceLite {
     if (asyncSidecar) ZoneMaps.writeSidecarAsync(rows.sparkSession, root, commitRel)
     else ZoneMaps.writeSidecar(rows.sparkSession, root, commitRel)
     listCommittedFiles(root, commitRel)
+  }
+
+  /** Threads of the table's background workers (the compaction daemon,
+    * the zone-map sidecar writer). A worker is started lazily, usually
+    * from a streaming query's batch thread, and a thread normally
+    * inherits its creator's Spark local properties: the query's job
+    * group, SQL execution id and call site. Stopping the query would
+    * then cancel the worker's jobs. These threads inherit no thread
+    * locals; each worker names its jobs with its own job group.
+    */
+  private[icelite] def backgroundThreads(name: String): java.util.concurrent.ThreadFactory =
+    (r: Runnable) => {
+      val t = new Thread(null, r, name, 0L, false)
+      t.setDaemon(true)
+      t
+    }
+
+  /** Driver-side stat of table-relative data files. The manifest names
+    * every committed file, so nothing is ever listed. Shared by the
+    * classic reads ([[readFiles]]) and the DSv2 scan and stream.
+    */
+  def fileStatuses(spark: SparkSession, root: String, rels: Seq[String]): Seq[FileStatus] = {
+    val fs = FileSystem.getLocal(spark.sessionState.newHadoopConf())
+    rels.map(rel => fs.getFileStatus(new HPath(s"$root/$rel")))
+  }
+
+  /** Parquet scan of exactly the given table-relative files, read with
+    * `schema` (files written before an additive ALTER read the new
+    * column as null). A plain `FileSourceScanExec` — pruning, pushdown,
+    * the vectorized reader and file packing are Spark's — over a
+    * [[ManifestFileIndex]], so building the frame starts no Spark job
+    * (a path list handed to `spark.read.parquet` is listed again, by a
+    * parallel listing job once it passes 32 paths).
+    */
+  def readFiles(spark: SparkSession, root: String, rels: Seq[String],
+      schema: StructType): DataFrame = {
+    // file sources read every column as nullable, as `spark.read` does
+    val dataSchema = graft.stream.MergeApply.asNullable(schema).asInstanceOf[StructType]
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(fileStatuses(spark, root, rels)),
+      StructType(Nil), dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
   }
 
   def withMeta(schema: StructType): StructType =
@@ -746,4 +799,27 @@ object IceLite {
       }
     out.toMap.map { case (k, v) => k -> v.sorted.toSeq }
   }
+}
+
+/** The file index of a manifest read: the committed files, already
+  * stat-ed, with no partition columns and nothing to list or refresh.
+  * Equal to another index over the same files, as Spark's own
+  * `InMemoryFileIndex` is, so identical scans still canonicalize alike.
+  */
+private[icelite] final class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+  override def rootPaths: Seq[HPath] = files.map(_.getPath)
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    // a zero-byte file holds no parquet; Spark's own index skips it too
+    Seq(PartitionDirectory(InternalRow.empty,
+      files.filter(_.getLen > 0).map(FileStatusWithMetadata(_))))
+  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = StructType(Nil)
+  override def equals(other: Any): Boolean = other match {
+    case o: ManifestFileIndex => rootPaths == o.rootPaths
+    case _ => false
+  }
+  override def hashCode(): Int = rootPaths.hashCode()
 }

@@ -1,6 +1,6 @@
 package graft.icelite
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -17,48 +17,52 @@ import org.apache.spark.sql.types.StructType
   */
 object Maintenance {
 
+  /** The LWW fold of the given data files (table-relative), as a frame:
+    * reads them with `schema` plus the meta columns through the
+    * manifest index, keeps the visible rows above the truncate floor
+    * (`truncCommit`, `truncChange`) and resolves LWW per key (tombstones
+    * KEPT, except those whose commit LSN is below `retentionFloorLsn`
+    * when it is >= 0). Building it starts no Spark job.
+    */
+  private[graft] def fold(spark: SparkSession, table: IceLiteTable,
+      files: Seq[String], schema: StructType, truncCommit: Long, truncChange: Long,
+      retentionFloorLsn: Long = -1L): DataFrame = {
+    val keyCol = table.current.keyCol
+    val raw = IceLite.readFiles(spark, table.root, files, IceLite.withMeta(schema))
+      .where(IceLite.visible(keyCol, truncCommit, truncChange))
+    val folded = IceLite.lwwFold(raw, keyCol)
+    if (retentionFloorLsn < 0) folded
+    else folded.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
+  }
+
   /** Fold the given data files into fresh bucketed base files under
     * `commitRel` — the one rewrite shared by the apply's inline fold,
     * [[compactBucketsOnce]] and [[rebucket]], so a change to the fold,
     * the floor or the layout lands in every rewrite path at once.
-    * Reads `files` (table-relative) with `schema` plus the meta
-    * columns, keeps the visible rows above the truncate floor
-    * (`truncCommit`, `truncChange`), resolves LWW per key (tombstones
-    * KEPT, except those whose commit LSN is below `retentionFloorLsn`
-    * when it is >= 0), and writes `numBuckets` buckets through
-    * `partitions` tasks. `clusterBy` sorts each bucket's rows by those
-    * columns and `maxRowsPerFile` splits the files, so consecutive files
-    * carry DISJOINT value ranges and zone maps prune range predicates
-    * (on unsorted data every file spans the whole domain); a bucket's
-    * rows all live in one task after the repartition, so the sorted
-    * runs never interleave across tasks. Returns the files per bucket.
+    * Writes the [[fold]] into `numBuckets` buckets in
+    * `IceLite.writeTasks(spark, foldBuckets)` tasks, `foldBuckets` being
+    * how many buckets the fold covers. `clusterBy` sorts each
+    * bucket's rows by those columns and `maxRowsPerFile` splits the
+    * files, so consecutive files carry DISJOINT value ranges and zone
+    * maps prune range predicates (on unsorted data every file spans the
+    * whole domain); a bucket's rows all live in one task after the
+    * repartition, and the sort comes after it, so the sorted runs never
+    * interleave across tasks. Returns the files per bucket.
     */
   private[graft] def foldAndWrite(spark: SparkSession, table: IceLiteTable,
       files: Seq[String], schema: StructType, truncCommit: Long, truncChange: Long,
-      numBuckets: Int, partitions: Int, commitRel: String, asyncSidecar: Boolean,
+      numBuckets: Int, foldBuckets: Int, commitRel: String, asyncSidecar: Boolean,
       retentionFloorLsn: Long = -1L, clusterBy: Seq[String] = Nil,
       maxRowsPerFile: Long = 0L): Map[Int, Seq[String]] = {
-    val keyCol = table.current.keyCol
-    val raw = spark.read.schema(IceLite.withMeta(schema)).parquet(files.map(table.dataPath): _*)
-      .where(IceLite.visible(keyCol, truncCommit, truncChange))
-    val folded0 = IceLite.lwwFold(raw, keyCol)
-    val folded =
-      if (retentionFloorLsn < 0) folded0
-      else folded0.where(!col(IceLite.TOMB) || col(IceLite.VC) >= retentionFloorLsn)
-    val bucketed = folded
-      .withColumn("__bucket", IceLite.bucketCol(col(keyCol), numBuckets))
-      .repartition(partitions, col("__bucket"))
+    val bucketed = fold(spark, table, files, schema, truncCommit, truncChange,
+        retentionFloorLsn)
+      .withColumn("__bucket", IceLite.bucketCol(col(table.current.keyCol), numBuckets))
+      .repartition(IceLite.writeTasks(spark, foldBuckets), col("__bucket"))
     val clustered =
       if (clusterBy.isEmpty) bucketed
       else bucketed.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
     IceLite.writeBucketed(clustered, table.root, commitRel, maxRowsPerFile, asyncSidecar)
   }
-
-  /** Write tasks of a fold over `buckets` buckets: one per bucket,
-    * capped at the cluster's default parallelism.
-    */
-  private[graft] def foldPartitions(spark: SparkSession, buckets: Int): Int =
-    math.max(1, math.min(buckets, spark.sparkContext.defaultParallelism))
 
   /** One fold pass over `todo` buckets: read base+deltas, resolve LWW,
     * optionally purge tombstones below the retention floor, write fresh
@@ -85,7 +89,7 @@ object Maintenance {
     val commitRel = f"data/compact-${snap.snapshotId}%08d-$attempt"
     val written = foldAndWrite(spark, table, files, snap.schema,
       sm.truncCommit, sm.truncChange, snap.numBuckets,
-      foldPartitions(spark, todo.size), commitRel, asyncSidecar = false,
+      todo.size, commitRel, asyncSidecar = false,
       retentionFloorLsn, clusterBy, maxRowsPerFile)
     // optimistic commit: per-bucket validity, retry only on version races
     var attempts = 0
@@ -234,7 +238,7 @@ object Maintenance {
       clusterBy: Seq[String] = Nil, maxRowsPerFile: Long = 0L)
       extends AutoCloseable {
     private val exec = java.util.concurrent.Executors.newSingleThreadExecutor(
-      (r: Runnable) => { val t = new Thread(r, "graft-compaction"); t.setDaemon(true); t })
+      IceLite.backgroundThreads("graft-compaction"))
     private val queued = new java.util.concurrent.atomic.AtomicBoolean(false)
     @volatile private var err: Option[Throwable] = None
     def lastError: Option[Throwable] = err
@@ -242,6 +246,8 @@ object Maintenance {
     private val sweep: Runnable = () => {
       queued.set(false)
       try {
+        table.spark.sparkContext.setJobGroup("graft-compaction",
+          s"background fold of ${table.root}", interruptOnCancel = false)
         val snap = table.refresh()
         val hot = snap.buckets
           .filter(b => snap.deltas.getOrElse(b, Nil).size >= chainThreshold).sorted

@@ -180,16 +180,16 @@ object ZoneMaps {
     * Cold paths (initial snapshot, compaction, v2 append) write
     * synchronously before their commit.
     */
-  private lazy val asyncWriter = {
-    val ex = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "zonemap-writer"); t.setDaemon(true); t
-    })
-    ex
-  }
+  private lazy val asyncWriter = java.util.concurrent.Executors.newSingleThreadExecutor(
+    IceLite.backgroundThreads("zonemap-writer"))
 
   def writeSidecarAsync(spark: SparkSession, root: String, commitRel: String): Unit =
     asyncWriter.submit(new Runnable {
-      override def run(): Unit = writeSidecar(spark, root, commitRel)
+      override def run(): Unit = {
+        spark.sparkContext.setJobGroup("zonemap-writer",
+          s"zone-map sidecar of $root/$commitRel", interruptOnCancel = false)
+        writeSidecar(spark, root, commitRel)
+      }
     })
 
   /** Await all queued async sidecar writes (test determinism). */

@@ -477,21 +477,11 @@ class IceLiteScan(spark: SparkSession, root: String, snap: IceSnapshot,
     new KeyGroupedPartitioning(
       Array(Expressions.bucket(snap.numBuckets, snap.keyCol)), nonEmpty.size)
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sessionState.newHadoopConf())
+  override def planInputPartitions(): Array[InputPartition] =
     nonEmpty.zipWithIndex.map { case (b, idx) =>
-      val pfiles = bucketFiles(b).map { rel =>
-        val p = new org.apache.hadoop.fs.Path(s"$root/$rel")
-        val st = fs.getFileStatus(p)
-        new PartitionedFile(InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(st.getPath),
-          0L, st.getLen, Array.empty, st.getModificationTime, st.getLen,
-          Map.empty)
-      }.toArray
+      val pfiles = IceLiteV2.partitionedFiles(spark, root, bucketFiles(b)).toArray
       new BucketFilePartition(idx, pfiles, b): InputPartition
     }.toArray
-  }
 
   /** Delegate row decoding to Spark's own parquet DSv2 factory — a
     * ParquetScan configured with our schemas hands back a
@@ -520,6 +510,18 @@ class IceLiteScan(spark: SparkSession, root: String, snap: IceSnapshot,
 
 /** Session-facing surface of the DSv2 read path. */
 object IceLiteV2 {
+
+  /** Table-relative data files as whole-file splits, stat-ed through
+    * the manifest ([[IceLite.fileStatuses]]) — never listed.
+    */
+  private[dsv2] def partitionedFiles(spark: SparkSession, root: String,
+      rels: Seq[String]): Seq[PartitionedFile] =
+    IceLite.fileStatuses(spark, root, rels).map { st =>
+      new PartitionedFile(InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath),
+        0L, st.getLen, Array.empty, st.getModificationTime, st.getLen,
+        Map.empty)
+    }
 
   /** Spark's own parquet DSv2 reader factory configured for our
     * schemas — shared by the batch scan and the micro-batch stream

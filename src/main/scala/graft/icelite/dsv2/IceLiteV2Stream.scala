@@ -3,10 +3,9 @@ package graft.icelite.dsv2
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.icelite.IceLite
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types.StructType
 
 /** Streaming offset = IceLite snapshot version. Commits are totally
@@ -103,17 +102,9 @@ class IceLiteMicroBatchStream(
     val sv = start.asInstanceOf[IceLiteVersionOffset].version
     val ev = end.asInstanceOf[IceLiteVersionOffset].version
     if (ev <= sv) return Array.empty
-    val files = IceLite.changedDataFiles(root, sv, ev)
-    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
-      spark.sessionState.newHadoopConf())
-    files.zipWithIndex.map { case (rel, idx) =>
-      val st = fs.getFileStatus(new org.apache.hadoop.fs.Path(s"$root/$rel"))
-      val pf = new PartitionedFile(InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(st.getPath),
-        0L, st.getLen, Array.empty, st.getModificationTime, st.getLen,
-        Map.empty)
-      new FilePartition(idx, Array(pf)): InputPartition
-    }.toArray
+    IceLiteV2.partitionedFiles(spark, root, IceLite.changedDataFiles(root, sv, ev))
+      .zipWithIndex.map { case (pf, idx) => new FilePartition(idx, Array(pf)): InputPartition }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -309,12 +309,14 @@ object CdcJob {
     // layout bucket-aligned: ONE file per bucket, instead of the
     // inputPartitions x buckets file explosion a bare partitionBy
     // produces (at cluster scale that is millions of tiny base files;
-    // every merged read and compaction pays for them forever).
+    // every merged read and compaction pays for them forever). Its
+    // write tasks hold whole buckets, at most defaultParallelism of them.
     val obs = org.apache.spark.sql.Observation()
     val files =
       if (cfg.snapshotMode == SnapshotMode.NoData) Map.empty[Int, Seq[String]]
       else IceLite.writeBucketed(
-        rows.repartition(cfg.numBuckets, col(cfg.keyCol)).observe(obs, count(lit(1)).as("n")),
+        IceLite.packBuckets(rows.repartition(cfg.numBuckets, col(cfg.keyCol)), cfg.numBuckets)
+          .observe(obs, count(lit(1)).as("n")),
         cfg.tableRoot, commitRel)
     val nRows =
       if (cfg.snapshotMode == SnapshotMode.NoData) 0L

@@ -41,8 +41,12 @@ import org.apache.spark.sql.types._
   *   - ONE full-data Spark job per batch: scan -> single shuffle
   *     (repartition to numBuckets on the key; Spark's HashPartitioning
   *     is pmod(murmur3(key), n) — exactly the bucket function — so the
-  *     groupBy reuses the exchange AND every output task holds exactly
-  *     one bucket for the partitioned delta write).
+  *     groupBy reuses the exchange AND every shuffle partition is one
+  *     bucket). The delta write's tasks hold whole buckets, at most
+  *     `defaultParallelism` of them (`IceLite.writeTasks`): a coalesce
+  *     after the dedup packs the bucket partitions without another
+  *     exchange, so a small batch on few cores runs one wave of tasks,
+  *     not numBuckets tiny ones, and still writes one file per bucket.
   *   - the write path is merge-on-read: an apply only WRITES the
   *     deduped batch as per-bucket delta files — it never reads or
   *     rewrites existing data, so apply cost is O(batch) regardless of
@@ -225,11 +229,12 @@ object MergeApply {
     // one typed-imperative function upgrades this whole aggregation from
     // SortAggregate to ObjectHashAggregate — hash-based, map-side
     // combined, no sort of the payload (see graft.plans.LwwMaxBy).
-    val last0 = keyed.repartition(numBuckets, col("__key")).groupBy(col("__key"))
+    val deduped = keyed.repartition(numBuckets, col("__key")).groupBy(col("__key"))
       .agg(expr("lww_max_by(struct(op, after, commit_lsn, change_lsn), commit_lsn, change_lsn)").as("w"),
         max(when(col("op") === "t", posCol)).as("__trunc"),
         count(lit(1)).as("__cnt"),
         min(col("commit_lsn")).as("__minc"))
+    val last0 = IceLite.packBuckets(deduped, numBuckets)
       .select(col("__key"), col("w.op").as("__op"), col("w.after").as("__after"),
         col("w.commit_lsn").as("__cvc"), col("w.change_lsn").as("__cvl"),
         col("__trunc"), col("__cnt"), col("__minc"))
@@ -390,7 +395,7 @@ object MergeApply {
       else phase(t0, "compact")(Maintenance.foldAndWrite(spark, table,
         toCompact.flatMap(b => cur0.base.getOrElse(b, Nil) ++
           cur0.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil)),
-        newSchema, trC, trL, snap.numBuckets, Maintenance.foldPartitions(spark, toCompact.size),
+        newSchema, trC, trL, snap.numBuckets, toCompact.size,
         f"data/base-$channelTag$batchId%08d-$attemptTag", asyncSidecar = true,
         clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile))
 

@@ -91,6 +91,48 @@ class MaintenanceSpec extends SparkSpec {
     Fs.deleteRecursively(base)
   }
 
+  test("the compaction daemon keeps no caller job group: cancelling the poking thread's group spares the fold") {
+    val cfg = ChangeLogConfig(nTx = 80, nDocs = 40, seed = 97)
+    val base = Fs.tempDir("graft-daemongroup")
+    val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 2)
+    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, numFiles = 3)
+    val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+      cdc, ChangeLogGen.snapshotLsn)
+    CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
+    val before = table.refresh().snapshotId
+    assert(table.current.deltas.values.exists(_.nonEmpty), "fixture needs a delta chain")
+    val sc = spark.sparkContext
+    val jobs = new SparkJobs(sc)
+    val callerGroup = s"caller-${java.util.UUID.randomUUID()}"
+    val daemon = new Maintenance.CompactionDaemon(table, chainThreshold = 1)
+    try {
+      // the daemon's first poke comes from a thread that holds a job
+      // group, as a streaming query's batch thread does
+      val poker = new Thread(() => {
+        sc.setJobGroup(callerGroup, "stream batch", interruptOnCancel = true)
+        daemon.poke()
+      })
+      poker.start()
+      poker.join()
+      // once the fold runs, cancel the caller's group as stopping its
+      // query does
+      jobs.awaitJob(g => g == callerGroup || g == "graft-compaction")
+      sc.cancelJobGroupAndFutureJobs(callerGroup)
+      daemon.close()
+      assert(daemon.lastError.isEmpty, s"the fold failed: ${daemon.lastError}")
+      assert(((before + 1) to table.refresh().snapshotId).exists(v =>
+        IceLite.readSnapshotFile(table.root, v).summary.note.startsWith("compact")),
+        "the fold did not commit")
+      jobs.sync()
+      assert(jobs.jobs(callerGroup) == 0, "daemon jobs ran under the caller's job group")
+      assert(jobs.jobs("graft-compaction") > 0, "daemon jobs should carry their own group")
+    } finally {
+      daemon.close()
+      jobs.close()
+      Fs.deleteRecursively(base)
+    }
+  }
+
   private def oracle(cfg: ChangeLogConfig) = {
     val initial = (0L until cfg.nDocs.toLong).map { k =>
       val t = ChangeLogGen.tokensFor(cfg.seed, k, 0L, cfg.maxTokens)

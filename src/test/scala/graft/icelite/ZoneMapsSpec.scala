@@ -105,7 +105,6 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("every commit path writes a sidecar; statsFor round-trips footer stats") {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 150, nDocs = 90, seed = 331, deletePct = 10)
     val base = Fs.tempDir("graft-zm")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
@@ -135,10 +134,8 @@ class ZoneMapsSpec extends SparkSpec {
         assert(n.min.get.toInt == actual.getInt(0), s"min mismatch for $rel")
         assert(n.max.get.toInt == actual.getInt(1), s"max mismatch for $rel")
         assert(n.rows == actual.getLong(2), s"rows mismatch for $rel")
-        val dirBucket = rel.split('/')(2).stripPrefix("__bucket=").toInt
-        val foreign = df.where(pmod(hash(col("doc_id")), lit(snap.numBuckets)) =!= dirBucket)
-          .select("doc_id").as[String].collect()
-        assert(foreign.isEmpty, s"$rel holds keys of other buckets: ${foreign.take(5).toSeq}")
+        val foreign = SparkJobs.foreignKeys(df, rel, "doc_id", snap.numBuckets)
+        assert(foreign.isEmpty, s"$rel holds keys of other buckets: ${foreign.take(5)}")
       }
       commitDirs
     }
