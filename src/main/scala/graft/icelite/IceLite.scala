@@ -82,12 +82,15 @@ final case class IceSnapshot(
       * nor `deltas`, but the change feed must still surface them:
       * without this, every change to a bucket compacted in its own
       * commit would silently vanish from [[IceLiteTable.changesBetween]]).
-      * Empty for non-apply commits (snapshot, compaction, metadata).
+      * Empty for commits that change no rows (snapshot, compaction,
+      * rebucket, metadata); set by the apply and the v2 insert.
       */
     changed: Map[Int, Seq[String]] = Map.empty
 ) {
   def allFiles: Seq[String] = (base.values ++ deltas.values).flatten.toSeq
   def buckets: Seq[Int] = (base.keySet ++ deltas.keySet).toSeq
+  /** One bucket's files: its base, then its delta chain. */
+  def filesOf(b: Int): Seq[String] = base.getOrElse(b, Nil) ++ deltas.getOrElse(b, Nil)
 }
 
 /** Minimal Iceberg-semantics table format ("IceLite"): parquet data
@@ -285,19 +288,35 @@ final class IceLiteTable private[icelite] (
   }
 
   private def readSnapshot(s: IceSnapshot, buckets: Seq[Int]): DataFrame =
-    scanFiles(s, buckets.flatMap(b =>
-      s.base.getOrElse(b, Nil) ++ s.deltas.getOrElse(b, Nil)))
+    scanFiles(s, buckets.flatMap(s.filesOf))
 
   private def scanFiles(s: IceSnapshot, files: Seq[String]): DataFrame =
     IceLite.readFiles(spark, root, files, IceLite.withMeta(s.schema))
 
-  /** Optimistic atomic commit. Returns true on success; false if another
-    * writer won the race for this version (caller refreshes + retries).
+  /** The commit of every successor version. `next` sees the head and
+    * returns the new version's content, or None to commit nothing;
+    * `commitNext` numbers it (head + 1, parent = head) and publishes it
+    * with [[IceLite.writeSnapshotAtomic]]. A writer that loses the race
+    * for the version re-reads the head and asks `next` again, so `next`
+    * re-checks whatever its commit rests on: the batch-id gate, the
+    * fold inputs ([[IceLite.unchangedBuckets]]) or the version it read.
+    * Returns the committed version, or None when `next` declined;
+    * throws after [[IceLite.commitAttempts]] lost races.
     */
-  def commit(next: IceSnapshot): Boolean = {
-    val ok = IceLite.writeSnapshotAtomic(root, next)
-    if (ok) snap = next
-    ok
+  def commitNext(next: IceSnapshot => Option[IceSnapshot]): Option[IceSnapshot] = {
+    var attempts = 0
+    while (attempts < IceLite.commitAttempts) {
+      attempts += 1
+      val cur = refresh()
+      next(cur) match {
+        case None => return None
+        case Some(n) =>
+          val s = n.copy(snapshotId = cur.snapshotId + 1, parentId = cur.snapshotId)
+          if (IceLite.writeSnapshotAtomic(root, s)) { snap = s; return Some(s) }
+      }
+    }
+    throw new IllegalStateException(
+      s"commit contention on $root: gave up after ${IceLite.commitAttempts} attempts")
   }
 
   /** Schema history: every committed snapshot's schema, oldest first —
@@ -459,9 +478,9 @@ object IceLite {
   def bucketCol(key: Column, numBuckets: Int): Column =
     pmod(hash(key), lit(numBuckets))
 
-  /** Scalar form of [[bucketCol]] (driver-side pruning, the DSv2 writer
-    * and the catalog `bucket` function): UTF8String's hashCode is
-    * murmur3 seed 42, the same as catalyst `hash()`.
+  /** Scalar form of [[bucketCol]] (driver-side pruning and the catalog
+    * `bucket` function): UTF8String's hashCode is murmur3 seed 42, the
+    * same as catalyst `hash()`.
     */
   def bucketOf(key: UTF8String, numBuckets: Int): Int = {
     val h = key.hashCode()
@@ -470,6 +489,25 @@ object IceLite {
 
   def bucketOf(key: String, numBuckets: Int): Int =
     bucketOf(UTF8String.fromString(key), numBuckets)
+
+  /** Lost races [[IceLiteTable.commitNext]] tolerates before it gives up. */
+  private[icelite] val commitAttempts = 20
+
+  /** The fold-validity rule: the buckets of `foldInputs` whose file set
+    * at `cur` is still exactly the set their fold read. Only those folds
+    * may be published; a commit that touched a bucket since would lose
+    * its rows to the fold. A bucket that folded to no files is included
+    * like any other (publishing it empties the bucket).
+    */
+  def unchangedBuckets(cur: IceSnapshot, foldInputs: Map[Int, Set[String]]): Set[Int] =
+    foldInputs.collect { case (b, in) if cur.filesOf(b).toSet == in => b }.toSet
+
+  /** `deltas` with `written` appended to each bucket's chain. */
+  def appendDeltas(deltas: Map[Int, Seq[String]],
+      written: Map[Int, Seq[String]]): Map[Int, Seq[String]] =
+    (deltas.keySet ++ written.keySet).map { b =>
+      b -> (deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil))
+    }.toMap.filter(_._2.nonEmpty)
 
   /** Distinct bucket ids of `df`'s keys: at most numBuckets ints, so
     * driver-safe at any batch size (unlike collecting the keys). The
@@ -526,9 +564,10 @@ object IceLite {
     if (tasks < numBuckets) rows.coalesce(tasks) else rows
   }
 
-  /** The bucketed file write of every engine commit path. `rows` carry
-    * a `__bucket` column ([[bucketCol]]) and are partitioned so that
-    * each task holds whole buckets, in at most [[writeTasks]] tasks.
+  /** The bucketed file write of every table commit path, the DSv2
+    * insert included. `rows` carry a `__bucket` column ([[bucketCol]])
+    * and are partitioned so that each task holds whole buckets, in at
+    * most [[writeTasks]] tasks.
     * Writes `root/commitRel/__bucket=N/`, leaves the zone-map sidecar
     * (deferred to its daemon on the apply latency path, otherwise
     * written before returning) and returns the files per bucket for the

@@ -67,12 +67,12 @@ object Maintenance {
   /** One fold pass over `todo` buckets: read base+deltas, resolve LWW,
     * optionally purge tombstones below the retention floor, write fresh
     * per-bucket base files, and commit — keeping, per bucket, ONLY the
-    * results whose input file set is still exactly what was folded (a
-    * concurrent apply that touched a bucket invalidates its fold, never
-    * the whole pass). Returns the buckets actually published. This is
-    * the same changed-file-set safety check the apply path uses for its
-    * inline folds, so compaction is safe to run CONCURRENTLY with
-    * ingest: the loser of any per-bucket race simply refolds later.
+    * results whose input file set is still exactly what was folded
+    * ([[IceLite.unchangedBuckets]], the rule the apply's inline fold
+    * uses too): a concurrent apply that touched a bucket invalidates its
+    * fold, never the whole pass. Returns the buckets actually published.
+    * So compaction is safe to run CONCURRENTLY with ingest: the loser of
+    * any per-bucket race simply refolds later.
     */
   def compactBucketsOnce(table: IceLiteTable, todo: Seq[Int],
       retentionFloorLsn: Long = -1L, clusterBy: Seq[String] = Nil,
@@ -80,9 +80,8 @@ object Maintenance {
     if (todo.isEmpty) return Nil
     val spark = table.spark
     val snap = table.refresh()
-    val inputs: Map[Int, Set[String]] = todo.map(b =>
-      b -> (snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil)).toSet).toMap
-    val files = todo.flatMap(b => inputs(b))
+    val inputs: Map[Int, Set[String]] = todo.map(b => b -> snap.filesOf(b).toSet).toMap
+    val files = todo.flatMap(snap.filesOf)
     if (files.isEmpty) return Nil
     val sm = snap.summary
     val attempt = java.util.UUID.randomUUID().toString.take(8)
@@ -91,33 +90,21 @@ object Maintenance {
       sm.truncCommit, sm.truncChange, snap.numBuckets,
       todo.size, commitRel, asyncSidecar = false,
       retentionFloorLsn, clusterBy, maxRowsPerFile)
-    // optimistic commit: per-bucket validity, retry only on version races
-    var attempts = 0
-    while (attempts < 20) {
-      attempts += 1
-      val cur = table.refresh()
+    var published = Set.empty[Int]
+    val committed = table.commitNext { cur =>
+      published = IceLite.unchangedBuckets(cur, inputs)
       // a concurrent TRUNCATE is metadata-only (file sets unchanged) but
       // raises the visibility floor the fold baked in — invalidate all
       if (cur.summary.truncCommit != sm.truncCommit ||
-        cur.summary.truncChange != sm.truncChange) return Nil
-      val safe = written.filter { case (b, _) =>
-        inputs.contains(b) &&
-          (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet == inputs(b)
-      }
-      // an empty-after-purge bucket writes no files but is still folded
-      val safeEmpty = todo.filterNot(written.contains).filter(b =>
-        (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet == inputs(b))
-      if (safe.isEmpty && safeEmpty.isEmpty) return Nil
-      val next = cur.copy(
-        snapshotId = cur.snapshotId + 1,
-        parentId = cur.snapshotId,
-        base = (cur.base ++ safe -- safeEmpty).filter(_._2.nonEmpty),
-        deltas = (cur.deltas -- safe.keys -- safeEmpty).filter(_._2.nonEmpty),
+        cur.summary.truncChange != sm.truncChange || published.isEmpty) None
+      else Some(cur.copy(
+        base = (cur.base -- published ++ written.filter(w => published(w._1)))
+          .filter(_._2.nonEmpty),
+        deltas = cur.deltas -- published,
         changed = Map.empty, // compaction adds no logical changes
-        summary = cur.summary.copy(note = s"compact(purge<$retentionFloorLsn)"))
-      if (table.commit(next)) return safe.keys.toSeq ++ safeEmpty
+        summary = cur.summary.copy(note = s"compact(purge<$retentionFloorLsn)")))
     }
-    Nil
+    if (committed.isDefined) published.toSeq else Nil
   }
 
   /** Buckets worth compacting: any delta chain, a multi-file base, or —
@@ -189,8 +176,7 @@ object Maintenance {
       attempt += 1
       val snap = table.refresh()
       if (newBuckets == snap.numBuckets) return snap.snapshotId
-      val files = snap.buckets.flatMap(b =>
-        snap.base.getOrElse(b, Nil) ++ snap.deltas.getOrElse(b, Nil))
+      val files = snap.buckets.flatMap(snap.filesOf)
       val tag = java.util.UUID.randomUUID().toString.take(8)
       val commitRel = f"data/rebucket-${snap.snapshotId}%08d-$tag"
       val written =
@@ -198,21 +184,19 @@ object Maintenance {
         else foldAndWrite(spark, table, files, snap.schema,
           snap.summary.truncCommit, snap.summary.truncChange,
           newBuckets, newBuckets, commitRel, asyncSidecar = false)
-      val cur = table.refresh()
       // strict CAS: any concurrent commit (apply, compaction, truncate)
       // invalidates the whole-table fold — refold against the new state
-      if (cur.snapshotId == snap.snapshotId) {
-        val next = cur.copy(
-          snapshotId = cur.snapshotId + 1,
-          parentId = cur.snapshotId,
+      val committed = table.commitNext { cur =>
+        if (cur.snapshotId != snap.snapshotId) None
+        else Some(cur.copy(
           numBuckets = newBuckets,
           base = written,
           deltas = Map.empty,
           changed = Map.empty, // a rebucket adds no logical changes
           summary = cur.summary.copy(
-            note = s"rebucket(${snap.numBuckets}->$newBuckets)"))
-        if (table.commit(next)) return next.snapshotId
+            note = s"rebucket(${snap.numBuckets}->$newBuckets)")))
       }
+      if (committed.nonEmpty) return committed.get.snapshotId
       // A losing attempt's files are a WHOLE-TABLE copy (unlike the
       // per-batch delta garbage gcOrphans was sized for) — reclaim them
       // now instead of letting up to maxAttempts full copies pile up.

@@ -28,13 +28,16 @@ import org.apache.spark.sql.types._
   * answers the same question on the driver from one cached JSON per
   * commit.
   *
-  * Layout: each commit directory (`data/delta-*`, `data/base-*`,
+  * Layout: each commit directory (`data/base-snapshot`, `data/delta-*`,
+  * `data/base-*`, `data/compact-*`, `data/rebucket-*`,
   * `data/v2append-*`) carries a `_zonemaps.json` sidecar mapping every
   * data file it contains to per-column {min, max, nulls, rows} over the
-  * file's row groups. Cold-path commits (initial snapshot, compaction,
-  * v2 append) write it synchronously before publishing; the apply HOT
-  * path defers it to [[writeSidecarAsync]] so the measured batch
-  * latency never pays for footer reads. Absence is always legal: files
+  * file's row groups. `IceLite.writeBucketed`, the one writer of all of
+  * them, leaves it: cold-path commits (initial snapshot, compaction,
+  * rebucket, v2 insert) write it synchronously before publishing; the
+  * apply HOT path (delta and inline fold) defers it to
+  * [[writeSidecarAsync]] so the measured batch latency never pays for
+  * footer reads. Absence is always legal: files
   * without stats (pre-feature commits, a sidecar trailing its commit,
   * failed footer reads, exotic types) are simply never skipped.
   *

@@ -165,7 +165,7 @@ class IceLiteV2Table(spark: SparkSession, root: String) extends Table
 
   override def name(): String = root
   /** Deep-nullable so INSERTs whose sources are nullable parquet columns
-    * resolve (stored values are still checked non-null by the writer).
+    * resolve (the insert still refuses null keys and meta values).
     */
   override def schema(): StructType =
     graft.stream.MergeApply.asNullable(IceLite.withMeta(snap.schema))
@@ -173,7 +173,7 @@ class IceLiteV2Table(spark: SparkSession, root: String) extends Table
   override def partitioning(): Array[Transform] =
     Array(Expressions.bucket(snap.numBuckets, snap.keyCol))
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.Set.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+    java.util.Set.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new IceLiteScanBuilder(spark, root, snap, schema(), options)

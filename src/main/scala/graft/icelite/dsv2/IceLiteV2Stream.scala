@@ -52,7 +52,9 @@ object IceLiteVersionOffset {
   *     sequence of bounded batches, not one unbounded catch-up batch.
   *
   * Scale shape: planning is metadata-only (read (end-start) JSON
-  * manifests on the driver); data work is one task per changed file.
+  * manifests on the driver); the changed files are packed into splits
+  * the way Spark's file scans pack theirs (`FilePartition`), so many
+  * small files make about one task per core.
   * A 10^10-event ingest feeding a downstream consumer costs the
   * consumer only the delta bytes each trigger.
   */
@@ -102,9 +104,12 @@ class IceLiteMicroBatchStream(
     val sv = start.asInstanceOf[IceLiteVersionOffset].version
     val ev = end.asInstanceOf[IceLiteVersionOffset].version
     if (ev <= sv) return Array.empty
-    IceLiteV2.partitionedFiles(spark, root, IceLite.changedDataFiles(root, sv, ev))
-      .zipWithIndex.map { case (pf, idx) => new FilePartition(idx, Array(pf)): InputPartition }
-      .toArray
+    // pack the changed files into splits by Spark's own file-scan rule
+    // (about one per core for many small files), not one task per file
+    val files = IceLiteV2.partitionedFiles(spark, root, IceLite.changedDataFiles(root, sv, ev))
+    val splitBytes = FilePartition.maxSplitBytes(spark,
+      files.map(_.length + spark.sessionState.conf.filesOpenCostInBytes).sum)
+    FilePartition.getFilePartitions(spark, files, splitBytes).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

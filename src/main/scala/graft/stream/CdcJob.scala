@@ -324,16 +324,15 @@ object CdcJob {
         case Some(v: java.lang.Number) => v.longValue()
         case _ => -1L
       }
-    val next = snap.copy(
-      snapshotId = snap.snapshotId + 1,
-      parentId = snap.snapshotId,
-      base = files,
-      changed = Map.empty, // snapshot base state is not a change-feed entry
-      summary = IceSummary(-1L, -1L, -1L, snapshotLsn, Long.MaxValue,
-        snapshotLsn, Long.MaxValue, -1L, -1L,
-        -1L, -1L, nRows, 0L, s"snapshot:${cfg.snapshotMode}"))
-    if (!table.commit(next))
-      throw new IllegalStateException("snapshot commit conflict")
+    table.commitNext { cur =>
+      if (cur.snapshotId != snap.snapshotId) None
+      else Some(cur.copy(
+        base = files,
+        changed = Map.empty, // snapshot base state is not a change-feed entry
+        summary = IceSummary(-1L, -1L, -1L, snapshotLsn, Long.MaxValue,
+          snapshotLsn, Long.MaxValue, -1L, -1L,
+          -1L, -1L, nRows, 0L, s"snapshot:${cfg.snapshotMode}")))
+    }.getOrElse(throw new IllegalStateException("snapshot commit conflict"))
     table
   }
 
@@ -371,12 +370,11 @@ object CdcJob {
         val recovered = MergeApply.mergedSchema(cur.schema,
           MergeApply.asNullable(source.schema).asInstanceOf[org.apache.spark.sql.types.StructType],
           keepTypeFor = Set(cur.keyCol))
-        val next = cur.copy(
-          snapshotId = cur.snapshotId + 1, parentId = cur.snapshotId,
-          schema = recovered, changed = Map.empty,
-          summary = cur.summary.copy(note = "recovery:schema-rebuilt"))
-        if (!table.commit(next))
-          throw new IllegalStateException("recovery commit conflict")
+        table.commitNext { head =>
+          if (head.snapshotId != cur.snapshotId) None
+          else Some(head.copy(schema = recovered, changed = Map.empty,
+            summary = head.summary.copy(note = "recovery:schema-rebuilt")))
+        }.getOrElse(throw new IllegalStateException("recovery commit conflict"))
         table
       case SnapshotMode.ConfigurationBased =>
         if (exists) IceLite.load(spark, cfg.tableRoot)

@@ -386,60 +386,54 @@ object MergeApply {
     // record the exact pre-existing file set each compaction folds, so
     // the commit can detect a concurrent writer changing those buckets
     // underneath us and fall back to a written-only commit for them
-    val compactInputs: Map[Int, Set[String]] = toCompact.map(b =>
-      b -> (cur0.base.getOrElse(b, Nil) ++ cur0.deltas.getOrElse(b, Nil)).toSet).toMap
+    val compactInputs: Map[Int, Set[String]] =
+      toCompact.map(b => b -> cur0.filesOf(b).toSet).toMap
     // the fold reads with the post-evolution schema and the batch's
     // raised truncate floor, and publishes inside this apply's commit
     val compacted: Map[Int, Seq[String]] =
       if (toCompact.isEmpty) Map.empty
       else phase(t0, "compact")(Maintenance.foldAndWrite(spark, table,
-        toCompact.flatMap(b => cur0.base.getOrElse(b, Nil) ++
-          cur0.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil)),
+        toCompact.flatMap(b => cur0.filesOf(b) ++ written.getOrElse(b, Nil)),
         newSchema, trC, trL, snap.numBuckets, toCompact.size,
         f"data/base-$channelTag$batchId%08d-$attemptTag", asyncSidecar = true,
         clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile))
 
-    // ---- snapshot commit (atomic, idempotent, optimistic retry) ----
-    var snapId = -1L
-    val committed = phase(t0, "commit")(commitWithRetry(table, batchId, signalChannel) { cur =>
-      // a compaction result is only publishable for buckets whose file
-      // set is still exactly what it folded; a concurrent commit that
-      // touched a bucket invalidates the fold for that bucket (its
-      // output would silently drop the other writer's rows)
-      val safeCompacted = compacted.filter { case (b, _) =>
-        (cur.base.getOrElse(b, Nil) ++ cur.deltas.getOrElse(b, Nil)).toSet ==
-          compactInputs.getOrElse(b, Set.empty[String])
+    // ---- snapshot commit (atomic, idempotent by batch id). On a lost
+    // race the gate is re-checked against the new head: a concurrent
+    // duplicate driver may have committed this batch (single logical
+    // writer is the normal mode, as in the reference,
+    // `InformixConnector.java:53-58`; the gate keeps a zombie driver
+    // from double-applying). ----
+    val committed = phase(t0, "commit")(table.commitNext { cur =>
+      val last = if (signalChannel) cur.summary.lastSignalBatchId else cur.summary.lastBatchId
+      if (batchId <= last) None
+      else {
+        // a fold is published only for the buckets it still describes
+        val folded = IceLite.unchangedBuckets(cur, compactInputs)
+        val note =
+          if (truncPos.isDefined) "truncate" else if (nKeys == 0L) "empty" else ""
+        Some(cur.copy(
+          schema = newSchema,
+          base = (cur.base -- folded ++ compacted.filter(c => folded(c._1)))
+            .filter(_._2.nonEmpty),
+          deltas = IceLite.appendDeltas(cur.deltas, written) -- folded,
+          // CDF manifest: what this apply wrote, even where folded into base
+          changed = written.filter(_._2.nonEmpty),
+          summary = IceSummary(batchId,
+            if (signalChannel) cur.summary.lastBatchId else batchId,
+            if (signalChannel) batchId else cur.summary.lastSignalBatchId,
+            wmC, wmL,
+            sm.floorCommit, sm.floorChange, trC, trL,
+            lsnLoOut, lsnHi, nUpserts, nDel, note)))
       }
-      val nb = cur.base ++ safeCompacted
-      val nd = (cur.deltas.keySet ++ written.keySet).map { b =>
-        b -> (if (safeCompacted.contains(b)) Seq.empty[String]
-              else cur.deltas.getOrElse(b, Nil) ++ written.getOrElse(b, Nil))
-      }.toMap.filter(_._2.nonEmpty)
-      val note =
-        if (truncPos.isDefined) "truncate" else if (nKeys == 0L) "empty" else ""
-      val s = cur.copy(
-        snapshotId = cur.snapshotId + 1,
-        parentId = cur.snapshotId,
-        schema = newSchema,
-        base = nb.filter(_._2.nonEmpty),
-        deltas = nd,
-        // CDF manifest: what this apply wrote, even where folded into base
-        changed = written.filter(_._2.nonEmpty),
-        summary = IceSummary(batchId,
-          if (signalChannel) cur.summary.lastBatchId else batchId,
-          if (signalChannel) batchId else cur.summary.lastSignalBatchId,
-          wmC, wmL,
-          sm.floorCommit, sm.floorChange, trC, trL,
-          lsnLoOut, lsnHi, nUpserts, nDel, note))
-      snapId = s.snapshotId
-      s
     })
+    val snapId = committed.fold(-1L)(_.snapshotId)
 
     // ---- per-bucket lineage rows (E5/E6), zero extra Spark jobs: the
     // statistics were accumulated inside the write job; the rows are a
     // driver-local JSONL append (the payload is never re-read) ----
     val latencyMs = (System.nanoTime() - t0) / 1000000L
-    if (committed && written.nonEmpty) {
+    if (committed.nonEmpty && written.nonEmpty) {
       val rows = acc.value.toSeq.sortBy(_._1).map { case (b, st) =>
         IceLite.LineageRow(b, st.events, st.deletes, st.keys, st.lsnLo, st.hiCommit,
           batchId, snapId, latencyMs, System.currentTimeMillis())
@@ -447,29 +441,7 @@ object MergeApply {
       phase(t0, "lineage")(table.appendLineageRows(rows))
     }
 
-    MergeStats(batchId, committed, alreadyApplied = !committed,
+    MergeStats(batchId, committed.nonEmpty, alreadyApplied = committed.isEmpty,
       nEvents, nUpserts, nDel, truncPos.isDefined, lsnLoOut, lsnHi, snapId)
-  }
-
-  /** Optimistic commit loop: on version conflict, refresh and re-check
-    * the idempotency gate (a concurrent duplicate driver may have
-    * committed our batch), then rebuild against the new current version.
-    * Single logical writer is the normal mode (the reference is
-    * single-task by design, `InformixConnector.java:53-58`); this loop
-    * exists so a zombie driver can never double-apply.
-    */
-  private def commitWithRetry(table: IceLiteTable, batchId: Long,
-      signalChannel: Boolean = false)(
-      build: IceSnapshot => IceSnapshot): Boolean = {
-    var attempts = 0
-    while (attempts < 20) {
-      val cur = table.current
-      val last = if (signalChannel) cur.summary.lastSignalBatchId else cur.summary.lastBatchId
-      if (batchId <= last) return false
-      if (table.commit(build(cur))) return true
-      table.refresh()
-      attempts += 1
-    }
-    throw new IllegalStateException(s"commit contention: gave up after $attempts attempts")
   }
 }

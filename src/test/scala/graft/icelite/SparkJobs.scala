@@ -19,6 +19,7 @@ final class SparkJobs(sc: SparkContext) extends SparkListener with AutoCloseable
   private val stageGroup = new ConcurrentHashMap[Int, String]
   private val writingStages = ConcurrentHashMap.newKeySet[Int]()
   private val writeStageTasks = new ConcurrentLinkedQueue[(String, Int)]
+  private val stageTasks = new ConcurrentLinkedQueue[(String, Int)]
   sc.addSparkListener(this)
 
   override def onJobStart(e: SparkListenerJobStart): Unit = {
@@ -34,14 +35,21 @@ final class SparkJobs(sc: SparkContext) extends SparkListener with AutoCloseable
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
     val info = e.stageInfo
-    if (writingStages.contains(info.stageId))
-      writeStageTasks.add(stageGroup.getOrDefault(info.stageId, "") -> info.numTasks)
+    val group = stageGroup.getOrDefault(info.stageId, "")
+    stageTasks.add(group -> info.numTasks)
+    if (writingStages.contains(info.stageId)) writeStageTasks.add(group -> info.numTasks)
   }
 
   /** Jobs started under `group`. */
   def jobs(group: String): Int = jobGroups.asScala.count(_ == group)
 
-  /** Task counts of the stages that wrote data files under `group`. */
+  /** Task counts of the stages completed under `group`. */
+  def stages(group: String): Seq[Int] =
+    stageTasks.asScala.collect { case (g, n) if g == group => n }.toSeq
+
+  /** Task counts of the stages that wrote data files under `group`
+    * (a stage counts once one of its tasks reports output bytes).
+    */
   def writeStages(group: String): Seq[Int] =
     writeStageTasks.asScala.collect { case (g, n) if g == group => n }.toSeq
 

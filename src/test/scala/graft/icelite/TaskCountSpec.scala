@@ -2,6 +2,7 @@ package graft.icelite
 
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
+import graft.icelite.dsv2.IceLiteV2
 import graft.stream.{CdcConfig, CdcJob, MergeApply}
 import graft.util.Fs
 import org.apache.spark.sql.DataFrame
@@ -12,9 +13,9 @@ import org.apache.spark.sql.functions._
   *     index, so building it starts no Spark job however many files it
   *     covers (a path list past 32 entries makes `spark.read.parquet`
   *     run a listing job with one task per path);
-  *   - a bucketed write runs at most `defaultParallelism` tasks, each
-  *     holding whole buckets, and still writes one bucket-pure file per
-  *     touched bucket.
+  *   - a bucketed write (snapshot, apply, DSv2 insert) runs at most
+  *     `defaultParallelism` tasks, each holding whole buckets, and still
+  *     writes one bucket-pure file per touched bucket.
   */
 class TaskCountSpec extends SparkSpec {
 
@@ -90,12 +91,34 @@ class TaskCountSpec extends SparkSpec {
         CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
       }
       assert(stats.size == 4 && stats.forall(_.committed))
+      // the DSv2 insert, of keys the log never writes, with more shuffle
+      // partitions than cores and no adaptive coalescing: its task count
+      // must still follow the cores, not the shuffle
+      val v2Rows = spark.createDataFrame(
+        java.util.Arrays.asList(table.read().limit(60).collect(): _*), table.read().schema)
+        .withColumn(cdc.keyCol, concat(lit("v2-"), col(cdc.keyCol)))
+      val conf = spark.conf
+      val prev = Seq("spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled").map(k => k -> conf.get(k))
+      try {
+        conf.set("spark.sql.shuffle.partitions", (2 * numBuckets).toString)
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+        SparkJobs.inGroup(sc, "v2-insert") {
+          IceLiteV2.append(spark, table.root, v2Rows, vc = Long.MaxValue / 2, vl = 0L)
+        }
+      } finally prev.foreach { case (k, v) => conf.set(k, v) }
       jobs.sync()
 
       val snapshotStages = jobs.writeStages("snapshot-write")
       val applyStages = jobs.writeStages("apply-write")
+      val v2Stages = jobs.writeStages("v2-insert")
       assert(snapshotStages.size == 1, s"snapshot write stages: $snapshotStages")
       assert(applyStages.size >= stats.size, s"apply write stages: $applyStages")
+      jobs.stages("v2-insert").foreach { n =>
+        assert(n <= sc.defaultParallelism,
+          s"a v2 insert stage ran $n tasks on ${sc.defaultParallelism} cores")
+      }
+      assert(v2Stages.size == 1, s"v2 insert write stages: $v2Stages")
       (snapshotStages ++ applyStages).foreach { n =>
         assert(n <= sc.defaultParallelism,
           s"a write stage ran $n tasks on ${sc.defaultParallelism} cores")
@@ -113,16 +136,20 @@ class TaskCountSpec extends SparkSpec {
         assert(fs.size == 1, s"snapshot bucket $b has ${fs.size} files")
         fs.foreach(assertPure)
       }
-      ((snapshotVersion + 1) to table.current.snapshotId).foreach { v =>
+      // the applies, then the v2 insert
+      val versions = (snapshotVersion + 1) to table.refresh().snapshotId
+      assert(versions.size == stats.size + 1 &&
+        IceLite.readSnapshotFile(table.root, versions.last).summary.note == "v2-append")
+      versions.foreach { v =>
         val changed = IceLite.readSnapshotFile(table.root, v).changed
-        assert(changed.nonEmpty, s"apply v$v wrote no delta")
+        assert(changed.nonEmpty, s"v$v wrote no delta")
         changed.foreach { case (b, fs) =>
-          assert(fs.size == 1, s"apply v$v wrote ${fs.size} files into bucket $b")
+          assert(fs.size == 1, s"v$v wrote ${fs.size} files into bucket $b")
           fs.foreach(assertPure)
         }
         val touched = IceLite.bucketsOf(
           table.changesBetween(v - 1, v), table.current.keyCol, numBuckets).toSet
-        assert(changed.keySet == touched, s"apply v$v: files for $changed, keys in $touched")
+        assert(changed.keySet == touched, s"v$v: files for $changed, keys in $touched")
       }
     } finally {
       jobs.close()

@@ -63,6 +63,39 @@ class V2StreamSpec extends SparkSpec {
     Fs.deleteRecursively(dir)
   }
 
+  test("a feed over many small changed files plans about one partition per core") {
+    val dir = Fs.tempDir("graft-v2stream-pack")
+    val table = freshTable(dir)
+    (1 to 10).foreach(i =>
+      IceLiteV2.append(spark, table.root, docs(0, 80, _ + i.toLong), vc = i.toLong, vl = 0L))
+    val head = table.refresh().snapshotId
+    val files = IceLite.changedDataFiles(table.root, 0L, head)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(files.size > 4 * cores, s"fixture needs many files per core, has ${files.size}")
+
+    val fullSchema = IceLiteV2.readRaw(spark, table.root).schema
+    val parts = new graft.icelite.dsv2.IceLiteMicroBatchStream(spark, table.root, 0L,
+      Long.MaxValue, fullSchema, fullSchema)
+      .planInputPartitions(graft.icelite.dsv2.IceLiteVersionOffset(0L),
+        graft.icelite.dsv2.IceLiteVersionOffset(head))
+      .map(_.asInstanceOf[org.apache.spark.sql.execution.datasources.FilePartition])
+    assert(parts.length <= cores + 1,
+      s"${files.size} changed files planned ${parts.length} partitions on $cores cores")
+    assert(parts.flatMap(_.files.map(_.toPath.getName)).sorted.toSeq ==
+      files.map(f => java.nio.file.Paths.get(f).getFileName.toString).sorted,
+      "every changed file is read exactly once")
+
+    val want = table.changesBetween(0L, head)
+      .select(col("doc_id"), col("n"), col(IceLite.VC), col(IceLite.TOMB))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toSet
+    drain(IceLiteV2.readChangesStream(spark, table.root)
+      .select(col("doc_id"), col("n"), col(IceLite.VC), col(IceLite.TOMB)),
+      s"$dir/ckpt", "v2s_pack")
+    assert(want.size == 800 && rowsOf("v2s_pack") == want)
+    Fs.deleteRecursively(dir)
+  }
+
   test("maxVersionsPerTrigger bounds catch-up to one commit per micro-batch") {
     val dir = Fs.tempDir("graft-v2stream-adm")
     val table = freshTable(dir)
