@@ -567,25 +567,24 @@ object IceLite {
   /** The bucketed file write of every table commit path, the DSv2
     * insert included. `rows` carry a `__bucket` column ([[bucketCol]])
     * and are partitioned so that each task holds whole buckets, in at
-    * most [[writeTasks]] tasks.
-    * Writes `root/commitRel/__bucket=N/`, leaves the zone-map sidecar
-    * (deferred to its daemon on the apply latency path, otherwise
-    * written before returning) and returns the files per bucket for the
-    * snapshot commit.
+    * most [[writeTasks]] tasks, one bucket's rows after another.
+    * The rows' plan runs as ONE SQL execution whose tasks write
+    * `root/commitRel/__bucket=N/` files themselves ([[BucketWriter]]).
+    * The zone-map sidecar is written from those files' own footers
+    * before this returns. The files per bucket, for the snapshot
+    * commit, are what the tasks returned: no directory is listed, so
+    * a failed attempt's files are never referenced.
     */
   def writeBucketed(rows: DataFrame, root: String, commitRel: String,
-      maxRowsPerFile: Long = 0L, asyncSidecar: Boolean = false): Map[Int, Seq[String]] = {
-    val w = rows.write.mode("overwrite").partitionBy("__bucket")
-    (if (maxRowsPerFile > 0) w.option("maxRecordsPerFile", maxRowsPerFile) else w)
-      .parquet(s"$root/$commitRel")
-    if (asyncSidecar) ZoneMaps.writeSidecarAsync(rows.sparkSession, root, commitRel)
-    else ZoneMaps.writeSidecar(rows.sparkSession, root, commitRel)
-    listCommittedFiles(root, commitRel)
+      maxRowsPerFile: Long = 0L): Map[Int, Seq[String]] = {
+    val files = BucketWriter.write(rows, root, commitRel, maxRowsPerFile)
+    ZoneMaps.writeSidecar(root, commitRel, files)
+    files.groupBy(_.bucket).map { case (b, fs) => b -> fs.map(_.rel) }
   }
 
-  /** Threads of the table's background workers (the compaction daemon,
-    * the zone-map sidecar writer). A worker is started lazily, usually
-    * from a streaming query's batch thread, and a thread normally
+  /** Threads of the table's background worker (the compaction daemon).
+    * A worker is started lazily, usually from a streaming query's
+    * batch thread, and a thread normally
     * inherits its creator's Spark local properties: the query's job
     * group, SQL execution id and call site. Stopping the query would
     * then cancel the worker's jobs. These threads inherit no thread
@@ -817,26 +816,6 @@ object IceLite {
       } catch { case NonFatal(_) => () }
     }
     ok
-  }
-
-  /** List data files (relative paths) under a commit directory, grouped
-    * by the `__bucket=N` partition dir they were written into.
-    */
-  private def listCommittedFiles(root: String, commitRel: String): Map[Int, Seq[String]] = {
-    val base = Paths.get(root, commitRel)
-    if (!Files.exists(base)) return Map.empty
-    val out = scala.collection.mutable.Map[Int, List[String]]().withDefaultValue(Nil)
-    graft.util.Fs.walkAll(base)
-      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
-      .foreach { p =>
-        val rel = Paths.get(root).relativize(p).toString
-        val bucketDir = p.getParent.getFileName.toString
-        if (bucketDir.startsWith("__bucket=")) {
-          val b = bucketDir.stripPrefix("__bucket=").toInt
-          out(b) = rel :: out(b)
-        }
-      }
-    out.toMap.map { case (k, v) => k -> v.sorted.toSeq }
   }
 }
 

@@ -41,27 +41,28 @@ object Maintenance {
     * the floor or the layout lands in every rewrite path at once.
     * Writes the [[fold]] into `numBuckets` buckets in
     * `IceLite.writeTasks(spark, foldBuckets)` tasks, `foldBuckets` being
-    * how many buckets the fold covers. `clusterBy` sorts each
-    * bucket's rows by those columns and `maxRowsPerFile` splits the
-    * files, so consecutive files carry DISJOINT value ranges and zone
-    * maps prune range predicates (on unsorted data every file spans the
-    * whole domain); a bucket's rows all live in one task after the
-    * repartition, and the sort comes after it, so the sorted runs never
-    * interleave across tasks. Returns the files per bucket.
+    * how many buckets the fold covers. A task holds several buckets
+    * after the repartition, so its rows are sorted by bucket: the
+    * writer then keeps one file open per task and writes one file per
+    * bucket. `clusterBy` sorts each bucket's rows further by those
+    * columns and `maxRowsPerFile` splits the files, so consecutive
+    * files carry DISJOINT value ranges and zone maps prune range
+    * predicates (on unsorted data every file spans the whole domain);
+    * a bucket's rows all live in one task after the repartition, and
+    * the sort comes after it, so the sorted runs never interleave
+    * across tasks. Returns the files per bucket.
     */
   private[graft] def foldAndWrite(spark: SparkSession, table: IceLiteTable,
       files: Seq[String], schema: StructType, truncCommit: Long, truncChange: Long,
-      numBuckets: Int, foldBuckets: Int, commitRel: String, asyncSidecar: Boolean,
+      numBuckets: Int, foldBuckets: Int, commitRel: String,
       retentionFloorLsn: Long = -1L, clusterBy: Seq[String] = Nil,
       maxRowsPerFile: Long = 0L): Map[Int, Seq[String]] = {
     val bucketed = fold(spark, table, files, schema, truncCommit, truncChange,
         retentionFloorLsn)
       .withColumn("__bucket", IceLite.bucketCol(col(table.current.keyCol), numBuckets))
       .repartition(IceLite.writeTasks(spark, foldBuckets), col("__bucket"))
-    val clustered =
-      if (clusterBy.isEmpty) bucketed
-      else bucketed.sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
-    IceLite.writeBucketed(clustered, table.root, commitRel, maxRowsPerFile, asyncSidecar)
+      .sortWithinPartitions((col("__bucket") +: clusterBy.map(col)): _*)
+    IceLite.writeBucketed(bucketed, table.root, commitRel, maxRowsPerFile)
   }
 
   /** One fold pass over `todo` buckets: read base+deltas, resolve LWW,
@@ -88,7 +89,7 @@ object Maintenance {
     val commitRel = f"data/compact-${snap.snapshotId}%08d-$attempt"
     val written = foldAndWrite(spark, table, files, snap.schema,
       sm.truncCommit, sm.truncChange, snap.numBuckets,
-      todo.size, commitRel, asyncSidecar = false,
+      todo.size, commitRel,
       retentionFloorLsn, clusterBy, maxRowsPerFile)
     var published = Set.empty[Int]
     val committed = table.commitNext { cur =>
@@ -183,7 +184,7 @@ object Maintenance {
         if (files.isEmpty) Map.empty[Int, Seq[String]]
         else foldAndWrite(spark, table, files, snap.schema,
           snap.summary.truncCommit, snap.summary.truncChange,
-          newBuckets, newBuckets, commitRel, asyncSidecar = false)
+          newBuckets, newBuckets, commitRel)
       // strict CAS: any concurrent commit (apply, compaction, truncate)
       // invalidates the whole-table fold — refold against the new state
       val committed = table.commitNext { cur =>

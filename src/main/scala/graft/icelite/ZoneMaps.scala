@@ -9,7 +9,6 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -33,27 +32,15 @@ import org.apache.spark.sql.types._
   * `data/v2append-*`) carries a `_zonemaps.json` sidecar mapping every
   * data file it contains to per-column {min, max, nulls, rows} over the
   * file's row groups. `IceLite.writeBucketed`, the one writer of all of
-  * them, leaves it: cold-path commits (initial snapshot, compaction,
-  * rebucket, v2 insert) write it synchronously before publishing; the
-  * apply HOT path (delta and inline fold) defers it to
-  * [[writeSidecarAsync]] so the measured batch latency never pays for
-  * footer reads. Absence is always legal: files
-  * without stats (pre-feature commits, a sidecar trailing its commit,
-  * failed footer reads, exotic types) are simply never skipped.
-  *
-  * Collection reads parquet FOOTERS only (metadata, ~KB per file) —
-  * driver-parallel for small commits, a distributed job above
-  * [[distributedThreshold]] files so a wide compaction on an object
-  * store never serializes footer I/O through the driver.
+  * them, writes it before the commit that publishes the directory,
+  * from the footers its write tasks kept of the files they closed: no
+  * footer is read back and no directory is listed. Absence is always
+  * legal: files without stats (pre-feature commits, exotic types) are
+  * simply never skipped.
   */
 object ZoneMaps {
 
   val SidecarName = "_zonemaps.json"
-
-  /** Footer-read fan-out: beyond this many files the sidecar pass runs
-    * as a Spark job instead of driver-parallel I/O.
-    */
-  var distributedThreshold: Int = 256
 
   /** Per-column, per-file statistics. min/max are string-encoded in the
     * column's natural order domain and cover NON-NULL values only; None
@@ -64,17 +51,12 @@ object ZoneMaps {
 
   // ---- collection (write side) ----
 
-  /** Read one parquet file's footer into per-column stats. Returns only
+  /** One parquet file's footer as per-column stats. Returns only
     * columns whose statistics are present and trustworthy in EVERY row
     * group (a single opaque block poisons the column — conservative).
     */
-  private[icelite] def fileStats(absPath: String,
-      conf: org.apache.hadoop.conf.Configuration): Map[String, ColStats] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.format.converter.ParquetMetadataConverter
-    val footer = ParquetFileReader.readFooter(
-      conf, new org.apache.hadoop.fs.Path(absPath),
-      ParquetMetadataConverter.NO_FILTER)
+  private[icelite] def fileStats(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata): Map[String, ColStats] = {
     val blocks = footer.getBlocks.asScala.toSeq
     // accumulate min/max as the statistics' OWN Comparable (Integer,
     // Long, Binary, ...) — merging via string re-encoding would compare
@@ -123,45 +105,21 @@ object ZoneMaps {
     case other => String.valueOf(other)
   }
 
-  /** Write the `_zonemaps.json` sidecar for every parquet file under
-    * `root/commitRel`. Call BEFORE the snapshot commit that publishes
-    * the directory. Never throws — a stats failure must not block an
-    * ingest commit (the files are then simply never skipped).
+  /** Write the `_zonemaps.json` sidecar of `files`, the data files a
+    * write put under `root/commitRel`. Call BEFORE the snapshot commit
+    * that publishes the directory. Never throws — a stats failure must
+    * not block an ingest commit (the files are then simply never
+    * skipped).
     */
-  def writeSidecar(spark: SparkSession, root: String, commitRel: String): Unit =
+  def writeSidecar(root: String, commitRel: String, files: Seq[WrittenFile]): Unit =
     try {
-      val dir = Paths.get(root, commitRel)
-      if (!Files.isDirectory(dir)) return
-      val rootPath = Paths.get(root)
-      val files = graft.util.Fs.walkAll(dir)
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .map(p => rootPath.relativize(p).toString).sorted
       if (files.isEmpty) return
-      val conf = spark.sessionState.newHadoopConf()
-      val stats: Seq[(String, Map[String, ColStats])] =
-        if (files.size <= distributedThreshold) {
-          // driver-parallel footer reads: metadata-only, a few ms each
-          import scala.collection.parallel.CollectionConverters._
-          files.par.map { rel =>
-            rel -> (try fileStats(s"$root/$rel", conf)
-            catch { case NonFatal(_) => Map.empty[String, ColStats] })
-          }.seq.toSeq
-        } else {
-          // wide commit (compaction sweep): distribute the footer reads
-          val sc = spark.sparkContext
-          val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-          sc.parallelize(files, math.min(files.size, 64)).map { rel =>
-            rel -> (try fileStats(s"$root/$rel", serConf.value)
-            catch { case NonFatal(_) => Map.empty[String, ColStats] })
-          }.collect().toSeq
-        }
       val mapper = new ObjectMapper()
       val rootNode: ObjectNode = mapper.createObjectNode()
       val filesNode = rootNode.putObject("files")
-      stats.foreach { case (rel, cols) =>
-        val fn = filesNode.putObject(rel)
-        cols.toSeq.sortBy(_._1).foreach { case (c, s) =>
+      files.foreach { f =>
+        val fn = filesNode.putObject(f.rel)
+        f.stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
           val cn = fn.putObject(c)
           s.min.foreach(cn.put("min", _))
           s.max.foreach(cn.put("max", _))
@@ -169,6 +127,7 @@ object ZoneMaps {
           cn.put("rows", s.rows)
         }
       }
+      val dir = Paths.get(root, commitRel)
       val tmp = dir.resolve(s".tmp-zm-${java.util.UUID.randomUUID()}")
       Files.write(tmp, mapper.writeValueAsString(rootNode)
         .getBytes(StandardCharsets.UTF_8))
@@ -176,36 +135,13 @@ object ZoneMaps {
         StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
     } catch { case NonFatal(_) => () }
 
-  /** The apply HOT PATH defers its sidecar to this single-thread daemon
-    * (fire-and-forget AFTER the snapshot commit): the measured per-batch
-    * latency stays footer-read-free, and a sidecar that trails its
-    * commit is benign — readers treat absence as "skip nothing".
-    * Cold paths (initial snapshot, compaction, v2 append) write
-    * synchronously before their commit.
-    */
-  private lazy val asyncWriter = java.util.concurrent.Executors.newSingleThreadExecutor(
-    IceLite.backgroundThreads("zonemap-writer"))
-
-  def writeSidecarAsync(spark: SparkSession, root: String, commitRel: String): Unit =
-    asyncWriter.submit(new Runnable {
-      override def run(): Unit = {
-        spark.sparkContext.setJobGroup("zonemap-writer",
-          s"zone-map sidecar of $root/$commitRel", interruptOnCancel = false)
-        writeSidecar(spark, root, commitRel)
-      }
-    })
-
-  /** Await all queued async sidecar writes (test determinism). */
-  def flush(): Unit =
-    asyncWriter.submit(new Runnable { override def run(): Unit = () }).get()
-
   // ---- lookup (read side) ----
 
   /** Sidecar cache keyed by absolute commit dir. Commit directories'
     * DATA is immutable once published, so positive entries never
-    * invalidate. Misses are NOT cached: an async sidecar may land
-    * after a first read, and commit dirs per scan are bounded by the
-    * compaction chain, so the re-probe is one cheap Files.exists.
+    * invalidate. Misses are NOT cached: commit dirs per scan are
+    * bounded by the compaction chain, so the re-probe is one cheap
+    * Files.exists.
     */
   private val cache = new ConcurrentHashMap[String, Map[String, Map[String, ColStats]]]()
 

@@ -183,25 +183,26 @@ object NearDupIndex {
     */
   def probe(idx: Index, batch: DataFrame, minMatches: Int = DefaultMinMatches,
       textCol: String = "text"): DataFrame = {
-    // cached signatures: standalone probe callers leave the
-    // batch-sized caches to Spark's LRU (the result is lazy — an eager
-    // release here would just force recomputation downstream)
-    val (sg, _) = signaturesCached(batch, textCol)
-    probeUsing(idx, sg, minMatches)
+    // The result is lazy and nothing can release a cache after the
+    // caller consumes it, so the caches live only for the two bucket-id
+    // collects inside this call: the signature aggregation runs once
+    // for them and once more when the result runs, and no cached frame
+    // outlives the call.
+    val (sg, release) = signaturesCached(batch, textCol)
+    try {
+      val (out, releaseCand) = probeUsingCand(idx, sg, minMatches)
+      releaseCand()
+      out
+    } finally release()
   }
 
-  /** probe over ALREADY-CACHED signatures ([[signaturesCached]]) — the
-    * shared core: the sg frame feeds the band rows (whose bucket-id
-    * collect below materializes the cache) and the sig_a verification
-    * join; uncached, the 128-permutation aggregation would run several
-    * times per probe.
-    */
-  private def probeUsing(idx: Index, sg: DataFrame, minMatches: Int): DataFrame =
-    probeUsingCand(idx, sg, minMatches)._1
-
-  /** [[probeUsing]] plus the candidate-pair cache handle: eager callers
-    * ([[dedupAndUpdate]], once the result is materialized) release it;
-    * lazy callers ([[probe]]) leave it to the LRU like the sg caches.
+  /** The probe over ALREADY-CACHED signatures ([[signaturesCached]]):
+    * the sg frame feeds the band rows (whose bucket-id collect below
+    * materializes the cache) and the sig_a verification join; uncached,
+    * the 128-permutation aggregation would run several times per probe.
+    * Returns the result and the candidate-pair cache handle, which the
+    * caller releases once the result is materialized (or no longer
+    * needs the cache).
     */
   private def probeUsingCand(idx: Index, sg: DataFrame,
       minMatches: Int): (DataFrame, () => Unit) = {

@@ -347,12 +347,8 @@ object CdcJob {
     cfg.snapshotMode match {
       case SnapshotMode.Always =>
         if (exists) {
-          // the zone-map daemon may still be writing a sidecar for a
-          // just-applied batch of this table — let it land before the
-          // recursive delete walks the tree (delete-vs-write race);
-          // then drop cached sidecars so the recreated fixed-name
-          // snapshot dir isn't pinned to the dead table's stats
-          graft.icelite.ZoneMaps.flush()
+          // drop cached sidecars so the recreated fixed-name snapshot
+          // dir isn't pinned to the dead table's stats
           graft.util.Fs.deleteRecursively(cfg.tableRoot)
           graft.icelite.ZoneMaps.clearCache()
         }

@@ -336,10 +336,9 @@ object MergeApply {
     val channelTag = if (signalChannel) "sig-" else ""
     val attemptTag = java.util.UUID.randomUUID().toString.take(8)
     val commitRel = f"data/delta-$channelTag$batchId%08d-$attemptTag"
-    // zone-map sidecar rides the daemon, not the measured batch; a
-    // losing attempt's sidecar is unreferenced garbage like its files
+    // a losing attempt's files and sidecar are unreferenced garbage
     val written = phase(t0, "job1-dedup-write")(
-      IceLite.writeBucketed(observed, table.root, commitRel, asyncSidecar = true))
+      IceLite.writeBucketed(observed, table.root, commitRel))
 
     val m = phase(t0, "obs-get")(obs.get)
     def mLong(k: String, dflt: Long): Long = m.get(k) match {
@@ -395,7 +394,7 @@ object MergeApply {
       else phase(t0, "compact")(Maintenance.foldAndWrite(spark, table,
         toCompact.flatMap(b => cur0.filesOf(b) ++ written.getOrElse(b, Nil)),
         newSchema, trC, trL, snap.numBuckets, toCompact.size,
-        f"data/base-$channelTag$batchId%08d-$attemptTag", asyncSidecar = true,
+        f"data/base-$channelTag$batchId%08d-$attemptTag",
         clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile))
 
     // ---- snapshot commit (atomic, idempotent by batch id). On a lost

@@ -29,7 +29,7 @@ object Fs {
 
   def deleteRecursively(root: String): Unit = {
     val p = Paths.get(root)
-    // a background writer (e.g. the zone-map sidecar daemon) can drop a
+    // a background writer (e.g. the compaction daemon) can drop a
     // file into a directory between the walk listing it and the delete
     // reaching it — re-walk a few times instead of failing the caller
     var attempts = 0

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
 
-/** Access shim for `private[sql]` Spark internals (the package placement
+/** Access shim for `private[sql]` and `private[spark]` Spark internals (the package placement
   * is the standard technique OSS Spark libraries use for exactly this).
   *
   * Why it exists: the test/bench reveal-loop harness restarts a
@@ -61,4 +61,15 @@ object SparkInternals {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** Report a task's written bytes and records in its output metrics
+    * (the setters are `private[spark]`). A task that writes files
+    * itself, outside Spark's file-format writers, calls this so that
+    * listeners and the UI still see its stage as a write stage.
+    */
+  def setOutputMetrics(bytes: Long, records: Long): Unit = {
+    val m = org.apache.spark.TaskContext.get().taskMetrics().outputMetrics
+    m.setBytesWritten(bytes)
+    m.setRecordsWritten(records)
+  }
 }

@@ -16,6 +16,7 @@ import scala.jdk.CollectionConverters._
   */
 final class SparkJobs(sc: SparkContext) extends SparkListener with AutoCloseable {
   private val jobGroups = new ConcurrentLinkedQueue[String]
+  private val jobExecutions = new ConcurrentLinkedQueue[(String, String)]
   private val stageGroup = new ConcurrentHashMap[Int, String]
   private val writingStages = ConcurrentHashMap.newKeySet[Int]()
   private val writeStageTasks = new ConcurrentLinkedQueue[(String, Int)]
@@ -27,6 +28,8 @@ final class SparkJobs(sc: SparkContext) extends SparkListener with AutoCloseable
       .getOrElse("")
     e.stageIds.foreach(stageGroup.put(_, g))
     jobGroups.add(g)
+    val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+    jobExecutions.add(g -> exec.getOrElse(""))
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -42,6 +45,12 @@ final class SparkJobs(sc: SparkContext) extends SparkListener with AutoCloseable
 
   /** Jobs started under `group`. */
   def jobs(group: String): Int = jobGroups.asScala.count(_ == group)
+
+  /** SQL execution ids of the jobs started under `group` ("" for a
+    * job outside any SQL execution).
+    */
+  def executions(group: String): Set[String] =
+    jobExecutions.asScala.collect { case (g, x) if g == group => x }.toSet
 
   /** Task counts of the stages completed under `group`. */
   def stages(group: String): Seq[Int] =

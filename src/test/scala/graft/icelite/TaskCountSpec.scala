@@ -3,6 +3,7 @@ package graft.icelite
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.icelite.dsv2.IceLiteV2
+import graft.model.LogRecord
 import graft.stream.{CdcConfig, CdcJob, MergeApply}
 import graft.util.Fs
 import org.apache.spark.sql.DataFrame
@@ -15,7 +16,8 @@ import org.apache.spark.sql.functions._
   *     run a listing job with one task per path);
   *   - a bucketed write (snapshot, apply, DSv2 insert) runs at most
   *     `defaultParallelism` tasks, each holding whole buckets, and still
-  *     writes one bucket-pure file per touched bucket.
+  *     writes one bucket-pure file per touched bucket;
+  *   - an apply is one SQL execution with a single write stage.
   */
 class TaskCountSpec extends SparkSpec {
 
@@ -67,6 +69,40 @@ class TaskCountSpec extends SparkSpec {
         .withColumn("_change_type", when(col(IceLite.TOMB), lit("d")).otherwise(lit("c")))))
     } finally {
       MergeApply.maxDeltaChain = prevChain
+      jobs.close()
+      Fs.deleteRecursively(base)
+    }
+  }
+
+  test("an apply is one SQL execution whose one write stage runs at most defaultParallelism tasks") {
+    val sc = spark.sparkContext
+    val numBuckets = 16
+    val base = Fs.tempDir("graft-applystage")
+    val jobs = new SparkJobs(sc)
+    try {
+      val cfg = ChangeLogConfig(nTx = 200, nDocs = 150, seed = 463, deletePct = 10)
+      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = numBuckets)
+      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+        cdc, ChangeLogGen.snapshotLsn)
+      val groups = Fs.listParquet(cdc.logDir).sorted.zipWithIndex.map { case (f, i) =>
+        val raw = spark.read.schema(LogRecord.schema).parquet(f)
+        val g = s"apply-$i"
+        val st = SparkJobs.inGroup(sc, g)(CdcJob.processBatch(table, raw, i.toLong))
+        assert(st.committed, s"$g did not commit")
+        g
+      }
+      jobs.sync()
+      groups.foreach { g =>
+        // under adaptive execution each shuffle map stage is its own
+        // job; all of them belong to the apply's one execution
+        assert(jobs.jobs(g) > 0 && jobs.executions(g).size == 1 &&
+          !jobs.executions(g).contains(""), s"$g executions: ${jobs.executions(g)}")
+        val writes = jobs.writeStages(g)
+        assert(writes.size == 1 && writes.head <= sc.defaultParallelism,
+          s"$g write stages (tasks each): $writes on ${sc.defaultParallelism} cores")
+      }
+    } finally {
       jobs.close()
       Fs.deleteRecursively(base)
     }

@@ -200,7 +200,6 @@ class V2ReadSpec extends SparkSpec {
   test("metadata-only aggregates: COUNT/MIN/MAX answered from zone-map stats, no file read") {
     import spark.implicits._
     val (base, table) = pipeline(seed = 181)
-    ZoneMaps.flush() // apply-path sidecars ride the daemon
 
     val snap = table.refresh()
     val allFiles = (snap.base.values.flatten ++ snap.deltas.values.flatten).toSeq

@@ -115,7 +115,6 @@ class ZoneMapsSpec extends SparkSpec {
     // pmod(hash(key), n) is the __bucket=N dir the file sits in).
     // Returns the live commit dirs.
     def checkLive(table: IceLiteTable): Set[String] = {
-      ZoneMaps.flush() // the apply path defers its sidecar to the daemon
       val snap = table.refresh()
       val files = snap.allFiles
       assert(files.nonEmpty)
@@ -172,7 +171,6 @@ class ZoneMapsSpec extends SparkSpec {
     val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
       cdc, ChangeLogGen.snapshotLsn)
     CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-    ZoneMaps.flush()
 
     // baseline = the raw stored files (readRaw returns every row
     // version, so the merged read is NOT the comparison surface)
@@ -273,7 +271,6 @@ class ZoneMapsSpec extends SparkSpec {
       val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
         cdc, ChangeLogGen.snapshotLsn)
       CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-      ZoneMaps.flush()
 
       val snap = table.refresh()
       // inline-folded buckets (not the unclustered initial base-snapshot)

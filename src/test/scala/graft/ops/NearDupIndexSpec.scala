@@ -35,6 +35,18 @@ class NearDupIndexSpec extends SparkSpec {
     Fs.deleteRecursively(base)
   }
 
+  test("probe leaves no cached frame behind") {
+    val base = Fs.tempDir("graft-ndidx")
+    val idx = NearDupIndex.create(spark, s"$base/idx",
+      docs(1L -> orig, 2L -> other), numBuckets = 8)
+    val cached = spark.sparkContext.getPersistentRDDs.keySet
+    val got = NearDupIndex.probe(idx, docs(100L -> near, 101L -> other)).collect()
+    assert(got.map(_.getLong(0)).toSet == Set(100L, 101L))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+      "probe left cached frames behind")
+    Fs.deleteRecursively(base)
+  }
+
   test("cross-batch: a near-dup of a doc REGISTERED by an earlier batch is caught") {
     val base = Fs.tempDir("graft-ndidx")
     val idx = NearDupIndex.create(spark, s"$base/idx", docs(1L -> other), numBuckets = 8)
