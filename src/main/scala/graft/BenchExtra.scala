@@ -51,6 +51,7 @@ object BenchExtra {
     names.foreach { name =>
       (1 to repeats).foreach { r =>
         spark.sparkContext.setJobDescription(s"bench-extra: $name #$r")
+        val classes0 = generatedClasses()
         val t0 = System.nanoTime()
         try {
           val df = SparkEntry.queries(name)(spark, sfDir)
@@ -66,13 +67,17 @@ object BenchExtra {
         } catch {
           case e: Throwable => System.err.println(s"[bench-extra] $name: $e")
         }
-        val cg = org.apache.spark.metrics.source.CodegenMetrics
         println(f"[bench-extra] $name%-28s #$r ${(System.nanoTime() - t0) / 1e9}%8.3f s " +
-          f"[codegen: ${cg.METRIC_SOURCE_CODE_SIZE.getCount} units, " +
-          f"${cg.METRIC_COMPILATION_TIME.getCount} compiles, " +
-          f"${cg.METRIC_COMPILATION_TIME.getSnapshot.getMean * cg.METRIC_COMPILATION_TIME.getCount / 1000}%.1f s total]")
+          s"[codegen: ${generatedClasses() - classes0} new classes]")
       }
     }
     spark.stop()
   }
+
+  /** Classes generated so far in this JVM: an exact counter (one
+    * histogram update per generated class), unlike the compile-time
+    * histogram's decaying reservoir, whose mean x count is no total.
+    */
+  private def generatedClasses(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount
 }

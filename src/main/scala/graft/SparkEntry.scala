@@ -1466,14 +1466,12 @@ object SparkEntry {
     * calls, so this only affects auxiliary maintenance aggregations).
     * These fixtures do NOT grow with the sf — their size is pinned by
     * the generator configs above — so the partition count is a property
-    * of the fixture, not of the machine; GRAFT_HARNESS_SHUFFLE_PARTITIONS
-    * overrides for diagnostics.
+    * of the fixture, not of the machine.
     */
   private def harnessSession(spark0: SparkSession): SparkSession = {
     val s = spark0.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_HARNESS_SHUFFLE_PARTITIONS", "8"))
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     s
   }
 
@@ -2343,8 +2341,13 @@ object SparkEntry {
             "total_w" -> col("d_n_tok").cast("long")))
           val (_, agg) = Ivm.maintain(spark, view.root, vd,
             s"$base/cRep", s"$base/cView", s"$base/ckptCascade",
-            maxVersionsPerTrigger = 8, bootstrapAtVersion = Some(1L))
-          agg.refresh()
+            maxVersionsPerTrigger = 1, bootstrapAtVersion = Some(1L))
+          // multi-trigger catch-up: the view's history past the pin is
+          // its two maintainer triggers' versions, so one version per
+          // trigger makes two stream batches (a trigger of 2 drains both)
+          val cascadeLast = agg.refresh().summary.lastBatchId
+          require(cascadeLast >= 1,
+            s"cascade aggregate applied ${cascadeLast + 1} stream batch(es), expected >= 2")
           val casc = agg.read()
             .select(col("source"), col("n_rows"),
               col("total_tok"), col("total_w"))

@@ -153,10 +153,15 @@ final class IceLiteTable private[icelite] (
     * that is a table-wide exchange to reconcile a few delta files. The
     * broadcast plan's exchanges scale with the delta chain instead.
     * When the delta bytes exceed [[IceLite.broadcastDeltaReadBytes]]
-    * (not broadcastable), it falls back to the global groupBy for the
-    * dirty buckets only — clean buckets always bypass.
+    * (not broadcastable), or the dirty buckets hold at most
+    * `smallReadBytes` (the split costs more than it saves), it falls
+    * back to the global groupBy for the dirty buckets only — clean
+    * buckets always bypass. Every engine read uses the default floor;
+    * the plan-shape spec passes 0 to pin the at-scale plan on a
+    * fixture-sized table.
     */
-  private def mergedOf(s: IceSnapshot, buckets: Seq[Int]): DataFrame = {
+  private[graft] def mergedOf(s: IceSnapshot, buckets: Seq[Int],
+      smallReadBytes: Long = IceLite.smallMergedReadBytes): DataFrame = {
     import org.apache.spark.sql.functions._
     def visible(df: DataFrame): DataFrame = df.where(IceLite.visible(s))
     def lww(df: DataFrame): DataFrame = IceLite.lwwFold(df, s.keyCol)
@@ -187,8 +192,8 @@ final class IceLiteTable private[icelite] (
     // threshold and returns identical rows. The 100 TB shape is
     // untouched: a dirty bucket's base at scale exceeds any sane
     // threshold, so production reads keep the untouched-base-
-    // never-shuffled plan (PlanShapeSpec pins it with the threshold
-    // zeroed; the small path has its own spec).
+    // never-shuffled plan (PlanShapeSpec pins it with a floor of 0,
+    // and the small path at the default floor).
     val dirtyBytes =
       if (deltaBytes == Long.MaxValue) Long.MaxValue
       else {
@@ -198,7 +203,7 @@ final class IceLiteTable private[icelite] (
         catch { case _: ArithmeticException => Long.MaxValue }
       }
     if (deltaBytes > IceLite.broadcastDeltaReadBytes ||
-        dirtyBytes <= IceLite.smallMergedReadBytes) {
+        dirtyBytes <= smallReadBytes) {
       // chain too large to broadcast (or whole dirty set too small to
       // be worth the split): global LWW over the dirty buckets
       val raw = visible(scanFiles(s, baseFiles ++ deltaFiles))
@@ -455,17 +460,15 @@ object IceLite {
     * LWW groupBy over the dirty buckets. The broadcast ships only the
     * delta KEY column, a small fraction of these bytes.
     */
-  var broadcastDeltaReadBytes: Long = 256L << 20
+  val broadcastDeltaReadBytes: Long = 256L << 20
 
   /** Floor (total DIRTY-bucket bytes, base + delta) below which
     * merge-on-read skips the broadcast split and runs one global LWW
     * exchange over the dirty buckets: shuffling a few KB once is
     * cheaper than two broadcast-exchange sub-jobs per read. Identical
-    * rows either way; `GRAFT_SMALL_MERGED_READ_BYTES` overrides (0
-    * disables — the plan-shape specs pin the broadcast path that way).
+    * rows either way.
     */
-  var smallMergedReadBytes: Long =
-    sys.env.get("GRAFT_SMALL_MERGED_READ_BYTES").map(_.toLong).getOrElse(8L << 20)
+  val smallMergedReadBytes: Long = 8L << 20
 
   // ---- the physical layout: every commit path and every reader uses
   // these definitions, never a copy of them ----

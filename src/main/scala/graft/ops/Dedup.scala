@@ -447,10 +447,7 @@ object Dedup {
     var prevSum = labelSum(labels)
     var round = 0
     var converged = prevSum == null // empty graph: nothing to propagate
-    val dbg = graft.stream.MergeApply.debugTiming
-    val tLoop0 = System.nanoTime()
     while (!converged && round < maxRounds) {
-      val tR0 = System.nanoTime()
       round += 1
       val nbrMin = sym
         .join(labels.select(col("node").as("v"), col("label").as("vl")), Seq("v"))
@@ -480,9 +477,7 @@ object Dedup {
       labels = next
       converged = s.compareTo(prevSum) == 0
       prevSum = s
-      if (dbg) println(f"      [cc] round $round: ${(System.nanoTime() - tR0) / 1e9}%.2f s")
     }
-    if (dbg) println(f"      [cc] loop: $round rounds, ${(System.nanoTime() - tLoop0) / 1e9}%.2f s ($loopParts parts)")
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))
     val out = labels
       .select(col("node").as("doc_id"), col("label").as("component_id"))

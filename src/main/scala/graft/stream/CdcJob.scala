@@ -727,9 +727,7 @@ object CdcJob {
     val daemon =
       if (!cfg.asyncCompaction) None
       else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain,
-        clusterBy = MergeApply.clusterBy,
-        maxRowsPerFile = MergeApply.clusterMaxRowsPerFile))
+        table, MergeApply.maxDeltaChain))
     spark.readStream
       .schema(LogRecord.schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
@@ -834,9 +832,7 @@ object CdcJob {
     val daemon =
       if (!cfg.asyncCompaction) None
       else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain,
-        clusterBy = MergeApply.clusterBy,
-        maxRowsPerFile = MergeApply.clusterMaxRowsPerFile))
+        table, MergeApply.maxDeltaChain))
     val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
     todo.zipWithIndex.foreach { case (chunk, j) =>
       if (j < stopAfterBatches) {

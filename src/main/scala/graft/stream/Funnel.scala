@@ -166,7 +166,6 @@ object Funnel {
     */
   def run(spark: SparkSession, stagedDir: String, workDir: String,
       doneTtl: TTLConfig = TTLConfig.NONE): DataFrame = StateStores.withRocksDb(spark) {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       import spark.implicits._
       val src = spark.readStream.schema(stagedSchema)
@@ -309,7 +308,6 @@ object Funnel {
   /** The 3-step pipeline over a staged dir (same reveal harness). */
   def run3(spark: SparkSession, stagedDir: String, workDir: String)
       : DataFrame = StateStores.withRocksDb(spark) {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       import spark.implicits._
       val src = spark.readStream.schema(stagedSchema)
@@ -365,7 +363,6 @@ object Funnel {
     */
   def runToStore(spark: SparkSession, stagedDir: String, workDir: String,
       numBuckets: Int = 4): graft.icelite.IceLiteTable = StateStores.withRocksDb(spark) {
-    WindowedAgg.quiesceMaintenance(spark)
     val table = graft.icelite.IceLite.create(spark, s"$workDir/store",
       MergeApply.asNullable(storeSchema).asInstanceOf[StructType],
       "k", numBuckets)

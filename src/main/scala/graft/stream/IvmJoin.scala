@@ -246,8 +246,6 @@ object IvmJoin {
     val vDone = batchId <= view.refresh().summary.lastBatchId
     val fDone = batchId <= repF.refresh().summary.lastBatchId
     val dDone = batchId <= repD.refresh().summary.lastBatchId
-    if (sys.env.contains("GRAFT_DEBUG_IVMJ"))
-      println(s"[ivmj] gates batch=$batchId v=$vDone f=$fDone d=$dDone")
     if (vDone && fDone && dDone) return
     if (vDone) {
       // view committed; finish the replicas. Floors must NOT propagate
@@ -346,9 +344,6 @@ object IvmJoin {
         try {
           val factBatch = df.where(col("__side") === "f").select("__f.*")
           val dimBatch = df.where(col("__side") === "d").select("__d.*")
-          if (sys.env.contains("GRAFT_DEBUG_IVMJ"))
-            println(s"[ivmj] batch=$batchId f=${factBatch.count()} " +
-              s"d=${dimBatch.count()}")
           applyIvmJoinBatch(view, repF, repD, fkCol, factBatch, dimBatch,
             batchId, factRoot, dimRoot)
         } finally { df.unpersist(); () }

@@ -78,30 +78,26 @@ object MergeApply {
   )
 
   /** Delta files per bucket before the chain is folded into base. */
-  var maxDeltaChain: Int = 8
+  val maxDeltaChain: Int = 8
 
-  /** Cluster columns for folded bases: every compaction (inline fold
-    * and daemon) sorts each bucket's rows by these columns and splits
-    * files at [[clusterMaxRowsPerFile]], keeping per-file zone-map
-    * ranges disjoint so value predicates prune the folded layout (see
-    * `Maintenance.compactBucketsOnce`). Empty = unclustered (default).
+  /** Cluster columns of the engine's folds: none. The inline fold and
+    * the compaction daemon write one unsorted file per bucket (the
+    * `Maintenance` defaults); a caller that wants clustered folds
+    * passes `clusterBy`/`maxRowsPerFile` to `Maintenance.compact` or to
+    * its own `CompactionDaemon`.
     */
-  var clusterBy: Seq[String] = Nil
+  val clusterBy: Seq[String] = Nil
 
-  /** File-split bound for clustered folds; 0 = single file per bucket. */
-  var clusterMaxRowsPerFile: Long = 0L
+  /** File-split bound of the engine's folds; 0 = one file per bucket. */
+  val clusterMaxRowsPerFile: Long = 0L
 
-  /** Print per-phase wall times (diagnostics only). */
-  // accept 1/true/TRUE; a bad value must not kill this object's init
-  // (an ExceptionInInitializerError here poisons every MergeApply caller)
-  var debugTiming: Boolean = sys.env.get("GRAFT_DEBUG_TIMING")
+  /** Per-batch diagnostic notes in the `Bench` main (read once at
+    * startup; 1/true/TRUE). No engine code branches on it. A bad value
+    * reads as false: an ExceptionInInitializerError here would poison
+    * every MergeApply caller.
+    */
+  val debugTiming: Boolean = sys.env.get("GRAFT_DEBUG_TIMING")
     .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-  @inline private def phase[T](t0: Long, label: String)(f: => T): T = {
-    val s0 = System.nanoTime(); val r = f
-    if (debugTiming)
-      println(f"      [apply] $label: ${(System.nanoTime() - s0) / 1e9}%.2f s (t+${(System.nanoTime() - t0) / 1e9}%.2f)")
-    r
-  }
 
   import IceLite.{TOMB, VC, VL}
 
@@ -337,10 +333,9 @@ object MergeApply {
     val attemptTag = java.util.UUID.randomUUID().toString.take(8)
     val commitRel = f"data/delta-$channelTag$batchId%08d-$attemptTag"
     // a losing attempt's files and sidecar are unreferenced garbage
-    val written = phase(t0, "job1-dedup-write")(
-      IceLite.writeBucketed(observed, table.root, commitRel))
+    val written = IceLite.writeBucketed(observed, table.root, commitRel)
 
-    val m = phase(t0, "obs-get")(obs.get)
+    val m = obs.get
     def mLong(k: String, dflt: Long): Long = m.get(k) match {
       case Some(v: java.lang.Long) => v
       case Some(v: java.lang.Number) => v.longValue()
@@ -391,11 +386,10 @@ object MergeApply {
     // raised truncate floor, and publishes inside this apply's commit
     val compacted: Map[Int, Seq[String]] =
       if (toCompact.isEmpty) Map.empty
-      else phase(t0, "compact")(Maintenance.foldAndWrite(spark, table,
+      else Maintenance.foldAndWrite(spark, table,
         toCompact.flatMap(b => cur0.filesOf(b) ++ written.getOrElse(b, Nil)),
         newSchema, trC, trL, snap.numBuckets, toCompact.size,
-        f"data/base-$channelTag$batchId%08d-$attemptTag",
-        clusterBy = clusterBy, maxRowsPerFile = clusterMaxRowsPerFile))
+        f"data/base-$channelTag$batchId%08d-$attemptTag")
 
     // ---- snapshot commit (atomic, idempotent by batch id). On a lost
     // race the gate is re-checked against the new head: a concurrent
@@ -403,7 +397,7 @@ object MergeApply {
     // writer is the normal mode, as in the reference,
     // `InformixConnector.java:53-58`; the gate keeps a zombie driver
     // from double-applying). ----
-    val committed = phase(t0, "commit")(table.commitNext { cur =>
+    val committed = table.commitNext { cur =>
       val last = if (signalChannel) cur.summary.lastSignalBatchId else cur.summary.lastBatchId
       if (batchId <= last) None
       else {
@@ -425,7 +419,7 @@ object MergeApply {
             sm.floorCommit, sm.floorChange, trC, trL,
             lsnLoOut, lsnHi, nUpserts, nDel, note)))
       }
-    })
+    }
     val snapId = committed.fold(-1L)(_.snapshotId)
 
     // ---- per-bucket lineage rows (E5/E6), zero extra Spark jobs: the
@@ -437,7 +431,7 @@ object MergeApply {
         IceLite.LineageRow(b, st.events, st.deletes, st.keys, st.lsnLo, st.hiCommit,
           batchId, snapId, latencyMs, System.currentTimeMillis())
       }
-      phase(t0, "lineage")(table.appendLineageRows(rows))
+      table.appendLineageRows(rows)
     }
 
     MergeStats(batchId, committed.nonEmpty, alreadyApplied = committed.isEmpty,

@@ -209,7 +209,6 @@ object SessionProfile {
 
   /** The REAL streaming pipeline over a staged dir (parquet sink). */
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = StateStores.withRocksDb(spark) {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = profiles(spark, liveDir)
       .writeStream.format("parquet")
       .option("path", s"$workDir/sink")
@@ -243,7 +242,6 @@ object SessionProfile {
     */
   def runToStore(spark: SparkSession, stagedDir: String, workDir: String,
       numBuckets: Int = 4): graft.icelite.IceLiteTable = StateStores.withRocksDb(spark) {
-    WindowedAgg.quiesceMaintenance(spark)
     val table = graft.icelite.IceLite.create(spark, s"$workDir/store",
       MergeApply.asNullable(storeSchema).asInstanceOf[StructType],
       "k", numBuckets)

@@ -31,7 +31,7 @@ object StateStores {
     */
   def useRocksDb(spark: SparkSession): SparkSession = {
     spark.conf.set(ProviderKey, RocksDbProvider)
-    spark.conf.set(ChangelogKey, changelogDefault)
+    spark.conf.set(ChangelogKey, "true")
     spark
   }
 
@@ -44,13 +44,10 @@ object StateStores {
     * amortized O(delta) commit cost instead of O(state) — the
     * production setting for frequent small commits, and measurably the
     * dominant per-batch fixed cost of every transformWithState pipeline
-    * here with the default (off). `GRAFT_ROCKSDB_CHANGELOG=false`
-    * restores the eager-snapshot behavior for diagnostics.
+    * here with Spark's default (off).
     */
   private val ChangelogKey =
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-  private def changelogDefault: String =
-    sys.env.getOrElse("GRAFT_ROCKSDB_CHANGELOG", "true")
 
   /** Runs `body` with this session's provider set to RocksDB, then
     * restores whatever was configured before. Self-contained drains
@@ -62,7 +59,7 @@ object StateStores {
     val prior = spark.conf.getOption(ProviderKey)
     val priorCl = spark.conf.getOption(ChangelogKey)
     spark.conf.set(ProviderKey, RocksDbProvider)
-    spark.conf.set(ChangelogKey, changelogDefault)
+    spark.conf.set(ChangelogKey, "true")
     try body
     finally {
       def restore(key: String, v: Option[String]): Unit = v match {

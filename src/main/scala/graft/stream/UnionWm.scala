@@ -117,10 +117,16 @@ object UnionWm {
     * lockstep reveal (one staged file per source per micro-batch) over a
     * shared checkpoint, exactly [[WindowedAgg.driveRevealed]]'s pattern
     * generalized to two dirs.
+    *
+    * @param restartPerFile reveal one file per source, then drain one
+    *   AvailableNow query, per micro-batch: every batch restarts the
+    *   query over the shared checkpoint, so each source's watermark node
+    *   is rebuilt from the offset log (per-node watermarks are not
+    *   checkpointed, only the global one). The default drains one query
+    *   over all staged files.
     */
   def run(spark: SparkSession, stagedA: String, stagedB: String,
-      workDir: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
+      workDir: String, restartPerFile: Boolean = false): DataFrame = {
     def start(liveA: String, liveB: String) = {
       def src(dir: String, tag: String) =
         spark.readStream.schema(WindowedAgg.stagedSchema)
@@ -150,7 +156,7 @@ object UnionWm {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
     WindowedAgg.withShufflePartitions(spark,
         WindowedAgg.adaptiveStatePartitions(spark, stagedA, stagedB)) {
-      if (WindowedAgg.revealRestarts) {
+      if (restartPerFile) {
         fa.zip(fb).foreach { case (a, bf) =>
           Seq((a, liveA), (bf, liveB)).foreach { case (f, live) =>
             val p = java.nio.file.Paths.get(f)

@@ -156,114 +156,64 @@ object WindowedAgg {
       _.select(col("event_id").cast("long"), col("m").cast("long"))) ++ sentinels, dir)
   }
 
-  /** The reveal loop restarts a streaming query every few seconds over a
-    * SHARED checkpoint; each restart has a new queryRunId, so the JVM's
-    * state-store registry accumulates the stopped runs' provider
-    * instances (full state maps on heap) until periodic maintenance
-    * notices they're inactive — and a stale instance's maintenance
-    * snapshot can race the new instance's write on the same checkpoint
-    * file (observed: FileNotFoundException renaming a `.snapshot.crc`
-    * tmp at sf0.001 under the chained join→agg, killing the query).
-    * [[releaseStateStores]] between restarts closes the stopped run's
-    * providers synchronously (scoped by queryRunId, so a concurrent
-    * harness query in the same JVM is untouched): each run starts with
-    * exactly one instance per store — no leak, no race, snapshots stay
-    * on their default cadence.
-    * GRAFT_SS_MAINTENANCE_INTERVAL optionally overrides the session's
-    * maintenance interval for diagnostics.
+  /** Closes a stopped query run's state-store providers synchronously,
+    * scoped by queryRunId, so a concurrent harness query in the same
+    * JVM is untouched. A query restarted over the SHARED checkpoint has
+    * a new queryRunId, so without this the JVM's state-store registry
+    * keeps the stopped run's provider instances (full state maps on
+    * heap) until periodic maintenance notices they're inactive — and a
+    * stale instance's maintenance snapshot can race the new instance's
+    * write on the same checkpoint file (observed: FileNotFoundException
+    * renaming a `.snapshot.crc` tmp at sf0.001 under the chained
+    * join→agg, killing the query). Each run then starts with exactly
+    * one instance per store, and snapshots stay on their default
+    * cadence.
     */
-  private[stream] def quiesceMaintenance(spark: SparkSession): Unit =
-    sys.env.get("GRAFT_SS_MAINTENANCE_INTERVAL").foreach(v =>
-      spark.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", v))
-
   private[stream] def releaseStateStores(runId: java.util.UUID): Unit =
     org.apache.spark.sql.graft.SparkInternals.unloadStateStoresForRun(runId)
 
-  /** Historical restart-per-reveal mode (GRAFT_REVEAL_RESTARTS=true):
-    * one query start/stop + state-store reload PER staged file. The
-    * default single-run driver below forms the identical micro-batch
-    * sequence at one query's fixed cost; this loop remains for
-    * diagnostics and for exercising the checkpoint-resume contract in
-    * isolation (the specs and `cdc_engine_replay_ss` pin that contract
-    * independently of this knob).
-    */
-  private[graft] def revealRestarts: Boolean =
-    sys.props.get("graft.reveal.restarts")
-      .orElse(sys.env.get("GRAFT_REVEAL_RESTARTS"))
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-
-  /** One-file-per-micro-batch driver. Default: stage every file with
-    * its strictly increasing modification time preserved and drain ONE
-    * AvailableNow query whose file source is rate-limited to one file
-    * per micro-batch (`maxFilesPerTrigger=1` on every harness source) —
-    * the file source forms batch i from file i (modtime order), the
+  /** One-file-per-micro-batch driver: stage every file with its strictly
+    * increasing modification time preserved and drain ONE AvailableNow
+    * query whose file source is rate-limited to one file per
+    * micro-batch (`maxFilesPerTrigger=1` on every harness source) — the
+    * file source forms batch i from file i (modtime order), the
     * watermark advances at exactly the same micro-batch boundaries, and
     * the emitted set is identical to revealing the files one restart at
     * a time; what changes is paying query start/stop, state reload and
     * the no-data flush batch once per CELL instead of once per FILE
     * (measured ~3-4x on the stream_* bench cells). An extra no-data
-    * batch in either mode only shifts WHEN a window emits, never
-    * whether: drops use the arrival batch's watermark, and the final
-    * emitted set is fixed by the flush sentinels.
-    *
-    * With GRAFT_REVEAL_RESTARTS=true, reveals staged file i into the
-    * live source dir, then drains an AvailableNow query over the SHARED
-    * checkpoint — exactly the ssReplay restart pattern, the watermark
-    * resuming from the offset log between runs.
+    * batch only shifts WHEN a window emits, never whether: drops use
+    * the arrival batch's watermark, and the final emitted set is fixed
+    * by the flush sentinels. The checkpoint-resume contract is pinned
+    * by the specs and `cdc_engine_replay_ss`, and the restart-per-file
+    * driver by `UnionWm.run(restartPerFile = true)`.
     */
   private[stream] def driveRevealed(stagedDir: String,
       start: String => org.apache.spark.sql.streaming.StreamingQuery,
       liveDir: String): Unit = {
     val files = graft.util.Fs.listParquet(stagedDir).sorted
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(liveDir))
-    if (revealRestarts) {
-      files.zipWithIndex.foreach { case (f, i) =>
-        val t0 = System.nanoTime()
-        val p = java.nio.file.Paths.get(f)
-        java.nio.file.Files.copy(p,
-          java.nio.file.Paths.get(liveDir, p.getFileName.toString))
-        val q = start(liveDir)
-        q.awaitTermination()
-        releaseStateStores(q.runId)
-        if (MergeApply.debugTiming)
-          println(f"      [reveal] batch $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-    } else {
-      files.foreach { f =>
-        val p = java.nio.file.Paths.get(f)
-        val dest = java.nio.file.Paths.get(liveDir, p.getFileName.toString)
-        java.nio.file.Files.copy(p, dest)
-        // batch formation is by modtime order: preserve the staged times
-        java.nio.file.Files.setLastModifiedTime(dest,
-          java.nio.file.Files.getLastModifiedTime(p))
-      }
-      val t0 = System.nanoTime()
-      val q = start(liveDir)
-      q.awaitTermination()
-      if (MergeApply.debugTiming)
-        q.recentProgress.foreach { p =>
-          val dur = Option(p.durationMs).map(m =>
-            m.entrySet().toArray.map(_.toString).sorted.mkString(" ")).getOrElse("")
-          println(s"      [reveal] batch ${p.batchId}: rows=${p.numInputRows} " +
-            s"wm=${Option(p.eventTime).map(_.get("watermark")).orNull} " +
-            s"dropped=${p.stateOperators.map(_.numRowsDroppedByWatermark).mkString(",")} " +
-            s"[$dur]")
-        }
-      releaseStateStores(q.runId)
-      if (MergeApply.debugTiming)
-        println(f"      [reveal] single-run (${files.size} files): ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    files.foreach { f =>
+      val p = java.nio.file.Paths.get(f)
+      val dest = java.nio.file.Paths.get(liveDir, p.getFileName.toString)
+      java.nio.file.Files.copy(p, dest)
+      // batch formation is by modtime order: preserve the staged times
+      java.nio.file.Files.setLastModifiedTime(dest,
+        java.nio.file.Files.getLastModifiedTime(p))
     }
+    val q = start(liveDir)
+    q.awaitTermination()
+    releaseStateStores(q.runId)
   }
 
   /** Scale-adaptive shuffle/state partition count for a drained harness
     * stream (guide §2.2: size partitions from the DATA, not from the
-    * machine): staged input bytes / GRAFT_STREAM_PARTITION_BYTES
-    * (default 32 MB per partition), clamped between 1 and the session's
-    * configured shuffle partitions — a cluster-sized session keeps its
-    * configured parallelism; only a small staged state sheds the
-    * per-partition per-batch state-store fixed costs (open/commit/
-    * snapshot per store instance, x4 instances for a stream-stream
-    * join). GRAFT_STREAM_SHUFFLE_PARTITIONS pins the value outright.
+    * machine): staged input bytes / 32 MB per partition, clamped
+    * between 1 and the session's configured shuffle partitions — a
+    * cluster-sized session keeps its configured parallelism; only a
+    * small staged state sheds the per-partition per-batch state-store
+    * fixed costs (open/commit/snapshot per store instance, x4 instances
+    * for a stream-stream join).
     */
   private[stream] def adaptiveStatePartitions(spark: SparkSession,
       stagedDirs: String*): Int =
@@ -273,28 +223,22 @@ object WindowedAgg {
     * per-event RocksDB get/merge/put work, e.g. the session-profile
     * MapState pipelines): a partition saturates on JNI/state CPU far
     * below the shuffle-byte target above, so these drains use a much
-    * smaller per-partition byte budget (default 256 KB,
-    * `GRAFT_TWS_PARTITION_BYTES`), still clamped by the session's
-    * configured parallelism — measured 18.5 -> 12.8 s on the
+    * smaller per-partition byte budget (256 KB), still clamped by the
+    * session's configured parallelism — measured 18.5 -> 12.8 s on the
     * profile-store cell at 8 vs 1 partitions, flat on the low-volume
     * funnel cells.
     */
   private[stream] def adaptiveTwsPartitions(spark: SparkSession,
       stagedDirs: String*): Int =
-    adaptivePartitionsFor(spark,
-      sys.env.get("GRAFT_TWS_PARTITION_BYTES").map(_.toLong).getOrElse(256L << 10),
-      stagedDirs)
+    adaptivePartitionsFor(spark, 256L << 10, stagedDirs)
 
-  private def adaptivePartitionsFor(spark: SparkSession, perDefault: Long,
-      stagedDirs: Seq[String]): Int =
-    sys.env.get("GRAFT_STREAM_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse {
-      val bytes = stagedDirs.flatMap(graft.util.Fs.listParquet(_))
-        .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
-      val per = sys.env.get("GRAFT_STREAM_PARTITION_BYTES").map(_.toLong)
-        .getOrElse(perDefault)
-      val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1, math.min(cur, ((bytes + per - 1) / per).toInt))
-    }
+  private def adaptivePartitionsFor(spark: SparkSession, per: Long,
+      stagedDirs: Seq[String]): Int = {
+    val bytes = stagedDirs.flatMap(graft.util.Fs.listParquet(_))
+      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
+    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(1, math.min(cur, ((bytes + per - 1) / per).toInt))
+  }
 
   /** Runs `body` with the session's shuffle partitions set to `n`, then
     * restores the prior value — the [[StateStores.withRocksDb]]
@@ -321,7 +265,6 @@ object WindowedAgg {
     * excluded).
     */
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       val src = spark.readStream.schema(stagedSchema)
         .option("maxFilesPerTrigger", 1).parquet(liveDir)
@@ -435,7 +378,6 @@ object SessionAgg {
     * excluded).
     */
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       val src = spark.readStream.schema(stagedSchema)
         .option("maxFilesPerTrigger", 1).parquet(liveDir)
@@ -567,7 +509,6 @@ object StreamDedup {
     * arrival batch — no flush sentinels needed).
     */
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) =
       spark.readStream.schema(stagedSchema)
         .option("maxFilesPerTrigger", 1).parquet(liveDir)
@@ -683,7 +624,6 @@ object StreamJoin {
 
   private[stream] def runJoin(spark: SparkSession, stagedDir: String,
       workDir: String, joinType: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       val src = spark.readStream.schema(stagedJoinSchema)
         .option("maxFilesPerTrigger", 1).parquet(liveDir)
@@ -899,7 +839,6 @@ object StreamJoinFull {
   */
 object StreamJoinAgg {
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    WindowedAgg.quiesceMaintenance(spark)
     def start(liveDir: String) = {
       val src = spark.readStream.schema(StreamJoin.stagedJoinSchema)
         .option("maxFilesPerTrigger", 1).parquet(liveDir)

@@ -197,9 +197,7 @@ object WireSource {
     val daemon =
       if (!cfg.asyncCompaction) None
       else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain,
-        clusterBy = MergeApply.clusterBy,
-        maxRowsPerFile = MergeApply.clusterMaxRowsPerFile))
+        table, MergeApply.maxDeltaChain))
     spark.readStream
       .schema(if (binaryWire) wireBinSchema else wireSchema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
@@ -440,9 +438,7 @@ object WireSource {
     val daemon =
       if (!cfg.asyncCompaction) None
       else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain,
-        clusterBy = MergeApply.clusterBy,
-        maxRowsPerFile = MergeApply.clusterMaxRowsPerFile))
+        table, MergeApply.maxDeltaChain))
     val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
     todo.zipWithIndex.foreach { case (chunk, j) =>
       if (j < stopAfterBatches) {

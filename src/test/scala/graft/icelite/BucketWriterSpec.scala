@@ -23,12 +23,12 @@ import scala.jdk.CollectionConverters._
   */
 class BucketWriterSpec extends SparkSpec {
 
-  private def fixture(name: String, seed: Long, numBuckets: Int = 8)
+  private def fixture(name: String, seed: Long, numBuckets: Int = 8, logFiles: Int = 3)
       : (String, CdcConfig, IceLiteTable) = {
     val cfg = ChangeLogConfig(nTx = 160, nDocs = 100, seed = seed, deletePct = 10)
     val base = Fs.tempDir(name)
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = numBuckets)
-    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, logFiles)
     val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
       cdc, ChangeLogGen.snapshotLsn)
     (base, cdc, table)
@@ -46,10 +46,11 @@ class BucketWriterSpec extends SparkSpec {
       .map(p => Paths.get(root).relativize(p).toString).toSet
 
   test("each commit directory holds exactly the files its snapshot references, plus its zone map") {
-    val prevChain = MergeApply.maxDeltaChain
-    val (base, cdc, table) = fixture("graft-bw-layout", seed = 601)
+    // one apply per log file: the maxDeltaChain-th apply folds inline,
+    // and the last one leaves live deltas for the compaction to fold
+    val (base, cdc, table) = fixture("graft-bw-layout", seed = 601,
+      logFiles = MergeApply.maxDeltaChain + 1)
     try {
-      MergeApply.maxDeltaChain = 2 // the second apply folds inline
       CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
       Maintenance.compact(table)
       Maintenance.rebucket(table, 4)
@@ -79,10 +80,7 @@ class BucketWriterSpec extends SparkSpec {
       val all = Fs.walkAll(Paths.get(table.root, "data")).map(_.getFileName.toString)
       assert(!all.exists(n => n == "_temporary" || n == "_SUCCESS" || n.endsWith(".crc")),
         s"commit protocol artifacts under data/: ${all.filter(_.startsWith("_")).distinct}")
-    } finally {
-      MergeApply.maxDeltaChain = prevChain
-      Fs.deleteRecursively(base)
-    }
+    } finally Fs.deleteRecursively(base)
   }
 
   test("a clustered fold splits at maxRowsPerFile in input order: zone ranges are disjoint") {

@@ -2,8 +2,8 @@ package graft.icelite
 
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
-import graft.model.TokenDoc
-import graft.stream.{CdcConfig, CdcJob}
+import graft.model.{ChangeEvent, TokenDoc}
+import graft.stream.{CdcConfig, CdcJob, MergeApply}
 import graft.util.Fs
 import org.apache.spark.sql.functions.col
 
@@ -196,6 +196,52 @@ class MaintenanceSpec extends SparkSpec {
       IceLite.readSnapshotFile(table.root, v).summary.note.startsWith("compact")),
       "no compaction commit found — daemon never folded")
     assertEqual(table, oracle(cfg))
+    Fs.deleteRecursively(base)
+  }
+
+  test("inline fold cadence: the maxDeltaChain-th apply to a bucket folds its chain in its own commit") {
+    import spark.implicits._
+    val cfg = ChangeLogConfig(nTx = 10, nDocs = 20, seed = 47)
+    val base = Fs.tempDir("graft-foldcadence")
+    // one bucket: every apply touches it; no daemon, so folds are inline
+    val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 1)
+    val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+      cdc, ChangeLogGen.snapshotLsn)
+    def applyUpsert(i: Int): Unit = {
+      val doc = TokenDoc(f"doc${i % 5}%09d", Seq(i), i, "cdc")
+      MergeApply.applyBatch(table, Seq(ChangeEvent(100L + i, 1L, 100L + i, 100L + i,
+        "u", "t", None, Some(doc), 0L)).toDS().toDF(), i.toLong)
+      ()
+    }
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    def inlineFolds(s: IceSnapshot): Seq[String] =
+      s.allFiles.filter(_.startsWith("data/base-")).filterNot(_.startsWith("data/base-snapshot"))
+    val chain = MergeApply.maxDeltaChain
+
+    (0 until chain - 1).foreach(applyUpsert)
+    val unfolded = table.refresh()
+    assert(unfolded.deltas.getOrElse(0, Nil).size == chain - 1)
+    assert(inlineFolds(unfolded).isEmpty, s"folded before the chain filled: ${unfolded.allFiles}")
+
+    applyUpsert(chain - 1)
+    val folded = table.refresh()
+    // the fold rides the apply's own commit: one new version
+    assert(folded.snapshotId == unfolded.snapshotId + 1)
+    assert(folded.summary.lastBatchId == chain - 1)
+    assert(folded.deltas.getOrElse(0, Nil).isEmpty)
+    assert(folded.base(0).size == 1 && inlineFolds(folded) == folded.base(0),
+      s"expected one inline-folded base file: ${folded.allFiles}")
+    // the visible rows are what merge-on-read of the unfolded chain plus
+    // this apply's delta gives
+    val unfoldedRows = IceLite.lwwFold(
+      IceLite.readFiles(spark, table.root,
+        unfolded.allFiles ++ folded.changed.values.flatten, IceLite.withMeta(folded.schema))
+        .where(IceLite.visible(folded)), folded.keyCol)
+      .where(!col(IceLite.TOMB)).drop(IceLite.metaColumns: _*)
+    assert(sorted(table.read()) == sorted(unfoldedRows))
+    assert(table.read().where(col("doc_id") === f"doc${(chain - 1) % 5}%09d")
+      .select("n_tok").as[Int].collect().toSeq == Seq(chain - 1))
     Fs.deleteRecursively(base)
   }
 }

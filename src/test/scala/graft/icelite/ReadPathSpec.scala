@@ -102,7 +102,7 @@ class ReadPathSpec extends SparkSpec {
         s.deltas.getOrElse(b, Nil).isEmpty && s.base.getOrElse(b, Nil).nonEmpty)
     }
     assert(compactingApplies > 0,
-      s"fixture never compacted inside an apply commit — raise nTx or lower maxDeltaChain")
+      s"fixture never compacted inside an apply commit — write more log files")
     val want = table.readAt(head).as[TokenDoc].collect().map(d => d.doc_id -> d).toMap
     val before = table.readAt(2L).as[TokenDoc].collect().map(d => d.doc_id -> d).toMap
     val got = replayFeed(table, before, mid = 2L, head = head)

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.icelite.dsv2.IceLiteV2
 import graft.model.LogRecord
-import graft.stream.{CdcConfig, CdcJob, MergeApply}
+import graft.stream.{CdcConfig, CdcJob}
 import graft.util.Fs
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -24,15 +24,14 @@ class TaskCountSpec extends SparkSpec {
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
   test("manifest reads start no Spark job and equal a plain parquet read of the same files") {
-    val prevChain = MergeApply.maxDeltaChain
     val base = Fs.tempDir("graft-manifestread")
     val sc = spark.sparkContext
     val jobs = new SparkJobs(sc)
     try {
-      // no inline fold: every apply's delta files stay live
-      MergeApply.maxDeltaChain = 1000
       val cfg = ChangeLogConfig(nTx = 240, nDocs = 160, seed = 457, deletePct = 15)
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
+      // 6 applies stay below maxDeltaChain: no inline fold, so every
+      // apply's delta files stay live
       ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 6)
       val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
         cdc, ChangeLogGen.snapshotLsn)
@@ -68,7 +67,6 @@ class TaskCountSpec extends SparkSpec {
       assert(sorted(feed) == sorted(plain(changed).where(col(snap.keyCol).isNotNull)
         .withColumn("_change_type", when(col(IceLite.TOMB), lit("d")).otherwise(lit("c")))))
     } finally {
-      MergeApply.maxDeltaChain = prevChain
       jobs.close()
       Fs.deleteRecursively(base)
     }

@@ -3,6 +3,7 @@ package graft.icelite
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.icelite.dsv2.IceLiteV2
+import graft.model.LogRecord
 import graft.stream.{CdcConfig, CdcJob, MergeApply}
 import graft.util.Fs
 import org.apache.spark.sql.functions._
@@ -108,7 +109,9 @@ class ZoneMapsSpec extends SparkSpec {
     val cfg = ChangeLogConfig(nTx = 150, nDocs = 90, seed = 331, deletePct = 10)
     val base = Fs.tempDir("graft-zm")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
-    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+    // one apply per log file: the maxDeltaChain-th apply folds inline,
+    // and the last one leaves live deltas for the compaction to fold
+    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, MergeApply.maxDeltaChain + 1)
 
     // every live data file: its commit dir carries a sidecar, its stats
     // cover its rows, and it is bucket-pure (each row's
@@ -143,11 +146,7 @@ class ZoneMapsSpec extends SparkSpec {
       cdc, ChangeLogGen.snapshotLsn)
     val seen = scala.collection.mutable.Set.empty[String]
     seen ++= checkLive(table)
-    // a short chain threshold makes the second batch fold inline
-    val prevChain = MergeApply.maxDeltaChain
-    MergeApply.maxDeltaChain = 2
-    try CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-    finally MergeApply.maxDeltaChain = prevChain
+    CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
     seen ++= checkLive(table)
     Maintenance.compact(table)
     seen ++= checkLive(table)
@@ -257,50 +256,48 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("production path: configured clusterBy makes the stream's inline folds clustered") {
-    import graft.stream.MergeApply
-    val (prevChain, prevCluster, prevRows) =
-      (MergeApply.maxDeltaChain, MergeApply.clusterBy, MergeApply.clusterMaxRowsPerFile)
-    MergeApply.maxDeltaChain = 2
-    MergeApply.clusterBy = Seq("n_tok")
-    MergeApply.clusterMaxRowsPerFile = 16L
+    val cfg = ChangeLogConfig(nTx = 220, nDocs = 130, seed = 353, deletePct = 5)
+    val base = Fs.tempDir("graft-zmprod")
+    val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4)
+    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 4)
+    val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+      cdc, ChangeLogGen.snapshotLsn)
+    // the stream's folds run on a daemon configured with the cluster
+    // policy: a chain of 2 folds, sorted by n_tok, 16 rows per file
+    val daemon = new Maintenance.CompactionDaemon(table, 2,
+      clusterBy = Seq("n_tok"), maxRowsPerFile = 16L)
     try {
-      val cfg = ChangeLogConfig(nTx = 220, nDocs = 130, seed = 353, deletePct = 5)
-      val base = Fs.tempDir("graft-zmprod")
-      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4)
-      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 4)
-      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
-        cdc, ChangeLogGen.snapshotLsn)
-      CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-
-      val snap = table.refresh()
-      // inline-folded buckets (not the unclustered initial base-snapshot)
-      val foldedBases = snap.base.filter(_._2.exists(f =>
-        f.contains("/base-") && !f.contains("base-snapshot")))
-      assert(foldedBases.nonEmpty, "fixture must trip the inline fold (chain=2)")
-      assert(foldedBases.values.exists(_.size > 1),
-        s"need a multi-file fold for the disjointness check: " +
-          s"${foldedBases.view.mapValues(_.size).toMap}")
-      // every inline-folded bucket's files carry pairwise-disjoint
-      // n_tok ranges (live rows; tombstones are all-null and stat-less)
-      foldedBases.foreach { case (_, files) =>
-        val ranges = files
-          .flatMap(rel => ZoneMaps.statsFor(table.root, rel))
-          .flatMap(_.get("n_tok"))
-          .flatMap(s => for { mn <- s.min; mx <- s.max } yield (mn.toInt, mx.toInt))
-        ranges.sorted.sliding(2).foreach {
-          case Seq((_, aMax), (bMin, _)) =>
-            assert(aMax <= bMin, s"inline fold must cluster: $ranges")
-          case _ => ()
-        }
+      Fs.listParquet(cdc.logDir).sorted.zipWithIndex.foreach { case (f, i) =>
+        CdcJob.processBatch(table, spark.read.schema(LogRecord.schema).parquet(f),
+          i.toLong, inlineCompact = false)
+        daemon.poke()
       }
-      // and the merged read is unchanged by the layout
-      val live = table.read().collect().map(_.getAs[String]("doc_id")).sorted
-      assert(live.distinct.length == live.length && live.nonEmpty)
-      Fs.deleteRecursively(base)
-    } finally {
-      MergeApply.maxDeltaChain = prevChain
-      MergeApply.clusterBy = prevCluster
-      MergeApply.clusterMaxRowsPerFile = prevRows
+      daemon.drain()
+    } finally daemon.close()
+
+    val snap = table.refresh()
+    // daemon-folded buckets (not the unclustered initial base-snapshot)
+    val foldedBases = snap.base.filter(_._2.exists(_.contains("/compact-")))
+    assert(foldedBases.nonEmpty, "fixture must trip the daemon's fold (chain=2)")
+    assert(foldedBases.values.exists(_.size > 1),
+      s"need a multi-file fold for the disjointness check: " +
+        s"${foldedBases.view.mapValues(_.size).toMap}")
+    // every folded bucket's files carry pairwise-disjoint n_tok ranges
+    // (live rows; tombstones are all-null and stat-less)
+    foldedBases.foreach { case (_, files) =>
+      val ranges = files
+        .flatMap(rel => ZoneMaps.statsFor(table.root, rel))
+        .flatMap(_.get("n_tok"))
+        .flatMap(s => for { mn <- s.min; mx <- s.max } yield (mn.toInt, mx.toInt))
+      ranges.sorted.sliding(2).foreach {
+        case Seq((_, aMax), (bMin, _)) =>
+          assert(aMax <= bMin, s"the fold must cluster: $ranges")
+        case _ => ()
+      }
     }
+    // and the merged read is unchanged by the layout
+    val live = table.read().collect().map(_.getAs[String]("doc_id")).sorted
+    assert(live.distinct.length == live.length && live.nonEmpty)
+    Fs.deleteRecursively(base)
   }
 }

@@ -35,13 +35,15 @@ class PlanShapeSpec extends SparkSpec {
   private def count(plan: String, token: String): Int =
     plan.sliding(token.length).count(_ == token)
 
-  /** Run `body` with the merged-read small-path floor set to `v`,
-    * restoring the previous value afterwards.
+  /** The user-facing read (`IceLiteTable.read`) with the merged-read
+    * small-path floor `smallReadBytes`.
     */
-  private def withSmallMergedReadBytes[T](v: Long)(body: => T): T = {
-    val prev = graft.icelite.IceLite.smallMergedReadBytes
-    graft.icelite.IceLite.smallMergedReadBytes = v
-    try body finally graft.icelite.IceLite.smallMergedReadBytes = prev
+  private def readWith(table: graft.icelite.IceLiteTable, smallReadBytes: Long) = {
+    import org.apache.spark.sql.functions.{col, not}
+    val s = table.current
+    table.mergedOf(s, s.buckets, smallReadBytes)
+      .where(not(col(graft.icelite.IceLite.TOMB)))
+      .drop(graft.icelite.IceLite.metaColumns: _*)
   }
 
   test("broadcast assembly: the PAYLOAD shuffles exactly once (the bucket exchange)") {
@@ -91,45 +93,41 @@ class PlanShapeSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      // zero the small-read floor: this block pins the AT-SCALE plan
-      // shape (a dirty bucket's base at 100 TB always exceeds the
-      // floor); the small path is pinned below
-      withSmallMergedReadBytes(0L) {
-        val plan = table.read().queryExecution.executedPlan
-        val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
-        // the delta LWW and the touched-rows LWW — both O(delta), never O(table)
-        assert(shuffles.size == 2, s"expected exactly 2 delta-scale shuffles:\n$plan")
-        // the bulk of the base flows through the broadcast ANTI join straight
-        // to the output — it must not sit beneath any exchange
-        shuffles.foreach { e =>
-          val antiBelow = e.collect {
-            case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
-          }
-          assert(antiBelow.isEmpty,
-            s"untouched-base branch found beneath a shuffle:\n$plan")
+      // a small-read floor of 0 pins the AT-SCALE plan shape (a dirty
+      // bucket's base at 100 TB always exceeds the floor); the small
+      // path is pinned below
+      val plan = readWith(table, 0L).queryExecution.executedPlan
+      val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
+      // the delta LWW and the touched-rows LWW — both O(delta), never O(table)
+      assert(shuffles.size == 2, s"expected exactly 2 delta-scale shuffles:\n$plan")
+      // the bulk of the base flows through the broadcast ANTI join straight
+      // to the output — it must not sit beneath any exchange
+      shuffles.foreach { e =>
+        val antiBelow = e.collect {
+          case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
         }
-        val joinTypes = plan.collect {
-          case j: BroadcastHashJoinExec => j.joinType
-        }
-        assert(joinTypes.contains(LeftAnti) && joinTypes.contains(LeftSemi),
-          s"expected broadcast anti+semi split of the base:\n$plan")
-        assert(!plan.toString.contains("SortMergeJoin"))
+        assert(antiBelow.isEmpty,
+          s"untouched-base branch found beneath a shuffle:\n$plan")
       }
+      val joinTypes = plan.collect {
+        case j: BroadcastHashJoinExec => j.joinType
+      }
+      assert(joinTypes.contains(LeftAnti) && joinTypes.contains(LeftSemi),
+        s"expected broadcast anti+semi split of the base:\n$plan")
+      assert(!plan.toString.contains("SortMergeJoin"))
 
-      // small-read fast path (fixture-sized dirty set): ONE global LWW
-      // exchange, no broadcast split — and bit-identical rows
-      val splitRows = withSmallMergedReadBytes(0L)(table.read().orderBy("doc_id").collect().toSeq)
-      withSmallMergedReadBytes(8L << 20) {
-        val smallPlanDf = table.read()
-        val smallPlan = smallPlanDf.queryExecution.executedPlan
-        val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
-        assert(smallShuffles.size == 1,
-          s"small merged read should be ONE global LWW exchange:\n$smallPlan")
-        assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
-          s"small merged read should have no broadcast split:\n$smallPlan")
-        assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
-          "small-path rows must equal broadcast-path rows")
-      }
+      // small-read fast path (fixture-sized dirty set, default floor):
+      // ONE global LWW exchange, no broadcast split — and bit-identical rows
+      val splitRows = readWith(table, 0L).orderBy("doc_id").collect().toSeq
+      val smallPlanDf = table.read()
+      val smallPlan = smallPlanDf.queryExecution.executedPlan
+      val smallShuffles = smallPlan.collect { case e: ShuffleExchangeExec => e }
+      assert(smallShuffles.size == 1,
+        s"small merged read should be ONE global LWW exchange:\n$smallPlan")
+      assert(smallPlan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
+        s"small merged read should have no broadcast split:\n$smallPlan")
+      assert(smallPlanDf.orderBy("doc_id").collect().toSeq == splitRows,
+        "small-path rows must equal broadcast-path rows")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     Fs.deleteRecursively(base)
   }

@@ -71,8 +71,7 @@ class UnionWmSpec extends SparkSpec {
     // the hazard pinned here is RESTART-specific: per-node watermarks
     // are not checkpointed, so only a restart rebuilds B's node at 0
     // (within one continuous run B's in-memory node value survives its
-    // idle batches) — run this case under the restart-per-reveal driver
-    sys.props("graft.reveal.restarts") = "true"
+    // idle batches) — run this case under the restart-per-file driver
     try {
       // B delivers only in batch 0 and is empty afterwards. Per-NODE
       // watermarks are not checkpointed — only the ratcheted global is
@@ -93,7 +92,8 @@ class UnionWmSpec extends SparkSpec {
       val bEmpty = Seq.empty[(Long, Long)].toDF("event_id", "m")
       UnionWm.stage(spark, Seq(a0, a1, a2), Seq(b0, bEmpty, bEmpty),
         s"$base/stagedA", s"$base/stagedB")
-      val out = UnionWm.run(spark, s"$base/stagedA", s"$base/stagedB", s"$base/work")
+      val out = UnionWm.run(spark, s"$base/stagedA", s"$base/stagedB", s"$base/work",
+          restartPerFile = true)
         .select("w_start", "n_a", "n_b")
         .as[(Long, Long, Long)].collect().toSet
       assert(out === Set(
@@ -101,10 +101,7 @@ class UnionWmSpec extends SparkSpec {
         (24000L, 1L, 0L), (44000L, 1L, 0L),
         (14000L, 1L, 0L),
         (15000L, 0L, 1L)))
-    } finally {
-      sys.props.remove("graft.reveal.restarts")
-      graft.util.Fs.deleteRecursively(base)
-    }
+    } finally graft.util.Fs.deleteRecursively(base)
   }
 
   test("streaming union agg equals the min-watermark model on real data; the min rule is load-bearing") {
