@@ -17,9 +17,9 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *
   * Injected: `lww_max_by` (the merge dedup aggregate), `cosine_sim`
   * (vector scoring) and `kmv_sketch` (bounded-state distinct sketch).
-  * The per-model compiled functions (sign-LSH plane tables, IVF
-  * centroid tables, per-batch stats taps) stay registry-scoped by
-  * design — their constants are data-dependent.
+  * This is the only place the engine names a function for SQL text:
+  * engine code builds its expressions as Columns (the `graft.plans`
+  * builders) and registers nothing in a session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

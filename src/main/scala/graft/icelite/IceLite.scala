@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod, struct}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -540,10 +540,9 @@ object IceLite {
     * exchange. Output columns keep the input order.
     */
   def lwwFold(rows: DataFrame, keyCol: String): DataFrame = {
-    graft.plans.LwwMaxBy.register(rows.sparkSession)
-    val payloadSql = rows.columns.map(c => s"`$c`").mkString("struct(", ", ", ")")
     rows.groupBy(col(keyCol).as("__k"))
-      .agg(expr(s"lww_max_by($payloadSql, `$VC`, `$VL`)").as("w"))
+      .agg(graft.plans.LwwMaxBy.agg(struct(rows.columns.toSeq.map(col): _*),
+        col(VC), col(VL)).as("w"))
       .select(rows.columns.toSeq.map(c =>
         if (c == keyCol) col("__k").as(c) else col("w").getField(c).as(c)): _*)
   }

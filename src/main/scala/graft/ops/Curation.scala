@@ -216,7 +216,6 @@ object Curation {
       textCol: String = "text", mBits: Int = 1 << 20, k: Int = BloomK,
       maxDocFreq: Int = Dedup.DefaultMaxDocFreq): DataFrame = {
     require(mBits >= 64 && (mBits & (mBits - 1)) == 0, "mBits must be a power of two")
-    val spark = df.sparkSession
     val sh = Dedup.cappedShingles(df, n, textCol, maxDocFreq).cache()
     val evalSh = sh.where(evalPred).select(col("shingle")).distinct()
     val posCols = (0 until k).map(i => bloomPos(col("shingle"), i, mBits))
@@ -224,15 +223,11 @@ object Curation {
       .collect().map(_.getLong(0))
     val words = new Array[Long](mBits / 64)
     positions.foreach(p => words((p >>> 6).toInt) |= (1L << (p & 63)))
-    // registry name encodes the filter instance (bitmap content hash):
-    // two different filters in one session never alias
-    val sig = words.foldLeft(1125899906842597L)((a, w) => a * 31 + w)
-    val fname = s"bloom_bit_${mBits}_${java.lang.Long.toHexString(sig & Long.MaxValue)}"
-    graft.plans.BloomBit.register(spark, fname, words)
     val tr = sh.where(!evalPred)
     val withPos = (0 until k).foldLeft(tr)((d, i) =>
       d.withColumn(s"__bp$i", bloomPos(col("shingle"), i, mBits)))
-    val hit = (0 until k).map(i => expr(s"$fname(__bp$i)")).reduce(_ && _)
+    val hit = (0 until k).map(i => graft.plans.BloomBit.isSet(col(s"__bp$i"), words))
+      .reduce(_ && _)
     val bloomHits = withPos.where(hit)
       .groupBy(col("doc_id")).agg(count(lit(1)).as("bloom_hits"))
     val exact = tr.join(broadcast(evalSh), Seq("shingle"), "left_semi")
@@ -292,12 +287,11 @@ object Curation {
       textCol: String = "text", k: Int = QuantileSampleK,
       qs: Seq[Int] = Seq(25, 50, 75, 95)): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.KmvSample.register(df.sparkSession)
     val prepared = df.select(col(strataCol),
       portableHash(concat(col("doc_id").cast("string"), lit(":qsample"))).as("h"),
       size(TextOps.words(col(textCol))).cast("long").as("v"))
     val sampled = prepared.groupBy(col(strataCol))
-      .agg(expr(s"kmv_sample(h, v, $k)").as("sample"))
+      .agg(graft.plans.KmvSample.agg(col("h"), col("v"), k).as("sample"))
     val ex = sampled.select(col(strataCol), explode(col("sample")).as("v"))
     val w = Window.partitionBy(col(strataCol)).orderBy(col("v"))
     val wt = Window.partitionBy(col(strataCol))

@@ -186,8 +186,8 @@ object Dedup {
     * synthesize extra hash rows (NearDupIndex's no-shingle fallback).
     */
   private[graft] def sigOfHashRows(rows: DataFrame): DataFrame = {
-    graft.plans.MinHashSigs.register(rows.sparkSession, MinhashA, MinhashB, MinhashP)
-    rows.groupBy(col("doc_id")).agg(expr("minhash_sigs(h)").as("sig"))
+    rows.groupBy(col("doc_id"))
+      .agg(graft.plans.MinHashSigs.agg(col("h"), MinhashA, MinhashB, MinhashP).as("sig"))
   }
 
   /** MinHash signatures in the flat (doc_id, s0..s127) shape — the
@@ -314,7 +314,7 @@ object Dedup {
     val ea = emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
     val eb = emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))
     cand.join(ea, "id_a").join(eb, "id_b")
-      .withColumn("cos", Similarity.fastCosinePublic(emb, "e_a", "e_b"))
+      .withColumn("cos", graft.plans.VecMath.cosineSim(col("e_a"), col("e_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos_sim"))
   }
@@ -326,7 +326,7 @@ object Dedup {
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("e_a"))
     val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("e_b"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cos", Similarity.fastCosinePublic(emb, "e_a", "e_b"))
+      .withColumn("cos", graft.plans.VecMath.cosineSim(col("e_a"), col("e_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos_sim"))
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.icelite.{IceLite, IceLiteTable}
+import graft.plans.VecMath
 import graft.stream.MergeApply
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -238,10 +239,9 @@ object NearDupIndex {
     // degenerate-stress operating point ~1.3M candidates x ~1 KB of
     // array, a GB-scale broadcast build). The index is still never
     // shuffled; sig_a attaches from the batch-sized (cached) sg frame.
-    graft.plans.VecMath.register(sg.sparkSession)
     val out = sigIdx.join(broadcast(cand), Seq("dup_of"))
       .join(broadcast(sg.select(col("doc_id"), col("sig").as("sig_a"))), Seq("doc_id"))
-      .withColumn("matches", expr("sig_matches(sig_a, sig_b)"))
+      .withColumn("matches", VecMath.sigMatches(col("sig_a"), col("sig_b")))
       .where(col("matches") >= minMatches)
       .groupBy(col("doc_id"))
       .agg(min(col("dup_of")).as("dup_of"),
@@ -340,12 +340,11 @@ object NearDupIndex {
     */
   def withinBatchNearDups(sg: DataFrame, minMatches: Int = DefaultMinMatches,
       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    graft.plans.VecMath.register(sg.sparkSession)
     val pairs = Dedup.bucketPairs(bandRows(sg), "doc_id", "doc_a", "doc_b", maxBucket)
     pairs
       .join(broadcast(sg.select(col("doc_id").as("doc_a"), col("sig").as("sig_a"))), Seq("doc_a"))
       .join(broadcast(sg.select(col("doc_id").as("doc_b"), col("sig").as("sig_b"))), Seq("doc_b"))
-      .where(expr("sig_matches(sig_a, sig_b)") >= minMatches)
+      .where(VecMath.sigMatches(col("sig_a"), col("sig_b")) >= minMatches)
       .select(col("doc_b").as("doc_id")).distinct()
   }
 

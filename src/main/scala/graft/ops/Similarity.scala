@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.VecMath
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -31,18 +32,6 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Codegen'd cosine over two named array<float> columns: registers the
-    * native `cosine_sim` expression (graft.plans.CosineSim) on the
-    * owning session — bit-identical numerics to [[cosine]], but a tight
-    * generated loop instead of interpreted higher-order lambdas.
-    */
-  def fastCosinePublic(df: org.apache.spark.sql.DataFrame, a: String, b: String): Column = {
-    graft.plans.VecMath.register(df.sparkSession)
-    expr(s"cosine_sim(`$a`, `$b`)")
-  }
-  private def fastCosine(df: org.apache.spark.sql.DataFrame, a: String, b: String): Column =
-    fastCosinePublic(df, a, b)
-
   /** Exact brute-force cosine top-k: queries x corpus cross join.
     * The query side is tiny and broadcast, so the corpus never
     * shuffles; top-k uses a per-query window (k small). O(|Q|*|C|) —
@@ -52,7 +41,7 @@ object Similarity {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val c = corpus.select(col("vec_id"), col("embedding"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("vec_id"))
-      .withColumn("cos", fastCosine(corpus, "q_emb", "embedding"))
+      .withColumn("cos", VecMath.cosineSim(col("q_emb"), col("embedding")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -71,7 +60,7 @@ object Similarity {
     val c = corpus.select(col("vec_id"), col("embedding"), col(cellCol).as("cell"))
     val scored = c.join(broadcast(q), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("cos", fastCosine(corpus, "q_emb", "embedding"))
+      .withColumn("cos", VecMath.cosineSim(col("q_emb"), col("embedding")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -180,19 +169,15 @@ object Similarity {
     bits.reduce(_ + _)
   }
 
-  /** The compiled form of [[lshBucket]]: registers a
-    * [[graft.plans.SignLshBuckets]] function with the plane table baked
-    * in and returns `array<long>` of per-band buckets — identical values
-    * to the column form, one compiled pass instead of bands x planes
-    * interpreted lambdas.
+  /** The compiled form of [[lshBucket]]: a
+    * [[graft.plans.SignLshBuckets]] with the plane table baked in,
+    * `array<long>` of per-band buckets — identical values to the column
+    * form, one compiled pass instead of bands x planes interpreted
+    * lambdas.
     */
-  private def signLshCol(df: DataFrame, embCol: String, bands: Int,
-      planesPerBand: Int): Column = {
-    val name = s"sign_lsh_b${bands}_p$planesPerBand"
-    val planes = (0 until bands * planesPerBand).map(planeComponents)
-    graft.plans.VecMath.registerSignLsh(df.sparkSession, name, bands, planesPerBand, planes)
-    expr(s"$name(`$embCol`)")
-  }
+  private def signLshCol(emb: Column, bands: Int, planesPerBand: Int): Column =
+    VecMath.signLshBuckets(emb, bands, planesPerBand,
+      (0 until bands * planesPerBand).map(planeComponents))
 
   /** Banded sign-LSH: `bands` independent bucket ids per vector (band b
     * uses planes [b*planesPerBand, (b+1)*planesPerBand)). Candidates =
@@ -202,7 +187,7 @@ object Similarity {
   def bandBuckets(emb: DataFrame, bands: Int = 8, planesPerBand: Int = 3,
       idCol: String = "vec_id", embCol: String = "embedding"): DataFrame =
     emb.select(col(idCol),
-        posexplode(signLshCol(emb, embCol, bands, planesPerBand)).as(Seq("band", "bucket")))
+        posexplode(signLshCol(col(embCol), bands, planesPerBand)).as(Seq("band", "bucket")))
       .select(col(idCol), col("band"), col("bucket"))
 
   /** Bucketed ANN: exact cosine ranking within sign-LSH buckets.
@@ -211,12 +196,12 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int, nPlanes: Int = 8): DataFrame = {
     val cb = corpus.select(col("vec_id"), col("embedding"),
-      element_at(signLshCol(corpus, "embedding", 1, nPlanes), 1).as("bucket"))
+      element_at(signLshCol(col("embedding"), 1, nPlanes), 1).as("bucket"))
     val qb = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      element_at(signLshCol(queries, "embedding", 1, nPlanes), 1).as("bucket"))
+      element_at(signLshCol(col("embedding"), 1, nPlanes), 1).as("bucket"))
     val scored = cb.join(broadcast(qb), Seq("bucket"))
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("cos", fastCosine(corpus, "q_emb", "embedding"))
+      .withColumn("cos", VecMath.cosineSim(col("q_emb"), col("embedding")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -287,10 +272,7 @@ object Similarity {
         .map(r => (r.getInt(0), r.getSeq[Long](1)))
         .sortBy(_._1)
     val centSeqs: Seq[Seq[Long]] = cents.map(_._2).toSeq // index == cid
-    val fname = s"ivf_probes_k${centSeqs.size}_" +
-      (scala.util.hashing.MurmurHash3.seqHash(centSeqs.flatten) & Int.MaxValue)
-    graft.plans.VecMath.registerIvfProbes(corpus.sparkSession, fname, centSeqs)
-    def probeOrder(embCol: String): Column = expr(s"$fname(`$embCol`)")
+    def probeOrder(embCol: String): Column = VecMath.ivfProbeOrder(col(embCol), centSeqs)
 
     val corpusCells = corpus.select(col("vec_id"), col("embedding"),
       element_at(probeOrder("embedding"), 1).as("cell"))
@@ -298,7 +280,7 @@ object Similarity {
         explode(slice(probeOrder("embedding"), 1, nprobe)).as("cell"))
     val scored = corpusCells.join(broadcast(probes), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("cos", fastCosine(corpus, "q_emb", "embedding"))
+      .withColumn("cos", VecMath.cosineSim(col("q_emb"), col("embedding")))
     val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
     scored.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
@@ -402,10 +384,7 @@ object Similarity {
   def pqCodes(corpus: DataFrame, m: Int = 4, ksub: Int = 16,
       iters: Int = 2, sampleMod: Int = 4): DataFrame = {
     val books = collectBooks(trainPqCodebooks(corpus, m, ksub, iters, sampleMod), m)
-    val fname = s"pq_encode_m${m}_" +
-      (scala.util.hashing.MurmurHash3.seqHash(books.flatten.flatten) & Int.MaxValue)
-    graft.plans.VecMath.registerPqEncode(corpus.sparkSession, fname, books)
-    corpus.select(col("vec_id"), expr(s"$fname(embedding)").as("codes"))
+    corpus.select(col("vec_id"), VecMath.pqEncode(col("embedding"), books).as("codes"))
   }
 
   /** Per-subspace code-usage histogram — the quantizer-balance
@@ -443,12 +422,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val books = collectBooks(trainPqCodebooks(corpus, m, ksub, iters, sampleMod), m)
     val ksubEff = books.head.size // == ksub unless the sample is smaller
-    val encName = s"pq_encode_m${m}_" +
-      (scala.util.hashing.MurmurHash3.seqHash(books.flatten.flatten) & Int.MaxValue)
-    graft.plans.VecMath.registerPqEncode(spark, encName, books)
-    val adcName = s"pq_adc_k$ksubEff"
-    graft.plans.VecMath.registerPqAdc(spark, adcName, ksubEff)
-    val codes = corpus.select(col("vec_id"), expr(s"$encName(embedding)").as("codes"))
+    val codes = corpus.select(col("vec_id"), VecMath.pqEncode(col("embedding"), books).as("codes"))
     // the collected model as a LOCAL relation: the dt plan must not
     // re-embed (and so re-run) the whole training job
     import spark.implicits._
@@ -465,7 +439,7 @@ object Similarity {
         x => x.getField("d")).as("dt"))
       .select(col("vec_id").as("query_id"), col("dt"))
     val scored = codes.join(broadcast(dt), col("query_id") =!= col("vec_id"))
-      .withColumn("adc_d", expr(s"$adcName(codes, dt)"))
+      .withColumn("adc_d", VecMath.pqAdc(col("codes"), col("dt"), ksubEff))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc_d"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)
@@ -497,12 +471,11 @@ object Similarity {
     * engines and partitionings, so the SQL oracle replays training,
     * encode and scoring exactly.
     */
-  /** Train both IVFPQ models (coarse centroids + residual codebooks),
-    * register the compiled probe/encode functions on the session, and
-    * return (centroid table, codebooks, probe fn name, encode fn name).
+  /** Train both IVFPQ models: (coarse centroid table, residual
+    * codebooks).
     */
   private def ivfPqModels(corpus: DataFrame, kCells: Int, m: Int, ksub: Int,
-      iters: Int, sampleMod: Int): (Seq[Seq[Long]], Seq[Seq[Seq[Long]]], String, String) = {
+      iters: Int, sampleMod: Int): (Seq[Seq[Long]], Seq[Seq[Seq[Long]]]) = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // coarse quantizer (shared trainer with ivfTrainedTopK)
@@ -511,22 +484,14 @@ object Similarity {
         .map(r => (r.getInt(0), r.getSeq[Long](1)))
         .sortBy(_._1)
     val centSeqs: Seq[Seq[Long]] = cents.map(_._2).toSeq
-    val probeName = s"ivf_probes_k${centSeqs.size}_" +
-      (scala.util.hashing.MurmurHash3.seqHash(centSeqs.flatten) & Int.MaxValue)
-    graft.plans.VecMath.registerIvfProbes(spark, probeName, centSeqs)
     val centsDf = cents.toSeq.toDF("cell", "c")
     // PQ codebooks trained on the SAMPLE's residuals (sample-bounded)
     val sampleRes = corpus.where(pmod(col("vec_id"), lit(sampleMod)) === 0)
       .select(col("vec_id"), quantized(col("embedding")).as("q"),
-        element_at(expr(s"$probeName(embedding)"), 1).as("cell"))
+        element_at(VecMath.ivfProbeOrder(col("embedding"), centSeqs), 1).as("cell"))
       .join(broadcast(centsDf), Seq("cell"))
       .select(col("vec_id"), zip_with(col("q"), col("c"), (x, y) => x - y).as("q"))
-    val books = collectBooks(trainPqCodebooksOn(sampleRes, m, ksub, iters), m)
-    val encName = s"ivfpq_encode_k${centSeqs.size}_m${m}_" +
-      (scala.util.hashing.MurmurHash3.seqHash(
-        centSeqs.flatten ++ books.flatten.flatten) & Int.MaxValue)
-    graft.plans.VecMath.registerIvfPqEncode(spark, encName, centSeqs, books)
-    (centSeqs, books, probeName, encName)
+    (centSeqs, collectBooks(trainPqCodebooksOn(sampleRes, m, ksub, iters), m))
   }
 
   /** The IVFPQ index build: train both models, then encode the corpus
@@ -536,8 +501,9 @@ object Similarity {
     */
   def ivfPqCodes(corpus: DataFrame, kCells: Int = 8, m: Int = 4,
       ksub: Int = 16, iters: Int = 2, sampleMod: Int = 4): DataFrame = {
-    val (_, _, _, encName) = ivfPqModels(corpus, kCells, m, ksub, iters, sampleMod)
-    corpus.select(col("vec_id"), expr(s"$encName(embedding)").as("e"))
+    val (centSeqs, books) = ivfPqModels(corpus, kCells, m, ksub, iters, sampleMod)
+    corpus.select(col("vec_id"),
+        VecMath.ivfPqEncode(col("embedding"), centSeqs, books).as("e"))
       .select(col("vec_id"), col("e.cell").as("cell"), col("e.codes").as("codes"))
   }
 
@@ -546,16 +512,16 @@ object Similarity {
       iters: Int = 2, sampleMod: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val (centSeqs, books, probeName, encName) =
-      ivfPqModels(corpus, kCells, m, ksub, iters, sampleMod)
-    def probeOrder(embCol: String): Column = expr(s"$probeName(`$embCol`)")
+    val (centSeqs, books) = ivfPqModels(corpus, kCells, m, ksub, iters, sampleMod)
+    def probeOrder(embCol: String): Column = VecMath.ivfProbeOrder(col(embCol), centSeqs)
     val centsDf = centSeqs.zipWithIndex.map { case (c, cid) => (cid, c) }
       .toDF("cell", "c") // kCells rows of model state
     def residual(q: Column, c: Column): Column = zip_with(q, c, (x, y) => x - y)
     val ksubEff = books.head.size
 
     // the whole index build as one compiled projection: (cell, codes)
-    val codes = corpus.select(col("vec_id"), expr(s"$encName(embedding)").as("e"))
+    val codes = corpus.select(col("vec_id"),
+        VecMath.ivfPqEncode(col("embedding"), centSeqs, books).as("e"))
       .select(col("vec_id"), col("e.cell").as("cell"), col("e.codes").as("codes"))
 
     // per-(query, probed cell) ADC table from the QUERY's residual
@@ -579,11 +545,9 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("cid"), col("d")))),
         x => x.getField("d")).as("dt"))
 
-    val adcName = s"pq_adc_k$ksubEff"
-    graft.plans.VecMath.registerPqAdc(spark, adcName, ksubEff)
     val scored = codes.join(broadcast(dt), Seq("cell"))
       .where(col("query_id") =!= col("vec_id"))
-      .withColumn("adc_d", expr(s"$adcName(codes, dt)"))
+      .withColumn("adc_d", VecMath.pqAdc(col("codes"), col("dt"), ksubEff))
     val w = Window.partitionBy(col("query_id")).orderBy(col("adc_d"), col("vec_id"))
     scored.withColumn("rank", row_number().over(w).cast("long"))
       .where(col("rank") <= k)

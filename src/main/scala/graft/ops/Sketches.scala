@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.plans.{KmvSketch, MisraGries}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,14 +40,13 @@ object Sketches {
   def distinctProfile(df: DataFrame, strataCol: String = "lang",
       textCol: String = "text", k: Int = KmvK): DataFrame = {
     require(k >= 2 && k <= 128, s"k out of the overflow-safe range: $k")
-    graft.plans.KmvSketch.register(df.sparkSession)
     val num = (k - 1).toLong * (1L << 56)
     df.select(col(strataCol),
         TextOps.portableHash(TextOps.normalized(col(textCol))).as("__hv"))
       .groupBy(col(strataCol))
       .agg(count(lit(1)).as("n_docs"),
         countDistinct(col("__hv")).as("n_distinct"),
-        expr(s"kmv_sketch(__hv, $k)").as("__sk"))
+        KmvSketch.agg(col("__hv"), k).as("__sk"))
       .select(col(strataCol), col("n_docs"), col("n_distinct"),
         col("__sk.n_kept").as("n_kept"),
         expr(s"CASE WHEN __sk.n_kept < $k THEN __sk.n_kept " +
@@ -79,14 +79,13 @@ object Sketches {
   def kwayProfile(df: DataFrame, strataCol: String = "lang",
       textCol: String = "text", k: Int = KmvK): DataFrame = {
     require(k >= 2 && k <= 128, s"k out of the overflow-safe range: $k")
-    graft.plans.KmvSketch.register(df.sparkSession)
     val num = (k - 1).toLong * (1L << 56)
     val hv = df.select(col(strataCol).as("lang0"),
         TextOps.portableHash(TextOps.normalized(col(textCol))).as("__hv"))
       .distinct()
     val ph = hv.groupBy(col("__hv"))
       .agg(countDistinct(col("lang0")).as("shared_by"))
-    val sk = ph.agg(expr(s"kmv_sketch(__hv, $k)").as("__sk"))
+    val sk = ph.agg(KmvSketch.agg(col("__hv"), k).as("__sk"))
       .select(col("__sk.n_kept").as("n_kept"), col("__sk.kth").as("kth"))
       .collect()(0)
     val nKept = sk.getLong(0)
@@ -119,7 +118,6 @@ object Sketches {
   def overlapProfile(df: DataFrame, strataCol: String = "lang",
       textCol: String = "text", k: Int = KmvK): DataFrame = {
     require(k >= 2 && k <= 128, s"k out of the overflow-safe range: $k")
-    graft.plans.KmvSketch.register(df.sparkSession)
     val num = (k - 1).toLong * (1L << 56)
     def est(nKept: String, kth: String): String =
       s"CASE WHEN $nKept < $k THEN $nKept ELSE ${num}L div $kth END"
@@ -128,7 +126,7 @@ object Sketches {
       .distinct()
     // per-stratum sketch estimates (L rows — broadcast into the pair join)
     val perStratum = hv.groupBy(col("lang0"))
-      .agg(expr(s"kmv_sketch(__hv, $k)").as("__sk"))
+      .agg(KmvSketch.agg(col("__hv"), k).as("__sk"))
       .select(col("lang0"), expr(est("__sk.n_kept", "__sk.kth")).as("est1"))
     val langs = perStratum.select(col("lang0")).collect().map(_.getString(0)).sorted
     val pairs = for (i <- langs.indices; j <- i + 1 until langs.length)
@@ -148,7 +146,7 @@ object Sketches {
     perHash.groupBy(col("lang_a"), col("lang_b"))
       .agg(count(lit(1)).as("n_union"),
         sum(when(col("__nl") === 2, 1L).otherwise(0L)).as("n_inter"),
-        expr(s"kmv_sketch(__hv, $k)").as("__sk"))
+        KmvSketch.agg(col("__hv"), k).as("__sk"))
       .select(col("lang_a"), col("lang_b"), col("n_union"), col("n_inter"),
         expr(est("__sk.n_kept", "__sk.kth")).as("est_union"))
       .join(broadcast(perStratum.withColumnRenamed("lang0", "lang_a")
@@ -183,10 +181,9 @@ object Sketches {
     */
   def heavyHitters(tokens: DataFrame, k: Int = 16,
       tokenCol: String = "word"): DataFrame = {
-    graft.plans.MisraGries.register(tokens.sparkSession)
     val tok = tokens.select(col(tokenCol).as("word"))
     val cand = tok
-      .agg(expr(s"misra_gries(word, $k)").as("__c"), count(lit(1)).as("__t"))
+      .agg(MisraGries.agg(col("word"), k).as("__c"), count(lit(1)).as("__t"))
       .select(explode(col("__c")).as("word"), col("__t"))
     tok.join(broadcast(cand), Seq("word"))
       .groupBy(col("word"))

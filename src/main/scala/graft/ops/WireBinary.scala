@@ -31,25 +31,17 @@ object WireBinary {
   def valueSchema(payload: DataType): StructType =
     WireJson.valueSchema(payload)
 
-  private def fnNames(schema: StructType): (String, String) = {
-    val h = scala.util.hashing.MurmurHash3.stringHash(schema.catalogString) & Int.MaxValue
-    (s"wirebin_enc_$h", s"wirebin_dec_$h")
-  }
-
   /** Serialize an emitted record stream into (topic, key: string,
     * value: binary) — tombstones carry a NULL value.
     */
   def toWire(emitted: DataFrame, keyCol: String = "doc_id",
       db: String = "graft"): DataFrame = {
     val staged = emitted.withColumn("__envelope", WireJson.envelopeCol(emitted, db))
-    val schema = staged.schema("__envelope").dataType.asInstanceOf[StructType]
-    val (enc, dec) = fnNames(schema)
-    WireBin.register(emitted.sparkSession, enc, dec, schema)
     staged.select(
       col("topic"),
       to_json(struct(col("key").as(keyCol))).as("key"),
       when(col("op") === "tombstone", lit(null).cast(BinaryType))
-        .otherwise(expr(s"$enc(__envelope)")).as("value"),
+        .otherwise(WireBin.encode(col("__envelope"))).as("value"),
       col("commit_lsn"), col("change_lsn"), col("emit_seq"))
   }
 
@@ -57,16 +49,12 @@ object WireBinary {
     * column (null on malformed frames) — the binary analog of
     * `from_json(col("value"), valueSchema(payload))`.
     */
-  def decodeCol(df: DataFrame, payload: DataType): Column = {
-    val schema = valueSchema(payload)
-    val (enc, dec) = fnNames(schema)
-    WireBin.register(df.sparkSession, enc, dec, schema)
-    expr(s"$dec(value)")
-  }
+  def decodeCol(payload: DataType): Column =
+    WireBin.decode(col("value"), valueSchema(payload))
 
   private def decoded(wire: DataFrame, payload: DataType): DataFrame =
     wire.where(col("value").isNotNull)
-      .withColumn("__env", decodeCol(wire, payload))
+      .withColumn("__env", decodeCol(payload))
 
   /** Parse binary wire records back into committed change events (the
     * same output shape as [[WireJson.fromWire]]). Null values

@@ -1,12 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
-/** `<name>(pos)` — tests one bit of a fixed Bloom-filter bitmap: true
+/** `bloom_bit(pos)` — tests one bit of a fixed Bloom-filter bitmap: true
   * iff bit `pos` of the baked-in long[] word array is set. `pos` must
   * already be reduced into [0, 64 * words.length) (the caller computes
   * it as `portableHash(salted shingle) % mBits`, which the SQL oracles
@@ -49,12 +50,7 @@ case class BloomBit(child: Expression, words: Array[Long])
 }
 
 object BloomBit {
-  /** Register a membership-test function with its bitmap baked in (name
-    * must encode the filter instance — the registry closure captures it).
-    */
-  def register(spark: SparkSession, name: String, words: Array[Long]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => BloomBit(exprs(0), words),
-      "built-in")
+  /** The membership test of bit position `pos` against `words`. */
+  def isSet(pos: Column, words: Array[Long]): Column =
+    column(BloomBit(expression(pos), words))
 }

@@ -2,12 +2,13 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Mutable bottom-k-by-hash sample state: the k smallest distinct hash
@@ -104,13 +105,7 @@ case class KmvSample(
 }
 
 object KmvSample {
-  /** Register `kmv_sample(hash, value, k)` in the session's function
-    * registry (idempotent). `k` must be a literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sample",
-      exprs => KmvSample(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+  /** `kmv_sample(hash, value, k)` as an aggregate Column. */
+  def agg(hash: Column, value: Column, k: Int): Column =
+    column(KmvSample(expression(hash), expression(value), k).toAggregateExpression())
 }

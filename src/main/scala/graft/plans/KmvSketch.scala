@@ -2,11 +2,12 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Mutable KMV state: the k smallest DISTINCT hash values seen so far.
@@ -99,13 +100,7 @@ case class KmvSketch(
 }
 
 object KmvSketch {
-  /** Register `kmv_sketch(hash, k)` in the session's function registry
-    * (idempotent). `k` must be a literal.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch",
-      exprs => KmvSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+  /** `kmv_sketch(hash, k)` as an aggregate Column. */
+  def agg(hash: Column, k: Int): Column =
+    column(KmvSketch(expression(hash), k).toAggregateExpression())
 }

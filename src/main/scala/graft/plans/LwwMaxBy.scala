@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.TernaryLike
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Mutable LWW aggregation state: best (vc, vl) position seen and the
@@ -114,10 +115,8 @@ case class LwwMaxBy(
 }
 
 object LwwMaxBy {
-  /** Register `lww_max_by` in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lww_max_by",
-      exprs => LwwMaxBy(exprs(0), exprs(1), exprs(2)),
-      "built-in")
+  /** `lww_max_by(payload, vc, vl)` as an aggregate Column. */
+  def agg(payload: Column, vc: Column, vl: Column): Column =
+    column(LwwMaxBy(expression(payload), expression(vc), expression(vl))
+      .toAggregateExpression())
 }

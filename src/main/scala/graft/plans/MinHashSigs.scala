@@ -2,12 +2,13 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
 /** Mutable MinHash state: the running minimum of each of the k
@@ -102,12 +103,9 @@ case class MinHashSigs(
 }
 
 object MinHashSigs {
-  /** Register `minhash_sigs(h)` with the permutation table baked in
-    * (idempotent; the registry closure captures the constants).
+  /** `minhash_sigs(h)` with the permutation table baked in, as an
+    * aggregate Column.
     */
-  def register(spark: SparkSession, a: Seq[Long], b: Seq[Long], p: Long): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => MinHashSigs(exprs(0), a, b, p),
-      "built-in")
+  def agg(h: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
+    column(MinHashSigs(expression(h), a, b, p).toAggregateExpression())
 }

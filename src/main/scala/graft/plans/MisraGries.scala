@@ -3,12 +3,13 @@ package graft.plans
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -154,11 +155,7 @@ case class MisraGries(
 }
 
 object MisraGries {
-  /** Register `misra_gries(item, k)` (idempotent); `k` must be a literal. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      exprs => MisraGries(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
+  /** `misra_gries(item, k)` as an aggregate Column. */
+  def agg(item: Column, k: Int): Column =
+    column(MisraGries(expression(item), k).toAggregateExpression())
 }

@@ -1,9 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 
 /** `cosine_sim(a, b)` — cosine similarity of two float vectors as a
@@ -137,7 +138,7 @@ case class SigMatchCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `<name>(emb)` -> array<long> of `bands` sign-LSH bucket ids, computed
+/** `sign_lsh_buckets(emb)` -> array<long> of `bands` sign-LSH bucket ids, computed
   * in ONE compiled pass: quantize each float once (Spark-exact HALF_UP
   * via BigDecimal — bit-identical to `round(v*10000)`), then integer dot
   * products against the baked-in plane table; bit p of band b = sign of
@@ -199,7 +200,7 @@ case class SignLshBuckets(child: Expression, bands: Int, planesPerBand: Int,
     copy(child = newChild)
 }
 
-/** `<name>(emb)` -> array<int> of ALL centroid ids ordered by (integer
+/** `ivf_probe_order(emb)` -> array<int> of ALL centroid ids ordered by (integer
   * squared-L2 distance, cid) ascending — the IVF coarse-quantizer
   * assignment (element 1) and probe order (prefix) in ONE compiled pass
   * over the raw embedding: quantize each float once (Spark-exact HALF_UP,
@@ -267,7 +268,7 @@ case class IvfProbeOrder(child: Expression, centroids: Seq[Seq[Long]])
     copy(child = newChild)
 }
 
-/** `<name>(emb)` -> array<int> of product-quantization codes, one per
+/** `pq_encode(emb)` -> array<int> of product-quantization codes, one per
   * subspace, computed in ONE compiled pass: quantize each float once
   * (Spark-exact HALF_UP, bit-identical to `round(v*10000)`), then for
   * each of the `m = books.size` contiguous subvectors take the argmin
@@ -338,7 +339,7 @@ case class PqEncode(child: Expression, books: Seq[Seq[Seq[Long]]])
     copy(child = newChild)
 }
 
-/** `<name>(codes, dt)` -> asymmetric-distance (ADC) score: with `dt` a
+/** `pq_adc(codes, dt)` -> asymmetric-distance (ADC) score: with `dt` a
   * query's flattened per-subspace distance table (entry `sub*ksub+cid` =
   * integer squared L2 between the query's subvector and codebook entry
   * `cid` of subspace `sub`), returns `sum_sub dt[sub*ksub + codes[sub]]`
@@ -382,7 +383,7 @@ case class PqAdc(left: Expression, right: Expression, ksub: Int)
     copy(left = newLeft, right = newRight)
 }
 
-/** `<name>(emb)` -> struct(cell: int, codes: array<int>) — the FAISS
+/** `ivfpq_encode(emb)` -> struct(cell: int, codes: array<int>) — the FAISS
   * IVFPQ corpus representation (Jegou et al. §IV: coarse quantizer +
   * product quantization of the RESIDUAL), produced in ONE compiled
   * pass with both models baked in: quantize each float once
@@ -489,64 +490,29 @@ object VecMath {
   def roundHalfUp(x: Double): Long =
     java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP).longValue()
 
-  /** Register the vector expressions in the session registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSim(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_matches",
-      exprs => SigMatchCount(exprs(0), exprs(1)),
-      "built-in")
-  }
+  // Column builders for the expressions above. The model-dependent ones
+  // carry their tables in the expression itself, so two models in one
+  // plan never alias.
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 
-  /** Register a sign-LSH bucketing function with its plane table baked
-    * in (name must encode the config — the registry closure captures it).
-    */
-  def registerSignLsh(spark: SparkSession, name: String, bands: Int,
-      planesPerBand: Int, planes: Seq[Seq[Long]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => SignLshBuckets(exprs(0), bands, planesPerBand, planes),
-      "built-in")
+  def sigMatches(a: Column, b: Column): Column =
+    column(SigMatchCount(expression(a), expression(b)))
 
-  /** Register an IVF probe-order function with its centroid table baked
-    * in (name must encode the model — the registry closure captures it).
-    */
-  def registerIvfProbes(spark: SparkSession, name: String,
-      centroids: Seq[Seq[Long]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => IvfProbeOrder(exprs(0), centroids),
-      "built-in")
+  def signLshBuckets(emb: Column, bands: Int, planesPerBand: Int,
+      planes: Seq[Seq[Long]]): Column =
+    column(SignLshBuckets(expression(emb), bands, planesPerBand, planes))
 
-  /** Register a PQ encoder with its codebooks baked in (name must
-    * encode the model — the registry closure captures it).
-    */
-  def registerPqEncode(spark: SparkSession, name: String,
-      books: Seq[Seq[Seq[Long]]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PqEncode(exprs(0), books),
-      "built-in")
+  def ivfProbeOrder(emb: Column, centroids: Seq[Seq[Long]]): Column =
+    column(IvfProbeOrder(expression(emb), centroids))
 
-  /** Register an IVFPQ residual encoder with both models baked in
-    * (name must encode them — the registry closure captures them).
-    */
-  def registerIvfPqEncode(spark: SparkSession, name: String,
-      centroids: Seq[Seq[Long]], books: Seq[Seq[Seq[Long]]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => IvfPqEncode(exprs(0), centroids, books),
-      "built-in")
+  def pqEncode(emb: Column, books: Seq[Seq[Seq[Long]]]): Column =
+    column(PqEncode(expression(emb), books))
 
-  /** Register a PQ ADC scorer for a given per-subspace codebook size
-    * (name must encode `ksub` — the registry closure captures it).
-    */
-  def registerPqAdc(spark: SparkSession, name: String, ksub: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name,
-      exprs => PqAdc(exprs(0), exprs(1), ksub),
-      "built-in")
+  def ivfPqEncode(emb: Column, centroids: Seq[Seq[Long]],
+      books: Seq[Seq[Seq[Long]]]): Column =
+    column(IvfPqEncode(expression(emb), centroids, books))
+
+  def pqAdc(codes: Column, dt: Column, ksub: Int): Column =
+    column(PqAdc(expression(codes), expression(dt), ksub))
 }

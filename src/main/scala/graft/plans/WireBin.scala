@@ -1,10 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.SparkInternals.{column, expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,19 +51,15 @@ object WireBin {
     case other => Some(s"wirebin does not support ${other.simpleString}")
   }
 
-  /** Register an encode/decode pair for one envelope schema (names
-    * must encode the schema — the registry closures capture it).
-    */
-  def register(spark: SparkSession, encName: String, decName: String,
-      schema: StructType): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      encName, exprs => WireBinEncode(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      decName, exprs => WireBinDecode(exprs(0), schema), "built-in")
-  }
+  /** The binary frame of struct column `env`. */
+  def encode(env: Column): Column = column(WireBinEncode(expression(env)))
+
+  /** The struct of binary frame column `frame` under `schema`. */
+  def decode(frame: Column, schema: StructType): Column =
+    column(WireBinDecode(expression(frame), schema))
 }
 
-/** `<name>(env)` -> binary frame of the struct under the WireBin
+/** `wirebin_encode(env)` -> binary frame of the struct under the WireBin
   * format. Null input -> null frame (the tombstone contract lives a
   * level up, like `to_json`).
   */
@@ -128,7 +125,7 @@ case class WireBinEncode(child: Expression)
     copy(child = newChild)
 }
 
-/** `<name>(frame)` -> the envelope struct, or NULL when the frame is
+/** `wirebin_decode(frame)` -> the envelope struct, or NULL when the frame is
   * malformed (bad magic/version, truncated, trailing bytes, negative
   * length) — the PERMISSIVE `from_json` contract: a crawl-scale topic
   * always carries garbage and a poisoned record must not kill the job.

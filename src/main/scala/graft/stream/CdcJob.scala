@@ -720,14 +720,10 @@ object CdcJob {
           "garbage-collected before they were applied — call validateOrResnapshot with a " +
           "current source view (snapshot mode when_needed re-snapshots automatically)")
     }
-    graft.plans.LwwMaxBy.register(spark) // clone sessions inherit the registry
     // asyncCompaction: one coalescing daemon for the query's lifetime
     // (daemon thread — dies with the JVM; each sweep is short and
     // conflict-safe, so there is nothing to flush at shutdown)
-    val daemon =
-      if (!cfg.asyncCompaction) None
-      else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain))
+    val daemon = compactionDaemon(table, cfg)
     spark.readStream
       .schema(LogRecord.schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
@@ -737,20 +733,37 @@ object CdcJob {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
-        processBatch(table, df, batchId, cfg.broadcastAssembly, cfg.tableInclude,
-          cfg.columnTransforms, cfg.txCarryover, cfg.emitDir,
-          cfg.tombstonesOnDelete, cfg.returnEmptyTransactions,
-          emitFlatten = cfg.emitFlatten, emitWire = cfg.emitWire,
-          emitWireBinary = cfg.emitWireBinary, filters = cfg.filters,
-          inlineCompact = daemon.isEmpty, rowFilter = cfg.rowFilter,
-          skippedOperations = cfg.skippedOperations,
-          messageKeyColumns = cfg.messageKeyColumns,
-          topicRouting = cfg.topicRouting, contentRouting = cfg.contentRouting)
-        daemon.foreach(_.poke()); ()
+        configuredBatch(spark, table, cfg, daemon, df, batchId); ()
       }
       .start()
+  }
+
+  /** The async compaction daemon of a driver, if `cfg` asks for one. */
+  private[stream] def compactionDaemon(table: IceLiteTable,
+      cfg: CdcConfig): Option[graft.icelite.Maintenance.CompactionDaemon] =
+    if (!cfg.asyncCompaction) None
+    else Some(new graft.icelite.Maintenance.CompactionDaemon(
+      table, MergeApply.maxDeltaChain))
+
+  /** One micro-batch of [[stream]] and [[runBatchIncremental]]: signals,
+    * heartbeat, then [[processBatch]] with `cfg`'s settings; the daemon,
+    * when there is one, compacts instead of the apply's inline fold. */
+  private def configuredBatch(spark: SparkSession, table: IceLiteTable,
+      cfg: CdcConfig, daemon: Option[graft.icelite.Maintenance.CompactionDaemon],
+      raw: DataFrame, batchId: Long): MergeApply.MergeStats = {
+    cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
+    cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
+    val stats = processBatch(table, raw, batchId, cfg.broadcastAssembly, cfg.tableInclude,
+      cfg.columnTransforms, cfg.txCarryover, cfg.emitDir,
+      cfg.tombstonesOnDelete, cfg.returnEmptyTransactions,
+      emitFlatten = cfg.emitFlatten, emitWire = cfg.emitWire,
+      emitWireBinary = cfg.emitWireBinary, filters = cfg.filters,
+      inlineCompact = daemon.isEmpty, rowFilter = cfg.rowFilter,
+      skippedOperations = cfg.skippedOperations,
+      messageKeyColumns = cfg.messageKeyColumns,
+      topicRouting = cfg.topicRouting, contentRouting = cfg.contentRouting)
+    daemon.foreach(_.poke())
+    stats
   }
 
   /** Run the stream to completion over whatever log segments exist. */
@@ -829,26 +842,12 @@ object CdcJob {
           chunk.exists(f => maxOf(f) > resume)
         chunks.filter(needsApply)
       }
-    val daemon =
-      if (!cfg.asyncCompaction) None
-      else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain))
+    val daemon = compactionDaemon(table, cfg)
     val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
     todo.zipWithIndex.foreach { case (chunk, j) =>
       if (j < stopAfterBatches) {
-        cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
         val raw = spark.read.schema(LogRecord.schema).parquet(chunk: _*)
-        out += processBatch(table, raw, from + j, cfg.broadcastAssembly, cfg.tableInclude,
-          cfg.columnTransforms, cfg.txCarryover, cfg.emitDir,
-          cfg.tombstonesOnDelete, cfg.returnEmptyTransactions,
-          emitFlatten = cfg.emitFlatten, emitWire = cfg.emitWire,
-          emitWireBinary = cfg.emitWireBinary, filters = cfg.filters,
-          inlineCompact = daemon.isEmpty, rowFilter = cfg.rowFilter,
-          skippedOperations = cfg.skippedOperations,
-          messageKeyColumns = cfg.messageKeyColumns,
-          topicRouting = cfg.topicRouting, contentRouting = cfg.contentRouting)
-        daemon.foreach(_.poke())
+        out += configuredBatch(spark, table, cfg, daemon, raw, from + j)
       }
     }
     daemon.foreach { d => try d.drain() finally d.close() }

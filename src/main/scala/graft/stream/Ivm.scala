@@ -192,13 +192,6 @@ object Ivm {
     ()
   }
 
-  /** Does the SOURCE's truncate floor sit ahead of the replica's? */
-  private def floorAdvanced(srcRoot: String, replica: IceLiteTable): Boolean = {
-    val sm = IceLite.readLatest(srcRoot).getOrElse(
-      throw new IllegalStateException(s"no source table at $srcRoot")).summary
-    Replicate.floorAhead(sm, replica.refresh().summary)
-  }
-
   /** Apply one feed batch to BOTH tables with crash-convergent
     * ordering (see the object doc). Idempotent per batchId.
     */
@@ -219,7 +212,7 @@ object Ivm {
     }
     feed.persist()
     try {
-      if (floorAdvanced(srcRoot, replica)) {
+      if (Replicate.floorAdvanced(srcRoot, replica)) {
         // truncate: replica first (its apply floors the wiped rows),
         // then one aggregate pass — deltas can't see a wipe
         Replicate.applyFeedBatch(replica, feed, batchId, Some(srcRoot))

@@ -229,12 +229,6 @@ object IvmJoin {
     ()
   }
 
-  private def floorAdvanced(srcRoot: String, rep: IceLiteTable): Boolean = {
-    val sm = IceLite.readLatest(srcRoot).getOrElse(
-      throw new IllegalStateException(s"no source table at $srcRoot")).summary
-    Replicate.floorAhead(sm, rep.refresh().summary)
-  }
-
   /** Apply one unioned micro-batch to all THREE tables with
     * crash-convergent ordering (see the object doc). Idempotent per
     * batchId.
@@ -267,7 +261,7 @@ object IvmJoin {
       rebuild(view, repF, repD, fkCol, batchId)
       return
     }
-    if (floorAdvanced(factRoot, repF) || floorAdvanced(dimRoot, repD)) {
+    if (Replicate.floorAdvanced(factRoot, repF) || Replicate.floorAdvanced(dimRoot, repD)) {
       // truncate on either source: replicas first (their applies floor
       // the wiped rows), then one join pass — deltas can't see a wipe
       Replicate.applyFeedBatch(repF, factBatch, batchId, Some(factRoot))

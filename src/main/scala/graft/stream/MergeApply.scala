@@ -3,6 +3,7 @@ package graft.stream
 import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary, Maintenance}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.types._
 
 /** MERGE INTO apply — the sink half of the CDC contract, re-created as
@@ -217,7 +218,6 @@ object MergeApply {
     // ---- LWW dedup. Truncate records keep their null key and ride
     // along as marker rows (readers drop null keys); their max position
     // is recovered by the riding stats, so no pre-scan is needed. ----
-    graft.plans.LwwMaxBy.register(spark)
     val posCol = struct(col("commit_lsn").as("c"), col("change_lsn").as("l"))
     val keyed = floored
       .withColumn("__key", coalesce(col("after").getField(keyCol), col("before").getField(keyCol)))
@@ -226,7 +226,9 @@ object MergeApply {
     // SortAggregate to ObjectHashAggregate — hash-based, map-side
     // combined, no sort of the payload (see graft.plans.LwwMaxBy).
     val deduped = keyed.repartition(numBuckets, col("__key")).groupBy(col("__key"))
-      .agg(expr("lww_max_by(struct(op, after, commit_lsn, change_lsn), commit_lsn, change_lsn)").as("w"),
+      .agg(graft.plans.LwwMaxBy.agg(
+          struct(col("op"), col("after"), col("commit_lsn"), col("change_lsn")),
+          col("commit_lsn"), col("change_lsn")).as("w"),
         max(when(col("op") === "t", posCol)).as("__trunc"),
         count(lit(1)).as("__cnt"),
         min(col("commit_lsn")).as("__minc"))
@@ -261,16 +263,16 @@ object MergeApply {
     // that was the write plan's last non-codegen operator.
     val acc = new BucketStatsAcc
     spark.sparkContext.register(acc, s"graft.bucketStats.$batchId")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_stats_tap", exprs => BucketStatsTap(exprs, acc), "built-in")
+    val statsTap = Seq(
+      coalesce(IceLite.bucketCol(col(keyCol), numBuckets), lit(0)),
+      col(keyCol).isNull, col("__cnt"), col("__op") === "d", col("__minc"),
+      col(VC), col(VL))
     val deltaRows = last0.select(
       (changeCols ++ Seq(
         col("__cvc").as(VC), col("__cvl").as(VL), (col("__op") === "d").as(TOMB),
         col("__op"), col("__trunc"), col("__cnt"), col("__minc"))): _*)
-      .withColumn("__bucket", call_function("graft_stats_tap",
-        coalesce(IceLite.bucketCol(col(keyCol), numBuckets), lit(0)),
-        col(keyCol).isNull, col("__cnt"), col("__op") === "d", col("__minc"),
-        col(VC), col(VL)))
+      .withColumn("__bucket", SparkInternals.column(
+        BucketStatsTap(statsTap.map(SparkInternals.expression), acc)))
 
     // batch statistics are observed DURING the write (CollectMetrics on
     // the write plan) — no separate stats pass blocks the commit
@@ -307,9 +309,9 @@ object MergeApply {
   def applyBatch(table: IceLiteTable, events: DataFrame, batchId: Long,
       signalChannel: Boolean = false, inlineCompact: Boolean = true): MergeStats = {
     val t0 = System.nanoTime()
-    // IMPORTANT: use the batch's own session — inside foreachBatch the
-    // DataFrame belongs to a cloned SparkSession whose function registry
-    // is isolated from the one the table was opened with
+    // use the batch's own session: inside foreachBatch the DataFrame
+    // belongs to the stream's cloned SparkSession, whose conf is the
+    // query's, not that of the session the table was opened with
     val spark = events.sparkSession
     val snap = table.refresh()
 

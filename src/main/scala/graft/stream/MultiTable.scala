@@ -68,7 +68,6 @@ object MultiTable {
       cfg: CdcConfig,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    graft.plans.LwwMaxBy.register(spark)
     spark.readStream
       .schema(graft.model.LogRecord.schema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
@@ -78,6 +77,7 @@ object MultiTable {
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
+        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
         processBatch(sinks, df, batchId, cfg.broadcastAssembly); ()
       }
       .start()

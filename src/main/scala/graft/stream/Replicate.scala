@@ -80,6 +80,15 @@ object Replicate {
     src.truncCommit > dst.truncCommit ||
       (src.truncCommit == dst.truncCommit && src.truncChange > dst.truncChange)
 
+  /** [[floorAhead]] of the latest committed table at `srcRoot` against
+    * `dst`'s current head — the IVM consumers' rebuild test.
+    */
+  def floorAdvanced(srcRoot: String, dst: IceLiteTable): Boolean = {
+    val sm = IceLite.readLatest(srcRoot).getOrElse(
+      throw new IllegalStateException(s"no source table at $srcRoot")).summary
+    floorAhead(sm, dst.refresh().summary)
+  }
+
   /** One synthetic truncate marker at the given position, in the events
     * schema (null key: rides as a marker, never stored).
     */

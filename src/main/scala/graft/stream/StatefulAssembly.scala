@@ -239,7 +239,6 @@ object StatefulAssembly {
       batchIdBase: Long = 0L
   ): StreamingQuery = {
     import spark.implicits._
-    graft.plans.LwwMaxBy.register(spark)
     val keyCol = table.current.keyCol
     val raw = CdcJob.prepareRaw(
       spark.readStream
@@ -258,6 +257,7 @@ object StatefulAssembly {
       .foreachBatch { (events: DataFrame, rawBatchId: Long) =>
         val batchId = rawBatchId + batchIdBase
         cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
+        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
         // quarantined records go to the dead-letter dir, never the merge
         cfg.dlqDir match {
           case None => MergeApply.applyBatch(table, events, batchId); ()

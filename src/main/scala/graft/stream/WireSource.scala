@@ -137,8 +137,6 @@ object WireSource {
       dlqDir: Option[String] = None,
       topicInclude: Option[Seq[String]] = None,
       inlineCompact: Boolean = true): MergeApply.MergeStats = {
-    val spark = wire0.sparkSession
-    graft.plans.LwwMaxBy.register(spark)
     val scoped = topicInclude match {
       case Some(ps) if ps.nonEmpty =>
         wire0.where(col("topic").rlike(CaptureFilters.anchored(ps)))
@@ -189,15 +187,11 @@ object WireSource {
       topicInclude: Option[Seq[String]] = None,
       binaryWire: Boolean = false
   ): StreamingQuery = {
-    graft.plans.LwwMaxBy.register(spark)
     // R4 analog on restart: a resumed consumer over a truncated dump
     // must fail fast, not silently skip history (no-op for fresh
     // consumers — appliedPredicate is None until a batch has applied)
     validateDumpContinuity(spark, table, cfg)
-    val daemon =
-      if (!cfg.asyncCompaction) None
-      else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain))
+    val daemon = CdcJob.compactionDaemon(table, cfg)
     spark.readStream
       .schema(if (binaryWire) wireBinSchema else wireSchema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
@@ -244,7 +238,7 @@ object WireSource {
     val raw = spark.read
       .schema(if (isBin) wireBinSchema else wireSchema).parquet(files: _*)
     val env =
-      if (isBin) graft.ops.WireBinary.decodeCol(raw, payload)
+      if (isBin) graft.ops.WireBinary.decodeCol(payload)
       else from_json(col("value"), posSchema)
     raw
       .select(input_file_name().as("f"),
@@ -435,13 +429,11 @@ object WireSource {
         continuityGuard(groups, applied)
         chunks.filter(_.exists(g => !applied(g)))
     }
-    val daemon =
-      if (!cfg.asyncCompaction) None
-      else Some(new graft.icelite.Maintenance.CompactionDaemon(
-        table, MergeApply.maxDeltaChain))
+    val daemon = CdcJob.compactionDaemon(table, cfg)
     val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
     todo.zipWithIndex.foreach { case (chunk, j) =>
       if (j < stopAfterBatches) {
+        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
         val raw = spark.read.schema(readSchema).parquet(chunk.flatMap(_.files): _*)
         out += applyWireBatch(table, raw, from + j,
           inferEvolution = cfg.wireInferEvolution, dlqDir = cfg.dlqDir,

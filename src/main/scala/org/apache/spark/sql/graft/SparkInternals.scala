@@ -54,13 +54,22 @@ object SparkInternals {
   def unloadStateStores(): Unit = StateStore.unloadAll()
 
   /** Wrap a catalyst expression as a user-facing Column
-    * (`ExpressionUtils.column` is `private[sql]`); used by
-    * [[graft.plans.StableLit]] to surface its codegen-cache-stable
-    * constant expression through the DataFrame API.
+    * (`ExpressionUtils.column` is `private[sql]`): the engine's own
+    * expressions ([[graft.plans]], the apply's stats tap) reach the
+    * DataFrame API this way, never through the session's function
+    * registry. An aggregate function goes in as its
+    * `toAggregateExpression()`.
     */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression)
       : org.apache.spark.sql.Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
+
+  /** The catalyst expression of a Column (`ExpressionUtils.expression`
+    * is `private[sql]`), to pass as a child of an engine expression.
+    */
+  def expression(c: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.expressions.Expression =
+    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   /** Report a task's written bytes and records in its output metrics
     * (the setters are `private[spark]`). A task that writes files

@@ -183,12 +183,11 @@ class SketchSpec extends SparkSpec {
     val k = 16
     val qualifying = truth.filter { case (_, c) => c * (k + 1) > n }.keySet
     assert(qualifying == Set("hotA", "hotB", "hotC")) // fixture sanity
-    graft.plans.MisraGries.register(spark)
     // candidates must be a superset of the qualifying set under ANY
     // partitioning (the mergeable-summaries guarantee)
     Seq(1, 7, 32).foreach { parts =>
       val df = stream.toDF("word").repartition(parts)
-      val cands = df.agg(expr(s"misra_gries(word, $k)")).head
+      val cands = df.agg(graft.plans.MisraGries.agg(col("word"), k)).head
         .getSeq[String](0).toSet
       assert(cands.size <= k)
       assert(qualifying.subsetOf(cands), s"parts=$parts")
@@ -201,7 +200,7 @@ class SketchSpec extends SparkSpec {
       assert(hh(w) == ((truth(w), truth(w) * 10000L / n)))
     }
     // plan: the sketch aggregation is ObjectHashAggregate (never Sort)
-    val plan = stream.toDF("word").agg(expr(s"misra_gries(word, $k)"))
+    val plan = stream.toDF("word").agg(graft.plans.MisraGries.agg(col("word"), k))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"))
   }

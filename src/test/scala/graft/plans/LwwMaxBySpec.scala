@@ -12,7 +12,6 @@ class LwwMaxBySpec extends SparkSpec {
 
   test("lww_max_by equals reference argmax for random data, any partitioning") {
     import spark.implicits._
-    LwwMaxBy.register(spark)
     val rnd = new scala.util.Random(83)
     val rows = (1 to 5000).map { i =>
       (s"k${rnd.nextInt(200)}", rnd.nextInt(50).toLong, rnd.nextInt(50).toLong, s"payload$i", i)
@@ -25,7 +24,7 @@ class LwwMaxBySpec extends SparkSpec {
     for (parts <- Seq(1, 7, 32)) {
       val df = unique.toDF("k", "vc", "vl", "payload", "i").repartition(parts)
       val got = df.groupBy($"k")
-        .agg(expr("lww_max_by(struct(payload), vc, vl)").as("w"))
+        .agg(LwwMaxBy.agg(struct($"payload"), $"vc", $"vl").as("w"))
         .select($"k", $"w.payload")
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(got == want, s"mismatch at parts=$parts")
@@ -34,13 +33,12 @@ class LwwMaxBySpec extends SparkSpec {
 
   test("null positions are skipped; all-null group yields null") {
     import spark.implicits._
-    LwwMaxBy.register(spark)
     val df = Seq(
       ("a", Some(1L), 1L, "x"), ("a", None, 9L, "IGNORED"),
       ("b", None, 1L, "IGNORED")
     ).toDF("k", "vc", "vl", "p")
     val got = df.groupBy($"k")
-      .agg(expr("lww_max_by(struct(p), vc, vl)").as("w"))
+      .agg(LwwMaxBy.agg(struct($"p"), $"vc", $"vl").as("w"))
       .select($"k", $"w.p").collect().map(r => r.getString(0) -> Option(r.getString(1))).toMap
     assert(got("a") == Some("x"))
     assert(got("b") == None)
@@ -48,13 +46,34 @@ class LwwMaxBySpec extends SparkSpec {
 
   test("plans as ObjectHashAggregate (never SortAggregate)") {
     import spark.implicits._
-    LwwMaxBy.register(spark)
     val df = Seq(("a", 1L, 1L, "x")).toDF("k", "vc", "vl", "p")
     val plan = df.groupBy($"k")
-      .agg(expr("lww_max_by(struct(p, vc), vc, vl)").as("w"))
+      .agg(LwwMaxBy.agg(struct($"p", $"vc"), $"vc", $"vl").as("w"))
       .queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan)
     assert(!plan.contains("SortAggregate"), plan)
+  }
+
+  test("an apply and a merged read register no session function") {
+    import graft.changelog._
+    import graft.model.LogRecord
+    import graft.stream._
+    import graft.util.Fs
+    val fresh = spark.newSession()
+    def functions = fresh.sessionState.functionRegistry.listFunction().toSet
+    val before = functions
+    val base = Fs.tempDir("graft-noreg")
+    val cfg = ChangeLogConfig(nTx = 20, nDocs = 20, seed = 97)
+    val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 2)
+    ChangeLogGen.writeLog(fresh, cfg, cdc.logDir, 1)
+    val table = CdcJob.snapshot(fresh, ChangeLogGen.initialTable(fresh, cfg).toDF(),
+      cdc, ChangeLogGen.snapshotLsn)
+    CdcJob.processBatch(table, fresh.read.schema(LogRecord.schema).parquet(cdc.logDir), 0L)
+    assert(table.current.deltas.values.exists(_.nonEmpty), "the read must merge deltas")
+    assert(table.read().count() > 0)
+    val added = functions -- before
+    assert(added.isEmpty && functions.size == before.size, s"registered: $added")
+    Fs.deleteRecursively(base)
   }
 
   test("schema history records additive evolution (E4 history analog)") {

@@ -20,13 +20,12 @@ class VecMathSpec extends SparkSpec {
   }
 
   test("cosine_sim equals the zip_with/aggregate column form exactly") {
-    VecMath.register(spark)
     val df = randomVectors(300, 64, seed = 11).cache()
     val pairs = df.as("a").join(df.as("b"), col("a.vec_id") + 1 === col("b.vec_id"))
       .select(col("a.embedding").as("e_a"), col("b.embedding").as("e_b"))
     val diff = pairs
       .withColumn("slow", Similarity.cosine(col("e_a"), col("e_b")))
-      .withColumn("fast", expr("cosine_sim(e_a, e_b)"))
+      .withColumn("fast", VecMath.cosineSim(col("e_a"), col("e_b")))
       .where(col("slow") =!= col("fast")) // EXACT double equality
       .count()
     assert(diff == 0L)
@@ -57,7 +56,6 @@ class VecMathSpec extends SparkSpec {
       (0 until 4).map(_ => Seq.fill(48)(rnd.nextInt(20001).toLong - 10000L)) match {
         case s => s.updated(3, s(2)) // exact tie between cids 2 and 3
       }
-    VecMath.registerIvfProbes(spark, "ivf_probes_test", cents)
     // the interpreted form ivfTrainedTopK used before the compiled path
     val q = Similarity.quantized(col("embedding"))
     def l2(a: org.apache.spark.sql.Column, c: Seq[Long]) =
@@ -69,7 +67,7 @@ class VecMathSpec extends SparkSpec {
     val slow = df.select(col("vec_id"),
         transform(array_sort(array(structs: _*)), x => x.getField("cid")).as("o"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    val fast = df.select(col("vec_id"), expr("ivf_probes_test(embedding)").as("o"))
+    val fast = df.select(col("vec_id"), VecMath.ivfProbeOrder(col("embedding"), cents).as("o"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     assert(fast.nonEmpty && fast.keySet == slow.keySet)
     fast.foreach { case (id, o) => assert(o == slow(id), s"probe order mismatch vec=$id") }

@@ -134,6 +134,79 @@ class RobustnessSpec extends SparkSpec {
     }
   }
 
+  test("heartbeat action SQL runs once per batch of the stateful-assembly stream") {
+    val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 151)
+    val base = Fs.tempDir("graft-hb-stateful")
+    spark.sql(s"CREATE TABLE graft_hb_stateful (tick INT) USING parquet " +
+      s"LOCATION '$base/heartbeats'")
+    try {
+      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4,
+        maxFilesPerTrigger = 1,
+        heartbeatActionSql = Some("INSERT INTO graft_hb_stateful VALUES (1)"))
+      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+        cdc, ChangeLogGen.snapshotLsn)
+      val fresh = spark.newSession()
+      StatefulAssembly.stream(fresh, table, cdc).awaitTermination()
+      val applied = table.refresh().summary.lastBatchId + 1
+      assert(applied >= 3)
+      assert(spark.table("graft_hb_stateful").count() == applied)
+      assertEqual(cdc.tableRoot, oracle(cfg))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_hb_stateful")
+      Fs.deleteRecursively(base)
+    }
+  }
+
+  test("heartbeat action SQL runs once per batch of the incremental wire consumer") {
+    val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 151)
+    val base = Fs.tempDir("graft-hb-wire")
+    spark.sql(s"CREATE TABLE graft_hb_wire (tick INT) USING parquet " +
+      s"LOCATION '$base/heartbeats'")
+    try {
+      val producer = CdcConfig(s"$base/log", s"$base/ptable", s"$base/pckpt", numBuckets = 4,
+        emitDir = Some(s"$base/emit"), emitWire = true)
+      ChangeLogGen.writeLog(spark, cfg, producer.logDir, 3)
+      CdcJob.runBatchIncremental(spark, CdcJob.snapshot(spark,
+        ChangeLogGen.initialTable(spark, cfg).toDF(), producer, ChangeLogGen.snapshotLsn),
+        producer, filesPerBatch = 1)
+      val consumer = CdcConfig(s"$base/emit", s"$base/ctable", s"$base/cckpt",
+        numBuckets = 4, heartbeatActionSql = Some("INSERT INTO graft_hb_wire VALUES (1)"))
+      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+        consumer, ChangeLogGen.snapshotLsn)
+      val stats = WireSource.runIncremental(spark, table, consumer, filesPerBatch = 1)
+      assert(stats.size >= 3)
+      assert(spark.table("graft_hb_wire").count() == stats.size.toLong)
+      assertEqual(consumer.tableRoot, oracle(cfg))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_hb_wire")
+      Fs.deleteRecursively(base)
+    }
+  }
+
+  test("heartbeat action SQL runs once per batch of the multi-table stream") {
+    val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 151)
+    val base = Fs.tempDir("graft-hb-multi")
+    spark.sql(s"CREATE TABLE graft_hb_multi (tick INT) USING parquet " +
+      s"LOCATION '$base/heartbeats'")
+    try {
+      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4,
+        maxFilesPerTrigger = 1,
+        heartbeatActionSql = Some("INSERT INTO graft_hb_multi VALUES (1)"))
+      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+        cdc, ChangeLogGen.snapshotLsn)
+      MultiTable.stream(spark, Map(cfg.tableName -> table), cdc).awaitTermination()
+      val applied = table.refresh().summary.lastBatchId + 1
+      assert(applied >= 3)
+      assert(spark.table("graft_hb_multi").count() == applied)
+      assertEqual(cdc.tableRoot, oracle(cfg))
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_hb_multi")
+      Fs.deleteRecursively(base)
+    }
+  }
+
   test("extreme hot-key skew (zipf alpha=6): correct and completes") {
     val cfg = ChangeLogConfig(nTx = 400, nDocs = 50, seed = 59, zipfAlpha = 6.0)
     // verify the fixture is actually skewed: most updates hit doc 0
