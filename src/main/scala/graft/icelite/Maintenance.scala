@@ -216,14 +216,23 @@ object Maintenance {
     * batch per `maxDeltaChain` applies). Safe next to ingest by the
     * changed-file-set commit check; a raced fold is simply retried on
     * the next poke. `drain()` waits for quiescence (deterministic
-    * tests / shutdown).
+    * tests / shutdown). The thread exits after [[CompactionDaemon
+    * .IdleKeepAliveSec]] without work and the next poke starts a new
+    * one, so a daemon whose stream has ended holds no thread (and,
+    * through it, no table).
     */
   final class CompactionDaemon(table: IceLiteTable,
       chainThreshold: Int, retentionFloorLsn: () => Long = () => -1L,
       clusterBy: Seq[String] = Nil, maxRowsPerFile: Long = 0L)
       extends AutoCloseable {
-    private val exec = java.util.concurrent.Executors.newSingleThreadExecutor(
-      IceLite.backgroundThreads("graft-compaction"))
+    private val exec = {
+      val e = new java.util.concurrent.ThreadPoolExecutor(1, 1,
+        CompactionDaemon.IdleKeepAliveSec, java.util.concurrent.TimeUnit.SECONDS,
+        new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+        IceLite.backgroundThreads("graft-compaction"))
+      e.allowCoreThreadTimeOut(true)
+      e
+    }
     private val queued = new java.util.concurrent.atomic.AtomicBoolean(false)
     @volatile private var err: Option[Throwable] = None
     def lastError: Option[Throwable] = err
@@ -276,6 +285,12 @@ object Maintenance {
       err.foreach(t => System.err.println(
         s"[graft-compaction] closing with unsurfaced failure: $t"))
     }
+  }
+
+  object CompactionDaemon {
+    /** Idle seconds before the daemon's thread exits: above a stream's
+      * trigger interval, so a running stream keeps one thread. */
+    val IdleKeepAliveSec: Long = 5L
   }
 
   /** Expire old snapshot version files, bounding metadata growth and the

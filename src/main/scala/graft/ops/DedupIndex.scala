@@ -93,18 +93,10 @@ object DedupIndex {
         s"replay floor ($floor) or the registration is replay-skipped")
     val fps = fingerprints(newDocs, textCol)
       .groupBy(col(FpCol)).agg(min(col("doc_id")).as("doc_id"))
-    val events = fps.select(
-      lit("c").as("op"),
-      struct(col(FpCol), col("doc_id")).as("after"),
-      lit(null).cast(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(FpCol,
-          org.apache.spark.sql.types.StringType)))).as("before"),
-      graft.plans.StableLit.long(commitLsn).as("commit_lsn"),
-      // deterministic per fingerprint (not monotonically_increasing_id,
-      // which varies across retries/partitionings): a same-commitLsn
-      // collision must tie-break the same way on every replay
-      TextOps.portableHash(col(FpCol)).as("change_lsn"))
-    MergeApply.applyBatch(index, events, batchId)
+    // change_lsn is the fingerprint's hash (not monotonically_increasing_id,
+    // which varies across retries/partitionings): a same-commitLsn
+    // collision must tie-break the same way on every replay
+    MergeApply.applyBatch(index, MergeApply.committedEvents(fps, FpCol, commitLsn), batchId)
   }
 
   /** The full incremental step: dedup `batch` against the index AND

@@ -6,7 +6,6 @@ import graft.stream.MergeApply
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming NEAR-duplicate detection — the banded-MinHash counterpart
   * of [[DedupIndex]] (which is exact-only): the corpus's LSH state
@@ -266,14 +265,8 @@ object NearDupIndex {
 
   private def updateFrom(idx: Index, sg: DataFrame, batchId: Long,
       commitLsn: Long, maxBucket: Int): Unit = {
-    val sigEvents = sg.select(
-      lit("c").as("op"),
-      struct(col("doc_id"), col("sig")).as("after"),
-      lit(null).cast(StructType(Seq(StructField("doc_id", LongType)))).as("before"),
-      graft.plans.StableLit.long(commitLsn).as("commit_lsn"),
-      // deterministic per doc (the DedupIndex change_lsn rule)
-      TextOps.portableHash(col("doc_id").cast("string")).as("change_lsn"))
-    MergeApply.applyBatch(idx.sigs, sigEvents, batchId)
+    MergeApply.applyBatch(idx.sigs, MergeApply.committedEvents(sg, "doc_id", commitLsn,
+      after = Some(struct(col("doc_id"), col("sig")))), batchId)
 
     val br = bandRows(sg)
     val bsnap = idx.bands.refresh()
@@ -285,14 +278,8 @@ object NearDupIndex {
       touched.select(col("bb"), explode(col("members")).as("doc_id"))
         .unionByName(br.select(col("bb"), col("doc_id"))),
       maxBucket)
-    val bandEvents = merged.select(
-      lit("c").as("op"),
-      struct(col("bb"), col("members")).as("after"),
-      lit(null).cast(StructType(Seq(StructField("bb",
-        org.apache.spark.sql.types.StringType)))).as("before"),
-      graft.plans.StableLit.long(commitLsn).as("commit_lsn"),
-      TextOps.portableHash(col("bb")).as("change_lsn"))
-    MergeApply.applyBatch(idx.bands, bandEvents, batchId)
+    MergeApply.applyBatch(idx.bands, MergeApply.committedEvents(merged, "bb", commitLsn,
+      after = Some(struct(col("bb"), col("members")))), batchId)
     ()
   }
 
@@ -311,23 +298,20 @@ object NearDupIndex {
       minMatches: Int = DefaultMinMatches, textCol: String = "text",
       maxFilesPerTrigger: Int = 1, baseLsn: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(docsDir)
-      .writeStream
-      .queryName("graft-neardup-ingest")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val clean = dedupAndUpdate(idx, df, batchId,
-          commitLsn = baseLsn + batchId + 1, minMatches = minMatches,
-          textCol = textCol)
-        try clean.write.mode("overwrite").parquet(f"$outDir/batch-$batchId%08d")
-        finally { clean.unpersist(); () }
-        ()
-      }
-      .start()
+    graft.stream.Driver.start(
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(docsDir),
+      checkpointDir, org.apache.spark.sql.streaming.Trigger.AvailableNow(),
+      Some("graft-neardup-ingest")) { (df, batchId) =>
+      val clean = dedupAndUpdate(idx, df, batchId,
+        commitLsn = baseLsn + batchId + 1, minMatches = minMatches,
+        textCol = textCol)
+      try clean.write.mode("overwrite").parquet(f"$outDir/batch-$batchId%08d")
+      finally { clean.unpersist(); () }
+      ()
+    }
 
   /** Batch docs that are VERIFIED near-dups of a lower-id doc in the
     * SAME batch: capped banded candidate pairs (the batch's own LSH,

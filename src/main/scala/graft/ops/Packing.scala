@@ -141,10 +141,4 @@ object Packing {
       .withColumn("tail_fill",
         round((col("total_tokens") - (col("n_seqs") - 1) * capacity).cast("double")
           / capacity, 4))
-
-  /** Convenience: fraction of emitted sequences that are exactly full
-    * (all but one per group, by construction).
-    */
-  def fullSeqFraction(stats: DataFrame): Column =
-    sum(col("n_seqs") - 1) / sum(col("n_seqs"))
 }

@@ -49,10 +49,6 @@ object ValueConv {
     */
   def timePrecision(length: Int): Int = if (length < 20) 0 else length - 20
 
-  /** True iff the column is a floating-point decimal (VariableScale). */
-  def isVariableScale(scale: Option[Int]): Boolean =
-    scale.isEmpty || scale.contains(FloatingPointDecimalScale)
-
   // ---- row-value converters (Catalyst columns; codegen'd casts) ----
 
   /** PRECISE fixed-scale decimal as Connect sees it: (unscaled, scale).

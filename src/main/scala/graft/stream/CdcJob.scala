@@ -709,62 +709,33 @@ object CdcJob {
       cfg: CdcConfig,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    // R4: refuse to stream over a retention gap — silent corruption
-    // otherwise. Callers with a current consistent source view call
-    // validateOrResnapshot first (when_needed auto-resnapshots there).
-    if (!validateRestartOffset(table, cfg)) {
-      val sm = table.current.summary
-      throw new IllegalStateException(
-        s"restart offset (watermark=${sm.watermarkCommit}, pin=${sm.floorCommit}) predates " +
-          s"the log's min retained LSN ${LogRetention.minRetainedLsn(cfg.logDir)}: events were " +
-          "garbage-collected before they were applied — call validateOrResnapshot with a " +
-          "current source view (snapshot mode when_needed re-snapshots automatically)")
+    // R4: the envelope refuses to stream over a retention gap. Callers
+    // with a current consistent source view call validateOrResnapshot
+    // first (when_needed auto-resnapshots there).
+    val env = Driver.Envelope(spark, table, cfg)
+    Driver.start(
+      spark.readStream
+        .schema(LogRecord.schema)
+        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+        .parquet(cfg.logDir),
+      cfg.checkpointDir, trigger, Some("graft-cdc-apply")) { (df, batchId) =>
+      env(configuredBatch(table, cfg, df, batchId, _)); ()
     }
-    // asyncCompaction: one coalescing daemon for the query's lifetime
-    // (daemon thread — dies with the JVM; each sweep is short and
-    // conflict-safe, so there is nothing to flush at shutdown)
-    val daemon = compactionDaemon(table, cfg)
-    spark.readStream
-      .schema(LogRecord.schema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.logDir)
-      .writeStream
-      .queryName("graft-cdc-apply")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        configuredBatch(spark, table, cfg, daemon, df, batchId); ()
-      }
-      .start()
   }
 
-  /** The async compaction daemon of a driver, if `cfg` asks for one. */
-  private[stream] def compactionDaemon(table: IceLiteTable,
-      cfg: CdcConfig): Option[graft.icelite.Maintenance.CompactionDaemon] =
-    if (!cfg.asyncCompaction) None
-    else Some(new graft.icelite.Maintenance.CompactionDaemon(
-      table, MergeApply.maxDeltaChain))
-
-  /** One micro-batch of [[stream]] and [[runBatchIncremental]]: signals,
-    * heartbeat, then [[processBatch]] with `cfg`'s settings; the daemon,
-    * when there is one, compacts instead of the apply's inline fold. */
-  private def configuredBatch(spark: SparkSession, table: IceLiteTable,
-      cfg: CdcConfig, daemon: Option[graft.icelite.Maintenance.CompactionDaemon],
-      raw: DataFrame, batchId: Long): MergeApply.MergeStats = {
-    cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
-    cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
-    val stats = processBatch(table, raw, batchId, cfg.broadcastAssembly, cfg.tableInclude,
+  /** One batch of [[stream]] and [[runBatchIncremental]]: [[processBatch]]
+    * with `cfg`'s settings. */
+  private def configuredBatch(table: IceLiteTable, cfg: CdcConfig, raw: DataFrame,
+      batchId: Long, inlineCompact: Boolean): MergeApply.MergeStats =
+    processBatch(table, raw, batchId, cfg.broadcastAssembly, cfg.tableInclude,
       cfg.columnTransforms, cfg.txCarryover, cfg.emitDir,
       cfg.tombstonesOnDelete, cfg.returnEmptyTransactions,
       emitFlatten = cfg.emitFlatten, emitWire = cfg.emitWire,
       emitWireBinary = cfg.emitWireBinary, filters = cfg.filters,
-      inlineCompact = daemon.isEmpty, rowFilter = cfg.rowFilter,
+      inlineCompact = inlineCompact, rowFilter = cfg.rowFilter,
       skippedOperations = cfg.skippedOperations,
       messageKeyColumns = cfg.messageKeyColumns,
       topicRouting = cfg.topicRouting, contentRouting = cfg.contentRouting)
-    daemon.foreach(_.poke())
-    stats
-  }
 
   /** Run the stream to completion over whatever log segments exist. */
   def runAvailable(spark: SparkSession, table: IceLiteTable, cfg: CdcConfig): Unit = {
@@ -800,10 +771,7 @@ object CdcJob {
       filesPerBatch: Int,
       stopAfterBatches: Int = Int.MaxValue
   ): Seq[MergeApply.MergeStats] = {
-    if (!validateRestartOffset(table, cfg))
-      throw new IllegalStateException(
-        "restart offset predates the log's min retained LSN — call validateOrResnapshot " +
-          "with a current source view (snapshot mode when_needed re-snapshots automatically)")
+    val env = Driver.Envelope(spark, table, cfg)
     val files = graft.util.Fs.listParquet(cfg.logDir).sorted
     val chunks = files.grouped(filesPerBatch).toSeq
     val from = table.refresh().summary.lastBatchId + 1
@@ -842,15 +810,11 @@ object CdcJob {
           chunk.exists(f => maxOf(f) > resume)
         chunks.filter(needsApply)
       }
-    val daemon = compactionDaemon(table, cfg)
-    val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
-    todo.zipWithIndex.foreach { case (chunk, j) =>
-      if (j < stopAfterBatches) {
-        val raw = spark.read.schema(LogRecord.schema).parquet(chunk: _*)
-        out += configuredBatch(spark, table, cfg, daemon, raw, from + j)
-      }
+    val out = todo.take(stopAfterBatches).zipWithIndex.map { case (chunk, j) =>
+      val raw = spark.read.schema(LogRecord.schema).parquet(chunk: _*)
+      env(configuredBatch(table, cfg, raw, from + j, _))
     }
-    daemon.foreach { d => try d.drain() finally d.close() }
-    out.toSeq
+    env.drain()
+    out
   }
 }

@@ -373,26 +373,18 @@ object Funnel {
         .withColumn("event_time", timestamp_millis(col("m")))
         .withWatermark("event_time", s"$DelayMs milliseconds")
         .as[FunnelEvent]
-      src.groupByKey(_.u)
+      val verdicts = src.groupByKey(_.u)
         .transformWithState(new FunnelProcessor(),
           TimeMode.EventTime(), OutputMode.Append())
         .toDF()
-        .writeStream
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val rows = df.withColumn("k", col("u").cast("string"))
-          val ev = rows.select(
-            lit("c").as("op"),
-            lit(null).cast(StructType(Seq(StructField("k", StringType))))
-              .as("before"),
-            struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*)
-              .as("after"),
-            graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-            TextOps.portableHash(col("k")).as("change_lsn"))
-          MergeApply.applyBatch(table, ev, batchId)
+      Driver.start(verdicts, s"$workDir/ckpt", Trigger.AvailableNow(), None) {
+        (df, batchId) =>
+          MergeApply.applyBatch(table, MergeApply.committedEvents(
+            df.withColumn("k", col("u").cast("string")), "k", batchId + 1L,
+            after = Some(struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*))),
+            batchId)
           ()
-        }
-        .trigger(Trigger.AvailableNow()).start()
+      }
     }
     WindowedAgg.withShufflePartitions(spark,
         WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {

@@ -1,11 +1,9 @@
 package graft.stream
 
 import graft.icelite.{IceLite, IceLiteTable}
-import graft.ops.TextOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental view maintenance (IVM) over the change feed: a
   * downstream AGGREGATE table (group-by counts + sums) kept current
@@ -158,17 +156,10 @@ object Ivm {
     val newRows = coalesce(col(RowsCol), lit(0L)) + col("__dn")
     val newSums = vd.sums.zipWithIndex.map { case ((n, _), i) =>
       (coalesce(col(n), lit(0L)) + coalesce(col(sumName(i)), lit(0L))).as(n) }
-    val after = struct(
-      Seq(col("__g").as(vd.groupCol), newRows.as(RowsCol)) ++ newSums: _*)
-    u.select(
-      when(newRows === 0L, lit("d")).otherwise(lit("c")).as("op"),
-      lit(null).cast(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(vd.groupCol,
-          org.apache.spark.sql.types.StringType)))).as("before"),
-      after.as("after"),
-      graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-      // deterministic per group under replay/repartitioning
-      TextOps.portableHash(col("__g")).as("change_lsn"))
+    MergeApply.committedEvents(
+      u.drop(vd.groupCol).withColumnRenamed("__g", vd.groupCol), vd.groupCol, batchId + 1L,
+      op = when(newRows === 0L, lit("d")).otherwise(lit("c")),
+      after = Some(struct(Seq(col(vd.groupCol), newRows.as(RowsCol)) ++ newSums: _*)))
   }
 
   /** Rebuild the view wholesale from the replica's current state —
@@ -180,14 +171,8 @@ object Ivm {
     val full = aggregateOf(replica.read(), vd)
     val gone = view.read()
       .join(full.select(col(vd.groupCol)), Seq(vd.groupCol), "left_anti")
-    def ev(df: DataFrame, op: String): DataFrame = df.select(
-      lit(op).as("op"),
-      lit(null).cast(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(vd.groupCol,
-          org.apache.spark.sql.types.StringType)))).as("before"),
-      struct(df.columns.toIndexedSeq.map(col): _*).as("after"),
-      graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-      TextOps.portableHash(col(vd.groupCol)).as("change_lsn"))
+    def ev(df: DataFrame, op: String): DataFrame =
+      MergeApply.committedEvents(df, vd.groupCol, batchId + 1L, op = lit(op))
     MergeApply.applyBatch(view, ev(full, "c").unionByName(ev(gone, "d")), batchId)
     ()
   }
@@ -196,37 +181,27 @@ object Ivm {
     * ordering (see the object doc). Idempotent per batchId.
     */
   def applyIvmBatch(view: IceLiteTable, replica: IceLiteTable, vd: ViewDef,
-      feed: DataFrame, batchId: Long, srcRoot: String): Unit = {
-    val vDone = batchId <= view.refresh().summary.lastBatchId
-    val rDone = batchId <= replica.refresh().summary.lastBatchId
-    if (vDone && rDone) return
-    if (rDone) { rebuild(view, replica, vd, batchId); return }
-    if (vDone) {
-      // finish the interrupted incremental order: replica only. The
-      // floor must NOT propagate here (same as the fresh incremental
-      // path below) — a truncate that committed on the source between
-      // the crash and this replay would otherwise advance the
-      // replica's floor without the view rebuild, and the next batch's
-      // floorAdvanced() check would see equal floors and never rebuild.
-      Replicate.applyFeedBatch(replica, feed, batchId, None); return
+      feed: DataFrame, batchId: Long, srcRoot: String): Unit =
+    Replicate.orderedApply(batchId, view,
+      Seq(Replicate.Replica(replica, feed, Some(srcRoot))))(
+      recover = rebuild(view, replica, vd, batchId)) {
+      feed.persist()
+      try {
+        if (Replicate.floorAdvanced(srcRoot, replica)) {
+          // truncate: replica first (its apply floors the wiped rows),
+          // then one aggregate pass — deltas can't see a wipe
+          Replicate.applyFeedBatch(replica, feed, batchId, Some(srcRoot))
+          rebuild(view, replica, vd, batchId)
+        } else {
+          val ev = deltaEvents(view, replica, vd, feed, batchId)
+          MergeApply.applyBatch(view, ev, batchId)
+          // floor propagation rides the REBUILD path only: a truncate
+          // committed after the check above is caught at the next batch
+          // (a truncate commit is a new feed version, so one arrives)
+          Replicate.applyFeedBatch(replica, feed, batchId, None)
+        }
+      } finally { feed.unpersist(); () }
     }
-    feed.persist()
-    try {
-      if (Replicate.floorAdvanced(srcRoot, replica)) {
-        // truncate: replica first (its apply floors the wiped rows),
-        // then one aggregate pass — deltas can't see a wipe
-        Replicate.applyFeedBatch(replica, feed, batchId, Some(srcRoot))
-        rebuild(view, replica, vd, batchId)
-      } else {
-        val ev = deltaEvents(view, replica, vd, feed, batchId)
-        MergeApply.applyBatch(view, ev, batchId)
-        // floor propagation rides the REBUILD path only: a truncate
-        // committed after the check above is caught at the next batch
-        // (a truncate commit is a new feed version, so one arrives)
-        Replicate.applyFeedBatch(replica, feed, batchId, None)
-      }
-    } finally { feed.unpersist(); () }
-  }
 
   /** The whole maintainer lifecycle: on the FIRST run (no stream
     * checkpoint) bootstrap the replica from the source's pinned raw
@@ -261,15 +236,10 @@ object Ivm {
       } {
         (IceLite.load(spark, replicaRoot), IceLite.load(spark, viewRoot), 0L)
       }
-    graft.icelite.dsv2.IceLiteV2
-      .readChangesStream(spark, srcRoot, pin, maxVersionsPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyIvmBatch(view, replica, vd, df, batchId, srcRoot)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+    Replicate.drainFeed(graft.icelite.dsv2.IceLiteV2
+      .readChangesStream(spark, srcRoot, pin, maxVersionsPerTrigger), checkpointDir) {
+      (df, batchId) => applyIvmBatch(view, replica, vd, df, batchId, srcRoot)
+    }
     (replica, view)
   }
 }

@@ -1,12 +1,10 @@
 package graft.stream
 
 import graft.icelite.{IceLite, IceLiteTable}
-import graft.ops.TextOps
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** Incremental view maintenance of a JOIN: a FACT ⨝ DIM enrichment
   * view (inner join on a fact foreign-key column = the dim table's
@@ -190,14 +188,8 @@ object IvmJoin {
        else when(col("__hit"), col(f.name)).otherwise(lit(null).cast(f.dataType)))
         .as(f.name)
     }: _*)
-    val keyType = viewFields.find(_.name == fKey).get.dataType
-    ev.select(
-      when(col("__hit"), lit("c")).otherwise(lit("d")).as("op"),
-      lit(null).cast(StructType(Seq(StructField(fKey, keyType)))).as("before"),
-      after.as("after"),
-      graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-      // deterministic per key under replay/repartitioning
-      TextOps.portableHash(col(fKey).cast("string")).as("change_lsn"))
+    MergeApply.committedEvents(ev, fKey, batchId + 1L,
+      op = when(col("__hit"), lit("c")).otherwise(lit("d")), after = Some(after))
   }
 
   /** Rebuild the view wholesale from the replicas' current states —
@@ -212,18 +204,12 @@ object IvmJoin {
     val gone = view.read().select(col(fKey))
       .join(full.select(col(fKey)), Seq(fKey), "left_anti")
     val viewFields = full.schema.fields.toIndexedSeq
-    val keyType = viewFields.find(_.name == fKey).get.dataType
     def ev(df: DataFrame, op: String): DataFrame = {
       val after = struct(viewFields.map { f =>
         (if (df.columns.contains(f.name)) col(f.name)
          else lit(null).cast(f.dataType)).as(f.name)
       }: _*)
-      df.select(
-        lit(op).as("op"),
-        lit(null).cast(StructType(Seq(StructField(fKey, keyType)))).as("before"),
-        after.as("after"),
-        graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-        TextOps.portableHash(col(fKey).cast("string")).as("change_lsn"))
+      MergeApply.committedEvents(df, fKey, batchId + 1L, op = lit(op), after = Some(after))
     }
     MergeApply.applyBatch(view, ev(full, "c").unionByName(ev(gone, "d")), batchId)
     ()
@@ -236,46 +222,26 @@ object IvmJoin {
   def applyIvmJoinBatch(view: IceLiteTable, repF: IceLiteTable,
       repD: IceLiteTable, fkCol: String, factBatch: DataFrame,
       dimBatch: DataFrame, batchId: Long, factRoot: String,
-      dimRoot: String): Unit = {
-    val vDone = batchId <= view.refresh().summary.lastBatchId
-    val fDone = batchId <= repF.refresh().summary.lastBatchId
-    val dDone = batchId <= repD.refresh().summary.lastBatchId
-    if (vDone && fDone && dDone) return
-    if (vDone) {
-      // view committed; finish the replicas. Floors must NOT propagate
-      // here (a truncate committed between the crash and this replay
-      // would otherwise advance a replica's floor without the view
-      // rebuild — the next batch's floorAdvanced check would then see
-      // equal floors and never rebuild).
-      if (!fDone) Replicate.applyFeedBatch(repF, factBatch, batchId, None)
-      if (!dDone) Replicate.applyFeedBatch(repD, dimBatch, batchId, None)
-      return
+      dimRoot: String): Unit =
+    Replicate.orderedApply(batchId, view, Seq(
+      Replicate.Replica(repF, factBatch, Some(factRoot)),
+      Replicate.Replica(repD, dimBatch, Some(dimRoot))))(
+      recover = rebuild(view, repF, repD, fkCol, batchId)) {
+      if (Replicate.floorAdvanced(factRoot, repF) || Replicate.floorAdvanced(dimRoot, repD)) {
+        // truncate on either source: replicas first (their applies floor
+        // the wiped rows), then one join pass — deltas can't see a wipe
+        Replicate.applyFeedBatch(repF, factBatch, batchId, Some(factRoot))
+        Replicate.applyFeedBatch(repD, dimBatch, batchId, Some(dimRoot))
+        rebuild(view, repF, repD, fkCol, batchId)
+      } else {
+        val ev = deltaEvents(repF, repD, fkCol, factBatch, dimBatch, batchId)
+        try {
+          MergeApply.applyBatch(view, ev, batchId)
+          Replicate.applyFeedBatch(repF, factBatch, batchId, None)
+          Replicate.applyFeedBatch(repD, dimBatch, batchId, None)
+        } finally { ev.unpersist(); () }
+      }
     }
-    if (fDone || dDone) {
-      // a replica is ahead of the view (crash mid-order, or an
-      // empty-delta batch that never committed a view snapshot): bring
-      // both replicas to post-batch, then the rebuild — correct from
-      // any intermediate state.
-      if (!fDone) Replicate.applyFeedBatch(repF, factBatch, batchId, Some(factRoot))
-      if (!dDone) Replicate.applyFeedBatch(repD, dimBatch, batchId, Some(dimRoot))
-      rebuild(view, repF, repD, fkCol, batchId)
-      return
-    }
-    if (Replicate.floorAdvanced(factRoot, repF) || Replicate.floorAdvanced(dimRoot, repD)) {
-      // truncate on either source: replicas first (their applies floor
-      // the wiped rows), then one join pass — deltas can't see a wipe
-      Replicate.applyFeedBatch(repF, factBatch, batchId, Some(factRoot))
-      Replicate.applyFeedBatch(repD, dimBatch, batchId, Some(dimRoot))
-      rebuild(view, repF, repD, fkCol, batchId)
-    } else {
-      val ev = deltaEvents(repF, repD, fkCol, factBatch, dimBatch, batchId)
-      try {
-        MergeApply.applyBatch(view, ev, batchId)
-        Replicate.applyFeedBatch(repF, factBatch, batchId, None)
-        Replicate.applyFeedBatch(repD, dimBatch, batchId, None)
-      } finally { ev.unpersist(); () }
-    }
-  }
 
   /** The whole maintainer lifecycle: on the FIRST run (no stream
     * checkpoint) bootstrap both replicas from the sources' pinned raw
@@ -331,19 +297,15 @@ object IvmJoin {
       .unionByName(fd.select(lit("d").as("__side"),
         lit(null).cast(fType).as("__f"),
         struct(fd.columns.toIndexedSeq.map(col): _*).as("__d")))
-    tagged.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        df.persist()
-        try {
-          val factBatch = df.where(col("__side") === "f").select("__f.*")
-          val dimBatch = df.where(col("__side") === "d").select("__d.*")
-          applyIvmJoinBatch(view, repF, repD, fkCol, factBatch, dimBatch,
-            batchId, factRoot, dimRoot)
-        } finally { df.unpersist(); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+    Replicate.drainFeed(tagged, checkpointDir) { (df, batchId) =>
+      df.persist()
+      try {
+        val factBatch = df.where(col("__side") === "f").select("__f.*")
+        val dimBatch = df.where(col("__side") === "d").select("__d.*")
+        applyIvmJoinBatch(view, repF, repD, fkCol, factBatch, dimBatch,
+          batchId, factRoot, dimRoot)
+      } finally { df.unpersist(); () }
+    }
     (repF, repD, view)
   }
 }

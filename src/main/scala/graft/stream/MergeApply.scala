@@ -117,6 +117,24 @@ object MergeApply {
       case other => other
     }
 
+  /** Rows as committed events, the apply's input contract (op, before,
+    * after, commit_lsn, change_lsn), for the engine's own derived tables
+    * (views, history, indexes, stores): one event per row at
+    * `commitLsn`, `after` = the whole row unless given, a null `before`
+    * keyed by `keyCol`. change_lsn is the key's portable hash, so a
+    * replay of a half-applied batch tie-breaks the same way on any
+    * partitioning.
+    */
+  def committedEvents(rows: DataFrame, keyCol: String, commitLsn: Long,
+      op: Column = lit("c"), after: Option[Column] = None): DataFrame =
+    rows.select(
+      op.as("op"),
+      lit(null).cast(StructType(Seq(StructField(keyCol, rows.schema(keyCol).dataType))))
+        .as("before"),
+      after.getOrElse(struct(rows.columns.toIndexedSeq.map(col): _*)).as("after"),
+      graft.plans.StableLit.long(commitLsn).as("commit_lsn"),
+      graft.ops.TextOps.portableHash(col(keyCol).cast("string")).as("change_lsn"))
+
   /** Widening-aware type merge (E4 extension): numeric widenings the
     * parquet reader serves WITHOUT rewriting committed files (verified
     * on Spark 4's vectorized reader: the int8/16/32→int64 chain and
@@ -177,9 +195,6 @@ object MergeApply {
 
   private def posGt(c: Column, l: Column, c0: Long, l0: Long): Column =
     (c > c0) || (c === c0 && l > l0)
-
-  private val posStruct = StructType(Seq(
-    StructField("c", LongType), StructField("l", LongType)))
 
   /** Build (NOT execute) the ONE full-data plan of a batch apply:
     * floor filter -> key extraction -> single bucket exchange ->

@@ -37,7 +37,15 @@ object MultiTable {
       broadcastAssembly: Boolean = false,
       columnTransforms: Map[String, Map[String, String]] = Map.empty,
       rowFilters: Map[String, org.apache.spark.sql.Column] = Map.empty
-  ): Map[String, MergeApply.MergeStats] = {
+  ): Map[String, MergeApply.MergeStats] =
+    applyAll(sinks, rawBatch, batchId, broadcastAssembly, columnTransforms, rowFilters,
+      inlineCompact = true)
+
+  private def applyAll(sinks: Map[String, IceLiteTable], rawBatch: DataFrame,
+      batchId: Long, broadcastAssembly: Boolean,
+      columnTransforms: Map[String, Map[String, String]],
+      rowFilters: Map[String, org.apache.spark.sql.Column],
+      inlineCompact: Boolean): Map[String, MergeApply.MergeStats] = {
     // One pass to drop never-captured payload, MATERIALIZED before the
     // per-table fan-out: without the persist each sink's apply re-scans
     // and re-decodes the whole shared log batch (N sinks = N full log
@@ -53,7 +61,7 @@ object MultiTable {
         name -> CdcJob.processBatch(tbl, captured, batchId, broadcastAssembly,
           tableInclude = Some(Seq(name)),
           columnTransforms = columnTransforms.getOrElse(name, Map.empty),
-          rowFilter = rowFilters.get(name))
+          rowFilter = rowFilters.get(name), inlineCompact = inlineCompact)
       }
     } finally {
       captured.unpersist(blocking = false)
@@ -68,18 +76,14 @@ object MultiTable {
       cfg: CdcConfig,
       trigger: Trigger = Trigger.AvailableNow()
   ): StreamingQuery = {
-    spark.readStream
-      .schema(graft.model.LogRecord.schema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.logDir)
-      .writeStream
-      .queryName("graft-cdc-multitable")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
-        processBatch(sinks, df, batchId, cfg.broadcastAssembly); ()
-      }
-      .start()
+    val env = Driver.Envelope.ungated(spark, sinks.values.toSeq, cfg)
+    Driver.start(
+      spark.readStream
+        .schema(graft.model.LogRecord.schema)
+        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+        .parquet(cfg.logDir),
+      cfg.checkpointDir, trigger, Some("graft-cdc-multitable")) { (df, batchId) =>
+      env(applyAll(sinks, df, batchId, cfg.broadcastAssembly, Map.empty, Map.empty, _)); ()
+    }
   }
 }

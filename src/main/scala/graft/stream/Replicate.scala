@@ -54,6 +54,52 @@ object Replicate {
       boot
     } else resume
 
+  /** Drain a maintainer's change feed to now through the [[Driver]],
+    * resuming from `checkpointDir`: the tail of every feed consumer
+    * lifecycle, after [[bootstrapOnce]].
+    */
+  private[stream] def drainFeed(feed: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    Driver.start(feed, checkpointDir, Trigger.AvailableNow(), None)(body)
+      .awaitTermination()
+
+  /** One replica of an [[orderedApply]]: its table, its slice of the
+    * batch, and the source whose truncate floor a recovery propagates
+    * into it (None: never propagated).
+    */
+  private[stream] final case class Replica(table: IceLiteTable, feed: DataFrame,
+      floorFrom: Option[String])
+
+  /** The maintainers' multi-table exactly-once rule, written once. A
+    * batch commits `head` (the view or history table) first, then the
+    * `replicas` in order, each gated by the same batchId, so a replay
+    * finds one of four states:
+    *
+    *   - every table done: skip the batch;
+    *   - the head done: finish the pending replicas WITHOUT floor
+    *     propagation — a truncate committed on a source between the
+    *     crash and this replay would otherwise advance a replica's
+    *     floor without the head's rebuild, and the next batch's
+    *     [[floorAdvanced]] check would see equal floors and never
+    *     rebuild;
+    *   - the head not done but a replica done (a crash mid-order, or an
+    *     empty-delta batch that never committed the head): bring the
+    *     pending replicas to post-batch with their floors, then run the
+    *     maintainer's `recover` (a rebuild of the head, or nothing);
+    *   - nothing done: `apply` runs the batch in commit order.
+    */
+  private[stream] def orderedApply(batchId: Long, head: IceLiteTable,
+      replicas: Seq[Replica])(recover: => Unit)(apply: => Unit): Unit = {
+    def done(t: IceLiteTable): Boolean = batchId <= t.refresh().summary.lastBatchId
+    val headDone = done(head)
+    val pending = replicas.filterNot(r => done(r.table))
+    if (headDone) pending.foreach(r => applyFeedBatch(r.table, r.feed, batchId, None))
+    else if (pending.size < replicas.size) {
+      pending.foreach(r => applyFeedBatch(r.table, r.feed, batchId, r.floorFrom))
+      recover
+    } else apply
+  }
+
   /** Change-feed rows (payload + `__vc`/`__vl`/`__tomb`) re-shaped into
     * the engine's committed-event contract (op, before, after,
     * commit_lsn, change_lsn): the LWW version becomes the event
@@ -167,13 +213,10 @@ object Replicate {
     val feed = graft.icelite.dsv2.IceLiteV2.readChangesStream(
       spark, srcRoot, fromVersionExclusive, maxVersionsPerTrigger)
     val src = if (propagateTruncate) Some(srcRoot) else None
-    val w = feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyFeedBatch(dst, df, batchId, src)
-        ()
-      }
-    (if (availableNow) w.trigger(Trigger.AvailableNow()) else w).start()
+    Driver.start(feed, checkpointDir,
+      if (availableNow) Trigger.AvailableNow() else Trigger.ProcessingTime(0L), None) {
+      (df, batchId) => applyFeedBatch(dst, df, batchId, src); ()
+    }
   }
 
   /** Drain the feed to the current head and return. */

@@ -1,11 +1,9 @@
 package graft.stream
 
 import graft.icelite.{IceLite, IceLiteTable}
-import graft.ops.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructField, StructType, StringType}
 
 /** INCREMENTAL SCD Type-2 maintenance — the history table kept current
@@ -107,13 +105,7 @@ object Scd2Maintain {
     val rows = inBatch.unionByName(closePre)
       .withColumn("k", concat_ws("|", col(keyCol),
         col("valid_from_commit"), col("valid_from_change")))
-    val fields = rows.schema.fields.toIndexedSeq
-    val out = rows.select(
-      lit("c").as("op"),
-      lit(null).cast(StructType(Seq(StructField("k", StringType)))).as("before"),
-      struct(fields.map(f => col(f.name)): _*).as("after"),
-      graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-      TextOps.portableHash(col("k")).as("change_lsn"))
+    val out = MergeApply.committedEvents(rows, "k", batchId + 1L)
     out.cache(); out.count() // materialize before the pre-state cache drops
     pre.unpersist()
     out
@@ -123,21 +115,20 @@ object Scd2Maintain {
     * per batchId; see the object doc for why the orders converge.
     */
   def applyScd2Batch(hist: IceLiteTable, rep: IceLiteTable,
-      feed: DataFrame, batchId: Long): Unit = {
-    val hDone = batchId <= hist.refresh().summary.lastBatchId
-    val rDone = batchId <= rep.refresh().summary.lastBatchId
-    if (rDone) return // history either committed first or was empty
-    feed.persist()
-    try {
-      if (!hDone) {
+      feed: DataFrame, batchId: Long): Unit =
+    // a replica ahead of history: history either committed first or was
+    // empty, so there is nothing to recover
+    Replicate.orderedApply(batchId, hist, Seq(Replicate.Replica(rep, feed, None)))(
+      recover = ()) {
+      feed.persist()
+      try {
         val ev = deltaHistory(rep, feed, batchId)
         try MergeApply.applyBatch(hist, ev, batchId)
         finally { ev.unpersist(); () }
-      }
-      Replicate.applyFeedBatch(rep, feed, batchId, None)
-      ()
-    } finally { feed.unpersist(); () }
-  }
+        Replicate.applyFeedBatch(rep, feed, batchId, None)
+        ()
+      } finally { feed.unpersist(); () }
+    }
 
   /** The maintainer lifecycle: bootstrap the replica from the source's
     * pinned raw state on the first run (no history rows yet — nothing
@@ -170,15 +161,10 @@ object Scd2Maintain {
       } {
         (IceLite.load(spark, repRoot), IceLite.load(spark, histRoot), 0L)
       }
-    graft.icelite.dsv2.IceLiteV2
-      .readChangesStream(spark, srcRoot, pin, maxVersionsPerTrigger)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        applyScd2Batch(hist, rep, df, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start().awaitTermination()
+    Replicate.drainFeed(graft.icelite.dsv2.IceLiteV2
+      .readChangesStream(spark, srcRoot, pin, maxVersionsPerTrigger), checkpointDir) {
+      (df, batchId) => applyScd2Batch(hist, rep, df, batchId)
+    }
     (rep, hist)
   }
 

@@ -245,24 +245,16 @@ object SessionProfile {
     val table = graft.icelite.IceLite.create(spark, s"$workDir/store",
       MergeApply.asNullable(storeSchema).asInstanceOf[StructType],
       "k", numBuckets)
-    def start(liveDir: String) = profiles(spark, liveDir)
-      .writeStream
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val rows = df.withColumn("k",
-          concat_ws("|", col("u"), col("session_start")))
-        val ev = rows.select(
-          lit("c").as("op"),
-          lit(null).cast(StructType(Seq(StructField("k", StringType))))
-            .as("before"),
-          struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*)
-            .as("after"),
-          graft.plans.StableLit.long(batchId + 1L).as("commit_lsn"),
-          TextOps.portableHash(col("k")).as("change_lsn"))
-        MergeApply.applyBatch(table, ev, batchId)
-        ()
+    def start(liveDir: String) =
+      Driver.start(profiles(spark, liveDir), s"$workDir/ckpt", Trigger.AvailableNow(), None) {
+        (df, batchId) =>
+          MergeApply.applyBatch(table, MergeApply.committedEvents(
+            df.withColumn("k", concat_ws("|", col("u"), col("session_start"))), "k",
+            batchId + 1L,
+            after = Some(struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*))),
+            batchId)
+          ()
       }
-      .trigger(Trigger.AvailableNow()).start()
     WindowedAgg.withShufflePartitions(spark,
         WindowedAgg.adaptiveTwsPartitions(spark, stagedDir)) {
       WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")

@@ -239,6 +239,7 @@ object StatefulAssembly {
       batchIdBase: Long = 0L
   ): StreamingQuery = {
     import spark.implicits._
+    val env = Driver.Envelope(spark, table, cfg)
     val keyCol = table.current.keyCol
     val raw = CdcJob.prepareRaw(
       spark.readStream
@@ -249,18 +250,13 @@ object StatefulAssembly {
       filters = cfg.filters, rowFilter = cfg.rowFilter,
       skippedOperations = cfg.skippedOperations)
       .as[LogRecord]
-    assembler(raw).toDF()
-      .writeStream
-      .queryName("graft-cdc-stateful")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (events: DataFrame, rawBatchId: Long) =>
-        val batchId = rawBatchId + batchIdBase
-        cfg.signalDir.foreach(d => Signals.process(spark, table, d, cfg.rowFilter))
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
+    Driver.start(assembler(raw).toDF(), cfg.checkpointDir, trigger,
+      Some("graft-cdc-stateful")) { (events, rawBatchId) =>
+      val batchId = rawBatchId + batchIdBase
+      env { inlineCompact =>
         // quarantined records go to the dead-letter dir, never the merge
         cfg.dlqDir match {
-          case None => MergeApply.applyBatch(table, events, batchId); ()
+          case None => MergeApply.applyBatch(table, events, batchId, inlineCompact = inlineCompact)
           case Some(dlq) =>
             // persist once: the quarantine/apply split must not re-run
             // the assembled batch's lineage twice (linear waste at scale)
@@ -268,13 +264,13 @@ object StatefulAssembly {
             try {
               cached.where(col("op") === DlqOp)
                 .write.mode("overwrite").parquet(f"$dlq/batch-$batchId%08d")
-              MergeApply.applyBatch(table, cached.where(col("op") =!= DlqOp), batchId)
-              ()
+              MergeApply.applyBatch(table, cached.where(col("op") =!= DlqOp), batchId,
+                inlineCompact = inlineCompact)
             } finally { cached.unpersist(); () }
         }
-        ()
       }
-      .start()
+      ()
+    }
   }
 }
 

@@ -136,19 +136,6 @@ object TxAssembler {
         col("commit_ts").as("ts_ms"))
   }
 
-  /** R1/R2 replay-skip: strict (commit_lsn, change_lsn) > watermark.
-    *
-    * Reproduces the reference's recovery logic — skip transactions with
-    * `commitLsn < lastCommitLsn`, and within the boundary transaction
-    * (`commitLsn == lastCommitLsn`) skip records with
-    * `changeSeq <= lastChangeSeq`
-    * (`InformixStreamingChangeEventSource.java:142-163, 295-300`) —
-    * as one codegen-friendly predicate.
-    */
-  def afterWatermark(wmCommit: Long, wmChange: Long): Column =
-    (col("commit_lsn") > wmCommit) ||
-      (col("commit_lsn") === wmCommit && col("change_lsn") > wmChange)
-
   /** Transaction-metadata aggregate (E5): per-transaction event counts
     * per table, the analog of the reference's BEGIN/END metadata records
     * (`InformixTransactionMonitor.java:28-52` — txId adjusted to

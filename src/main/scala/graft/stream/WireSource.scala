@@ -191,24 +191,25 @@ object WireSource {
     // must fail fast, not silently skip history (no-op for fresh
     // consumers — appliedPredicate is None until a batch has applied)
     validateDumpContinuity(spark, table, cfg)
-    val daemon = CdcJob.compactionDaemon(table, cfg)
-    spark.readStream
-      .schema(if (binaryWire) wireBinSchema else wireSchema)
-      .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
-      .parquet(cfg.logDir)
-      .writeStream
-      .queryName("graft-wire-apply")
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
-        applyWireBatch(table, df, batchId,
-          inferEvolution = cfg.wireInferEvolution, dlqDir = cfg.dlqDir,
-          topicInclude = topicInclude, inlineCompact = daemon.isEmpty)
-        daemon.foreach(_.poke()); ()
-      }
-      .start()
+    val env = Driver.Envelope.ungated(spark, Seq(table), cfg)
+    Driver.start(
+      spark.readStream
+        .schema(if (binaryWire) wireBinSchema else wireSchema)
+        .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
+        .parquet(cfg.logDir),
+      cfg.checkpointDir, trigger, Some("graft-wire-apply")) { (df, batchId) =>
+      env(configuredBatch(table, cfg, topicInclude, df, batchId, _)); ()
+    }
   }
+
+  /** One batch of [[stream]] and [[runIncremental]]: [[applyWireBatch]]
+    * with `cfg`'s settings. */
+  private def configuredBatch(table: IceLiteTable, cfg: CdcConfig,
+      topicInclude: Option[Seq[String]], raw: DataFrame, batchId: Long,
+      inlineCompact: Boolean): MergeApply.MergeStats =
+    applyWireBatch(table, raw, batchId,
+      inferEvolution = cfg.wireInferEvolution, dlqDir = cfg.dlqDir,
+      topicInclude = topicInclude, inlineCompact = inlineCompact)
 
   /** One consumption group: all part files under one producer batch
     * dir (a bare file directly under the dump root is its own group).
@@ -429,19 +430,12 @@ object WireSource {
         continuityGuard(groups, applied)
         chunks.filter(_.exists(g => !applied(g)))
     }
-    val daemon = CdcJob.compactionDaemon(table, cfg)
-    val out = scala.collection.mutable.ArrayBuffer[MergeApply.MergeStats]()
-    todo.zipWithIndex.foreach { case (chunk, j) =>
-      if (j < stopAfterBatches) {
-        cfg.heartbeatActionSql.foreach(sql => spark.sql(sql).collect())
-        val raw = spark.read.schema(readSchema).parquet(chunk.flatMap(_.files): _*)
-        out += applyWireBatch(table, raw, from + j,
-          inferEvolution = cfg.wireInferEvolution, dlqDir = cfg.dlqDir,
-          topicInclude = topicInclude, inlineCompact = daemon.isEmpty)
-        daemon.foreach(_.poke())
-      }
+    val env = Driver.Envelope.ungated(spark, Seq(table), cfg)
+    val out = todo.take(stopAfterBatches).zipWithIndex.map { case (chunk, j) =>
+      val raw = spark.read.schema(readSchema).parquet(chunk.flatMap(_.files): _*)
+      env(configuredBatch(table, cfg, topicInclude, raw, from + j, _))
     }
-    daemon.foreach { d => try d.drain() finally d.close() }
-    out.toSeq
+    env.drain()
+    out
   }
 }

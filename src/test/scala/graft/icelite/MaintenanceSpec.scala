@@ -199,6 +199,28 @@ class MaintenanceSpec extends SparkSpec {
     Fs.deleteRecursively(base)
   }
 
+  test("a stream's compaction daemon leaves no thread behind once its query ends") {
+    import scala.jdk.CollectionConverters._
+    def daemonThreads(): Int = Thread.getAllStackTraces.keySet.asScala
+      .count(t => t.getName == "graft-compaction" && t.isAlive)
+    val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 157)
+    val base = Fs.tempDir("graft-daemon-idle")
+    val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",
+      numBuckets = 2, maxFilesPerTrigger = 1, asyncCompaction = true)
+    ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+    val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+      cdc, ChangeLogGen.snapshotLsn)
+    val before = daemonThreads()
+    CdcJob.stream(spark, table, cdc).awaitTermination()
+    assert(table.refresh().summary.lastBatchId == 2L)
+    val deadline = System.currentTimeMillis() +
+      (Maintenance.CompactionDaemon.IdleKeepAliveSec + 55L) * 1000L
+    while (daemonThreads() > before && System.currentTimeMillis() < deadline)
+      Thread.sleep(200)
+    assert(daemonThreads() <= before, "the daemon's thread outlived its stream")
+    Fs.deleteRecursively(base)
+  }
+
   test("inline fold cadence: the maxDeltaChain-th apply to a bucket folds its chain in its own commit") {
     import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 10, nDocs = 20, seed = 47)

@@ -140,18 +140,26 @@ class RobustnessSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE graft_hb_stateful (tick INT) USING parquet " +
       s"LOCATION '$base/heartbeats'")
     try {
-      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4,
-        maxFilesPerTrigger = 1,
-        heartbeatActionSql = Some("INSERT INTO graft_hb_stateful VALUES (1)"))
-      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
-      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
-        cdc, ChangeLogGen.snapshotLsn)
-      val fresh = spark.newSession()
-      StatefulAssembly.stream(fresh, table, cdc).awaitTermination()
-      val applied = table.refresh().summary.lastBatchId + 1
-      assert(applied >= 3)
-      assert(spark.table("graft_hb_stateful").count() == applied)
-      assertEqual(cdc.tableRoot, oracle(cfg))
+      Seq(false, true).foreach { async =>
+        val run = s"$base/async-$async"
+        val cdc = CdcConfig(s"$run/log", s"$run/table", s"$run/ckpt", numBuckets = 4,
+          maxFilesPerTrigger = 1, asyncCompaction = async,
+          heartbeatActionSql = Some("INSERT INTO graft_hb_stateful VALUES (1)"))
+        ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+        val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+          cdc, ChangeLogGen.snapshotLsn)
+        // the heartbeat may insert from another session: re-list the table
+        def ticks(): Long = {
+          spark.catalog.refreshTable("graft_hb_stateful"); spark.table("graft_hb_stateful").count()
+        }
+        val ticks0 = ticks()
+        val fresh = spark.newSession()
+        StatefulAssembly.stream(fresh, table, cdc).awaitTermination()
+        val applied = table.refresh().summary.lastBatchId + 1
+        assert(applied >= 3)
+        assert(ticks() - ticks0 == applied)
+        assertEqual(cdc.tableRoot, oracle(cfg))
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_hb_stateful")
       Fs.deleteRecursively(base)
@@ -190,17 +198,25 @@ class RobustnessSpec extends SparkSpec {
     spark.sql(s"CREATE TABLE graft_hb_multi (tick INT) USING parquet " +
       s"LOCATION '$base/heartbeats'")
     try {
-      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4,
-        maxFilesPerTrigger = 1,
-        heartbeatActionSql = Some("INSERT INTO graft_hb_multi VALUES (1)"))
-      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
-      val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
-        cdc, ChangeLogGen.snapshotLsn)
-      MultiTable.stream(spark, Map(cfg.tableName -> table), cdc).awaitTermination()
-      val applied = table.refresh().summary.lastBatchId + 1
-      assert(applied >= 3)
-      assert(spark.table("graft_hb_multi").count() == applied)
-      assertEqual(cdc.tableRoot, oracle(cfg))
+      Seq(false, true).foreach { async =>
+        val run = s"$base/async-$async"
+        val cdc = CdcConfig(s"$run/log", s"$run/table", s"$run/ckpt", numBuckets = 4,
+          maxFilesPerTrigger = 1, asyncCompaction = async,
+          heartbeatActionSql = Some("INSERT INTO graft_hb_multi VALUES (1)"))
+        ChangeLogGen.writeLog(spark, cfg, cdc.logDir, 3)
+        val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
+          cdc, ChangeLogGen.snapshotLsn)
+        // the heartbeat may insert from another session: re-list the table
+        def ticks(): Long = {
+          spark.catalog.refreshTable("graft_hb_multi"); spark.table("graft_hb_multi").count()
+        }
+        val ticks0 = ticks()
+        MultiTable.stream(spark, Map(cfg.tableName -> table), cdc).awaitTermination()
+        val applied = table.refresh().summary.lastBatchId + 1
+        assert(applied >= 3)
+        assert(ticks() - ticks0 == applied)
+        assertEqual(cdc.tableRoot, oracle(cfg))
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS graft_hb_multi")
       Fs.deleteRecursively(base)
@@ -271,6 +287,16 @@ class RobustnessSpec extends SparkSpec {
       CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
     }
     assert(ex.getMessage.contains("min retained LSN"))
+    // the stateful paths refuse the same gap before starting a query
+    // (each on its own session: the TWS path sets its state-store conf)
+    val statefulEx = intercept[IllegalStateException] {
+      StatefulAssembly.stream(spark.newSession(), table, cdc)
+    }
+    assert(statefulEx.getMessage.contains("min retained LSN"))
+    val twsEx = intercept[IllegalStateException] {
+      TwsAssembly.stream(spark.newSession(), table, cdc)
+    }
+    assert(twsEx.getMessage.contains("min retained LSN"))
 
     // when_needed: automatic reconciling re-snapshot from a CURRENT
     // consistent view (= the oracle's end state at pin maxLsn), then
