@@ -1866,7 +1866,7 @@ object SparkEntry {
       // carries a fresh commit timestamp (a commit record's event time
       // is the commit time); with its original generated ts it would be
       // older than the watermark and Spark's late filter would drop it
-      // before the processor — see the assembleWithRetention scaladoc
+      // before the processor — see the TwsAssembly.assemble scaladoc
       val lateClose = orphanClose.map(c =>
         c.copy(ts_ms = recsAll.iterator.map(_.ts_ms).max + 1L))
       val n = rest.size
@@ -1908,7 +1908,7 @@ object SparkEntry {
         java.nio.file.Files.move(
           java.nio.file.Paths.get(graft.util.Fs.listParquet(tmp).head),
           java.nio.file.Paths.get(f"${cdc.logDir}/batch-$i%03d.parquet"))
-        TwsAssembly.streamRetention(spark, table, cdc, retentionMs)
+        TwsAssembly.stream(spark, table, cdc, retentionMs = Some(retentionMs))
           .awaitTermination()
       }
       // abandonment is all-or-nothing: the orphan's EVERY record
@@ -1954,7 +1954,7 @@ object SparkEntry {
     * `cdc_state_inspect`, oracle = the open transactions derivable
     * from the log prefix alone — and seeds a transformWithState
     * (RocksDB) query over the second half via initial state
-    * ([[graft.stream.TwsAssembly.streamMigrated]]): a strategy switch
+    * ([[graft.stream.TwsAssembly.stream]]): a strategy switch
     * with ZERO log re-read. `cdc_migrate_state` checks the migrated
     * final state against the FULL replay oracle — any lost, duplicated
     * or re-ordered buffered record breaks the hash.
@@ -1969,7 +1969,6 @@ object SparkEntry {
           val spark = harnessSession(spark0)
           val base = graft.util.Fs.tempDir("graft-migrate")
           try {
-            import spark.implicits._
             val cfg = EngineReplayCfg
             val (first, second) = MigrateSplit
             val cdc1 = CdcConfig(s"$base/log1", s"$base/table", s"$base/ckpt1",
@@ -1989,7 +1988,7 @@ object SparkEntry {
             val cdc2 = cdc1.copy(logDir = s"$base/log2",
               checkpointDir = s"$base/ckpt2")
             ChangeLogGen.stageBatchFile(spark, second, cdc2.logDir)
-            TwsAssembly.streamMigrated(spark, table, cdc2, pending)
+            TwsAssembly.stream(spark, table, cdc2, pending = Some(pending))
               .awaitTermination()
             val fin = table.read()
               .select(col("doc_id"), col("n_tok"), col("source"),
@@ -2059,9 +2058,9 @@ object SparkEntry {
     * are read back through the public state-store reader
     * ([[graft.stream.StateInspect.pendingTws]]) and seed a
     * flatMapGroupsWithState query over the second half via the
-    * initial-state overload ([[graft.stream.StatefulAssembly
-    * .streamMigratedBack]]). Same full-replay oracle as the forward
-    * direction — the strategy switch must be lossless both ways.
+    * initial-state overload ([[graft.stream.StatefulAssembly.stream]]).
+    * Same full-replay oracle as the forward direction — the strategy
+    * switch must be lossless both ways.
     */
   private def migrateBackReplay(spark0: SparkSession): DataFrame = synchronized {
     migrateBackMemo match {
@@ -2087,7 +2086,7 @@ object SparkEntry {
           val cdc2 = cdc1.copy(logDir = s"$base/log2",
             checkpointDir = s"$base/ckpt2")
           ChangeLogGen.stageBatchFile(spark, second, cdc2.logDir)
-          StatefulAssembly.streamMigratedBack(spark, table, cdc2, pending)
+          StatefulAssembly.stream(spark, table, cdc2, pending = Some(pending))
             .awaitTermination()
           val fin = table.read()
             .select(col("doc_id"), col("n_tok"), col("source"),

@@ -227,7 +227,6 @@ object ChangeLogGen {
     * consumer (`DbzTransactionEngine.java:137-143`).
     */
   def writeLog(spark: SparkSession, cfg: ChangeLogConfig, dir: String, numFiles: Int): Unit = {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val slotSpan = cfg.slotsPerTx.toLong * cfg.interleave
     logRecords(spark, cfg)

@@ -332,7 +332,6 @@ object Maintenance {
     */
   def gcOrphans(table: IceLiteTable): Int = {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     val snap = table.refresh()
     val cdfProtected = IceLite.retainedVersions(table.root).flatMap { v =>
       try IceLite.readSnapshotFile(table.root, v).changed.values.flatten

@@ -13,8 +13,6 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import java.util.Collections
-
 /** IceLite exposed through DataSourceV2 with REPORTED partitioning —
   * the read-side contract a 100 TB table needs: the scan tells Catalyst
   * that its partitions are exactly the table's hash buckets

@@ -85,7 +85,6 @@ case class BucketStatsTap(children: Seq[org.apache.spark.sql.catalyst.expression
     extends org.apache.spark.sql.catalyst.expressions.Expression
     with org.apache.spark.sql.catalyst.expressions.Nondeterministic {
 
-  import org.apache.spark.sql.catalyst.expressions.Expression
   import org.apache.spark.sql.catalyst.expressions.codegen._
   import org.apache.spark.sql.catalyst.expressions.codegen.Block._
   import org.apache.spark.sql.types._

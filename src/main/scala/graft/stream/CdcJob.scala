@@ -192,16 +192,6 @@ final case class CdcConfig(
       * ~one extra parse pass per batch; disable for fixed-schema
       * topics and widen the sink out-of-band instead. */
     wireInferEvolution: Boolean = true,
-    /** Cross-batch open-transaction carryover (the distributed analog of
-      * the reference's tx buffering, `DbzTransactionEngine.java:88-156`):
-      * records of transactions not yet closed in a batch are staged under
-      * `<table>/_pending/batch-N` and prepended to batch N+1, so log
-      * files need NOT be aligned to commit boundaries. Requires in-order
-      * batch delivery of a transaction's records (the reference reads its
-      * log sequentially too). Off by default: it costs one extra small
-      * write per batch and is unnecessary when the log writer closes
-      * files on commit boundaries (as graft.changelog does). */
-    txCarryover: Boolean = false,
     /** Stateful-assembly state bound: max buffered records per open
       * transaction (see [[StatefulAssembly.DefaultMaxBufferedPerTx]]). */
     maxTxRecords: Int = StatefulAssembly.DefaultMaxBufferedPerTx,
@@ -594,7 +584,6 @@ object CdcJob {
       broadcastAssembly: Boolean = false,
       tableInclude: Option[Seq[String]] = None,
       columnTransforms: Map[String, String] = Map.empty,
-      txCarryover: Boolean = false,
       emitDir: Option[String] = None,
       tombstonesOnDelete: Boolean = true,
       returnEmptyTransactions: Boolean = false,
@@ -608,7 +597,6 @@ object CdcJob {
       messageKeyColumns: Seq[(String, Seq[String])] = Nil,
       topicRouting: Option[(String, String)] = None,
       contentRouting: Option[Column] = None): MergeApply.MergeStats = {
-    val spark = rawBatch.sparkSession
     val keyCol = table.current.keyCol
     // Wire emission carries FULL before images (the reference runs
     // cdc_set_fullrowlogging — its update/delete envelopes have every
@@ -620,46 +608,11 @@ object CdcJob {
       if (!anyWire) Nil
       else rawBatch.schema("after").dataType
         .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-    val transformed = prepareRaw(rawBatch, keyCol, tableInclude, columnTransforms,
+    val input = prepareRaw(rawBatch, keyCol, tableInclude, columnTransforms,
       prune = true, filters = filters, rowFilter = rowFilter,
       skippedOperations = skippedOperations,
       keepBeforeFields =
         (messageKeyColumns.flatMap(_._2) ++ wireBefore).distinct)
-
-    val input =
-      if (!txCarryover) transformed
-      else {
-        // prepend last batch's unclosed-transaction records, stage this
-        // batch's unclosed ones for the next (idempotent per batchId:
-        // reprocessing batch N re-reads pending N-1 and overwrites N)
-        val pendDir = s"${table.root}/_pending"
-        val prev = java.nio.file.Paths.get(s"$pendDir/batch-${batchId - 1}")
-        val withPrev =
-          if (java.nio.file.Files.isDirectory(prev) &&
-            graft.util.Fs.listParquet(prev.toString).nonEmpty)
-            transformed.unionByName(
-              spark.read.schema(transformed.schema).parquet(prev.toString))
-          else transformed
-        import org.apache.spark.sql.expressions.Window
-        val closed = max(when(col("op").isin("C", "R"), lit(1)))
-          .over(Window.partitionBy(col("tx_id")))
-        val flagged = withPrev.withColumn("__closed", closed)
-        flagged.where(col("__closed").isNull).drop("__closed")
-          .write.mode("overwrite").parquet(s"$pendDir/batch-$batchId")
-        // GC staged dirs no restart can need anymore (< batchId-1)
-        val pd = java.nio.file.Paths.get(pendDir)
-        if (java.nio.file.Files.isDirectory(pd)) {
-          graft.util.Fs.listDir(pd)
-            .filter { q =>
-              val n = q.getFileName.toString
-              n.startsWith("batch-") &&
-                scala.util.Try(n.stripPrefix("batch-").toLong).toOption
-                  .exists(_ < batchId - 1)
-            }
-            .foreach(q => graft.util.Fs.deleteRecursively(q.toString))
-        }
-        flagged.where(col("__closed") === 1).drop("__closed")
-      }
 
     val events =
       if (broadcastAssembly) TxAssembler.assembleBroadcast(input, slim = true)
@@ -728,7 +681,7 @@ object CdcJob {
   private def configuredBatch(table: IceLiteTable, cfg: CdcConfig, raw: DataFrame,
       batchId: Long, inlineCompact: Boolean): MergeApply.MergeStats =
     processBatch(table, raw, batchId, cfg.broadcastAssembly, cfg.tableInclude,
-      cfg.columnTransforms, cfg.txCarryover, cfg.emitDir,
+      cfg.columnTransforms, cfg.emitDir,
       cfg.tombstonesOnDelete, cfg.returnEmptyTransactions,
       emitFlatten = cfg.emitFlatten, emitWire = cfg.emitWire,
       emitWireBinary = cfg.emitWireBinary, filters = cfg.filters,
@@ -759,10 +712,9 @@ object CdcJob {
     * EVERY closed transaction — rollbacks and empty commits emit
     * position markers ([[TxAssembler.MarkerOp]]) — so an applied
     * commit-aligned segment's last record is always covered; chunks that
-    * replay anyway (carryover tails) are harmless since apply is
-    * idempotent by row version. Fresh batch ids continue from
-    * lastBatchId + 1, preserving the idempotency gate and the
-    * carryover-staging chain.
+    * replay anyway are harmless since apply is idempotent by row
+    * version. Fresh batch ids continue from lastBatchId + 1, preserving
+    * the idempotency gate.
     */
   def runBatchIncremental(
       spark: SparkSession,

@@ -2,7 +2,6 @@ package graft.stream
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
 
 /** Per-segment max-position manifest for the file change log and for
   * wire dumps — the metadata that makes RESTART ALIGNMENT O(segments)

@@ -1,7 +1,7 @@
 package graft.stream
 
 import graft.icelite.{IceLite, IceLiteTable, IceSnapshot, IceSummary, Maintenance}
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SparkInternals
 import org.apache.spark.sql.types._

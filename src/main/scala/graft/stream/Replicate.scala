@@ -236,9 +236,8 @@ object Replicate {
   def replicate(spark: SparkSession, srcRoot: String, dst: IceLiteTable,
       checkpointDir: String, maxVersionsPerTrigger: Long = 64L,
       bootstrapAtVersion: Option[Long] = None): Unit = {
-    val firstRun = !java.nio.file.Files.exists(
-      java.nio.file.Paths.get(checkpointDir, "offsets"))
-    val pin = if (firstRun) bootstrap(spark, srcRoot, dst, bootstrapAtVersion) else 0L
+    val pin = bootstrapOnce(checkpointDir, Nil)(
+      bootstrap(spark, srcRoot, dst, bootstrapAtVersion))(0L)
     run(spark, srcRoot, dst, checkpointDir,
       fromVersionExclusive = pin, maxVersionsPerTrigger = maxVersionsPerTrigger)
   }

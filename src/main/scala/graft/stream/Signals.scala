@@ -6,7 +6,6 @@ import org.apache.spark.sql.SparkSession
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** E7 — the signal channel: Debezium drives incremental/blocking
   * snapshots by inserting rows into a `debezium_signal` table that the

@@ -1,7 +1,7 @@
 package graft.stream
 
 import graft.model.LogRecord
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Open-transaction state INTROSPECTION over a live (or stopped)
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *     reference's operators answer by querying `syscdc` sessions
   *     (`InformixConnection.java:105-120`); here it is a DataFrame.
   *   - migration: the exported pending set seeds
-  *     [[TwsAssembly.assembleMigrated]] — a strategy switch
+  *     [[TwsAssembly.assemble]] — a strategy switch
   *     (flatMapGroupsWithState -> transformWithState/RocksDB) with
   *     zero log re-read.
   *
@@ -38,12 +38,13 @@ object StateInspect {
     * Reads the checkpoint's STORED schema, so it also understands
     * checkpoints written by a pre-`quarantined` binary (the engine's
     * own state-schema evolution): the missing flag defaults to false.
-    * That makes this export + [[TwsAssembly.streamMigrated]] /
-    * [[StatefulAssembly.streamMigratedBack]] the zero-replay UPGRADE
-    * path for the engine's own state-schema changes — Spark refuses to
-    * resume a stateful query whose state schema changed, but the
-    * exported pending set seeds a fresh-checkpoint query that continues
-    * exactly-once (MigrationSpec pins it end to end).
+    * That makes this export, as the `pending` seed of
+    * [[TwsAssembly.stream]] / [[StatefulAssembly.stream]], the
+    * zero-replay UPGRADE path for the engine's own state-schema
+    * changes — Spark refuses to resume a stateful query whose state
+    * schema changed, but the exported pending set seeds a
+    * fresh-checkpoint query that continues exactly-once (MigrationSpec
+    * pins it end to end).
     */
   def pendingFmgws(spark: SparkSession, checkpointDir: String): Dataset[PendingTx] = {
     import spark.implicits._
@@ -82,6 +83,15 @@ object StateInspect {
         coalesce(col("records"), typedLit(Seq.empty[LogRecord])).as("records"),
         col("quarantined"))
       .as[PendingTx]
+  }
+
+  /** `pending` keyed by tx id as assembly state: the initial state of a
+    * migrated [[StatefulAssembly.assemble]] or [[TwsAssembly.assemble]].
+    */
+  private[stream] def seed(pending: Dataset[PendingTx]): KeyValueGroupedDataset[Long, TxBuffer] = {
+    import pending.sparkSession.implicits._
+    pending.groupByKey(_.tx_id)
+      .mapValues(p => TxBuffer(p.records.sortBy(_.lsn), p.quarantined))
   }
 
   /** Summary view for operators: one row per pending tx — id, buffered

@@ -1,7 +1,7 @@
 package graft.stream
 
 import graft.icelite.IceLiteTable
-import graft.model.{ChangeEvent, LogRecord, TokenDoc}
+import graft.model.{ChangeEvent, LogRecord}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
@@ -11,19 +11,30 @@ import org.apache.spark.sql.streaming._
   */
 case class TxBuffer(records: Seq[LogRecord], quarantined: Boolean = false)
 
+/** A transaction's state after one trigger of [[StatefulAssembly.stepTx]]. */
+private[stream] sealed trait TxNext
+private[stream] object TxNext {
+  /** Closed: drop the state. */
+  case object Cleared extends TxNext
+  /** Still open: append these records (the trigger's, sorted by lsn). */
+  final case class Open(appended: Seq[LogRecord]) extends TxNext
+  /** Quarantined and still open: drop the buffer, keep the sticky flag. */
+  case object Quarantined extends TxNext
+}
+
 /** T1 as TRUE streaming state: `flatMapGroupsWithState` keyed by tx_id
   * — the faithful distributed port of the reference's transaction
   * engine (`DbzTransactionEngine.java:88-156`): records buffer in the
   * state store until their COMMIT arrives (then the whole transaction
   * is emitted), ROLLBACK drops the buffer, savepoint DISCARD trims it.
   *
-  * This is the third assembly strategy, for logs with no batch
-  * alignment at all and unbounded tx lifetimes:
-  *   - `TxAssembler.assemble` (window)      — whole txs per batch
-  *   - carryover staging (CdcConfig)        — txs straddle batches,
-  *                                            in-order delivery
-  *   - this                                 — arbitrary splits; state
-  *     survives restarts via the SS state store + checkpoint
+  * The assembly strategies:
+  *   - `TxAssembler.assemble` / `assembleBroadcast` — whole txs per
+  *     batch; the log must be commit-aligned
+  *   - this, and [[TwsAssembly]] (transformWithState) — arbitrary
+  *     splits; open txs survive restarts in the SS state store +
+  *     checkpoint. Both store the output of one per-tx step,
+  *     [[stepTx]].
   *
   * `getLowestBeginSequence` (T5, `DbzTransactionEngine.java:194-196`)
   * is the minimum BEGIN lsn across live state — exactly what the state
@@ -62,8 +73,6 @@ object StatefulAssembly {
 
   /** The per-tx state machine over a SORTED record buffer: collect data
     * ops, apply savepoint discards (T3), track BEGIN, find the close.
-    * Shared by the flatMapGroupsWithState and transformWithState
-    * assemblies so their semantics are identical by construction.
     */
   private[graft] def foldTx(sorted: Seq[LogRecord])
       : (Seq[LogRecord], Long, Option[LogRecord]) = {
@@ -96,113 +105,89 @@ object StatefulAssembly {
       before = o.before, after = o.after, ts_ms = c.ts_ms)) ++ marker
   }
 
-  /** Replay the reference's per-tx state machine over newly arrived
-    * records; emit the transaction's events iff it closed.
+  /** One trigger of one transaction, written once for both state APIs.
+    * Pure: it reads the tx's state as (sticky quarantine flag, buffered
+    * count, buffered records) and returns the events to emit with the
+    * next state, which each state API stores in its own encoding.
+    * `buffered` is read only when the tx closes or passes the cap, so
+    * a trigger that leaves the tx open never reads its buffer.
+    *
+    * A tx holding more than `maxBuffered` records fails the query
+    * naming it, or with `quarantine` sends every record it holds to the
+    * DLQ and stays QUARANTINED: its later records and its close go to
+    * the DLQ too, so a poison tx never partially merges. The close
+    * still emits the position marker (R3). A throw fails the task, so
+    * the state store commits nothing of the trigger.
     */
-  private def stepTx(maxBuffered: Int, quarantine: Boolean)(
+  private[stream] def stepTx(txId: Long, maxBuffered: Int, quarantine: Boolean)(
+      quarantined: Boolean, count: Long, buffered: => Seq[LogRecord],
+      incoming: Iterator[LogRecord]): (Iterator[ChangeEvent], TxNext) = {
+    val inc = incoming.toSeq.sortBy(_.lsn)
+    val close = inc.find(isClose)
+    // a DLQ event carries its record's own position: the commit_lsn is
+    // unknown while the tx is open
+    def toDlqAll(records: Seq[LogRecord], begin: Long) =
+      (records.iterator.map(toDlq(txId)) ++
+        close.iterator.map(c => positionMarker(txId, c, begin)),
+        if (close.isDefined) TxNext.Cleared else TxNext.Quarantined)
+    if (quarantined) toDlqAll(inc, -1L)
+    else if (count + inc.size > maxBuffered) {
+      if (!quarantine) throw new IllegalStateException(
+        s"transaction $txId exceeded maxBufferedPerTx=$maxBuffered buffered records " +
+          "without closing — poison transaction (raise the cap, repair the log, " +
+          "or configure a DLQ dir to quarantine instead)")
+      val all = (buffered ++ inc).sortBy(_.lsn)
+      toDlqAll(all, all.collectFirst { case r if r.op == "B" => r.lsn }.getOrElse(-1L))
+    } else if (close.isEmpty) (Iterator.empty, TxNext.Open(inc))
+    else {
+      val (ops, begin, closed) = foldTx((buffered ++ inc).sortBy(_.lsn))
+      (emitClosed(txId, ops, begin, closed.get), TxNext.Cleared)
+    }
+  }
+
+  /** [[stepTx]] on flatMapGroupsWithState: the tx's whole buffer is one
+    * `TxBuffer`, rewritten on every trigger that touches it.
+    */
+  private def stepFmgws(maxBuffered: Int, quarantine: Boolean)(
       txId: Long,
       incoming: Iterator[LogRecord],
       state: GroupState[TxBuffer]
   ): Iterator[ChangeEvent] = {
-    // A previously quarantined tx stays quarantined: later triggers'
-    // records (and its eventual COMMIT/ROLLBACK) also route to the DLQ
-    // — never merged — so a poison tx can't partially apply its tail.
-    // The close still emits the position marker (R3) and clears state.
-    if (state.getOption.exists(_.quarantined)) {
-      val inc = incoming.toSeq.sortBy(_.lsn)
-      val close = inc.find(isClose)
-      if (close.isDefined) state.remove()
-      else state.update(TxBuffer(Nil, quarantined = true))
-      return inc.iterator.map(toDlq(txId)) ++
-        close.iterator.map(c => positionMarker(txId, c, -1L))
+    val b = state.getOption.getOrElse(TxBuffer(Nil))
+    val (events, next) = stepTx(txId, maxBuffered, quarantine)(
+      b.quarantined, b.records.size.toLong, b.records, incoming)
+    next match {
+      case TxNext.Cleared => state.remove()
+      case TxNext.Open(added) => state.update(TxBuffer((b.records ++ added).sortBy(_.lsn)))
+      case TxNext.Quarantined => state.update(TxBuffer(Nil, quarantined = true))
     }
-    val buf = scala.collection.mutable.ArrayBuffer[LogRecord]()
-    state.getOption.foreach(b => buf ++= b.records)
-    buf ++= incoming
-    if (buf.size > maxBuffered) {
-      if (!quarantine) {
-        state.remove() // don't leave the oversized buffer behind
-        throw new IllegalStateException(
-          s"transaction $txId exceeded maxBufferedPerTx=$maxBuffered buffered records " +
-            "without closing — poison transaction (raise the cap, repair the log, " +
-            "or configure a DLQ dir to quarantine instead)")
-      }
-      // DLQ: surface every buffered record as an 'x' event (commit_lsn
-      // unknown while the tx is open — each record carries its own
-      // position); the stream routes these to the dead-letter dir. If
-      // the close is already in the buffer the tx is done (emit its
-      // marker); otherwise the quarantined flag persists so the tail
-      // and eventual close are quarantined too.
-      val all = buf.sortBy(_.lsn)
-      val close = all.find(isClose)
-      if (close.isDefined) state.remove()
-      else state.update(TxBuffer(Nil, quarantined = true))
-      val begin = all.collectFirst { case r if r.op == "B" => r.lsn }.getOrElse(-1L)
-      return all.iterator.map(toDlq(txId)) ++
-        close.iterator.map(c => positionMarker(txId, c, begin))
-    }
-    val sorted = buf.sortBy(_.lsn).toSeq
-    val (ops, begin, closed) = foldTx(sorted)
-    closed match {
-      case Some(c) =>
-        state.remove()
-        emitClosed(txId, ops, begin, c)
-      case None =>
-        state.update(TxBuffer(sorted.toSeq))
-        Iterator.empty
-    }
+    events
   }
 
-  /** Raw log stream -> committed ChangeEvent stream (stateful). */
+  /** Raw log stream -> committed ChangeEvent stream (stateful).
+    *
+    * @param pending another checkpoint's exported open-tx state
+    *   ([[StateInspect.pendingTws]]) to seed the state with before any
+    *   input: the TWS → fMGWS strategy migration (the downgrade path;
+    *   [[TwsAssembly.assemble]] takes the forward direction). Open txs
+    *   resume mid-flight and quarantined ones stay quarantined.
+    */
   def assemble(raw: Dataset[LogRecord],
       maxBufferedPerTx: Int = DefaultMaxBufferedPerTx,
-      quarantine: Boolean = false): Dataset[ChangeEvent] = {
+      quarantine: Boolean = false,
+      pending: Option[Dataset[StateInspect.PendingTx]] = None): Dataset[ChangeEvent] = {
     val spark = raw.sparkSession
     import spark.implicits._
-    raw.groupByKey(_.tx_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        stepTx(maxBufferedPerTx, quarantine))
+    val grouped = raw.groupByKey(_.tx_id)
+    val step = stepFmgws(maxBufferedPerTx, quarantine) _
+    pending match {
+      case None =>
+        grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
+      case Some(p) =>
+        grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
+          StateInspect.seed(p))(step)
+    }
   }
-
-  /** [[assemble]] seeded with a transformWithState checkpoint's
-    * exported pending state ([[StateInspect.pendingTws]]) — the
-    * REVERSE strategy migration (TWS → fMGWS, the downgrade path; see
-    * [[TwsAssembly.assembleMigrated]] for the forward direction and
-    * the shared zero-replay contract). The initial-state dataset seeds
-    * each tx's `TxBuffer` before any input; `stepTx` treats it exactly
-    * like carried-over state, so open txs resume mid-flight and
-    * quarantined markers stay sticky.
-    */
-  def assembleMigrated(raw: Dataset[LogRecord],
-      pending: Dataset[StateInspect.PendingTx],
-      maxBufferedPerTx: Int = DefaultMaxBufferedPerTx,
-      quarantine: Boolean = false): Dataset[ChangeEvent] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val init = pending.groupByKey(_.tx_id)
-      .mapValues(p => TxBuffer(p.records.sortBy(_.lsn), p.quarantined))
-    raw.groupByKey(_.tx_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
-        init)(stepTx(maxBufferedPerTx, quarantine))
-  }
-
-  /** Full stateful pipeline on [[assembleMigrated]]: the TWS → fMGWS
-    * strategy switch as one call — same prepare/merge/DLQ wiring,
-    * fresh checkpoint, the TWS checkpoint's pending state seeded in,
-    * the sink's batch-id channel continued past its high-water mark
-    * (same pinning discipline as [[TwsAssembly.streamMigrated]]).
-    */
-  def streamMigratedBack(
-      spark: SparkSession,
-      table: IceLiteTable,
-      cfg: CdcConfig,
-      pending: Dataset[StateInspect.PendingTx],
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery =
-    streamWith(spark, table, cfg, trigger,
-      raw => assembleMigrated(raw, pending, cfg.maxTxRecords,
-        quarantine = cfg.dlqDir.isDefined),
-      batchIdBase = TwsAssembly.migratedBatchIdBase(table, cfg))
 
   /** Full stateful pipeline: tail the log, assemble transactions in the
     * state store, MERGE each emitted micro-batch. Raw records go through
@@ -210,25 +195,31 @@ object StatefulAssembly {
     * incl. sys* exclusion, PK-changing-update normalization, F3
     * masking/hash transforms) — configured privacy controls apply on
     * every ingest path.
+    *
+    * @param pending seeds the assembly ([[assemble]]) on a FRESH
+    *   checkpoint: the TWS → fMGWS strategy switch as one call, the
+    *   sink's batch-id channel continued past its high-water mark.
     */
   def stream(
       spark: SparkSession,
       table: IceLiteTable,
       cfg: CdcConfig,
-      trigger: Trigger = Trigger.AvailableNow()
+      trigger: Trigger = Trigger.AvailableNow(),
+      pending: Option[Dataset[StateInspect.PendingTx]] = None
   ): StreamingQuery =
     streamWith(spark, table, cfg, trigger,
-      raw => assemble(raw, cfg.maxTxRecords, quarantine = cfg.dlqDir.isDefined))
+      raw => assemble(raw, cfg.maxTxRecords, quarantine = cfg.dlqDir.isDefined, pending),
+      migrated = pending.isDefined)
 
   /** The stateful pipeline with a pluggable assembly operator — shared
     * by the flatMapGroupsWithState path (above) and the
     * transformWithState path ([[TwsAssembly.stream]]).
-    */
-  /** @param batchIdBase added to every micro-batch id before it meets
-    *   the sink's idempotency gate — a MIGRATED query (fresh checkpoint,
-    *   batch ids restart at 0) must continue the sink's batch-id channel
-    *   or the gate would swallow its first batches as already applied.
-    *   See [[TwsAssembly.streamMigrated]] for the restart-safe seeding.
+    *
+    * @param migrated the assembly is seeded from another checkpoint's
+    *   pending state, on a fresh checkpoint whose batch ids restart at
+    *   0: every micro-batch id is offset by [[migratedBatchIdBase]]
+    *   before it meets the sink's idempotency gate, or the gate would
+    *   swallow the first batches as already applied.
     */
   private[stream] def streamWith(
       spark: SparkSession,
@@ -236,10 +227,11 @@ object StatefulAssembly {
       cfg: CdcConfig,
       trigger: Trigger,
       assembler: Dataset[LogRecord] => Dataset[ChangeEvent],
-      batchIdBase: Long = 0L
+      migrated: Boolean = false
   ): StreamingQuery = {
     import spark.implicits._
     val env = Driver.Envelope(spark, table, cfg)
+    val batchIdBase = if (migrated) migratedBatchIdBase(table, cfg) else 0L
     val keyCol = table.current.keyCol
     val raw = CdcJob.prepareRaw(
       spark.readStream
@@ -270,6 +262,48 @@ object StatefulAssembly {
         }
       }
       ()
+    }
+  }
+
+  /** The migrated query's batch ids restart at 0 (fresh checkpoint),
+    * but the SINK's idempotency gate tracks the OLD query's high-water
+    * mark — so the new channel must start past it. The base is seeded
+    * from the sink's `lastBatchId + 1` ONCE, then pinned in a file
+    * beside the new checkpoint: on restart the same base is reused even
+    * though the sink has advanced, keeping re-delivered micro-batches
+    * idempotent (the same reason the base can't simply be re-read from
+    * the sink each start). This is the migration analog of carrying
+    * connector offsets across an upgrade.
+    */
+  private def migratedBatchIdBase(table: IceLiteTable, cfg: CdcConfig): Long = {
+    val dir = java.nio.file.Paths.get(cfg.checkpointDir)
+    val f = dir.resolve("graft-batchid-base")
+    if (java.nio.file.Files.exists(f)) {
+      // A torn pin would shift the batch-id channel BELOW the sink's
+      // high-water mark and silently swallow real micro-batches — so the
+      // write below is temp+ATOMIC_MOVE (a half-written file can never be
+      // observed), and an unparseable/non-positive pin fails fast here
+      // rather than being trusted.
+      val raw = java.nio.file.Files.readString(f).trim
+      val base = try raw.toLong catch {
+        case _: NumberFormatException => throw new IllegalStateException(
+          s"corrupt graft-batchid-base '$raw' at $f; delete the pin file " +
+            "only if the migrated checkpoint is also discarded")
+      }
+      // base 0 is LEGITIMATE: a sink with no applied stream batches has
+      // lastBatchId = -1 (snapshot commits keep it there), so the pin
+      // can validly hold lastBatchId + 1 = 0 — rejecting it would
+      // permanently block resume of that migrated query
+      require(base >= 0, s"corrupt graft-batchid-base $base at $f")
+      base
+    } else {
+      val base = table.refresh().summary.lastBatchId + 1L
+      java.nio.file.Files.createDirectories(dir)
+      val tmp = java.nio.file.Files.createTempFile(dir, "graft-batchid-base", ".tmp")
+      java.nio.file.Files.writeString(tmp, base.toString)
+      java.nio.file.Files.move(tmp, f,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      base
     }
   }
 }

@@ -12,10 +12,10 @@ import org.apache.spark.sql.streaming._
 case class TwsTxMeta(count: Long, quarantined: Boolean, firstTs: Long = -1L)
 
 /** Transaction assembly as a Spark 4 `StatefulProcessor`
-  * (`transformWithState`) — the FOURTH assembly strategy, and the one
-  * that scales best for long-running transactions: open-tx records land
-  * in a `ListState` whose appends are INCREMENTAL in the RocksDB state
-  * store (merge-style append), so a trigger that adds k records to a
+  * (`transformWithState`) — the stateful strategy that scales best for
+  * long-running transactions: open-tx records land in a `ListState`
+  * whose appends are INCREMENTAL in the RocksDB state store
+  * (merge-style append), so a trigger that adds k records to a
   * transaction already holding N does O(k) state writes — the
   * flatMapGroupsWithState path rewrites the whole N-record buffer every
   * trigger, O(N) per touch, O(N²) over a transaction's lifetime. At
@@ -24,21 +24,24 @@ case class TwsTxMeta(count: Long, quarantined: Boolean, firstTs: Long = -1L)
   * I/O.
   *
   * Semantics are IDENTICAL to [[StatefulAssembly]] by construction: the
-  * per-tx state machine (savepoint discard, rollback, empty-commit
-  * marker, DLQ quarantine with sticky flag) is the shared
-  * `StatefulAssembly.foldTx`/`emitClosed`/`toDlq` code, and
-  * TwsAssemblySpec pins event-for-event equality on a shared log.
+  * per-tx decision (savepoint discard, rollback, empty-commit marker,
+  * DLQ quarantine with sticky flag) is the one `StatefulAssembly.stepTx`,
+  * and TwsAssemblySpec pins event-for-event equality on a shared log.
   * `transformWithState` requires the RocksDB state store provider
   * ([[StateStores.useRocksDb]]); checkpoints are not interchangeable
   * with the fMGWS path's.
   */
 object TwsAssembly {
 
+  /** [[StatefulAssembly.stepTx]] on transformWithState: the records in
+    * the `buf` ListState (appended, never rewritten), the count, sticky
+    * flag and retention anchor in the `meta` ValueState.
+    */
   private class TxProcessor(maxBuffered: Int, quarantine: Boolean,
-      retentionMs: Option[Long] = None)
+      retentionMs: Option[Long])
       extends StatefulProcessorWithInitialState[
         Long, LogRecord, ChangeEvent, TxBuffer] {
-    import StatefulAssembly.{foldTx, emitClosed, isClose, toDlq, positionMarker}
+    import StatefulAssembly.toDlq
 
     @transient private var buf: ListState[LogRecord] = _
     @transient private var meta: ValueState[TwsTxMeta] = _
@@ -58,61 +61,33 @@ object TwsAssembly {
 
     override def handleInputRows(txId: Long, rows: Iterator[LogRecord],
         timerValues: TimerValues): Iterator[ChangeEvent] = {
-      val inc = rows.toSeq.sortBy(_.lsn)
       val m = if (meta.exists()) meta.get() else TwsTxMeta(0L, quarantined = false)
-
-      // sticky quarantine: the tail and eventual close of a poisoned or
-      // retention-abandoned tx route to the DLQ too (the close still
-      // emits the marker, R3)
-      if (m.quarantined) {
-        val close = inc.find(isClose)
-        if (close.isDefined) clearAll()
-        else meta.update(TwsTxMeta(0L, quarantined = true))
-        return inc.iterator.map(toDlq(txId)) ++
-          close.iterator.map(c => positionMarker(txId, c, -1L))
-      }
-
-      if (m.count + inc.size > maxBuffered) {
-        if (!quarantine) {
-          disarmTimer(m)
-          clearAll() // don't leave the oversized buffer behind
-          throw new IllegalStateException(
-            s"transaction $txId exceeded maxBufferedPerTx=$maxBuffered buffered records " +
-              "without closing — poison transaction (raise the cap, repair the log, " +
-              "or configure a DLQ dir to quarantine instead)")
-        }
-        val all = (buf.get().toSeq ++ inc).sortBy(_.lsn)
-        val close = all.find(isClose)
-        if (close.isDefined) { disarmTimer(m); clearAll() }
-        else { buf.clear(); meta.update(TwsTxMeta(0L, quarantined = true, m.firstTs)) }
-        val begin = all.collectFirst { case r if r.op == "B" => r.lsn }.getOrElse(-1L)
-        return all.iterator.map(toDlq(txId)) ++
-          close.iterator.map(c => positionMarker(txId, c, begin))
-      }
-
-      inc.find(isClose) match {
-        case Some(_) =>
-          // closed this trigger: replay the whole sorted buffer once
-          val sorted = (buf.get().toSeq ++ inc).sortBy(_.lsn)
-          val (ops, begin, closed) = foldTx(sorted)
+      val (events, next) = StatefulAssembly.stepTx(txId, maxBuffered, quarantine)(
+        m.quarantined, m.count, buf.get().toSeq, rows)
+      next match {
+        case TxNext.Cleared =>
           disarmTimer(m)
           clearAll()
-          emitClosed(txId, ops, begin, closed.get)
-        case None =>
+        case TxNext.Quarantined =>
+          // the armed retention timer (if any) stays; its expiry finds
+          // the tx already quarantined
+          buf.clear()
+          meta.update(m.copy(count = 0L, quarantined = true))
+        case TxNext.Open(added) =>
           // still open: O(k) incremental append — the scale win
-          buf.appendList(inc.toArray)
+          buf.appendList(added.toArray)
           val firstTs =
             if (m.firstTs >= 0L) m.firstTs
             else {
-              val t = inc.head.ts_ms
+              val t = added.head.ts_ms
               // arm the retention watchdog on first contact: abandon the
               // tx if the watermark passes firstTs + retention unclosed
               retentionMs.foreach(r => getHandle.registerTimer(t + r))
               t
             }
-          meta.update(TwsTxMeta(m.count + inc.size, quarantined = false, firstTs))
-          Iterator.empty
+          meta.update(TwsTxMeta(m.count + added.size, quarantined = false, firstTs))
       }
+      events
     }
 
     /** Seed this key's state from ANOTHER assembly strategy's exported
@@ -165,177 +140,90 @@ object TwsAssembly {
 
   /** Raw log stream -> committed ChangeEvent stream via
     * transformWithState (requires the RocksDB provider on the session).
+    *
+    * @param pending another checkpoint's exported open-tx state to seed
+    *   the state with — ZERO-REPLAY CHECKPOINT MIGRATION. It is the
+    *   (tx_id, buffer) set read from a [[StatefulAssembly]]
+    *   (flatMapGroupsWithState) checkpoint via Spark's public
+    *   state-store reader ([[StateInspect.pendingFmgws]]); the migrated
+    *   query starts on a FRESH checkpoint, resumes every open
+    *   transaction mid-flight and keeps quarantined ones quarantined.
+    *   The operational story is the reference's connector-upgrade path
+    *   (offsets + schema history carry over, the log is NOT re-read) —
+    *   here the state itself carries over, so not even the open-tx tail
+    *   is re-read.
+    * @param retentionMs an OPEN-TRANSACTION RETENTION WATCHDOG on
+    *   event-time timers: a transaction whose first record is older than
+    *   `retentionMs` against the source-time watermark (delay 0) and
+    *   that still has no COMMIT/ROLLBACK is ABANDONED — its buffered
+    *   records surface to the DLQ ('x' events) and the sticky quarantine
+    *   flag routes any later tail or close there too, so an abandoned tx
+    *   can never partially merge. This is the generalized Debezium
+    *   abandonment contract (the Oracle sibling connector's
+    *   `log.mining.transaction.retention.ms`; the Informix reference
+    *   instead bounds open-tx exposure via the restart position —
+    *   `InformixStreamingChangeEventSource.java:139-152` — which the
+    *   engine also implements as T5). Without the watchdog an unclosed
+    *   tx pins state forever; with it, state occupancy is bounded by
+    *   retention × ingest rate regardless of upstream pathology.
+    *
+    *   Late-filter interaction: the watermark that drives the timers
+    *   also drops input records OLDER than itself before the processor
+    *   (standard Spark semantics). An abandoned tx's straggler whose
+    *   event time is stale therefore never reaches the DLQ — the DLQ
+    *   captures the buffer at abandonment; the sticky quarantine catches
+    *   any tail that passes the late filter (e.g. an eventual COMMIT,
+    *   whose event time is the commit time and hence fresh). The
+    *   quarantined marker itself is a few dozen bytes per abandoned tx
+    *   and is cleared when such a close arrives.
     */
   def assemble(raw: Dataset[LogRecord],
       maxBufferedPerTx: Int = StatefulAssembly.DefaultMaxBufferedPerTx,
-      quarantine: Boolean = false): Dataset[ChangeEvent] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    raw.groupByKey(_.tx_id)
-      .transformWithState(new TxProcessor(maxBufferedPerTx, quarantine),
-        TimeMode.None(), OutputMode.Append())
-  }
-
-  /** [[assemble]] plus an OPEN-TRANSACTION RETENTION WATCHDOG on
-    * event-time timers: a transaction whose first record is older than
-    * `retentionMs` against the source-time watermark and that still has
-    * no COMMIT/ROLLBACK is ABANDONED — its buffered records surface to
-    * the DLQ ('x' events) and the sticky quarantine flag routes any
-    * later tail or close there too, so an abandoned tx can never
-    * partially merge. This is the generalized Debezium abandonment
-    * contract (the Oracle sibling connector's
-    * `log.mining.transaction.retention.ms`; the Informix reference
-    * instead bounds open-tx exposure via the restart position —
-    * `InformixStreamingChangeEventSource.java:139-152` — which the
-    * engine also implements as T5). Without the watchdog an unclosed tx
-    * pins state forever; with it, state occupancy is bounded by
-    * retention × ingest rate regardless of upstream pathology.
-    *
-    * Late-filter interaction: the watermark that drives the timers also
-    * drops input records OLDER than itself before the processor
-    * (standard Spark semantics). An abandoned tx's straggler whose
-    * event time is stale therefore never reaches the DLQ — the DLQ
-    * captures the buffer at abandonment; the sticky quarantine catches
-    * any tail that passes the late filter (e.g. an eventual COMMIT,
-    * whose event time is the commit time and hence fresh). The
-    * quarantined marker itself is a few dozen bytes per abandoned tx
-    * and is cleared when such a close arrives.
-    */
-  def assembleWithRetention(raw: Dataset[LogRecord], retentionMs: Long,
-      watermarkDelayMs: Long = 0L,
-      maxBufferedPerTx: Int = StatefulAssembly.DefaultMaxBufferedPerTx,
-      quarantine: Boolean = true): Dataset[ChangeEvent] = {
+      quarantine: Boolean = false,
+      pending: Option[Dataset[StateInspect.PendingTx]] = None,
+      retentionMs: Option[Long] = None): Dataset[ChangeEvent] = {
     val spark = raw.sparkSession
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    raw.toDF()
-      .withColumn("event_time", timestamp_millis(col("ts_ms")))
-      .withWatermark("event_time", s"$watermarkDelayMs milliseconds")
-      .as[LogRecord]
-      .groupByKey(_.tx_id)
-      .transformWithState(
-        new TxProcessor(maxBufferedPerTx, quarantine, Some(retentionMs)),
-        TimeMode.EventTime(), OutputMode.Append())
+    val (input, timeMode) = retentionMs match {
+      case None => (raw, TimeMode.None())
+      case Some(_) =>
+        (raw.withColumn("event_time", timestamp_millis(col("ts_ms")))
+          .withWatermark("event_time", "0 milliseconds")
+          .as[LogRecord], TimeMode.EventTime())
+    }
+    val grouped = input.groupByKey(_.tx_id)
+    val processor = new TxProcessor(maxBufferedPerTx, quarantine, retentionMs)
+    pending match {
+      case None => grouped.transformWithState(processor, timeMode, OutputMode.Append())
+      case Some(p) => grouped.transformWithState(processor, timeMode, OutputMode.Append(),
+        StateInspect.seed(p))
+    }
   }
 
   /** Full stateful pipeline (snapshot table + MERGE sink) on the
     * transformWithState assembly — the same prepare/merge/DLQ wiring as
-    * [[StatefulAssembly.stream]].
+    * [[StatefulAssembly.stream]]. `pending` seeds the assembly on a
+    * fresh checkpoint (the strategy switch as one call, the sink's
+    * batch-id channel continued); `retentionMs` arms the retention
+    * watchdog, whose abandoned transactions surface in `cfg.dlqDir`
+    * (required: without a DLQ dir the 'x' events would reach the merge,
+    * which must never happen). See [[assemble]] for both.
     */
   def stream(
       spark: SparkSession,
       table: IceLiteTable,
       cfg: CdcConfig,
-      trigger: Trigger = Trigger.AvailableNow()
+      trigger: Trigger = Trigger.AvailableNow(),
+      pending: Option[Dataset[StateInspect.PendingTx]] = None,
+      retentionMs: Option[Long] = None
   ): StreamingQuery = {
+    require(retentionMs.isEmpty || cfg.dlqDir.isDefined,
+      "a retention horizon needs cfg.dlqDir: abandoned-tx records route to the DLQ")
     StateStores.useRocksDb(spark)
     StatefulAssembly.streamWith(spark, table, cfg, trigger,
-      raw => assemble(raw, cfg.maxTxRecords, quarantine = cfg.dlqDir.isDefined))
-  }
-
-  /** [[assemble]] seeded with ANOTHER strategy's exported open-tx
-    * state — ZERO-REPLAY CHECKPOINT MIGRATION. `pending` is the
-    * (tx_id, buffer) set read from a [[StatefulAssembly]]
-    * (flatMapGroupsWithState) checkpoint via Spark's public
-    * state-store reader ([[StateInspect.pendingFmgws]]); the migrated
-    * query starts on a FRESH checkpoint, resumes every open
-    * transaction mid-flight and keeps quarantined ones quarantined.
-    * The operational story is the reference's connector-upgrade path
-    * (offsets + schema history carry over, the log is NOT re-read) —
-    * here the state itself carries over, so not even the open-tx tail
-    * is re-read.
-    */
-  def assembleMigrated(raw: Dataset[LogRecord],
-      pending: Dataset[StateInspect.PendingTx],
-      maxBufferedPerTx: Int = StatefulAssembly.DefaultMaxBufferedPerTx,
-      quarantine: Boolean = false): Dataset[ChangeEvent] = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val init = pending.groupByKey(_.tx_id)
-      .mapValues(p => TxBuffer(p.records, p.quarantined))
-    raw.groupByKey(_.tx_id)
-      .transformWithState(
-        new TxProcessor(maxBufferedPerTx, quarantine),
-        TimeMode.None(), OutputMode.Append(), init)
-  }
-
-  /** Full stateful pipeline on [[assembleMigrated]]: the strategy
-    * switch as one call — same prepare/merge/DLQ wiring, fresh
-    * checkpoint, old strategy's pending state seeded in.
-    */
-  def streamMigrated(
-      spark: SparkSession,
-      table: IceLiteTable,
-      cfg: CdcConfig,
-      pending: Dataset[StateInspect.PendingTx],
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    StateStores.useRocksDb(spark)
-    StatefulAssembly.streamWith(spark, table, cfg, trigger,
-      raw => assembleMigrated(raw, pending, cfg.maxTxRecords,
-        quarantine = cfg.dlqDir.isDefined),
-      batchIdBase = migratedBatchIdBase(table, cfg))
-  }
-
-  /** The migrated query's batch ids restart at 0 (fresh checkpoint),
-    * but the SINK's idempotency gate tracks the OLD query's high-water
-    * mark — so the new channel must start past it. The base is seeded
-    * from the sink's `lastBatchId + 1` ONCE, then pinned in a file
-    * beside the new checkpoint: on restart the same base is reused even
-    * though the sink has advanced, keeping re-delivered micro-batches
-    * idempotent (the same reason the base can't simply be re-read from
-    * the sink each start). This is the migration analog of carrying
-    * connector offsets across an upgrade.
-    */
-  private[stream] def migratedBatchIdBase(table: IceLiteTable, cfg: CdcConfig): Long = {
-    val dir = java.nio.file.Paths.get(cfg.checkpointDir)
-    val f = dir.resolve("graft-batchid-base")
-    if (java.nio.file.Files.exists(f)) {
-      // A torn pin would shift the batch-id channel BELOW the sink's
-      // high-water mark and silently swallow real micro-batches — so the
-      // write below is temp+ATOMIC_MOVE (a half-written file can never be
-      // observed), and an unparseable/non-positive pin fails fast here
-      // rather than being trusted.
-      val raw = java.nio.file.Files.readString(f).trim
-      val base = try raw.toLong catch {
-        case _: NumberFormatException => throw new IllegalStateException(
-          s"corrupt graft-batchid-base '$raw' at $f; delete the pin file " +
-            "only if the migrated checkpoint is also discarded")
-      }
-      // base 0 is LEGITIMATE: a sink with no applied stream batches has
-      // lastBatchId = -1 (snapshot commits keep it there), so the pin
-      // can validly hold lastBatchId + 1 = 0 — rejecting it would
-      // permanently block resume of that migrated query
-      require(base >= 0, s"corrupt graft-batchid-base $base at $f")
-      base
-    } else {
-      val base = table.refresh().summary.lastBatchId + 1L
-      java.nio.file.Files.createDirectories(dir)
-      val tmp = java.nio.file.Files.createTempFile(dir, "graft-batchid-base", ".tmp")
-      java.nio.file.Files.writeString(tmp, base.toString)
-      java.nio.file.Files.move(tmp, f,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      base
-    }
-  }
-
-  /** [[stream]] with the open-transaction retention watchdog
-    * ([[assembleWithRetention]]) — abandoned transactions surface in
-    * `cfg.dlqDir` (required: without a DLQ dir the 'x' events would
-    * reach the merge, which must never happen).
-    */
-  def streamRetention(
-      spark: SparkSession,
-      table: IceLiteTable,
-      cfg: CdcConfig,
-      retentionMs: Long,
-      trigger: Trigger = Trigger.AvailableNow()
-  ): StreamingQuery = {
-    require(cfg.dlqDir.isDefined,
-      "streamRetention needs cfg.dlqDir: abandoned-tx records route to the DLQ")
-    StateStores.useRocksDb(spark)
-    StatefulAssembly.streamWith(spark, table, cfg, trigger,
-      raw => assembleWithRetention(raw, retentionMs,
-        maxBufferedPerTx = cfg.maxTxRecords, quarantine = true))
+      raw => assemble(raw, cfg.maxTxRecords, quarantine = cfg.dlqDir.isDefined,
+        pending, retentionMs),
+      migrated = pending.isDefined)
   }
 }

@@ -361,7 +361,6 @@ object WireSource {
     * source accepts `dir/batch-*`; this mirrors it for the guard and
     * the deterministic runner's grouping root). */
   private def listDump(logDir: String): (String, Seq[String]) = {
-    import scala.jdk.CollectionConverters._
     if (!logDir.contains("*")) (logDir, Fs.listParquet(logDir).sorted)
     else {
       val p = java.nio.file.Paths.get(logDir)

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
-import graft.icelite.IceLite
 import graft.model.LogRecord
 import graft.stream._
 import graft.util.Fs

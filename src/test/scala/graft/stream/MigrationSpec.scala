@@ -56,7 +56,7 @@ class MigrationSpec extends SparkSpec {
 
       val cdc2 = cdc1.copy(logDir = s"$base/log2", checkpointDir = s"$base/ckpt2")
       stage(second, cdc2.logDir)
-      TwsAssembly.streamMigrated(s, table, cdc2, pending).awaitTermination()
+      TwsAssembly.stream(s, table, cdc2, pending = Some(pending)).awaitTermination()
 
       val initial = (0L until cfg.nDocs.toLong).map { k =>
         val t = ChangeLogGen.tokensFor(cfg.seed, k, 0L, cfg.maxTokens)
@@ -72,7 +72,7 @@ class MigrationSpec extends SparkSpec {
 
       // idempotent re-drain: the pinned batch-id base keeps the sink's
       // gate consistent — nothing re-applies, nothing is lost
-      TwsAssembly.streamMigrated(s, table, cdc2, pending).awaitTermination()
+      TwsAssembly.stream(s, table, cdc2, pending = Some(pending)).awaitTermination()
       assert(readState() === got)
     } finally Fs.deleteRecursively(base)
   }
@@ -107,7 +107,7 @@ class MigrationSpec extends SparkSpec {
 
       val cdc2 = cdc1.copy(logDir = s"$base/log2", checkpointDir = s"$base/ckpt2")
       stage(second, cdc2.logDir)
-      StatefulAssembly.streamMigratedBack(s, table, cdc2, pending)
+      StatefulAssembly.stream(s, table, cdc2, pending = Some(pending))
         .awaitTermination()
 
       val initial = (0L until cfg.nDocs.toLong).map { k =>
@@ -121,7 +121,7 @@ class MigrationSpec extends SparkSpec {
       want.foreach { case (k, w) => assert(got(k) === w.tokens, s"tokens mismatch $k") }
 
       // idempotent re-drain on the pinned batch-id base
-      StatefulAssembly.streamMigratedBack(s, table, cdc2, pending)
+      StatefulAssembly.stream(s, table, cdc2, pending = Some(pending))
         .awaitTermination()
       assert(table.read().as[TokenDoc].collect()
         .map(d => d.doc_id -> d.tokens).toMap === got)
@@ -165,7 +165,7 @@ class MigrationSpec extends SparkSpec {
       val cdc2 = cdc1.copy(logDir = s"$base/log2",
         checkpointDir = s"$base/ckpt2", dlqDir = Some(s"$base/dlq2"))
       stage(second, cdc2.logDir)
-      TwsAssembly.streamMigrated(s, table, cdc2, pending).awaitTermination()
+      TwsAssembly.stream(s, table, cdc2, pending = Some(pending)).awaitTermination()
 
       val docs = table.read().as[TokenDoc].collect().map(_.doc_id).toSet
       assert(docs === Set("seed0", "alive", "late"),
@@ -243,7 +243,7 @@ class MigrationSpec extends SparkSpec {
       assert(pending.count() > 0, "split must leave open txs or the test is vacuous")
       val cdc2 = cdc1.copy(logDir = s"$base/log2", checkpointDir = s"$base/ckpt2")
       stage(second, cdc2.logDir)
-      TwsAssembly.streamMigrated(s, table, cdc2, pending).awaitTermination()
+      TwsAssembly.stream(s, table, cdc2, pending = Some(pending)).awaitTermination()
 
       val initial = (0L until cfg.nDocs.toLong).map { k =>
         val t = ChangeLogGen.tokensFor(cfg.seed, k, 0L, cfg.maxTokens)
@@ -257,7 +257,7 @@ class MigrationSpec extends SparkSpec {
         s"extra=${(got.keySet -- want.keySet).take(5)} missing=${(want.keySet -- got.keySet).take(5)}")
       want.foreach { case (k, w) => assert(got(k) === w.tokens, s"tokens mismatch $k") }
       // exactly-once across the upgrade: re-drain is a no-op
-      TwsAssembly.streamMigrated(s, table, cdc2, pending).awaitTermination()
+      TwsAssembly.stream(s, table, cdc2, pending = Some(pending)).awaitTermination()
       assert(readState() === got)
     } finally Fs.deleteRecursively(base)
   }

@@ -129,10 +129,10 @@ class TwsAssemblySpec extends SparkSpec {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(logDir))
       val fresh = StateStores.useRocksDb(spark.newSession())
       def drain(): Unit =
-        TwsAssembly.assembleWithRetention(
+        TwsAssembly.assemble(
             fresh.readStream.schema(LogRecord.schema).parquet(logDir)
               .as[LogRecord](org.apache.spark.sql.Encoders.product[LogRecord]),
-            retentionMs = 5000L)
+            quarantine = true, retentionMs = Some(5000L))
           .writeStream.format("parquet")
           .option("path", s"$base/sink").option("checkpointLocation", s"$base/ckpt")
           .outputMode("append").trigger(Trigger.AvailableNow()).start()
