@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops._
+import graft.stream.StagedStream.{materialize, materialized}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1530,8 +1531,7 @@ object SparkEntry {
   private def schemaEvolveReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-evoq")
-    try {
+    materialized("graft-evoq") { base =>
       val cfg = EngineReplayCfg
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
       ChangeLogGen.writeLog(spark, cfg, cdc.logDir, numFiles = 2)
@@ -1547,14 +1547,11 @@ object SparkEntry {
         .withColumn("after", col("after").withField("lang",
           substring(md5(col("after").getField("doc_id")), 1, 2)))
       MergeApply.applyBatch(table, evolved, 1L)
-      val out = table.read()
+      table.read()
         .select(col("doc_id"), col("n_tok"), col("source"), col("lang"),
-          conv(substring(md5(array_join(transform(col("tokens"), _.cast("string")), ",")),
-            1, 14), 16, 10).cast("long").as("tok_fp"))
+          tokFpCol(col("tokens")).as("tok_fp"))
         .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** Portable fingerprint of a token array (the north-star per-row
@@ -1562,6 +1559,12 @@ object SparkEntry {
   private def tokFpCol(tokens: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(array_join(transform(tokens, _.cast("string")), ",")),
       1, 14), 16, 10).cast("long")
+
+  /** The replay cells' final state: scalar columns plus the token
+    * fingerprint, ordered by key ([[replayStateSql]] is its oracle). */
+  private def replayState(read: DataFrame): DataFrame =
+    read.select(col("doc_id"), col("n_tok"), col("source"),
+      tokFpCol(col("tokens")).as("tok_fp")).orderBy(col("doc_id"))
 
   /** N1 end-to-end: the REAL engine's snapshot-mode dispatch,
     * value-checked by the driver. The same deterministic log replays
@@ -1577,8 +1580,7 @@ object SparkEntry {
   private def snapshotModesReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-n1modes")
-    try {
+    materialized("graft-n1modes") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/log", numFiles = 2)
       val src = ChangeLogGen.initialTable(spark, cfg).toDF()
@@ -1591,12 +1593,10 @@ object SparkEntry {
         table.read().select(lit(tag).as("mode"), col("doc_id"), col("n_tok"),
           col("source"), tokFpCol(col("tokens")).as("tok_fp"))
       }
-      val out = finalState(SnapshotMode.NoData, doStream = true, "no_data")
+      finalState(SnapshotMode.NoData, doStream = true, "no_data")
         .unionByName(finalState(SnapshotMode.InitialOnly, doStream = false, "initial_only"))
         .orderBy(col("mode"), col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** Engine -> BINARY wire -> engine: the producer engine emits its
@@ -1611,8 +1611,7 @@ object SparkEntry {
   private def binWireReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-wbq")
-    try {
+    materialized("graft-wbq") { base =>
       val cfg = EngineReplayCfg
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8,
         emitDir = Some(s"$base/emit"), emitWireBinary = true)
@@ -1625,13 +1624,8 @@ object SparkEntry {
       val tableW = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
         cdcWire, ChangeLogGen.snapshotLsn)
       WireSource.runIncremental(spark, tableW, cdcWire, filesPerBatch = 2)
-      val out = tableW.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(tableW.read())
+    }
   }
 
   /** Multi-table routing end-to-end: the reference tails ONE logical
@@ -1650,8 +1644,7 @@ object SparkEntry {
   private def multiTableReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-mtq")
-    try {
+    materialized("graft-mtq") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/log", numFiles = 2)
       def routeOf(key: org.apache.spark.sql.Column) =
@@ -1674,13 +1667,11 @@ object SparkEntry {
       files.zipWithIndex.foreach { case (f, i) =>
         MultiTable.processBatch(sinks, remap(spark.read.parquet(f)), i.toLong)
       }
-      val out = sinks.toSeq.sortBy(_._1).map { case (name, tbl) =>
+      sinks.toSeq.sortBy(_._1).map { case (name, tbl) =>
         tbl.read().select(lit(name).as("tbl"), col("doc_id"), col("n_tok"),
           col("source"), tokFpCol(col("tokens")).as("tok_fp"))
       }.reduce(_ unionByName _).orderBy(col("tbl"), col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** The REAL Structured Streaming ingest path end-to-end — the north
@@ -1700,8 +1691,7 @@ object SparkEntry {
   private def ssReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-ssreplay")
-    try {
+    materialized("graft-ssreplay") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/staged", numFiles = 2)
       val staged = graft.util.Fs.listParquet(s"$base/staged").sorted
@@ -1720,13 +1710,8 @@ object SparkEntry {
       CdcJob.stream(spark, table, cdc).awaitTermination()
       reveal(rest)
       CdcJob.stream(spark, table, cdc).awaitTermination()
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** E9 fixture: a small dedicated log staged ONE FILE PER TRANSACTION,
@@ -1767,8 +1752,7 @@ object SparkEntry {
     import graft.changelog.ChangeLogGen
     import graft.stream._
     val spark = harnessSession(spark0)
-    val base = graft.util.Fs.tempDir("graft-e9")
-    try {
+    materialized("graft-e9") { base =>
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",
         numBuckets = 8, maxFilesPerTrigger = E9FilesPerTrigger)
       ChangeLogGen.stageBatchFiles(spark,
@@ -1784,15 +1768,13 @@ object SparkEntry {
         ChangeLogGen.initialTable(spark, E9Cfg).toDF(), cdc,
         ChangeLogGen.snapshotLsn)
       CdcJob.stream(spark, table, cdc).awaitTermination()
-      val out = table.readLineage()
+      table.readLineage()
         .groupBy(col("batch_id").as("batch_no"))
         .agg(sum(col("event_count")).as("n_events"),
           min(col("lsn_lo")).as("lsn_lo"),
           max(col("lsn_hi")).as("lsn_hi"))
         .orderBy(col("batch_no"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** [[ssReplay]] on the transformWithState assembly: same staged log,
@@ -1805,8 +1787,7 @@ object SparkEntry {
     import graft.changelog.ChangeLogGen
     import graft.stream._
     val spark = harnessSession(spark0)
-    val base = graft.util.Fs.tempDir("graft-twsreplay")
-    try {
+    materialized("graft-twsreplay") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/staged", numFiles = 2)
       val staged = graft.util.Fs.listParquet(s"$base/staged").sorted
@@ -1825,13 +1806,8 @@ object SparkEntry {
       TwsAssembly.stream(spark, table, cdc).awaitTermination()
       reveal(rest)
       TwsAssembly.stream(spark, table, cdc).awaitTermination()
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** The open-transaction RETENTION WATCHDOG driven end to end
@@ -1851,8 +1827,7 @@ object SparkEntry {
     import graft.changelog.ChangeLogGen
     import graft.stream._
     val spark = harnessSession(spark0)
-    val base = graft.util.Fs.tempDir("graft-retabandon")
-    try {
+    materialized("graft-retabandon") { base =>
       import spark.implicits._
       val cfg = EngineReplayCfg
       val orphan = RetentionOrphan
@@ -1918,13 +1893,8 @@ object SparkEntry {
           col("op") === StatefulAssembly.DlqOp).count()
       require(dlqOrphan == recsAll.count(_.tx_id == orphan.txId),
         s"expected the whole orphan tx in the DLQ, got $dlqOrphan records")
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** Record-level split of the deterministic log for the migration
@@ -1967,8 +1937,7 @@ object SparkEntry {
           import graft.changelog.ChangeLogGen
           import graft.stream._
           val spark = harnessSession(spark0)
-          val base = graft.util.Fs.tempDir("graft-migrate")
-          try {
+          graft.util.Fs.withTempDir("graft-migrate") { base =>
             val cfg = EngineReplayCfg
             val (first, second) = MigrateSplit
             val cdc1 = CdcConfig(s"$base/log1", s"$base/table", s"$base/ckpt1",
@@ -1981,24 +1950,19 @@ object SparkEntry {
 
             val pending = StateInspect
               .pendingFmgws(spark, cdc1.checkpointDir).cache()
-            val insp = StateInspect.pendingSummary(pending)
-              .orderBy(col("tx_id"))
-            insp.cache(); insp.count()
+            val insp = materialize(StateInspect.pendingSummary(pending)
+              .orderBy(col("tx_id")))
 
             val cdc2 = cdc1.copy(logDir = s"$base/log2",
               checkpointDir = s"$base/ckpt2")
             ChangeLogGen.stageBatchFile(spark, second, cdc2.logDir)
             TwsAssembly.stream(spark, table, cdc2, pending = Some(pending))
               .awaitTermination()
-            val fin = table.read()
-              .select(col("doc_id"), col("n_tok"), col("source"),
-                tokFpCol(col("tokens")).as("tok_fp"))
-              .orderBy(col("doc_id"))
-            fin.cache(); fin.count() // materialize before temp dir cleanup
+            val fin = materialize(replayState(table.read()))
             pending.unpersist()
             migrateMemo = Some((spark0, insp, fin))
             (insp, fin)
-          } finally graft.util.Fs.deleteRecursively(base)
+          }
       }
     }
 
@@ -2050,8 +2014,6 @@ object SparkEntry {
     ).flatten
   }
 
-  @transient private var migrateBackMemo: Option[(SparkSession, DataFrame)] = None
-
   /** REVERSE checkpoint migration driven end to end (the downgrade
     * path): phase 1 assembles the first half of the log with the
     * transformWithState strategy (RocksDB); its named state variables
@@ -2062,41 +2024,31 @@ object SparkEntry {
     * Same full-replay oracle as the forward direction — the strategy
     * switch must be lossless both ways.
     */
-  private def migrateBackReplay(spark0: SparkSession): DataFrame = synchronized {
-    migrateBackMemo match {
-      case Some((s, df)) if s eq spark0 => df
-      case _ =>
-        import graft.changelog.ChangeLogGen
-        import graft.stream._
-        val spark = harnessSession(spark0)
-        val base = graft.util.Fs.tempDir("graft-migback")
-        try {
-          val cfg = EngineReplayCfg
-          val (first, second) = MigrateSplit
-          val cdc1 = CdcConfig(s"$base/log1", s"$base/table", s"$base/ckpt1",
-            numBuckets = 8)
-          ChangeLogGen.stageBatchFile(spark, first, cdc1.logDir)
-          val table = CdcJob.snapshot(spark,
-            ChangeLogGen.initialTable(spark, cfg).toDF(), cdc1,
-            ChangeLogGen.snapshotLsn)
-          TwsAssembly.stream(spark, table, cdc1).awaitTermination()
-          val pending = StateInspect
-            .pendingTws(spark, cdc1.checkpointDir).cache()
-          pending.count()
-          val cdc2 = cdc1.copy(logDir = s"$base/log2",
-            checkpointDir = s"$base/ckpt2")
-          ChangeLogGen.stageBatchFile(spark, second, cdc2.logDir)
-          StatefulAssembly.stream(spark, table, cdc2, pending = Some(pending))
-            .awaitTermination()
-          val fin = table.read()
-            .select(col("doc_id"), col("n_tok"), col("source"),
-              tokFpCol(col("tokens")).as("tok_fp"))
-            .orderBy(col("doc_id"))
-          fin.cache(); fin.count() // materialize before temp dir cleanup
-          pending.unpersist()
-          migrateBackMemo = Some((spark0, fin))
-          fin
-        } finally graft.util.Fs.deleteRecursively(base)
+  private def migrateBackReplay(spark0: SparkSession): DataFrame = {
+    import graft.changelog.ChangeLogGen
+    import graft.stream._
+    val spark = harnessSession(spark0)
+    graft.util.Fs.withTempDir("graft-migback") { base =>
+      val cfg = EngineReplayCfg
+      val (first, second) = MigrateSplit
+      val cdc1 = CdcConfig(s"$base/log1", s"$base/table", s"$base/ckpt1",
+        numBuckets = 8)
+      ChangeLogGen.stageBatchFile(spark, first, cdc1.logDir)
+      val table = CdcJob.snapshot(spark,
+        ChangeLogGen.initialTable(spark, cfg).toDF(), cdc1,
+        ChangeLogGen.snapshotLsn)
+      TwsAssembly.stream(spark, table, cdc1).awaitTermination()
+      val pending = StateInspect
+        .pendingTws(spark, cdc1.checkpointDir).cache()
+      pending.count()
+      val cdc2 = cdc1.copy(logDir = s"$base/log2",
+        checkpointDir = s"$base/ckpt2")
+      ChangeLogGen.stageBatchFile(spark, second, cdc2.logDir)
+      StatefulAssembly.stream(spark, table, cdc2, pending = Some(pending))
+        .awaitTermination()
+      val fin = materialize(replayState(table.read()))
+      pending.unpersist()
+      fin
     }
   }
 
@@ -2171,8 +2123,7 @@ object SparkEntry {
           import graft.changelog.ChangeLogGen
           import graft.stream._
           val spark = harnessSession(spark0)
-          val base = graft.util.Fs.tempDir("graft-scd2inc")
-          try {
+          graft.util.Fs.withTempDir("graft-scd2inc") { base =>
             val cfg = Scd2IncCfg
             val cdc = CdcConfig(s"$base/log", s"$base/src", s"$base/ckptSrc",
               numBuckets = 8)
@@ -2192,15 +2143,14 @@ object SparkEntry {
             val (rep, hist) = Scd2Maintain.maintain(spark, src.root,
               s"$base/rep", s"$base/hist", s"$base/ckptScd2",
               maxVersionsPerTrigger = 16, bootstrapAtVersion = Some(1L))
-            val out = Scd2Maintain.view(rep, hist)
+            val out = materialize(Scd2Maintain.view(rep, hist)
               .select(col("doc_id"),
                 col("valid_from_commit"), col("valid_from_change"),
                 col("valid_to_commit"), col("valid_to_change"),
                 col("is_current"), col("n_tok"),
                 tokFpCol(col("tokens")).as("tok_fp"))
               .orderBy(col("doc_id"), col("valid_from_commit"),
-                col("valid_from_change"))
-            out.cache(); out.count() // materialize before temp dir cleanup
+                col("valid_from_change")))
 
             // IVM over the history feed: bootstrap at the empty table,
             // then maintain differentially from every appended batch of
@@ -2212,21 +2162,18 @@ object SparkEntry {
             val (_, agg) = Ivm.maintain(spark, hist.root, vd,
               s"$base/histRep", s"$base/histAgg", s"$base/ckptHistAgg",
               maxVersionsPerTrigger = 8, bootstrapAtVersion = Some(1L))
-            val out2 = agg.read()
+            val out2 = materialize(agg.read()
               .select(col("doc_id"), col(Ivm.RowsCol),
                 col("span_sum"), col("tok_closed"))
-              .orderBy(col("doc_id"))
-            out2.cache(); out2.count()
+              .orderBy(col("doc_id")))
             scd2IncMemo = Some((spark0, out, out2))
             (out, out2)
-          } finally graft.util.Fs.deleteRecursively(base)
+          }
       }
     }
 
   private def scd2IncrementalReplay(spark0: SparkSession): DataFrame =
     scd2All(spark0)._1
-
-  @transient private var rebucketMemo: Option[(SparkSession, DataFrame)] = None
 
   /** BUCKET EVOLUTION driven end to end: the engine applies half the
     * deterministic log at 8 buckets, [[graft.icelite.Maintenance
@@ -2236,35 +2183,24 @@ object SparkEntry {
     * tombstones and the batch-id gate all survive two whole-table
     * rewrites or the hash breaks).
     */
-  private def rebucketReplay(spark0: SparkSession): DataFrame = synchronized {
-    rebucketMemo match {
-      case Some((s, df)) if s eq spark0 => df
-      case _ =>
-        import graft.changelog.ChangeLogGen
-        import graft.stream._
-        val spark = harnessSession(spark0)
-        val base = graft.util.Fs.tempDir("graft-rebucket")
-        try {
-          val cfg = EngineReplayCfg
-          val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",
-            numBuckets = 8)
-          ChangeLogGen.writeLog(spark, cfg, cdc.logDir, numFiles = 4)
-          val t = CdcJob.snapshot(spark,
-            ChangeLogGen.initialTable(spark, cfg).toDF(), cdc,
-            ChangeLogGen.snapshotLsn)
-          CdcJob.runBatchIncremental(spark, t, cdc, filesPerBatch = 1,
-            stopAfterBatches = 2)
-          graft.icelite.Maintenance.rebucket(t, 16)
-          CdcJob.runBatchIncremental(spark, t, cdc, filesPerBatch = 1)
-          graft.icelite.Maintenance.rebucket(t, 4)
-          val out = t.read()
-            .select(col("doc_id"), col("n_tok"), col("source"),
-              tokFpCol(col("tokens")).as("tok_fp"))
-            .orderBy(col("doc_id"))
-          out.cache(); out.count() // materialize before temp dir cleanup
-          rebucketMemo = Some((spark0, out))
-          out
-        } finally graft.util.Fs.deleteRecursively(base)
+  private def rebucketReplay(spark0: SparkSession): DataFrame = {
+    import graft.changelog.ChangeLogGen
+    import graft.stream._
+    val spark = harnessSession(spark0)
+    materialized("graft-rebucket") { base =>
+      val cfg = EngineReplayCfg
+      val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",
+        numBuckets = 8)
+      ChangeLogGen.writeLog(spark, cfg, cdc.logDir, numFiles = 4)
+      val t = CdcJob.snapshot(spark,
+        ChangeLogGen.initialTable(spark, cfg).toDF(), cdc,
+        ChangeLogGen.snapshotLsn)
+      CdcJob.runBatchIncremental(spark, t, cdc, filesPerBatch = 1,
+        stopAfterBatches = 2)
+      graft.icelite.Maintenance.rebucket(t, 16)
+      CdcJob.runBatchIncremental(spark, t, cdc, filesPerBatch = 1)
+      graft.icelite.Maintenance.rebucket(t, 4)
+      replayState(t.read())
     }
   }
 
@@ -2289,8 +2225,7 @@ object SparkEntry {
         import graft.changelog.ChangeLogGen
         import graft.stream._
         val spark = harnessSession(spark0)
-        val base = graft.util.Fs.tempDir("graft-ivmjoin")
-        try {
+        graft.util.Fs.withTempDir("graft-ivmjoin") { base =>
           import spark.implicits._
           val cfg = EngineReplayCfg
           // fact side: the shared deterministic log, 4 committed versions
@@ -2324,13 +2259,12 @@ object SparkEntry {
             s"$base/ckptIvmJ", maxVersionsPerTrigger = 4,
             bootstrapFAt = Some(1L), bootstrapDAt = Some(1L))
           view.refresh()
-          val out = view.read().select(
+          val out = materialize(view.read().select(
             col("doc_id"), col("n_tok"), col("source"),
             tokFpCol(col("tokens")).as("tok_fp"),
             col("d_n_tok").as("d_weight"),
             tokFpCol(col("d_tokens")).as("d_fp"))
-            .orderBy(col("doc_id"))
-          out.cache(); out.count() // materialize before temp dir cleanup
+            .orderBy(col("doc_id")))
           // CASCADED IVM — view over view: the JOIN view is itself a
           // first-class feed source, and an Ivm AGGREGATE maintained
           // from ITS deltas (early pin: the whole join-maintenance
@@ -2347,14 +2281,13 @@ object SparkEntry {
           val cascadeLast = agg.refresh().summary.lastBatchId
           require(cascadeLast >= 1,
             s"cascade aggregate applied ${cascadeLast + 1} stream batch(es), expected >= 2")
-          val casc = agg.read()
+          val casc = materialize(agg.read()
             .select(col("source"), col("n_rows"),
               col("total_tok"), col("total_w"))
-            .orderBy(col("source"))
-          casc.cache(); casc.count()
+            .orderBy(col("source")))
           ivmJoinMemo = Some((spark0, out, casc))
           (out, casc)
-        } finally graft.util.Fs.deleteRecursively(base)
+        }
     }
   }
 
@@ -2374,8 +2307,7 @@ object SparkEntry {
   private def blockingSnapshotReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-blocksnap")
-    try {
+    materialized("graft-blocksnap") { base =>
       val cfg = EngineReplayCfg
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
       ChangeLogGen.writeLog(spark, cfg, cdc.logDir, numFiles = 2)
@@ -2386,13 +2318,8 @@ object SparkEntry {
       // stream paused by the caller for the snapshot's duration (N3)
       IncrementalSnapshot.blocking(table, src, EvoLsn)
       MergeApply.applyBatch(table, ev.where(col("commit_lsn") > EvoLsn), 1L)
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** E7 end-to-end: the FULL signal-action surface driven through the
@@ -2416,8 +2343,7 @@ object SparkEntry {
   private def signalNotificationsReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-signotif")
-    try {
+    materialized("graft-signotif") { base =>
       val cfg = EngineReplayCfg
       val src = ChangeLogGen.initialTable(spark, cfg).toDF()
       val srcDir = s"$base/src"
@@ -2455,12 +2381,10 @@ object SparkEntry {
       Signals.process(spark, table, dir)
       sig(Signals.Signal("stop-snapshot", "", 0L, 0))
       Signals.process(spark, table, dir)
-      val out = table.readNotifications()
+      table.readNotifications()
         .select(col("aggregate_type"), col("type"), col("data"))
         .orderBy(col("aggregate_type"), col("type"), col("data"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** R4 end-to-end: restart over a RETENTION GAP with automatic
@@ -2478,8 +2402,7 @@ object SparkEntry {
   private def retentionGapReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-retgap")
-    try {
+    materialized("graft-retgap") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/staged", numFiles = 2)
       val raw = spark.read.parquet(s"$base/staged")
@@ -2502,13 +2425,8 @@ object SparkEntry {
       require(CdcJob.validateOrResnapshot(table, cdc, src, EvoLsn),
         "when_needed must auto-re-snapshot over the gap")
       CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** `skipped.operations` end-to-end: the REAL engine with deletes
@@ -2523,8 +2441,7 @@ object SparkEntry {
   private def skipOpsReplay(spark: SparkSession): DataFrame = {
     import graft.changelog.ChangeLogGen
     import graft.stream._
-    val base = graft.util.Fs.tempDir("graft-skipops")
-    try {
+    materialized("graft-skipops") { base =>
       val cfg = EngineReplayCfg
       ChangeLogGen.writeLog(spark, cfg, s"$base/log", numFiles = 2)
       val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",
@@ -2532,13 +2449,8 @@ object SparkEntry {
       val table = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
         cdc, ChangeLogGen.snapshotLsn)
       CdcJob.runBatchIncremental(spark, table, cdc, filesPerBatch = 1)
-      val out = table.read()
-        .select(col("doc_id"), col("n_tok"), col("source"),
-          tokFpCol(col("tokens")).as("tok_fp"))
-        .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+      replayState(table.read())
+    }
   }
 
   /** The actual CDC engine end-to-end (generator -> snapshot -> batch
@@ -2617,8 +2529,7 @@ object SparkEntry {
         case _ =>
           import graft.changelog._
           import graft.stream._
-          val base = graft.util.Fs.tempDir("graft-entry")
-          try {
+          graft.util.Fs.withTempDir("graft-entry") { base =>
             val cfg = EngineReplayCfg
             val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8,
               emitDir = Some(s"$base/emit"), emitWire = true)
@@ -2633,21 +2544,12 @@ object SparkEntry {
             val tableW = CdcJob.snapshot(spark, ChangeLogGen.initialTable(spark, cfg).toDF(),
               cdcWire, ChangeLogGen.snapshotLsn)
             WireSource.runIncremental(spark, tableW, cdcWire, filesPerBatch = 2)
-            def memoize(out0: DataFrame): DataFrame = {
-              val out = out0
-              out.cache(); out.count() // materialize before temp dir cleanup
-              out
-            }
-            def shape(read: DataFrame): DataFrame = memoize(
-              read.select(col("doc_id"), col("n_tok"), col("source"),
-                  conv(substring(md5(array_join(transform(col("tokens"), _.cast("string")), ",")),
-                    1, 14), 16, 10).cast("long").as("tok_fp"))
-                .orderBy(col("doc_id")))
+            def shape(read: DataFrame): DataFrame = materialize(replayState(read))
             val classic = shape(table.read())
             val v2 = shape(graft.icelite.dsv2.IceLiteV2.readMerged(spark, table.root))
-            val toks = memoize(table.read().select(col("doc_id"), col("tokens")))
+            val toks = materialize(table.read().select(col("doc_id"), col("tokens")))
             // engine time travel to the snapshot-phase commit (v1)
-            val toksV1 = memoize(table.readAt(1L).select(col("doc_id"), col("tokens")))
+            val toksV1 = materialize(table.readAt(1L).select(col("doc_id"), col("tokens")))
             val wire = shape(tableW.read())
             // downstream consumer: drain the sink's change feed through
             // the DSv2 micro-batch stream (bounded admission exercises
@@ -2699,14 +2601,14 @@ object SparkEntry {
               val (_, view) = graft.stream.Ivm.maintain(spark, table.root, vd,
                 s"$base/ivmRep", s"$base/ivmView", s"$base/ckptIvm",
                 maxVersionsPerTrigger = 2, bootstrapAtVersion = Some(1L))
-              memoize(view.read()
+              materialize(view.read()
                 .select(col("source"), col(graft.stream.Ivm.RowsCol).as("n_docs"),
                   col("total_tok"), col("sum_fp"))
                 .orderBy(col("source")))
             }
             replayMemo = Some((spark, classic, v2, toks, wire, feed, replica, ivm, toksV1))
             (classic, v2, toks, wire, feed, replica, ivm, toksV1)
-          } finally graft.util.Fs.deleteRecursively(base)
+          }
       }
     }
 
@@ -2718,8 +2620,7 @@ object SparkEntry {
     */
   private def v2WriteInsert(spark: SparkSession, dir: String): DataFrame = {
     import graft.icelite.dsv2.IceLiteV2
-    val base = graft.util.Fs.tempDir("graft-v2w")
-    try {
+    materialized("graft-v2w") { base =>
       val raw = t(spark, dir, "documents")
       def rows(filter: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
         raw.where(filter).select(col("doc_id").cast("string").as("doc_id"),
@@ -2735,12 +2636,10 @@ object SparkEntry {
       IceLiteV2.append(spark, table.root,
         rows(col("doc_id") % 7 === 0, col("n_chars")), vc = 30L, vl = 0L,
         tombstone = true)
-      val out = IceLiteV2.readMerged(spark, table.root)
+      IceLiteV2.readMerged(spark, table.root)
         .select(col("doc_id"), col("n_chars"), col("source"))
         .orderBy(col("doc_id"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    }
   }
 
   /** Committed-EVENT replay CTE (raw/seed/ctrl/ev) shared by every

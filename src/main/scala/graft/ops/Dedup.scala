@@ -431,7 +431,7 @@ object Dedup {
     // have done anyway.
     val nE = e.count()
     val spark = pairs.sparkSession
-    val loopParts = graft.util.SessionTune.partitionsForRows(spark, nE, 256L << 10)
+    val loopParts = graft.util.SessionTune.partitionsFor(spark, nE, 256L << 10)
     graft.util.SessionTune.withShufflePartitions(spark, loopParts) {
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
       .distinct().persist(StorageLevel.MEMORY_AND_DISK)

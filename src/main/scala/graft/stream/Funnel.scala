@@ -1,10 +1,11 @@
 package graft.stream
 
 import graft.ops.TextOps
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Streaming FUNNEL detection — a two-step CEP (complex event
   * processing) pattern over the event stream, the Flink-CEP/ksqlDB
@@ -150,60 +151,36 @@ object Funnel {
     StructField("m", LongType)))
 
   /** Stage per-batch files + the two watermark-flush sentinels. */
-  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit = {
+  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
+    StagedStream.stage(spark, stagedSchema, batches, dir,
+      Seq(Row(-1L, "B", SentinelMs1), Row(-2L, "B", SentinelMs2)))
+
+  /** The shared stream head of every funnel sink: staged source →
+    * watermark → transformWithState `processor`, keyed by user.
+    */
+  private def verdicts[V <: Product : TypeTag](spark: SparkSession, stagedDir: String,
+      processor: StatefulProcessor[Long, FunnelEvent, V]): DataFrame = {
     import spark.implicits._
-    val sentinels = Seq(
-      Seq((-1L, "B", SentinelMs1)).toDF("u", "step", "m"),
-      Seq((-2L, "B", SentinelMs2)).toDF("u", "step", "m"))
-    WindowedAgg.stageFiles(batches.map(
-      _.select(col("u").cast("long"), col("step"), col("m").cast("long")))
-      ++ sentinels, dir)
+    StagedStream.source(spark, stagedSchema, stagedDir, DelayMs).as[FunnelEvent]
+      .groupByKey(_.u)
+      .transformWithState(processor, TimeMode.EventTime(), OutputMode.Append())
+      .toDF()
   }
 
   /** The REAL streaming pipeline over a staged dir: file source (one
-    * file revealed per micro-batch) → watermark → transformWithState
+    * staged file per micro-batch) → watermark → transformWithState
     * funnel (RocksDB) → append sink; returns the verdicts.
     */
   def run(spark: SparkSession, stagedDir: String, workDir: String,
       doneTtl: TTLConfig = TTLConfig.NONE): DataFrame = StateStores.withRocksDb(spark) {
-    def start(liveDir: String) = {
-      import spark.implicits._
-      val src = spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"$DelayMs milliseconds")
-        .as[FunnelEvent]
-      src.groupByKey(_.u)
-        .transformWithState(new FunnelProcessor(doneTtl),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink").orderBy(col("u"))
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir)(
+      verdicts(spark, stagedDir, new FunnelProcessor(doneTtl))).orderBy(col("u"))
   }
 
   /** The whole pipeline over the testdata events table. */
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-funnel")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("u", "step", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-funnel", NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   // ---------------------------------------------------------------- //
   // N-step generalization + the feature-store sink                   //
@@ -305,47 +282,18 @@ object Funnel {
         s3 + 1L).as("m"))
   }
 
-  /** The 3-step pipeline over a staged dir (same reveal harness). */
+  /** The 3-step pipeline over a staged dir (same staged harness). */
   def run3(spark: SparkSession, stagedDir: String, workDir: String)
       : DataFrame = StateStores.withRocksDb(spark) {
-    def start(liveDir: String) = {
-      import spark.implicits._
-      val src = spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"$DelayMs milliseconds")
-        .as[FunnelEvent]
-      src.groupByKey(_.u)
-        .transformWithState(new NStepProcessor(IndexedSeq("A", "B", "C")),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink").orderBy(col("u"))
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir)(
+      verdicts(spark, stagedDir, new NStepProcessor(IndexedSeq("A", "B", "C"))))
+      .orderBy(col("u"))
   }
 
   /** The whole 3-step pipeline over the testdata events table. */
-  def overEvents3(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-funnel3")
-    try {
-      val d = derive3(events)
-      d.cache()
-      val batches = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("u", "step", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run3(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents3(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-funnel3", NumBatches, derive3(events))(
+      stage(spark, _, _))(run3(spark, _, _))
 
   /** The verdict table's declared schema for the feature-store sink. */
   private val storeSchema = StructType(Seq(
@@ -366,29 +314,15 @@ object Funnel {
     val table = graft.icelite.IceLite.create(spark, s"$workDir/store",
       MergeApply.asNullable(storeSchema).asInstanceOf[StructType],
       "k", numBuckets)
-    def start(liveDir: String) = {
-      import spark.implicits._
-      val src = spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"$DelayMs milliseconds")
-        .as[FunnelEvent]
-      val verdicts = src.groupByKey(_.u)
-        .transformWithState(new FunnelProcessor(),
-          TimeMode.EventTime(), OutputMode.Append())
-        .toDF()
-      Driver.start(verdicts, s"$workDir/ckpt", Trigger.AvailableNow(), None) {
-        (df, batchId) =>
-          MergeApply.applyBatch(table, MergeApply.committedEvents(
-            df.withColumn("k", col("u").cast("string")), "k", batchId + 1L,
-            after = Some(struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*))),
-            batchId)
-          ()
+    StagedStream.drain(spark, Seq(stagedDir)) {
+      Driver.start(verdicts(spark, stagedDir, new FunnelProcessor()), s"$workDir/ckpt",
+          Trigger.AvailableNow(), None) { (df, batchId) =>
+        MergeApply.applyBatch(table, MergeApply.committedEvents(
+          df.withColumn("k", col("u").cast("string")), "k", batchId + 1L,
+          after = Some(struct(storeSchema.fieldNames.toIndexedSeq.map(col): _*))),
+          batchId)
+        ()
       }
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
     }
     table
   }
@@ -397,21 +331,11 @@ object Funnel {
     * stage → run with the merge sink → read the store back. Output
     * columns match [[overEvents]] so one oracle serves both paths.
     */
-  def overEventsStore(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-funnelstore")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("u", "step", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val table = runToStore(spark, s"$base/staged", s"$base/work")
-      val out = table.read()
+  def overEventsStore(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-funnelstore", NumBatches, derive(events))(
+      stage(spark, _, _)) { (staged, work) =>
+      runToStore(spark, staged, work).read()
         .select(col("u"), col("ta"), col("tb"), col("verdict"))
         .orderBy(col("u"))
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+    }
 }

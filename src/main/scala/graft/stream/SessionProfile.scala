@@ -1,7 +1,7 @@
 package graft.stream
 
 import graft.ops.TextOps
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 import org.apache.spark.sql.types._
@@ -177,29 +177,20 @@ object SessionProfile {
     StructField("m", LongType)))
 
   /** Stage per-batch files + the two watermark-flush sentinels. */
-  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit = {
-    import spark.implicits._
-    val sentinels = Seq(
-      Seq((-1L, "view", SentinelMs1)).toDF("u", "typ", "m"),
-      Seq((-2L, "view", SentinelMs2)).toDF("u", "typ", "m"))
-    WindowedAgg.stageFiles(batches.map(
-      _.select(col("u").cast("long"), col("typ"), col("m").cast("long")))
-      ++ sentinels, dir)
-  }
+  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
+    StagedStream.stage(spark, stagedSchema, batches, dir,
+      Seq(Row(-1L, "view", SentinelMs1), Row(-2L, "view", SentinelMs2)))
 
-  /** The shared stream head: file source (one revealed file per
+  /** The shared stream head: staged file source (one staged file per
     * micro-batch) → watermark → transformWithState profiles. ONE
     * definition of the determinism-critical wiring (staged schema,
     * watermark delay, time/output mode) for BOTH sinks — the parquet
     * append sink and the feature store must produce identical
     * profiles against one oracle.
     */
-  private def profiles(spark: SparkSession, liveDir: String): DataFrame = {
+  private def profiles(spark: SparkSession, stagedDir: String): DataFrame = {
     import spark.implicits._
-    spark.readStream.schema(stagedSchema)
-      .option("maxFilesPerTrigger", 1).parquet(liveDir)
-      .withColumn("event_time", timestamp_millis(col("m")))
-      .withWatermark("event_time", s"$DelayMs milliseconds")
+    StagedStream.source(spark, stagedSchema, stagedDir, DelayMs)
       .as[SpEvent]
       .groupByKey(_.u)
       .transformWithState(new Processor,
@@ -209,16 +200,8 @@ object SessionProfile {
 
   /** The REAL streaming pipeline over a staged dir (parquet sink). */
   def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = StateStores.withRocksDb(spark) {
-    def start(liveDir: String) = profiles(spark, liveDir)
-      .writeStream.format("parquet")
-      .option("path", s"$workDir/sink")
-      .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveTwsPartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink")
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir,
+        StagedStream.TwsBytesPerPartition)(profiles(spark, stagedDir))
       .orderBy(col("u"), col("session_start"))
   }
 
@@ -245,8 +228,8 @@ object SessionProfile {
     val table = graft.icelite.IceLite.create(spark, s"$workDir/store",
       MergeApply.asNullable(storeSchema).asInstanceOf[StructType],
       "k", numBuckets)
-    def start(liveDir: String) =
-      Driver.start(profiles(spark, liveDir), s"$workDir/ckpt", Trigger.AvailableNow(), None) {
+    StagedStream.drain(spark, Seq(stagedDir), StagedStream.TwsBytesPerPartition) {
+      Driver.start(profiles(spark, stagedDir), s"$workDir/ckpt", Trigger.AvailableNow(), None) {
         (df, batchId) =>
           MergeApply.applyBatch(table, MergeApply.committedEvents(
             df.withColumn("k", concat_ws("|", col("u"), col("session_start"))), "k",
@@ -255,41 +238,22 @@ object SessionProfile {
             batchId)
           ()
       }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveTwsPartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
     }
     table
   }
 
-  /** Derive → stage → run `use` over (stagedDir, workDir) → cache the
-    * result before the temp dir cleans up. Shared by both sinks. */
-  private def overStaged(spark: SparkSession, events: DataFrame,
-      tag: String)(use: (String, String) => DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir(tag)
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("u", "typ", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = use(s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
-
   /** The whole pipeline over the testdata events table. */
   def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
-    overStaged(spark, events, "graft-sprofile")(run(spark, _, _))
+    StagedStream.overEvents("graft-sprofile", NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   /** [[overEvents]] through the FEATURE-STORE path: the profile table
     * read back — same oracle as the parquet-sink form, plus the
     * exactly-once store ingestion in the loop.
     */
   def overEventsStore(spark: SparkSession, events: DataFrame): DataFrame =
-    overStaged(spark, events, "graft-sprofile-store") { (staged, work) =>
+    StagedStream.overEvents("graft-sprofile-store", NumBatches, derive(events))(
+      stage(spark, _, _)) { (staged, work) =>
       runToStore(spark, staged, work).read().drop("k")
         .orderBy(col("u"), col("session_start"))
     }

@@ -1,10 +1,9 @@
 package graft.stream
 
 import graft.ops.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** MULTI-SOURCE watermark coalescing — the union of two independently
   * watermarked streams feeding one event-time aggregation, the exact
@@ -22,7 +21,7 @@ import org.apache.spark.sql.streaming.Trigger
   * while any other source lags — the cross-topic hazard (and safety
   * property: no early drops) that single-source tests can never surface.
   * Drops stay window-granular against wm_global; append-mode emission is
-  * forced total by flush sentinels revealed to BOTH sources.
+  * forced total by flush sentinels staged to BOTH sources.
   *
   * Deterministic operating point (all comparisons tie-free, mod-4
   * discipline as [[WindowedAgg]]): source A's batch b carries segment-b
@@ -101,40 +100,33 @@ object UnionWm {
     */
   def stage(spark: SparkSession, batchesA: Seq[DataFrame],
       batchesB: Seq[DataFrame], dirA: String, dirB: String): Unit = {
-    import spark.implicits._
     require(batchesA.size == batchesB.size, "sources must stage in lockstep")
-    def sentinels(idBase: Long) = Seq(
-      Seq((idBase, SentinelMs1)).toDF("event_id", "m"),
-      Seq((idBase - 1L, SentinelMs2)).toDF("event_id", "m"))
-    def norm(dfs: Seq[DataFrame]) =
-      dfs.map(_.select(col("event_id").cast("long"), col("m").cast("long")))
-    WindowedAgg.stageFiles(norm(batchesA) ++ sentinels(-1L), dirA)
-    WindowedAgg.stageFiles(norm(batchesB) ++ sentinels(-3L), dirB)
+    def sentinels(idBase: Long) = Seq(Row(idBase, SentinelMs1), Row(idBase - 1L, SentinelMs2))
+    StagedStream.stage(spark, WindowedAgg.stagedSchema, batchesA, dirA, sentinels(-1L))
+    StagedStream.stage(spark, WindowedAgg.stagedSchema, batchesB, dirB, sentinels(-3L))
   }
 
-  /** The real streaming pipeline: two file sources, each with its OWN
-    * watermark node, unioned into one tumbling-window aggregation;
-    * lockstep reveal (one staged file per source per micro-batch) over a
-    * shared checkpoint, exactly [[WindowedAgg.driveRevealed]]'s pattern
-    * generalized to two dirs.
+  /** The real streaming pipeline: two file sources over the staged
+    * dirs, each with its OWN watermark node, unioned into one
+    * tumbling-window aggregation. Each source forms batch i from its
+    * file i, so both advance one file per micro-batch together.
     *
-    * @param restartPerFile reveal one file per source, then drain one
-    *   AvailableNow query, per micro-batch: every batch restarts the
-    *   query over the shared checkpoint, so each source's watermark node
-    *   is rebuilt from the offset log (per-node watermarks are not
-    *   checkpointed, only the global one). The default drains one query
-    *   over all staged files.
+    * @param restartPerFile reveal one file per source into `workDir`,
+    *   then drain one AvailableNow query, per micro-batch: every batch
+    *   restarts the query over the shared checkpoint, so each source's
+    *   watermark node is rebuilt from the offset log (per-node
+    *   watermarks are not checkpointed, only the global one). A
+    *   reference path for UnionWmSpec's per-restart watermark case; the
+    *   default drains one query over the staged dirs in place.
     */
   def run(spark: SparkSession, stagedA: String, stagedB: String,
       workDir: String, restartPerFile: Boolean = false): DataFrame = {
-    def start(liveA: String, liveB: String) = {
+    val staged = Seq(stagedA, stagedB)
+    def query(dirA: String, dirB: String) = {
       def src(dir: String, tag: String) =
-        spark.readStream.schema(WindowedAgg.stagedSchema)
-          .option("maxFilesPerTrigger", 1).parquet(dir)
-          .withColumn("event_time", timestamp_millis(col("m")))
-          .withWatermark("event_time", s"$DelayMs milliseconds")
+        StagedStream.source(spark, WindowedAgg.stagedSchema, dir, DelayMs)
           .withColumn("src", lit(tag))
-      src(liveA, "a").unionByName(src(liveB, "b"))
+      src(dirA, "a").unionByName(src(dirB, "b"))
         .groupBy(window(col("event_time"), s"$WindowMs milliseconds"))
         .agg(
           count(lit(1)).as("n_events"),
@@ -143,68 +135,37 @@ object UnionWm {
           sum(when(col("src") === "b", 1L).otherwise(0L)).as("n_b"))
         .select(unix_millis(col("window.start")).as("w_start"),
           col("n_events"), col("s_mod"), col("n_a"), col("n_b"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
     }
     val fa = graft.util.Fs.listParquet(stagedA).sorted
     val fb = graft.util.Fs.listParquet(stagedB).sorted
     require(fa.size == fb.size, "staged dirs out of lockstep")
-    val (liveA, liveB) = (s"$workDir/liveA", s"$workDir/liveB")
-    Seq(liveA, liveB).foreach(d =>
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedA, stagedB)) {
-      if (restartPerFile) {
-        fa.zip(fb).foreach { case (a, bf) =>
-          Seq((a, liveA), (bf, liveB)).foreach { case (f, live) =>
-            val p = java.nio.file.Paths.get(f)
-            java.nio.file.Files.copy(p,
-              java.nio.file.Paths.get(live, p.getFileName.toString))
-          }
-          val q = start(liveA, liveB)
-          q.awaitTermination()
-          WindowedAgg.releaseStateStores(q.runId)
+    if (restartPerFile) {
+      val live = Seq(s"$workDir/liveA", s"$workDir/liveB")
+      live.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
+      fa.zip(fb).foreach { case (a, b) =>
+        Seq(a, b).zip(live).foreach { case (f, dir) =>
+          val p = java.nio.file.Paths.get(f)
+          java.nio.file.Files.copy(p, java.nio.file.Paths.get(dir, p.getFileName.toString))
         }
-      } else {
-        // single-run lockstep: stage everything (modtimes preserved so
-        // each source's maxFilesPerTrigger=1 forms batch i from file i —
-        // both sources advance one file per micro-batch together, the
-        // same pairing the restart loop produced), then ONE drain
-        fa.zip(fb).foreach { case (a, bf) =>
-          Seq((a, liveA), (bf, liveB)).foreach { case (f, live) =>
-            val p = java.nio.file.Paths.get(f)
-            val dest = java.nio.file.Paths.get(live, p.getFileName.toString)
-            java.nio.file.Files.copy(p, dest)
-            java.nio.file.Files.setLastModifiedTime(dest,
-              java.nio.file.Files.getLastModifiedTime(p))
-          }
-        }
-        val q = start(liveA, liveB)
-        q.awaitTermination()
-        WindowedAgg.releaseStateStores(q.runId)
+        StagedStream.drain(spark, staged)(StagedStream.sink(query(live(0), live(1)), workDir))
       }
-    }
+    } else StagedStream.drain(spark, staged)(StagedStream.sink(query(stagedA, stagedB), workDir))
     spark.read.parquet(s"$workDir/sink")
       .where(col("w_start") < SentinelMs1) // sentinel window never emits
       .orderBy(col("w_start"))
   }
 
-  /** Whole pipeline over the testdata events table. */
+  /** Whole pipeline over the testdata events table: both sources derive
+    * into one frame tagged by `src` and stage into `staged/a`,
+    * `staged/b`. */
   def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-uwm")
-    try {
-      val da = deriveA(events); val db = deriveB(events)
-      da.cache(); db.cache()
-      def split(d: DataFrame) = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("event_id", "m"))
-      stage(spark, split(da), split(db), s"$base/stagedA", s"$base/stagedB")
-      da.unpersist(); db.unpersist()
-      val out = run(spark, s"$base/stagedA", s"$base/stagedB", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
+    def tagged(d: DataFrame, tag: String) = d.select(col("event_id"), col("b"), col("m"),
+      lit(tag).as("src"))
+    StagedStream.overEvents("graft-uwm", NumBatches,
+        tagged(deriveA(events), "a").unionByName(tagged(deriveB(events), "b"))) { (bs, dir) =>
+      def of(tag: String) = bs.map(_.where(col("src") === tag))
+      stage(spark, of("a"), of("b"), s"$dir/a", s"$dir/b")
+    } { (staged, work) => run(spark, s"$staged/a", s"$staged/b", work) }
   }
 
   /** The kept input rows as a batch plan: replays the per-source

@@ -1,9 +1,8 @@
 package graft.stream
 
 import graft.ops.TextOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 /** Event-time windowed aggregation over a micro-batched stream with
@@ -72,204 +71,19 @@ object WindowedAgg {
   private[stream] val stagedSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("m", LongType)))
 
-  /** Writes one parquet file per micro-batch (modtime-ordered, so the
-    * file stream source forms batch i from file i). All frames must
-    * share one schema; the last entries are normally the flush
-    * sentinels.
-    */
-  private[stream] def stageFiles(batches: Seq[DataFrame], dir: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val base = 1700000000000L // fixed epoch base: stable ordering across runs
-    // ONE Spark job stages every data file: the frames are tagged with
-    // their batch index, shuffled so each index lands wholly in one
-    // task, and written `partitionBy` on the index; driver-side renames
-    // + explicit modtimes then fix the layout the file source expects.
-    // (Formerly one repartition(1) job PER file — 5-11 driver-serial
-    // jobs per cell even pool-parallelized; per-job overhead dominated
-    // at fixture scale. Batch formation is unchanged: same file names,
-    // same modtime schedule, same one-file-per-batch content; row order
-    // WITHIN a staged file is immaterial — every consumer aggregates,
-    // sorts per key in the handler, or keys rows uniquely.)
-    locally {
-      val tagged = batches.zipWithIndex
-        .map { case (df, i) => df.withColumn("__sb", lit(i)) }
-        .reduce(_ unionByName _)
-      val tmp = graft.util.Fs.tempDir("graft-wagg-stage")
-      try {
-        tagged.repartition(col("__sb"))
-          .write.mode("overwrite").partitionBy("__sb").parquet(tmp)
-        (0 until batches.size).foreach { i =>
-          val partDir = java.nio.file.Paths.get(tmp, s"__sb=$i")
-          val dest = java.nio.file.Paths.get(dir, f"batch-$i%03d.parquet")
-          if (java.nio.file.Files.isDirectory(partDir)) {
-            val part = graft.util.Fs.listParquet(partDir.toString).head
-            java.nio.file.Files.move(java.nio.file.Paths.get(part), dest)
-          } else {
-            // an EMPTY frame writes no partition dir; it must still
-            // stage a file (an empty staged file is a real no-data
-            // micro-batch in the schedule)
-            val e = s"$tmp/__empty$i"
-            batches(i).limit(0).repartition(1).write.mode("overwrite").parquet(e)
-            java.nio.file.Files.move(
-              java.nio.file.Paths.get(graft.util.Fs.listParquet(e).head), dest)
-          }
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L))
-        }
-      } finally graft.util.Fs.deleteRecursively(tmp)
-    }
-    // WATERMARK-SCHEDULE SPACERS: one EMPTY file between consecutive
-    // data files. Spark filters late events with the PREVIOUS batch's
-    // watermark and evicts with the current one (the SPARK-40925
-    // two-watermark design); the restart-per-reveal driver interposed a
-    // no-data batch after every data batch, persisting the freshly
-    // advanced watermark, so each DATA batch filtered late rows with
-    // W(batches < b) — the schedule the SQL oracles replay. An empty
-    // spacer batch reproduces that schedule inside ONE run: it carries
-    // no rows (advances nothing itself), but the next data batch's
-    // previous-batch watermark then equals its eviction watermark —
-    // bit-identical drop/emit decisions at a fraction of a restart's
-    // cost. Named/timed to interleave strictly between data files in
-    // both lexicographic and modtime order.
-    if (batches.size > 1) {
-      val tmp = graft.util.Fs.tempDir("graft-wagg-spacer")
-      try {
-        batches.head.limit(0).repartition(1).write.mode("overwrite").parquet(tmp)
-        val empty = java.nio.file.Paths.get(graft.util.Fs.listParquet(tmp).head)
-        (0 until batches.size - 1).foreach { i =>
-          val dest = java.nio.file.Paths.get(dir, f"batch-$i%03db.parquet")
-          java.nio.file.Files.copy(empty, dest)
-          java.nio.file.Files.setLastModifiedTime(dest,
-            java.nio.file.attribute.FileTime.fromMillis(base + i * 1000L + 500L))
-        }
-      } finally graft.util.Fs.deleteRecursively(tmp)
-    }
-  }
-
   /** (event_id, m) staging with the two flush sentinels appended. */
-  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit = {
-    import spark.implicits._
-    val sentinels = Seq(
-      Seq((-1L, SentinelMs1)).toDF("event_id", "m"),
-      Seq((-2L, SentinelMs2)).toDF("event_id", "m"))
-    stageFiles(batches.map(
-      _.select(col("event_id").cast("long"), col("m").cast("long"))) ++ sentinels, dir)
-  }
-
-  /** Closes a stopped query run's state-store providers synchronously,
-    * scoped by queryRunId, so a concurrent harness query in the same
-    * JVM is untouched. A query restarted over the SHARED checkpoint has
-    * a new queryRunId, so without this the JVM's state-store registry
-    * keeps the stopped run's provider instances (full state maps on
-    * heap) until periodic maintenance notices they're inactive — and a
-    * stale instance's maintenance snapshot can race the new instance's
-    * write on the same checkpoint file (observed: FileNotFoundException
-    * renaming a `.snapshot.crc` tmp at sf0.001 under the chained
-    * join→agg, killing the query). Each run then starts with exactly
-    * one instance per store, and snapshots stay on their default
-    * cadence.
-    */
-  private[stream] def releaseStateStores(runId: java.util.UUID): Unit =
-    org.apache.spark.sql.graft.SparkInternals.unloadStateStoresForRun(runId)
-
-  /** One-file-per-micro-batch driver: stage every file with its strictly
-    * increasing modification time preserved and drain ONE AvailableNow
-    * query whose file source is rate-limited to one file per
-    * micro-batch (`maxFilesPerTrigger=1` on every harness source) — the
-    * file source forms batch i from file i (modtime order), the
-    * watermark advances at exactly the same micro-batch boundaries, and
-    * the emitted set is identical to revealing the files one restart at
-    * a time; what changes is paying query start/stop, state reload and
-    * the no-data flush batch once per CELL instead of once per FILE
-    * (measured ~3-4x on the stream_* bench cells). An extra no-data
-    * batch only shifts WHEN a window emits, never whether: drops use
-    * the arrival batch's watermark, and the final emitted set is fixed
-    * by the flush sentinels. The checkpoint-resume contract is pinned
-    * by the specs and `cdc_engine_replay_ss`, and the restart-per-file
-    * driver by `UnionWm.run(restartPerFile = true)`.
-    */
-  private[stream] def driveRevealed(stagedDir: String,
-      start: String => org.apache.spark.sql.streaming.StreamingQuery,
-      liveDir: String): Unit = {
-    val files = graft.util.Fs.listParquet(stagedDir).sorted
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(liveDir))
-    files.foreach { f =>
-      val p = java.nio.file.Paths.get(f)
-      val dest = java.nio.file.Paths.get(liveDir, p.getFileName.toString)
-      java.nio.file.Files.copy(p, dest)
-      // batch formation is by modtime order: preserve the staged times
-      java.nio.file.Files.setLastModifiedTime(dest,
-        java.nio.file.Files.getLastModifiedTime(p))
-    }
-    val q = start(liveDir)
-    q.awaitTermination()
-    releaseStateStores(q.runId)
-  }
-
-  /** Scale-adaptive shuffle/state partition count for a drained harness
-    * stream (guide §2.2: size partitions from the DATA, not from the
-    * machine): staged input bytes / 32 MB per partition, clamped
-    * between 1 and the session's configured shuffle partitions — a
-    * cluster-sized session keeps its configured parallelism; only a
-    * small staged state sheds the per-partition per-batch state-store
-    * fixed costs (open/commit/snapshot per store instance, x4 instances
-    * for a stream-stream join).
-    */
-  private[stream] def adaptiveStatePartitions(spark: SparkSession,
-      stagedDirs: String*): Int =
-    adaptivePartitionsFor(spark, 32L << 20, stagedDirs)
-
-  /** Partition sizing for PER-ROW-STATE drains (transformWithState with
-    * per-event RocksDB get/merge/put work, e.g. the session-profile
-    * MapState pipelines): a partition saturates on JNI/state CPU far
-    * below the shuffle-byte target above, so these drains use a much
-    * smaller per-partition byte budget (256 KB), still clamped by the
-    * session's configured parallelism — measured 18.5 -> 12.8 s on the
-    * profile-store cell at 8 vs 1 partitions, flat on the low-volume
-    * funnel cells.
-    */
-  private[stream] def adaptiveTwsPartitions(spark: SparkSession,
-      stagedDirs: String*): Int =
-    adaptivePartitionsFor(spark, 256L << 10, stagedDirs)
-
-  private def adaptivePartitionsFor(spark: SparkSession, per: Long,
-      stagedDirs: Seq[String]): Int = {
-    val bytes = stagedDirs.flatMap(graft.util.Fs.listParquet(_))
-      .map(f => java.nio.file.Files.size(java.nio.file.Paths.get(f))).sum
-    val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cur, ((bytes + per - 1) / per).toInt))
-  }
-
-  /** Runs `body` with the session's shuffle partitions set to `n`, then
-    * restores the prior value — the [[StateStores.withRocksDb]]
-    * discipline: the conf is read at query start, and every harness
-    * query is drained inside `body`, so restoring afterwards is safe
-    * and a shared session's parallelism never depends on which harness
-    * ran last.
-    */
-  private[stream] def withShufflePartitions[A](spark: SparkSession, n: Int)(
-      body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
+    StagedStream.stage(spark, stagedSchema, batches, dir,
+      Seq(Row(-1L, SentinelMs1), Row(-2L, SentinelMs2)))
 
   /** Runs the REAL streaming pipeline over a staged dir: file source
-    * (one file revealed per run) → watermark → tumbling-window agg →
-    * append parquet sink; returns the finalized windows (sentinels
+    * (one staged file per micro-batch) → watermark → tumbling-window agg
+    * → append parquet sink; returns the finalized windows (sentinels
     * excluded).
     */
-  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    def start(liveDir: String) = {
-      val src = spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-      src.withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"$DelayMs milliseconds")
+  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame =
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir) {
+      StagedStream.source(spark, stagedSchema, stagedDir, DelayMs)
         .groupBy(window(col("event_time"), s"$WindowMs milliseconds"))
         .agg(
           count(lit(1)).as("n_events"),
@@ -277,36 +91,15 @@ object WindowedAgg {
           max(col("m")).as("max_ms"))
         .select(unix_millis(col("window.start")).as("w_start"),
           col("n_events"), col("s_mod"), col("max_ms"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    withShufflePartitions(spark, adaptiveStatePartitions(spark, stagedDir)) {
-      driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink")
-      .where(col("w_start") < SentinelMs1) // defense-in-depth; never emits
+    }.where(col("w_start") < SentinelMs1) // defense-in-depth; never emits
       .orderBy(col("w_start"))
-  }
 
   /** The whole pipeline over the testdata events table: derive →
     * stage by batch → stream → finalized windows.
     */
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-wagg")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("event_id", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-wagg", NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   /** The drop/emit rule as a BATCH plan over (b, m) rows — the model
     * the streaming run must match (used by the spec; the SQL oracle is
@@ -364,25 +157,17 @@ object SessionAgg {
     StructField("event_id", LongType), StructField("user_id", LongType),
     StructField("m", LongType)))
 
-  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit = {
-    import spark.implicits._
-    val sentinels = Seq(
-      Seq((-1L, -1L, WindowedAgg.SentinelMs1)).toDF("event_id", "user_id", "m"),
-      Seq((-2L, -2L, WindowedAgg.SentinelMs2)).toDF("event_id", "user_id", "m"))
-    WindowedAgg.stageFiles(batches.map(_.select(col("event_id").cast("long"),
-      col("user_id").cast("long"), col("m").cast("long"))) ++ sentinels, dir)
-  }
+  def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
+    StagedStream.stage(spark, stagedSchema, batches, dir, Seq(
+      Row(-1L, -1L, WindowedAgg.SentinelMs1), Row(-2L, -2L, WindowedAgg.SentinelMs2)))
 
   /** The real streaming query: session_window(gap) per user under the
     * watermark, append mode; returns finalized sessions (sentinel keys
     * excluded).
     */
-  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    def start(liveDir: String) = {
-      val src = spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-      src.withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"${WindowedAgg.DelayMs} milliseconds")
+  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame =
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir) {
+      StagedStream.source(spark, stagedSchema, stagedDir, WindowedAgg.DelayMs)
         .groupBy(session_window(col("event_time"), s"$GapMs milliseconds"),
           col("user_id"))
         .agg(
@@ -392,34 +177,12 @@ object SessionAgg {
           unix_millis(col("session_window.start")).as("s_start"),
           unix_millis(col("session_window.end")).as("s_end"),
           col("n_events"), col("s_mod"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink")
-      .where(col("user_id") >= 0L)
+    }.where(col("user_id") >= 0L)
       .orderBy(col("user_id"), col("s_start"))
-  }
 
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-sagg")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until WindowedAgg.NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("event_id", "user_id", "m"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-sagg", WindowedAgg.NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   /** Gaps-and-islands merge of the kept (non-straggler) rows — the
     * batch model the streaming final state must equal (spec-side only;
@@ -501,46 +264,22 @@ object StreamDedup {
     StructField("src", StringType)))
 
   def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
-    WindowedAgg.stageFiles(batches.map(_.select(col("key").cast("long"),
-      col("m").cast("long"), col("src").cast("string"))), dir)
+    StagedStream.stage(spark, stagedSchema, batches, dir)
 
   /** The real streaming dedup: emitted = rows that survived
     * dropDuplicatesWithinWatermark (append mode emits them in their
     * arrival batch — no flush sentinels needed).
     */
-  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    def start(liveDir: String) =
-      spark.readStream.schema(stagedSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"$DelayMs milliseconds")
+  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame =
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir) {
+      StagedStream.source(spark, stagedSchema, stagedDir, DelayMs)
         .dropDuplicatesWithinWatermark("key")
         .select(col("key"), col("m"), col("src"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink").orderBy(col("key"), col("m"))
-  }
+    }.orderBy(col("key"), col("m"))
 
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-sdedup")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until WindowedAgg.NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("key", "m", "src"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-sdedup", WindowedAgg.NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   /** The emit rule as a batch plan over derived rows: originals always
     * emit; a copy emits iff the watermark of its arrival batch has
@@ -611,9 +350,28 @@ object StreamJoin {
     StructField("m", LongType), StructField("side", StringType)))
 
   def stage(spark: SparkSession, batches: Seq[DataFrame], dir: String): Unit =
-    WindowedAgg.stageFiles(batches.map(_.select(col("key").cast("long"),
-      col("user_id").cast("long"), col("m").cast("long"),
-      col("side").cast("string"))), dir)
+    StagedStream.stage(spark, stagedJoinSchema, batches, dir)
+
+  /** [[stage]] plus two RIGHT-side flush sentinels under an impossible
+    * user id (they never pair): the outer and chained variants' staging.
+    */
+  private[stream] def stageFlushed(spark: SparkSession, batches: Seq[DataFrame],
+      dir: String): Unit =
+    StagedStream.stage(spark, stagedJoinSchema, batches, dir, Seq(
+      Row(-1L, StreamJoinOuter.SentinelUser, WindowedAgg.SentinelMs1, "r"),
+      Row(-2L, StreamJoinOuter.SentinelUser, WindowedAgg.SentinelMs2, "r")))
+
+  /** The staged dir as the two join sides, one watermarked source. */
+  private[stream] def sides(spark: SparkSession, stagedDir: String): (DataFrame, DataFrame) = {
+    val src = StagedStream.source(spark, stagedJoinSchema, stagedDir, WindowedAgg.DelayMs)
+    (src.where(col("side") === "l").as("l"), src.where(col("side") === "r").as("r"))
+  }
+
+  /** `r` within ±IntervalMs of `l`, same user. */
+  private[stream] def interval: Column =
+    col("l.user_id") === col("r.user_id") &&
+      col("r.event_time") >= col("l.event_time") - expr(s"INTERVAL $IntervalMs MILLISECONDS") &&
+      col("r.event_time") <= col("l.event_time") + expr(s"INTERVAL $IntervalMs MILLISECONDS")
 
   /** The real streaming self-join: one watermarked source split into
     * sides, inner-joined on user within ±IntervalMs. Inner joins emit
@@ -623,53 +381,20 @@ object StreamJoin {
     runJoin(spark, stagedDir, workDir, "inner")
 
   private[stream] def runJoin(spark: SparkSession, stagedDir: String,
-      workDir: String, joinType: String): DataFrame = {
-    def start(liveDir: String) = {
-      val src = spark.readStream.schema(stagedJoinSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"${WindowedAgg.DelayMs} milliseconds")
-      val l = src.where(col("side") === "l").as("l")
-      val r = src.where(col("side") === "r").as("r")
-      l.join(r,
-          col("l.user_id") === col("r.user_id") &&
-            col("r.event_time") >= col("l.event_time") -
-              expr(s"INTERVAL $IntervalMs MILLISECONDS") &&
-            col("r.event_time") <= col("l.event_time") +
-              expr(s"INTERVAL $IntervalMs MILLISECONDS"),
-          joinType)
+      workDir: String, joinType: String): DataFrame =
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir) {
+      val (l, r) = sides(spark, stagedDir)
+      l.join(r, interval, joinType)
         .select(col("l.key").as("l_key"), col("r.key").as("r_key"),
           // coalesced so the full-outer variant's right-only rows carry
           // their user; identity for inner/left (l.user_id non-null there)
           coalesce(col("l.user_id"), col("r.user_id")).as("user_id"),
           col("l.m").as("l_ms"), col("r.m").as("r_ms"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink")
-      .orderBy(col("l_key"), col("r_key"))
-  }
+    }.orderBy(col("l_key"), col("r_key"))
 
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    val base = graft.util.Fs.tempDir("graft-sjoin")
-    try {
-      val d = derive(events)
-      d.cache()
-      val batches = (0 until WindowedAgg.NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("key", "user_id", "m", "side"))
-      stage(spark, batches, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-sjoin", WindowedAgg.NumBatches, derive(events))(
+      stage(spark, _, _))(run(spark, _, _))
 
   /** The emitted set as a batch plan: the pure interval join over
     * non-straggler rows (see the object doc for why state cleanup can
@@ -724,26 +449,10 @@ object StreamJoinOuter {
     * two right-side flush sentinels, run under `joinType`.
     */
   private[stream] def overEventsWith(spark: SparkSession, events: DataFrame,
-      joinType: String): DataFrame = {
-    import spark.implicits._
-    val base = graft.util.Fs.tempDir("graft-sjoinlo")
-    try {
-      val d = StreamJoin.derive(events)
-      d.cache()
-      val batches = (0 until WindowedAgg.NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("key", "user_id", "m", "side"))
-      val sentinels = Seq(
-        Seq((-1L, SentinelUser, WindowedAgg.SentinelMs1, "r"))
-          .toDF("key", "user_id", "m", "side"),
-        Seq((-2L, SentinelUser, WindowedAgg.SentinelMs2, "r"))
-          .toDF("key", "user_id", "m", "side"))
-      StreamJoin.stage(spark, batches ++ sentinels, s"$base/staged")
-      d.unpersist()
-      val out = StreamJoin.runJoin(spark, s"$base/staged", s"$base/work", joinType)
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+      joinType: String): DataFrame =
+    StagedStream.overEvents("graft-sjoinlo", WindowedAgg.NumBatches,
+        StreamJoin.derive(events))(StreamJoin.stageFlushed(spark, _, _))(
+      StreamJoin.runJoin(spark, _, _, joinType))
 
   /** The emitted set as a batch plan: LEFT interval join over the
     * non-straggler rows (matched rows keep their pairs; unmatched left
@@ -838,65 +547,26 @@ object StreamJoinFull {
   * each (the same two exchanges a batch join+group would plan).
   */
 object StreamJoinAgg {
-  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame = {
-    def start(liveDir: String) = {
-      val src = spark.readStream.schema(StreamJoin.stagedJoinSchema)
-        .option("maxFilesPerTrigger", 1).parquet(liveDir)
-        .withColumn("event_time", timestamp_millis(col("m")))
-        .withWatermark("event_time", s"${WindowedAgg.DelayMs} milliseconds")
-      val l = src.where(col("side") === "l").as("l")
-      val r = src.where(col("side") === "r").as("r")
-      l.join(r,
-          col("l.user_id") === col("r.user_id") &&
-            col("r.event_time") >= col("l.event_time") -
-              expr(s"INTERVAL ${StreamJoin.IntervalMs} MILLISECONDS") &&
-            col("r.event_time") <= col("l.event_time") +
-              expr(s"INTERVAL ${StreamJoin.IntervalMs} MILLISECONDS"),
-          "inner")
+  def run(spark: SparkSession, stagedDir: String, workDir: String): DataFrame =
+    StagedStream.drainToParquet(spark, Seq(stagedDir), workDir) {
+      val (l, r) = StreamJoin.sides(spark, stagedDir)
+      l.join(r, StreamJoin.interval, "inner")
         .groupBy(window(col("l.event_time"), s"${WindowedAgg.WindowMs} milliseconds"))
         .agg(count(lit(1)).as("n_pairs"),
           sum(pmod(col("l.key"), lit(97L)) + pmod(col("r.key"), lit(97L)))
             .as("s_mod"))
         .select(unix_millis(col("window.start")).as("w_start"),
           col("n_pairs"), col("s_mod"))
-        .writeStream.format("parquet")
-        .option("path", s"$workDir/sink")
-        .option("checkpointLocation", s"$workDir/ckpt")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    }
-    WindowedAgg.withShufflePartitions(spark,
-        WindowedAgg.adaptiveStatePartitions(spark, stagedDir)) {
-      WindowedAgg.driveRevealed(stagedDir, start, s"$workDir/live")
-    }
-    spark.read.parquet(s"$workDir/sink")
-      .where(col("w_start") < WindowedAgg.SentinelMs1)
+    }.where(col("w_start") < WindowedAgg.SentinelMs1)
       .orderBy(col("w_start"))
-  }
 
   /** Same staging as the outer variants (the right-side sentinels here
     * exist purely to push the propagated watermark past every real
     * window so the chained aggregation flushes).
     */
-  def overEvents(spark: SparkSession, events: DataFrame): DataFrame = {
-    import spark.implicits._
-    val base = graft.util.Fs.tempDir("graft-sjagg")
-    try {
-      val d = StreamJoin.derive(events)
-      d.cache()
-      val batches = (0 until WindowedAgg.NumBatches).map(i =>
-        d.where(col("b") === i.toLong).select("key", "user_id", "m", "side"))
-      val sentinels = Seq(
-        Seq((-1L, StreamJoinOuter.SentinelUser, WindowedAgg.SentinelMs1, "r"))
-          .toDF("key", "user_id", "m", "side"),
-        Seq((-2L, StreamJoinOuter.SentinelUser, WindowedAgg.SentinelMs2, "r"))
-          .toDF("key", "user_id", "m", "side"))
-      StreamJoin.stage(spark, batches ++ sentinels, s"$base/staged")
-      d.unpersist()
-      val out = run(spark, s"$base/staged", s"$base/work")
-      out.cache(); out.count() // materialize before temp dir cleanup
-      out
-    } finally graft.util.Fs.deleteRecursively(base)
-  }
+  def overEvents(spark: SparkSession, events: DataFrame): DataFrame =
+    StagedStream.overEvents("graft-sjagg", WindowedAgg.NumBatches,
+        StreamJoin.derive(events))(StreamJoin.stageFlushed(spark, _, _))(run(spark, _, _))
 
   /** The emitted windows as a batch plan: the inner interval join over
     * non-straggler rows, grouped by the LEFT side's window.

@@ -73,6 +73,15 @@ object Fs {
 
   def tempDir(prefix: String): String = tempDirIn(scratchRoot, prefix)
 
+  /** Runs `body` over a fresh [[tempDir]] and deletes the dir afterwards,
+    * whether `body` returns or throws. A result that reads from the dir
+    * must be materialized inside `body`.
+    */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = tempDir(prefix)
+    try body(dir) finally deleteRecursively(dir)
+  }
+
   def tempDirIn(base: String, prefix: String): String = {
     Files.createDirectories(Paths.get(base))
     Files.createTempDirectory(Paths.get(base), prefix).toString

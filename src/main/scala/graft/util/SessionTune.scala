@@ -2,11 +2,10 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** Scoped session tuning shared by the batch operators (the streaming
-  * harness has its own copy in WindowedAgg with the same discipline):
-  * set a conf for the duration of a driver-side loop, restore the prior
-  * value afterwards, so a shared session never depends on which
-  * operator ran last.
+/** Scoped session tuning shared by the batch operators and the staged
+  * stream drain: set a conf for the duration of a driver-side loop or
+  * query, restore the prior value afterwards, so a shared session never
+  * depends on which operator ran last.
   */
 object SessionTune {
 
@@ -25,15 +24,14 @@ object SessionTune {
     }
   }
 
-  /** Partition count sized from a row count (guide §2.2: derive from
-    * the data, never a machine constant): rows / perPartition, clamped
-    * to [1, session shuffle partitions] — a cluster-sized session keeps
-    * its configured parallelism for big inputs; small inputs shed the
-    * per-partition per-round fixed costs of iterative loops.
+  /** Partition count sized from the data (guide §2.2: never a machine
+    * constant): `size` (rows or bytes) / perPartition, clamped to
+    * [1, session shuffle partitions] — a cluster-sized session keeps its
+    * configured parallelism for big inputs; small inputs shed the
+    * per-partition fixed costs of iterative loops and state stores.
     */
-  def partitionsForRows(spark: SparkSession, rows: Long,
-      perPartition: Long = 1L << 20): Int = {
+  def partitionsFor(spark: SparkSession, size: Long, perPartition: Long): Int = {
     val cur = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cur, ((rows + perPartition - 1) / perPartition).toInt))
+    math.max(1, math.min(cur, ((size + perPartition - 1) / perPartition).toInt))
   }
 }

@@ -66,7 +66,6 @@ class MaintenanceSpec extends SparkSpec {
   }
 
   test("poisoned background compaction surfaces: notification row + drain() throws") {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 40, nDocs = 30, seed = 91)
     val base = Fs.tempDir("graft-poisoncompact")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 2)

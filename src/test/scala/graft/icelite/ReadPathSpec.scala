@@ -2,7 +2,7 @@ package graft.icelite
 
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
-import graft.model.{LogRecord, TokenDoc}
+import graft.model.TokenDoc
 import graft.stream.{CdcConfig, CdcJob}
 import graft.util.Fs
 import org.apache.spark.sql.functions._

@@ -80,7 +80,6 @@ class V2ReadSpec extends SparkSpec {
   }
 
   test("SPJ across two tables with DIFFERENT bucket counts (8 vs 4) plans without a shuffle") {
-    import spark.implicits._
     // 8-bucket "fact" sink and 4-bucket "dim" sink over the same keys
     val cfg = ChangeLogConfig(nTx = 120, nDocs = 80, seed = 167)
     val base = Fs.tempDir("graft-v2xbuckets")
@@ -198,7 +197,6 @@ class V2ReadSpec extends SparkSpec {
   }
 
   test("metadata-only aggregates: COUNT/MIN/MAX answered from zone-map stats, no file read") {
-    import spark.implicits._
     val (base, table) = pipeline(seed = 181)
 
     val snap = table.refresh()
@@ -243,7 +241,6 @@ class V2ReadSpec extends SparkSpec {
   }
 
   test("storage-partitioned self-join on the key plans without a shuffle") {
-    import spark.implicits._
     val (base, table) = pipeline(seed = 157)
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

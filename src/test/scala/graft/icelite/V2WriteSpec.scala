@@ -3,7 +3,6 @@ package graft.icelite
 import graft.SparkSpec
 import graft.icelite.dsv2.IceLiteV2
 import graft.util.Fs
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** The DSv2 WRITE path: INSERT/append commits versioned delta files

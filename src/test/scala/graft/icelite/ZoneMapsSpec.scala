@@ -162,7 +162,6 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("v2 scan skips files by value: pushed n_tok filter elides files, result exact") {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 200, nDocs = 120, seed = 337, deletePct = 10)
     val base = Fs.tempDir("graft-zmskip")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 8)
@@ -205,7 +204,6 @@ class ZoneMapsSpec extends SparkSpec {
   }
 
   test("clustered compaction: per-bucket sorted file splits give disjoint zone ranges that prune range scans") {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 250, nDocs = 150, seed = 347, deletePct = 5)
     val base = Fs.tempDir("graft-zmcluster")
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt", numBuckets = 4)

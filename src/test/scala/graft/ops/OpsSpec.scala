@@ -358,7 +358,6 @@ class OpsSpec extends SparkSpec {
     assert(lang.forall(r => Set("en", "es", "fr", "de", "und").contains(r.getString(1))))
     val fp1 = TextOps.fingerprint(docs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // whitespace-normalization invariance
-    import spark.implicits._
     val mangled = docs.select(col("doc_id"), concat(lit("  "), regexp_replace(col("text"), " ", "   ")).as("text"))
     val fp2 = TextOps.fingerprint(mangled).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp1 == fp2)

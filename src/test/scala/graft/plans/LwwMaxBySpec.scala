@@ -1,7 +1,6 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.stream.{DocV2, EventV2}
 import org.apache.spark.sql.functions._
 
 /** Correctness of the custom TypedImperativeAggregate against a

@@ -4,7 +4,6 @@ import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.model.{ChangeEvent, LogRecord, TokenDoc}
 import graft.util.Fs
-import org.apache.spark.sql.functions.col
 
 /** Checkpoint state migration between assembly strategies: the
   * flatMapGroupsWithState checkpoint's open-transaction state is read

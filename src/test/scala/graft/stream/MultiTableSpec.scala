@@ -5,7 +5,6 @@ import graft.changelog.{ChangeLogConfig, ChangeLogGen}
 import graft.icelite.IceLite
 import graft.model.{LogRecord, TokenDoc}
 import graft.util.Fs
-import org.apache.spark.sql.functions._
 
 /** Multi-table capture: one shared change log feeding N independent
   * sink tables, each converging to its own oracle.

@@ -4,8 +4,6 @@ import graft.SparkSpec
 import graft.icelite.IceLite
 import graft.icelite.dsv2.IceLiteV2
 import graft.util.Fs
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions._
 
 /** Incremental SCD2: the maintained closed-history ∪ open-current view
   * must equal the interval chain over the source's version history —

@@ -2,7 +2,6 @@ package graft.stream
 
 import graft.SparkSpec
 import graft.changelog.{ChangeLogConfig, ChangeLogGen}
-import graft.icelite.IceLite
 import graft.model.{ChangeEvent, TokenDoc}
 import graft.util.Fs
 

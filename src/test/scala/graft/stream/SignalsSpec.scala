@@ -99,7 +99,6 @@ class SignalsSpec extends SparkSpec {
   // ---- control signals: stop / pause / resume / log ----
 
   private def controlFixture(name: String, seed: Long) = {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 10, nDocs = 40, seed = seed)
     val base = Fs.tempDir(name)
     val cdc = CdcConfig(s"$base/log", s"$base/table", s"$base/ckpt",

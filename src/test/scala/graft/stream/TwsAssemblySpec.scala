@@ -53,7 +53,6 @@ class TwsAssemblySpec extends SparkSpec {
   }
 
   test("TWS and fMGWS assemblies emit identical event sets, including DLQ quarantine of a poison tx") {
-    import spark.implicits._
     val cfg = ChangeLogConfig(nTx = 60, nDocs = 40, seed = 311, maxOpsPerTx = 8)
     val base = Fs.tempDir("graft-twscmp")
     try {

@@ -41,6 +41,48 @@ class WindowedAggSpec extends SparkSpec {
     assert(got.forall(_._1 < WindowedAgg.SentinelMs1)) // sentinels never emit
   }
 
+  test("the drain reads the staged dir in place: one staged file per micro-batch, no copy") {
+    val base = graft.util.Fs.tempDir("graft-waggdrain")
+    try {
+      val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+      val derived = WindowedAgg.derive(events)
+      WindowedAgg.stage(spark, (0 until WindowedAgg.NumBatches).map(i =>
+        derived.where(col("b") === i.toLong)), s"$base/staged")
+      val got = WindowedAgg.run(spark, s"$base/staged", s"$base/work")
+        .select("w_start", "n_events", "s_mod", "max_ms")
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+
+      assert(graft.util.Fs.listDir(java.nio.file.Paths.get(s"$base/work"))
+        .map(_.getFileName.toString).toSet === Set("sink", "ckpt"))
+
+      // the file-source log (compacted or not): (path, batchId) entries
+      val entries = graft.util.Fs.listDir(java.nio.file.Paths.get(s"$base/work/ckpt/sources/0"))
+        .filterNot(_.getFileName.toString.startsWith("."))
+        .flatMap(f => java.nio.file.Files.readString(f).split("\n"))
+        .flatMap { line =>
+          val path = "\"path\":\"([^\"]+)\"".r.findFirstMatchIn(line).map(_.group(1))
+          val batch = "\"batchId\":(\\d+)".r.findFirstMatchIn(line).map(_.group(1).toLong)
+          path.zip(batch).map { case (p, b) =>
+            (new org.apache.hadoop.fs.Path(p).toUri.getPath, b) }
+        }.distinct
+      val staged = graft.util.Fs.listParquet(s"$base/staged")
+      // data files, spacers and the two flush sentinels
+      assert(staged.size === 2 * (WindowedAgg.NumBatches + 2) - 1)
+      assert(entries.map(_._1).sorted === staged.sorted) // each staged file, once
+      assert(entries.map(_._2).distinct.size === entries.size) // one file per batch
+
+      val expected = WindowedAgg.keptModel(derived)
+        .groupBy((floor(col("m") / WindowedAgg.WindowMs) * WindowedAgg.WindowMs).as("w_start"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(pmod(col("event_id"), lit(97L))).as("s_mod"),
+          max(col("m")).as("max_ms"))
+        .select("w_start", "n_events", "s_mod", "max_ms")
+        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+      assert(got.nonEmpty)
+      assert(got === expected)
+    } finally graft.util.Fs.deleteRecursively(base)
+  }
+
   test("stragglers actually exercise the drop path on real data") {
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val derived = WindowedAgg.derive(events)
